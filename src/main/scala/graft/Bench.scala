@@ -57,8 +57,8 @@ object Bench {
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), fullLine + "\n")
     catch { case e: Exception => System.err.println(s"[bench] file write failed: $e") }
     // stdout gets a BUDGETED line that FITS the tail and parses: 3-dp
-    // values, per-query entries kept (in sorted-name order) until the
-    // map reaches the budget, with the truncation made explicit
+    // values, per-query entries kept slowest first until the map
+    // reaches the budget, with the truncation made explicit
     println(budgetedLine(results, total, outFile, suffix))
     spark.stop()
   }

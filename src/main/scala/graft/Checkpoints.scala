@@ -1,0 +1,44 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** Local checkpoints that are released for real.
+  *
+  * `Dataset.unpersist()` only drops CacheManager entries, and a
+  * `localCheckpoint` is not one: its blocks belong to the RDD under the
+  * checkpointed frame's `LogicalRDD`, which stays in
+  * `getPersistentRDDs` (and in executor storage) until that RDD itself
+  * is unpersisted. [[release]] does exactly that; [[scoped]] checkpoints
+  * through a [[Scope]] and releases every frame it made in `finally`,
+  * so the caller's last consuming action must happen inside the scope. */
+object Checkpoints {
+
+  /** Drop a frame's storage blocks: the checkpointed RDD for a
+    * `localCheckpoint`, the cache entry for a `persist`. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
+  }
+
+  /** Checkpoints made inside one [[scoped]] block. Thread-safe, so
+    * concurrent write chains may checkpoint through the same scope. */
+  final class Scope private[Checkpoints] {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+
+    /** `df.localCheckpoint()`, released when the scope closes. */
+    def apply(df: DataFrame): DataFrame = {
+      val ck = df.localCheckpoint()
+      held.synchronized(held += ck)
+      ck
+    }
+
+    private[Checkpoints] def releaseAll(): Unit =
+      held.synchronized { held.foreach(release); held.clear() }
+  }
+
+  def scoped[T](f: Scope => T): T = {
+    val scope = new Scope
+    try f(scope) finally scope.releaseAll()
+  }
+}

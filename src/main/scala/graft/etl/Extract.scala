@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{Rpc, Sanctuary}
 import graft.sinks.Layout
+import scala.jdk.CollectionConverters._
 
 /** The reference's `extract` subcommand end to end (main.rs:18-26,
   * extract.rs:84-289): fetch a block range over JSON-RPC, derive every
@@ -14,16 +15,28 @@ import graft.sinks.Layout
   * This is the program a reference user actually runs — everything
   * else in the library is a piece of it.
   *
-  * Scale shape: three paged fetches (bounded by `slots`, retrying
-  * through transient failures), each materialized ONCE and fanned out
-  * to its consumers; every derivation is a narrow transform or an
-  * equi-join; the decompile subprocess runs once per DISTINCT skeleton
-  * (A4 dedup-first — at mainnet scale that's ~400k skeletons against
-  * 60M+ deployments); the only wide operations are the
-  * Account-dimension groupBy and the per-block stats aggregate. The
-  * per-page block→datetime map broadcasts (bounded by the page's block
-  * count), so stamping dynamic entities with their block datetime
-  * costs no shuffle.
+  * Scale shape: ONE joined fetch (bounded by `slots`, retrying through
+  * transient failures) issues each block's `eth_getBlockByNumber`,
+  * `trace_block` and `eth_getLogs` calls together — the reference's
+  * `get_block ∥ get_traces ∥ get_logs` under one permit
+  * (extract.rs:104-141) — and materializes ONCE; blocks, traces and
+  * logs parse from it and fan out to their consumers. Every derivation
+  * is a narrow transform or an equi-join; the decompile subprocess runs
+  * once per DISTINCT skeleton (A4 dedup-first — at mainnet scale that's
+  * ~400k skeletons against 60M+ deployments); the only wide operations
+  * are the Account-dimension groupBy and the per-block stats
+  * aggregate. The per-page block→datetime map broadcasts (bounded by
+  * the page's block count), so stamping dynamic entities with their
+  * block datetime costs no shuffle.
+  *
+  * Landing: every table is its own write chain and the chains run
+  * concurrently ([[graft.sinks.Layout.fanout]]), the dynamic sink
+  * being one more chain; the one ordering that matters stays inside a
+  * single chain — abi/functions/events/errors land first, the
+  * `skeletons` commit marker last. The counts are read back from the
+  * landed directories, concurrently and with each frame's known
+  * schema. Every checkpoint the run makes is released when it returns
+  * or throws.
   */
 object Extract {
 
@@ -80,24 +93,29 @@ object Extract {
       nameEndpoint: Option[String] = None,
       sanctuaryRoot: Option[String] = None,
       includeTx: Boolean = true, includeTransfers: Boolean = true,
-      includeLogs: Boolean = true): Map[String, Long] = {
+      includeLogs: Boolean = true): Map[String, Long] = graft.Checkpoints.scoped { ck =>
+    // every checkpoint this run makes is released when the run returns or throws
+    val needLogs = includeTransfers || includeLogs
+    val fetchMethods =
+      Seq(Rpc.GetBlock, Rpc.TraceBlock) ++ (if (needLogs) Seq(Rpc.GetLogs) else Nil)
     // snapshot the per-method failure counters so this run's
     // fetch_failures count is scoped to its own fetches (the
     // accumulators are session-cumulative)
-    val fetchMethods = Seq("eth_getBlockByNumber", "trace_block", "eth_getLogs")
     val failedBefore =
       fetchMethods.map(m => Rpc.failedCounter(spark, m).value.longValue).sum
-    val blocks = Rpc.fetchBlocks(spark, endpoint, from, to, slots).localCheckpoint()
-    val traces = Rpc.traceEntities(
-      Rpc.fetchTraces(spark, endpoint, from, to, slots)).localCheckpoint()
-    val needLogs = includeTransfers || includeLogs
+    // ONE fetch job: each block's faces are fetched together, and the
+    // raw bodies materialize once for the three parses
+    val fetched = ck(Rpc.fetchJoined(spark, endpoint, from, to, fetchMethods, slots))
+    val blocks = ck(Rpc.parseBlocks(Rpc.bodiesOf(fetched, Rpc.GetBlock)))
+    val traces = ck(Rpc.traceEntities(
+      Rpc.parseTraces(Rpc.bodiesOf(fetched, Rpc.TraceBlock))))
     val logs =
-      if (needLogs)
-        Rpc.fetchLogs(spark, endpoint, from, to, slots).localCheckpoint()
+      if (needLogs) ck(Rpc.parseLogs(Rpc.bodiesOf(fetched, Rpc.GetLogs)))
       else // empty frame in the log schema — filters fold it away
-        Rpc.fetchLogs(spark, endpoint, from, from, slots).where(lit(false))
-    // all three fetches are materialized by the checkpoints above, so
-    // the counters are final: nonzero = calls that failed after retries
+        Rpc.parseLogs(fetched.select(col("number"),
+          lit(null).cast("string").as("body"))).where(lit(false))
+    // the fetch is materialized by its checkpoint above, so the
+    // counters are final: nonzero = calls that failed after retries
     // and dropped out exactly like past-the-head nulls (the reference's
     // log-and-skip, extract.rs:406-413) — surfaced so a misconfigured
     // endpoint can't silently yield a partial extract. The count is
@@ -117,8 +135,9 @@ object Extract {
       timestamp_seconds(col("ts")).as("datetime"))
 
     // FULL transaction.rs:338-409 column set (nonce/r/s/v as served,
-    // EIP-1559 fee caps null on legacy txs)
-    val transactions = Decode.decorateTransactions(
+    // EIP-1559 fee caps null on legacy txs); checkpointed, as it feeds
+    // the sink, accounts, and block stats
+    val transactions = ck(Decode.decorateTransactions(
       blocks.select(col("number").as("block_number"),
           explode(col("transactions")).as("t"))
         .select(col("block_number"), col("t.hash").as("hash"),
@@ -132,8 +151,7 @@ object Extract {
           graft.functions.EvmExprs.hexToDec(col("t.v")).as("v"),
           Rpc.hexQtyToLong(col("t.maxFeePerGas")).as("max_fee_per_gas"),
           Rpc.hexQtyToLong(col("t.maxPriorityFeePerGas"))
-            .as("max_priority_fee_per_gas")))
-      .localCheckpoint() // consumed by the sink, accounts, and block stats
+            .as("max_priority_fee_per_gas"))))
 
     // extract_at's per-deployment enrichment legs (extract.rs:163-168),
     // behind the reference's CLI flags: name() eth_call resolution and
@@ -146,7 +164,7 @@ object Extract {
           .select(col("contract").as("address"), col("name")))
       case None => deploymentsBase.withColumn("name", lit(null).cast("string"))
     }
-    val deployments = (sanctuaryRoot match {
+    val deployments = ck(sanctuaryRoot match {
       case Some(root) =>
         // the reference serializes the verified source TEXT itself when
         // the sanctuary has it (contract_deployment.rs:319-327), so the
@@ -158,7 +176,7 @@ object Extract {
       case None => withNames
         .withColumn("verified_source", lit(false))
         .withColumn("verified_source_code", lit(null).cast("string"))
-    }).localCheckpoint()
+    })
 
     val destructions = Decode.destructions(traces)
     val transfers = Decode.transfersFromLogs(logs)
@@ -180,26 +198,26 @@ object Extract {
     // the guarded read treats a crashed prior write (footer-less dir)
     // as absent, so the advertised idempotent re-run resumes instead of
     // dying on UNABLE_TO_INFER_SCHEMA
-    val skeletonsRaw = (Layout.readStatic(spark, outRoot, "skeletons", recover = true) match {
+    // (checkpointed: consumed by decompile + the skeleton sink)
+    val skeletonsRaw = ck(Layout.readStatic(spark, outRoot, "skeletons", recover = true) match {
       case None => skeletonsRaw0
       case Some(existing) => skeletonsRaw0.join(
         existing.where(!col("failed_decompilation")).select("skeleton_hash"),
         Seq("skeleton_hash"), "left_anti")
-    }).localCheckpoint() // consumed by decompile + the skeleton sink
+    })
 
     // decompile → ABI parse → signature entities (U1 ∘ F15 ∘ F5/F6/K3);
     // both stages materialize ONCE — each runs a subprocess per row
     // upstream, and multiple sinks consume them
     val decompiled =
       if (decompiler.nonEmpty)
-        Decompile.run(skeletonsRaw, decompiler, decompileTimeoutMs)
-          .toDF().localCheckpoint()
+        ck(Decompile.run(skeletonsRaw, decompiler, decompileTimeoutMs).toDF())
       else // no decompiler configured = every decompilation failed (the
            // reference's behavior when heimdall is absent: each spawn errors)
         skeletonsRaw.select(col("skeleton_hash"),
           lit(null).cast("string").as("abi_json"),
           lit(true).as("failed_decompilation"))
-    val abi = Decompile.parseAbi(decompiled).localCheckpoint()
+    val abi = ck(Decompile.parseAbi(decompiled))
 
     // Skeleton entity with the full Schemas.skeleton column set
     // (skeleton.rs:38-157): compliancy scores from the decompiled ABI,
@@ -277,20 +295,22 @@ object Extract {
       "functions" -> Seq("signature"), "events" -> Seq("signature"),
       "errors" -> Seq("signature"),
       "withdrawals" -> Seq("block_number", "index"))
-    // skeletons commit LAST: the skeletons row is the per-skeleton
-    // COMMIT MARKER — the retry exclusion above (and the stream path's
-    // freshness anti-join) keys on it, so every decompile-derived table
-    // (abi/functions/events/errors) must be durable before the marker
-    // appears; a crash in between re-decompiles the skeleton on replay
-    // and the upserts dedup/replace the already-committed half
-    static.toSeq.sortBy { case (name, _) => name == "skeletons" }.foreach {
-      case ("abi", df) =>
-        Layout.upsertStaticReplace(df, outRoot, "abi", Seq("skeleton_hash"))
-      case ("accounts", df) => Layout.mergeStatic(df, outRoot, "accounts",
-        all => all.groupBy(col("address"))
-          .agg(max(col("is_contract")).as("is_contract")))
-      case ("skeletons", df) => Layout.mergeStatic(df, outRoot, "skeletons",
-        all => {
+    def upsert(name: String) = () =>
+      Layout.upsertStatic(static(name), outRoot, name, staticKeys(name))
+    // every chain lands its own directories, so they run concurrently;
+    // a failed chain fails the run once all chains have settled
+    Layout.fanout(Seq(
+      // skeletons commit LAST: the skeletons row is the per-skeleton
+      // COMMIT MARKER — the retry exclusion above (and the stream path's
+      // freshness anti-join) keys on it, so every decompile-derived
+      // table (abi/functions/events/errors) must be durable before the
+      // marker appears; a crash (or a failed write) in between
+      // re-decompiles the skeleton on replay and the upserts
+      // dedup/replace the already-committed half
+      () => {
+        Layout.fanout(Seq("functions", "events", "errors").map(upsert) :+ (() =>
+          Layout.upsertStaticReplace(abi, outRoot, "abi", Seq("skeleton_hash"))))
+        Layout.mergeStatic(skeletons, outRoot, "skeletons", all => {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("skeleton_hash"))
             .orderBy(col("failed_decompilation").asc,
@@ -298,28 +318,36 @@ object Extract {
           all.withColumn("__rn", row_number().over(w))
             .where(col("__rn") === 1).drop("__rn")
         })
-      case (name, df) => Layout.upsertStatic(df, outRoot, name, staticKeys(name))
-    }
-    // dynamic entities go through the SAME per-block replacement core as
-    // the live follow (not a bare dynamic-partition overwrite, which
-    // would clobber a bucket's rows from an EARLIER range sharing it):
-    // a re-run replaces its own blocks, a later range extends, and a
-    // batch backfill + live follower are interchangeable on one root
-    if (dynamic.nonEmpty) {
-      val batchBlocks =
-        blocks.select(col("number").as("block_number")).distinct().persist()
-      try graft.streaming.Incremental.replaceEntities(
-        spark, batchBlocks, outRoot, dynamic.toSeq)
-      finally batchBlocks.unpersist()
-    }
+      },
+      () => Layout.mergeStatic(accounts, outRoot, "accounts",
+        all => all.groupBy(col("address"))
+          .agg(max(col("is_contract")).as("is_contract"))),
+      // dynamic entities go through the SAME per-block replacement core
+      // as the live follow (not a bare dynamic-partition overwrite, which
+      // would clobber a bucket's rows from an EARLIER range sharing it):
+      // a re-run replaces its own blocks, a later range extends, and a
+      // batch backfill + live follower are interchangeable on one root
+      () => if (dynamic.nonEmpty) {
+        val batchBlocks =
+          blocks.select(col("number").as("block_number")).distinct().persist()
+        try graft.streaming.Incremental.replaceEntities(
+          spark, batchBlocks, outRoot, dynamic.toSeq)
+        finally batchBlocks.unpersist()
+      }) ++ Seq("blocks", "deployments", "destructions", "withdrawals").map(upsert))
     Layout.writeDgraphSchema(spark, outRoot)
 
-    val counts =
-      static.map { case (n, _) =>
-        n -> spark.read.parquet(s"$outRoot/static/$n").count() } ++
-        dynamic.map { case (n, _) =>
-          n -> spark.read.parquet(s"$outRoot/dynamic/$n").count() }
-    counts.toMap + ("fetch_failures" -> fetchFailures)
+    // counts read back from the landed directories, concurrently and
+    // with each frame's known schema: a parquet read that infers its
+    // schema runs a footer-reading job first, and a count needs no
+    // column of it anyway
+    val landed =
+      static.map { case (n, df) => (n, s"$outRoot/static/$n", df.schema) } ++
+        dynamic.map { case (n, df) => (n, s"$outRoot/dynamic/$n", df.schema) }
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    Layout.fanout(landed.toSeq.map { case (n, path, schema) => () =>
+      counts.put(n, spark.read.schema(schema).parquet(path).count())
+    })
+    counts.asScala.toMap + ("fetch_failures" -> fetchFailures)
   }
 
   /** CLI face mirroring the reference's `extract` subcommand flags

@@ -59,21 +59,28 @@ object Layout {
     * Callers own the independence argument: each thunk must touch its
     * own entity directories only, with any required ordering (e.g.
     * commit-marker-last, books-before-codes) kept INSIDE one thunk. A
-    * failure in any chain propagates after all chains settle. */
+    * failure in any chain propagates after ALL chains settle (the first
+    * failure thrown, later ones suppressed on it), so the caller never
+    * returns while a sibling chain is still writing. */
   def fanout(writes: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, Future}
     implicit val ec: scala.concurrent.ExecutionContext = fanoutEc
-    Await.result(
-      Future.sequence(writes.map(w => Future {
-        // job descriptions are THREAD-LOCAL and the cached pool reuses
-        // threads, so a chain that doesn't label itself would inherit
-        // a stale label from a previous task on this thread — clear it
-        org.apache.spark.sql.SparkSession.getDefaultSession.foreach(
-          _.sparkContext.setLocalProperty("spark.job.description", null))
-        w()
-      })),
-      scala.concurrent.duration.Duration.Inf)
-    ()
+    val chains = writes.map(w => Future {
+      // job descriptions are THREAD-LOCAL and the cached pool reuses
+      // threads, so a chain that doesn't label itself would inherit
+      // a stale label from a previous task on this thread — clear it
+      org.apache.spark.sql.SparkSession.getDefaultSession.foreach(
+        _.sparkContext.setLocalProperty("spark.job.description", null))
+      w()
+    })
+    // NOT Future.sequence: it fails fast on the first failure, while
+    // the other chains are still running
+    val failures = chains.flatMap(c =>
+      Await.ready(c, scala.concurrent.duration.Duration.Inf).value.get.failed.toOption)
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   private def hadoopFs(spark: org.apache.spark.sql.SparkSession, path: String) =
@@ -258,8 +265,9 @@ object Layout {
     * the anti. Existence algebra: df ANTI store ≡ df ANTI (store SEMI
     * df.keys) on the same null-safe keys, so the appended rows are
     * identical. The caller owns the bound: flip ONLY frames bounded
-    * by a micro-batch (the incoming frame is localCheckpointed here
-    * and read twice — key broadcast + anti probe). */
+    * by a micro-batch (the incoming frame is localCheckpointed here,
+    * read twice — key broadcast + anti probe — and released once the
+    * write committed or failed). */
   def upsertStatic(df: DataFrame, root: String, entity: String,
       keys: Seq[String], maxRecordsPerFile: Long = 1000000L,
       flipProbe: Boolean = false): Unit = {
@@ -281,34 +289,31 @@ object Layout {
         val probe = existing
           .select(keys.map(k => col(k).as(s"__k_$k")): _*)
         val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-        var ck: Option[DataFrame] = None
-        val fresh =
-          if (flipProbe) {
-            val inc = df.localCheckpoint()
-            ck = Some(inc)
-            val hits = probe.join(
-              broadcast(inc.select(keys.map(col): _*)), cond, "left_semi")
-            inc.join(broadcast(hits), cond, "left_anti")
-          } else df.join(probe, cond, "left_anti")
-        if (existing.columns.toSet == df.columns.toSet) {
-          fresh.write.mode("append")
-            .option("maxRecordsPerFile", maxRecordsPerFile)
-            .parquet(path)
-          ck.foreach(_.unpersist())
-        } else {
-          // SCHEMA EVOLUTION: a blind append of a different column set
-          // would create a mixed-footer directory where a plain
-          // spark.read.parquet (no mergeSchema) silently drops the new
-          // column depending on which footer wins schema inference.
-          // Pay one atomic rewrite instead: widen BOTH sides
-          // (unionByName, missing columns null) so the store stays
-          // single-schema — the one-time cost of extending a store
-          // written by a previous build (e.g. deployments gaining
-          // verified_source_code).
-          overwriteStaticAtomic(
-            existing.unionByName(fresh, allowMissingColumns = true),
-            root, entity, maxRecordsPerFile)
-          ck.foreach(_.unpersist())
+        graft.Checkpoints.scoped { ck =>
+          val fresh =
+            if (flipProbe) {
+              val inc = ck(df)
+              val hits = probe.join(
+                broadcast(inc.select(keys.map(col): _*)), cond, "left_semi")
+              inc.join(broadcast(hits), cond, "left_anti")
+            } else df.join(probe, cond, "left_anti")
+          if (existing.columns.toSet == df.columns.toSet)
+            fresh.write.mode("append")
+              .option("maxRecordsPerFile", maxRecordsPerFile)
+              .parquet(path)
+          else
+            // SCHEMA EVOLUTION: a blind append of a different column set
+            // would create a mixed-footer directory where a plain
+            // spark.read.parquet (no mergeSchema) silently drops the new
+            // column depending on which footer wins schema inference.
+            // Pay one atomic rewrite instead: widen BOTH sides
+            // (unionByName, missing columns null) so the store stays
+            // single-schema — the one-time cost of extending a store
+            // written by a previous build (e.g. deployments gaining
+            // verified_source_code).
+            overwriteStaticAtomic(
+              existing.unionByName(fresh, allowMissingColumns = true),
+              root, entity, maxRecordsPerFile)
         }
     }
     spark.catalog.refreshByPath(path)
@@ -392,17 +397,19 @@ object Layout {
   def upsertStaticReplace(df: DataFrame, root: String, entity: String,
       keys: Seq[String], maxRecordsPerFile: Long = 1000000L): Unit = {
     val spark = df.sparkSession
-    val incoming = df.localCheckpoint() // probe + union both read it
-    val all = readStatic(spark, root, entity, recover = true) match {
-      case None => incoming
-      case Some(existing) =>
-        // existence-only probe — no dedup needed (see upsertStatic)
-        val probe = incoming
-          .select(keys.map(k => col(k).as(s"__k_$k")): _*)
-        val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-        incoming.unionByName(existing.join(probe, cond, "left_anti"))
+    graft.Checkpoints.scoped { ck =>
+      val incoming = ck(df) // probe + union both read it
+      val all = readStatic(spark, root, entity, recover = true) match {
+        case None => incoming
+        case Some(existing) =>
+          // existence-only probe — no dedup needed (see upsertStatic)
+          val probe = incoming
+            .select(keys.map(k => col(k).as(s"__k_$k")): _*)
+          val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
+          incoming.unionByName(existing.join(probe, cond, "left_anti"))
+      }
+      overwriteStaticAtomic(all, root, entity, maxRecordsPerFile)
     }
-    overwriteStaticAtomic(all, root, entity, maxRecordsPerFile)
   }
 
   /** Natural-key upsert with MERGE semantics: union the incoming rows

@@ -91,10 +91,12 @@ object Rpc {
   // --------------------------------------------------------------------
   // S1/S2/S7 fetch faces (blocks.rs:6-18 get_block_with_txs,
   // traces.rs:36-50 trace_block, stream.rs:275-336 sync_to_live). The
-  // mapPartitions stage does ONLY the HTTP hop and returns raw JSON
-  // bodies; everything after — envelope parse, hex-quantity decode,
-  // transaction-array explode — is declarative (`from_json` + `conv`),
-  // so it stays inside whole-stage codegen and Catalyst can prune it.
+  // mapPartitions stage ([[fetchJoined]]) does ONLY the HTTP hop —
+  // every requested method per block, concurrently — and returns raw
+  // JSON bodies; everything after — envelope parse, hex-quantity
+  // decode, transaction-array explode ([[parseBlocks]], [[parseTraces]],
+  // [[parseLogs]]) — is declarative (`from_json` + `conv`), so it stays
+  // inside whole-stage codegen and Catalyst can prune it.
   // --------------------------------------------------------------------
 
   /** One driver-side JSON-RPC POST (the reference's head query and
@@ -119,22 +121,6 @@ object Rpc {
       .map(m => java.lang.Long.parseLong(m.group(1), 16))
       .getOrElse(throw new IllegalStateException("eth_blockNumber gave no result"))
 
-  /** Fetch one JSON body per block number over `[from, to]`. `slots`
-    * bounds concurrent connections exactly like the reference's
-    * `Semaphore::new(num_jobs)` (stream.rs:303): one partition = one
-    * in-flight request stream with a keep-alive client.
-    *
-    * Non-2xx responses and transport errors are retried with doubling
-    * backoff — the reference's bounded retry policy (extract.rs:406-413:
-    * rate-limit/timeout retries, 500 ms initial backoff; defaults here
-    * are scaled down for the local stub). Only 2xx counts as success: a
-    * 404/400 from a misconfigured endpoint must NOT parse as a body
-    * (its non-JSON payload would from_json to null and silently mimic
-    * the past-the-head marker). A call still failing after `retries`
-    * yields a null body — the caller's drop-null is the reference's
-    * log-and-skip face — and bumps the `graft.rpc.failed(<method>)`
-    * accumulator, so callers can distinguish head-termination (zero
-    * failures) from persistent client errors (nonzero). */
   /** Per-(session, method) failure counter shared by every fetch of
     * that method, so callers (Extract's fetch_failures report) can
     * distinguish head-termination (zero) from persistent client errors
@@ -146,12 +132,45 @@ object Rpc {
       spark.sparkContext.applicationId + ":" + method,
       _ => spark.sparkContext.longAccumulator(s"graft.rpc.failed($method)"))
 
-  def fetchBodies(spark: SparkSession, endpoint: String, from: Long, to: Long,
-      method: String, slots: Int = 8, timeoutMs: Long = 10000L,
+  /** The three per-block fetch methods (blocks.rs:6-18, traces.rs:36-50,
+    * logs.rs:30-60). */
+  val GetBlock = "eth_getBlockByNumber"
+  val TraceBlock = "trace_block"
+  val GetLogs = "eth_getLogs"
+
+  /** Fetch every method in `methods` for each block number over
+    * `[from, to]` — the reference's per-block `get_block ∥ get_traces ∥
+    * get_logs` (`tokio::join!` under one semaphore permit,
+    * extract.rs:104-141). One row per block: `number`, then one raw JSON
+    * body column per method, named after the method.
+    *
+    * `slots` bounds the partitions exactly like the reference's
+    * `Semaphore::new(num_jobs)` (stream.rs:303): one partition = one
+    * block at a time, whose calls go out CONCURRENTLY on the shared
+    * keep-alive client (`sendAsync`, so at most `slots × methods`
+    * requests are in flight). The calls are latency-bound, so
+    * overlapping them divides a block's fetch time by about the number
+    * of methods.
+    *
+    * Every call keeps its own retry: non-2xx responses and transport
+    * errors are retried with doubling backoff — the reference's bounded
+    * retry policy (extract.rs:406-413: rate-limit/timeout retries,
+    * 500 ms initial backoff; defaults here are scaled down for the local
+    * stub). A block's still-failing calls are re-sent together after
+    * each backoff, so every call sees the same attempt count and
+    * delays as it would alone. Only 2xx counts as success: a 404/400
+    * from a misconfigured endpoint must NOT parse as a body (its
+    * non-JSON payload would from_json to null and silently mimic the
+    * past-the-head marker). A call still failing after `retries` yields
+    * a null body — the parsers' drop-null is the reference's
+    * log-and-skip face — and bumps its method's [[failedCounter]]. */
+  def fetchJoined(spark: SparkSession, endpoint: String, from: Long, to: Long,
+      methods: Seq[String], slots: Int = 8, timeoutMs: Long = 10000L,
       retries: Int = 3, backoffMs: Long = 50L): DataFrame = {
     import spark.implicits._
     require(to >= from, s"empty block range [$from, $to]")
-    val failed = failedCounter(spark, method)
+    require(methods.nonEmpty, "no fetch method")
+    val failed = methods.map(failedCounter(spark, _))
     spark.range(from, to + 1, 1, math.min(slots.toLong, to - from + 1).toInt)
       .as[Long]
       .mapPartitions { nums =>
@@ -159,31 +178,36 @@ object Rpc {
         val uri = URI.create(endpoint)
         nums.map { n =>
           val hexN = "0x" + java.lang.Long.toHexString(n)
-          val params = method match {
-            case "eth_getBlockByNumber" => s"""["$hexN",true]"""
-            // per-block filter — the reference fetches logs one block at
-            // a time (logs.rs:30-60)
-            case "eth_getLogs" => s"""[{"fromBlock":"$hexN","toBlock":"$hexN"}]"""
-            case _ => s"""["$hexN"]"""
+          val reqs = methods.map { method =>
+            val params = method match {
+              case GetBlock => s"""["$hexN",true]"""
+              // per-block filter — the reference fetches logs one block
+              // at a time (logs.rs:30-60)
+              case GetLogs => s"""[{"fromBlock":"$hexN","toBlock":"$hexN"}]"""
+              case _ => s"""["$hexN"]"""
+            }
+            HttpRequest.newBuilder(uri)
+              .header("Content-Type", "application/json")
+              .timeout(java.time.Duration.ofMillis(timeoutMs))
+              .POST(HttpRequest.BodyPublishers.ofString(
+                s"""{"jsonrpc":"2.0","id":1,"method":"$method","params":$params}"""))
+              .build()
           }
-          val payload =
-            s"""{"jsonrpc":"2.0","id":1,"method":"$method","params":$params}"""
-          val req = HttpRequest.newBuilder(uri)
-            .header("Content-Type", "application/json")
-            .timeout(java.time.Duration.ofMillis(timeoutMs))
-            .POST(HttpRequest.BodyPublishers.ofString(payload))
-            .build()
+          val bodies = Array.fill[String](methods.size)(null)
+          var pending: Seq[Int] = methods.indices
           var attempt = 0
-          var body: String = null
-          var done = false
-          while (!done && attempt <= retries) {
-            try {
-              val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-              if (resp.statusCode() / 100 == 2) {
-                body = resp.body(); done = true
-              }
-            } catch { case _: Exception => () }
-            if (!done) {
+          while (pending.nonEmpty && attempt <= retries) {
+            val inFlight = pending.map(i =>
+              i -> client.sendAsync(reqs(i), HttpResponse.BodyHandlers.ofString()))
+            pending = inFlight.filterNot { case (i, call) =>
+              try {
+                val resp = call.join()
+                val ok = resp.statusCode() / 100 == 2
+                if (ok) bodies(i) = resp.body()
+                ok
+              } catch { case _: Exception => false }
+            }.map(_._1)
+            if (pending.nonEmpty) {
               attempt += 1
               if (attempt <= retries)
                 Thread.sleep(backoffMs << math.min(attempt - 1, 6))
@@ -195,12 +219,28 @@ object Rpc {
           // must treat a nonzero value as "at least this many" — exact
           // failure accounting would count the null-body rows in the
           // materialized frame instead
-          if (!done) failed.add(1L)
-          (n, body)
+          pending.foreach(i => failed(i).add(1L))
+          (n, bodies.toSeq)
         }
       }
-      .toDF("number", "body")
+      .select(col("_1").as("number") +:
+        methods.indices.map(i => col("_2").getItem(i).as(methods(i))): _*)
   }
+
+  /** One method's bodies, `(number, body)`, over `[from, to]`: the
+    * single-method [[fetchJoined]], with the same retry and failure
+    * accounting. */
+  def fetchBodies(spark: SparkSession, endpoint: String, from: Long, to: Long,
+      method: String, slots: Int = 8, timeoutMs: Long = 10000L,
+      retries: Int = 3, backoffMs: Long = 50L): DataFrame =
+    bodiesOf(fetchJoined(spark, endpoint, from, to, Seq(method), slots,
+      timeoutMs, retries, backoffMs), method)
+
+  /** One method's `(number, body)` face of a [[fetchJoined]] frame —
+    * the input shape of [[parseBlocks]], [[parseTraces]] and
+    * [[parseLogs]]. */
+  def bodiesOf(joined: DataFrame, method: String): DataFrame =
+    joined.select(col("number"), col(method).as("body"))
 
   /** Hex quantity "0x1b4" → long. */
   private def hexLong(c: Column): Column =
@@ -256,7 +296,11 @@ object Rpc {
     * (blocks.rs:6-18 fetches blocks WITH transactions). */
   def fetchBlocks(spark: SparkSession, endpoint: String, from: Long, to: Long,
       slots: Int = 8): DataFrame =
-    fetchBodies(spark, endpoint, from, to, "eth_getBlockByNumber", slots)
+    parseBlocks(fetchBodies(spark, endpoint, from, to, GetBlock, slots))
+
+  /** [[fetchBlocks]]' parse over fetched `(number, body)` rows. */
+  def parseBlocks(bodies: DataFrame): DataFrame =
+    bodies
       .select(from_json(col("body"), blockEnvelope).getField("result").as("r"))
       .where(col("r").isNotNull)
       .select(
@@ -287,7 +331,11 @@ object Rpc {
     * reference propagates after the fetch (traces.rs:36-50). */
   def fetchTraces(spark: SparkSession, endpoint: String, from: Long, to: Long,
       slots: Int = 8): DataFrame =
-    fetchBodies(spark, endpoint, from, to, "trace_block", slots)
+    parseTraces(fetchBodies(spark, endpoint, from, to, TraceBlock, slots))
+
+  /** [[fetchTraces]]' parse over fetched `(number, body)` rows. */
+  def parseTraces(bodies: DataFrame): DataFrame =
+    bodies
       .select(col("number").as("block_number"),
         explode(from_json(col("body"), traceEnvelope).getField("result")).as("t"))
       .select(
@@ -322,7 +370,11 @@ object Rpc {
     * nullable columns, log.rs:157-175). */
   def fetchLogs(spark: SparkSession, endpoint: String, from: Long, to: Long,
       slots: Int = 8): DataFrame =
-    fetchBodies(spark, endpoint, from, to, "eth_getLogs", slots)
+    parseLogs(fetchBodies(spark, endpoint, from, to, GetLogs, slots))
+
+  /** [[fetchLogs]]' parse over fetched `(number, body)` rows. */
+  def parseLogs(bodies: DataFrame): DataFrame =
+    bodies
       .select(col("number").as("block_number"),
         explode(from_json(col("body"), logEnvelope).getField("result")).as("l"))
       .select(

@@ -16,11 +16,12 @@ import graft.sinks.Layout
   * block.rs:172-284) — and upgrades partial-failure semantics from
   * row-at-a-time "log and continue" (stream.rs:81-131) to
   * retry-until-converged per micro-batch (SURVEY §7.5-7): each entity's
-  * overwrite is atomic, a failure mid-batch can leave LATER entities of
-  * that batch unwritten, and the engine's retry re-derives every entity
-  * from the same source offsets — per-block replacement makes the
-  * replay idempotent, so the sink converges to exactly the batch's
-  * state (at-least-once delivery × idempotent writes).
+  * overwrite is atomic (the entities land concurrently), a failure
+  * mid-batch can leave OTHER entities of that batch unwritten, and the
+  * engine's retry re-derives every entity from the same source offsets
+  * — per-block replacement makes the replay idempotent, so the sink
+  * converges to exactly the batch's state (at-least-once delivery ×
+  * idempotent writes).
   */
 object Incremental {
 
@@ -44,7 +45,8 @@ object Incremental {
     * buckets — bounded IO regardless of table size — while blocks
     * sharing a bucket with a replayed block are preserved. The
     * localCheckpoint materializes survivors before the overwrite (Spark
-    * refuses a write whose plan still reads the target path). */
+    * refuses a write whose plan still reads the target path) and is
+    * released once the overwrite committed. */
   def processBatch(raw: DataFrame, outRoot: String,
       derive: Map[String, DataFrame => DataFrame]): Unit = {
     val spark = raw.sparkSession
@@ -75,41 +77,45 @@ object Incremental {
     val affectedBuckets = Layout.withBlockBucket(batchBlocks)
       .select(col("block_bucket")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    entities.foreach { case (entity, df) =>
-      val path = s"$outRoot/dynamic/$entity"
-      val newRows = Layout.withBlockBucket(df)
-      val merged =
-        if (!pathExists(spark, path)) newRows
-        else try {
-          val survivors = spark.read.parquet(path)
-            .where(col("block_bucket").isin(affectedBuckets: _*))
-            .join(broadcast(batchBlocks), Seq("block_number"), "left_anti")
-            .localCheckpoint()
-          newRows.unionByName(survivors)
-        } catch {
-          // ONLY the no-committed-footer case (a prior run died before
-          // its first commit) means "nothing survives". Any other
-          // analysis failure — e.g. a schema mismatch against a table a
-          // DIFFERENT derive map built — must fail loudly: swallowing it
-          // would overwrite the affected buckets with just this batch's
-          // rows, silently discarding every other block's data there.
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getErrorClass != null &&
-                e.getErrorClass.contains("UNABLE_TO_INFER_SCHEMA") =>
-            newRows
-        }
-      merged.write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("block_bucket")
-        .parquet(path)
-      // the session-level FileStatusCache may hold this path's OLD leaf
-      // files (any concurrent reader — a progress poller, the previous
-      // batch's survivors scan — primes it); a later read planning from
-      // that stale listing hits FILE_NOT_EXIST on the parts the dynamic
-      // overwrite just deleted. Invalidate after every commit.
-      spark.catalog.refreshByPath(path)
-    }
+    // each entity lands its own directory, so the replacements run
+    // concurrently; a failed one fails the batch once all have settled
+    Layout.fanout(entities.map { case (entity, df) => () =>
+      graft.Checkpoints.scoped { ck =>
+        val path = s"$outRoot/dynamic/$entity"
+        val newRows = Layout.withBlockBucket(df)
+        val merged =
+          if (!pathExists(spark, path)) newRows
+          else try {
+            val survivors = ck(spark.read.parquet(path)
+              .where(col("block_bucket").isin(affectedBuckets: _*))
+              .join(broadcast(batchBlocks), Seq("block_number"), "left_anti"))
+            newRows.unionByName(survivors)
+          } catch {
+            // ONLY the no-committed-footer case (a prior run died before
+            // its first commit) means "nothing survives". Any other
+            // analysis failure — e.g. a schema mismatch against a table a
+            // DIFFERENT derive map built — must fail loudly: swallowing
+            // it would overwrite the affected buckets with just this
+            // batch's rows, silently discarding every other block's data
+            // there.
+            case e: org.apache.spark.sql.AnalysisException
+                if e.getErrorClass != null &&
+                  e.getErrorClass.contains("UNABLE_TO_INFER_SCHEMA") =>
+              newRows
+          }
+        merged.write
+          .mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("block_bucket")
+          .parquet(path)
+        // the session-level FileStatusCache may hold this path's OLD leaf
+        // files (any concurrent reader — a progress poller, the previous
+        // batch's survivors scan — primes it); a later read planning from
+        // that stale listing hits FILE_NOT_EXIST on the parts the dynamic
+        // overwrite just deleted. Invalidate after every commit.
+        spark.catalog.refreshByPath(path)
+      }
+    })
   }
 
   /** Wire a raw-row stream into the incremental pipeline. The source can

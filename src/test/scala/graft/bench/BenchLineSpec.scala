@@ -66,4 +66,29 @@ class BenchLineSpec extends AnyFunSuite {
       .findFirstMatchIn(line.drop(line.indexOf("\"queries\":"))).get.group(1)
     assert(firstKept === f"q${n - 1}%03d_some_longer_query_name")
   }
+
+  test("the line parses with a JSON parser, bare and behind a log prefix") {
+    // how a consumer reads the captured tail: strip one `[level] ` log
+    // prefix if present (sbt relays a forked main's stdout that way
+    // unless its output strategy is StdoutOutput), then parse
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def parse(out: String) = {
+      val t = out.trim
+      val body =
+        if (t.startsWith("[") && !t.startsWith("[{") && t.contains("] "))
+          t.substring(t.indexOf("] ") + 2)
+        else t
+      mapper.readTree(body)
+    }
+    val n = 161
+    val line = graft.Bench.budgetedLine(fakeResults(n), 99.9,
+      "/tmp/bench.json", suffix)
+    val bare = parse(line)
+    assert(bare === parse("[info] " + line))
+    assert(bare.get("metric").asText === "total")
+    assert(bare.get("value").asDouble === 99.9)
+    assert(bare.get("queries_total").asInt === n)
+    assert(bare.get("queries").size === bare.get("queries_reported").asInt)
+    assert(bare.get("load_after").asDouble === 23.45)
+  }
 }

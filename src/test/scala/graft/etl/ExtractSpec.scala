@@ -174,4 +174,47 @@ class ExtractSpec extends AnyFunSuite {
     assert(accounts.contains(RpcStub.txFromOf(700L, 1))) // creator of the i=1 create
     assert(!accounts.contains(RpcStub.txFromOf(700L, 2)), "tx leg leaked into accounts")
   }
+
+  test("a failed decompile-family write fails the run after every chain settled, before the skeletons marker") {
+    import java.nio.file.{Files, Paths}
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    def rows(root: String, table: String) =
+      spark.read.parquet(s"$root/$table").collect().toSet
+    val tables = Seq("blocks", "deployments", "destructions", "withdrawals",
+      "accounts", "abi", "functions", "events", "errors", "skeletons")
+      .map("static/" + _) ++
+      Seq("transactions", "transfers", "logs").map("dynamic/" + _)
+    val clean = graft.Temps.dir("extract-marker-clean")
+    val cleanCounts = Extract.run(spark, RpcStub.endpoint, 700L, 710L, clean,
+      decompiler = Extract.standInDecompiler())
+
+    // a plain file where static/functions should be: that chain's
+    // upsert fails, so the skeletons marker must never be written
+    val out = graft.Temps.dir("extract-marker")
+    val obstacle = Paths.get(s"$out/static/functions")
+    Files.createDirectories(obstacle.getParent)
+    Files.writeString(obstacle, "not a table")
+    val before = persisted
+    intercept[Exception] {
+      Extract.run(spark, RpcStub.endpoint, 700L, 710L, out,
+        decompiler = Extract.standInDecompiler())
+    }
+    assert(persisted === before, "the failed run left persisted RDDs")
+    assert(!Files.exists(Paths.get(s"$out/static/skeletons")),
+      "the skeletons marker landed although functions failed")
+    // the run threw only after its independent chains settled: each of
+    // them has landed in full
+    for (t <- Seq("static/blocks", "static/deployments", "static/destructions",
+        "static/withdrawals", "static/accounts", "dynamic/transactions",
+        "dynamic/transfers", "dynamic/logs"))
+      assert(rows(out, t) === rows(clean, t), s"$t unsettled")
+
+    // obstacle gone: the re-run completes the store to the clean state
+    Files.delete(obstacle)
+    val counts = Extract.run(spark, RpcStub.endpoint, 700L, 710L, out,
+      decompiler = Extract.standInDecompiler())
+    assert(persisted === before, "the re-run left persisted RDDs")
+    assert(counts === cleanCounts)
+    for (t <- tables) assert(rows(out, t) === rows(clean, t), t)
+  }
 }

@@ -157,4 +157,39 @@ class RpcSpec extends AnyFunSuite {
     assert(s701.contains((h2, "", false)) && s701.contains((h2, "0", false))
       && s701.contains((h2, "1", true)) && s701.contains((h2, "1_0", true)), s701)
   }
+
+  test("joined fetch returns each method's own fetchBodies bodies and failure counts") {
+    val methods = Seq(Rpc.GetBlock, Rpc.TraceBlock, Rpc.GetLogs)
+    def failed(m: String) = Rpc.failedCounter(spark, m).value.longValue
+    // the transient face counts attempts per (method, block), so the
+    // joined fetch goes first over a range no other case touches: its
+    // retries must absorb the 503s on their own
+    val faces = Seq(
+      ("healthy", RpcStub.endpoint, 700L, 740L),
+      ("flaky", RpcStub.flakyEndpoint, 700L, 740L),
+      ("transient", RpcStub.transientEndpoint, 760L, 790L))
+    for ((face, ep, from, to) <- faces) {
+      val before = methods.map(failed)
+      val joined = Rpc.fetchJoined(spark, ep, from, to, methods).collect()
+      val joinedFailed = methods.map(failed).zip(before).map { case (a, b) => a - b }
+      assert(joined.map(_.getLong(0)).sorted.toSeq === (from to to), face)
+      methods.zip(joinedFailed).foreach { case (m, jf) =>
+        val b0 = failed(m)
+        val own = Rpc.fetchBodies(spark, ep, from, to, m).collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toMap
+        val mine = joined.map(r => r.getLong(0) -> r.getAs[String](m)).toMap
+        assert(mine === own, s"$m bodies on $face")
+        assert(jf === failed(m) - b0, s"$m failures on $face")
+        // the faces behave as specified: flaky 500s every 7th block for
+        // the block-keyed methods (eth_getLogs' filter params carry no
+        // leading hex, so it passes), transient recovers within retries
+        val expectFailed = face match {
+          case "flaky" if m != Rpc.GetLogs => (from to to).count(_ % 7 == 0).toLong
+          case _ => 0L
+        }
+        assert(jf === expectFailed, s"$m failures on $face")
+        assert(mine.values.count(_ == null) === expectFailed, s"$m nulls on $face")
+      }
+    }
+  }
 }
