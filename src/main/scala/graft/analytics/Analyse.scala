@@ -26,18 +26,28 @@ import graft.sinks.Layout
   */
 object Analyse {
 
+  /** An entity of the extract layout, read through [[Layout.readStatic]]
+    * (schema from one driver-side footer: planning starts no job). A
+    * missing or empty entity directory fails the analysis. */
+  private def static(spark: SparkSession, root: String,
+      entity: String): DataFrame =
+    Layout.readStatic(spark, root, entity).getOrElse(
+      throw new java.io.FileNotFoundException(
+        s"$root/static/$entity holds no parquet data"))
+
   /** compare_single's first hop: the target address's skeleton hash(es)
     * from the Deployment entity (similarities.rs:314-340). */
   private def targetHashes(spark: SparkSession, root: String,
       address: String): DataFrame =
-    spark.read.parquet(s"$root/static/deployments")
+    static(spark, root, "deployments")
       .where(lower(col("contract")) === address.toLowerCase)
       .select(col("skeleton_hash").as("t_hash"))
       .where(col("t_hash").isNotNull)
       .dropDuplicates("t_hash")
 
   /** All-pairs or one-vs-all similarity over the extract layout; writes
-    * the N-Quad artifact and returns per-metric pair counts. */
+    * the N-Quad artifact and returns per-metric pair counts. Every
+    * checkpoint it takes is released before it returns. */
   def similarities(spark: SparkSession, root: String, outFile: String,
       address: Option[String] = None,
       interfaceSim: Boolean = true, interfaceThreshold: Double = 0.75,
@@ -46,85 +56,85 @@ object Analyse {
     // similarities.rs:442: at least one metric must be enabled
     require(interfaceSim || cosineSim,
       "at least one similarity metric must be enabled")
-    val target = address.map(a => targetHashes(spark, root, a).localCheckpoint())
+    graft.Checkpoints.scoped { ck =>
+      val target = address.map(a => ck(targetHashes(spark, root, a)))
 
-    val ifcLines: Option[DataFrame] =
-      if (!interfaceSim) None
-      else {
-        val ifc = Similarity.interfaceSets(
-          spark.read.parquet(s"$root/static/abi"))
-        val pairs = target match {
-          case None => Similarity.jaccardPairsBlocked(ifc, interfaceThreshold)
-            .select(col("a_id"), col("b_id"), col("jaccard"))
-          case Some(t) =>
-            // J8: one-vs-all — broadcast the target interface(s) against
-            // the full interface scan, keeping the target id for the edge
-            val tIf = ifc.join(broadcast(t), col("skeleton_hash") === col("t_hash"))
-              .select(col("t_hash"), col("interface").as("t_if"))
-            ifc.crossJoin(broadcast(tIf))
-              .where(col("skeleton_hash") =!= col("t_hash"))
-              .select(col("t_hash").as("a_id"), col("skeleton_hash").as("b_id"),
-                when(size(col("interface")) === 0 || size(col("t_if")) === 0, lit(0.0))
-                  .otherwise(
-                    size(array_intersect(col("interface"), col("t_if"))).cast("double") /
-                      size(array_union(col("interface"), col("t_if"))))
-                  .as("jaccard"))
-              .where(col("jaccard") >= interfaceThreshold)
+      val ifcLines: Option[DataFrame] =
+        if (!interfaceSim) None
+        else {
+          val ifc = Similarity.interfaceSets(static(spark, root, "abi"))
+          val pairs = target match {
+            case None => Similarity.jaccardPairsBlocked(ifc, interfaceThreshold)
+              .select(col("a_id"), col("b_id"), col("jaccard"))
+            case Some(t) =>
+              // J8: one-vs-all — broadcast the target interface(s) against
+              // the full interface scan, keeping the target id for the edge
+              val tIf = ifc.join(broadcast(t), col("skeleton_hash") === col("t_hash"))
+                .select(col("t_hash"), col("interface").as("t_if"))
+              ifc.crossJoin(broadcast(tIf))
+                .where(col("skeleton_hash") =!= col("t_hash"))
+                .select(col("t_hash").as("a_id"), col("skeleton_hash").as("b_id"),
+                  when(size(col("interface")) === 0 || size(col("t_if")) === 0, lit(0.0))
+                    .otherwise(
+                      size(array_intersect(col("interface"), col("t_if"))).cast("double") /
+                        size(array_union(col("interface"), col("t_if"))))
+                    .as("jaccard"))
+                .where(col("jaccard") >= interfaceThreshold)
+          }
+          // materialize once: the text write AND the pair count below both
+          // consume this leg — uncheckpointed, each .count() would re-run
+          // the full pair generation (at mainnet scale, the most expensive
+          // job in the program, three times over)
+          Some(ck(Layout.nquadLines(pairs, "Skeleton.similar_interface")))
         }
-        // materialize once: the text write AND the pair count below both
-        // consume this leg — uncheckpointed, each .count() would re-run
-        // the full pair generation (at mainnet scale, the most expensive
-        // job in the program, three times over)
-        Some(Layout.nquadLines(pairs, "Skeleton.similar_interface")
-          .localCheckpoint())
-      }
 
-    val cosLines: Option[DataFrame] =
-      if (!cosineSim) None
-      else {
-        val skeletons = spark.read.parquet(s"$root/static/skeletons")
-          .select(col("skeleton_hash"), col("bytecode"))
-        val pairs = target match {
-          case None =>
-            Similarity.cosinePairs(skeletons, ngramLength, cosineThreshold)
-              .select(col("a_id"), col("b_id"), col("cosine"))
-          case Some(t) =>
-            val rows = Similarity.ngramRows(skeletons, ngramLength)
-              .localCheckpoint() // norms + both dot sides read it
-            val norms = rows.groupBy(col("skeleton_hash"))
-              .agg(sqrt(sum(col("cnt") * col("cnt"))).as("norm"))
-            val tRows = rows.join(broadcast(t),
-                col("skeleton_hash") === col("t_hash"))
-              .select(col("t_hash"), col("ngram"), col("cnt").as("t_cnt"))
-            rows.join(tRows, Seq("ngram"))
-              .where(col("skeleton_hash") =!= col("t_hash"))
-              .groupBy(col("t_hash"), col("skeleton_hash"))
-              .agg(sum(col("cnt") * col("t_cnt")).cast("double").as("dot"))
-              .join(norms.toDF("t_hash", "t_norm"), "t_hash")
-              .join(norms, "skeleton_hash")
-              .select(col("t_hash").as("a_id"), col("skeleton_hash").as("b_id"),
-                (col("dot") / (col("t_norm") * col("norm"))).as("cosine"))
-              .where(col("cosine") >= cosineThreshold)
+      val cosLines: Option[DataFrame] =
+        if (!cosineSim) None
+        else {
+          val skeletons = static(spark, root, "skeletons")
+            .select(col("skeleton_hash"), col("bytecode"))
+          val pairs = target match {
+            case None =>
+              Similarity.cosinePairs(skeletons, ngramLength, cosineThreshold)
+                .select(col("a_id"), col("b_id"), col("cosine"))
+            case Some(t) =>
+              // norms + both dot sides read it
+              val rows = ck(Similarity.ngramRows(skeletons, ngramLength))
+              val norms = rows.groupBy(col("skeleton_hash"))
+                .agg(sqrt(sum(col("cnt") * col("cnt"))).as("norm"))
+              val tRows = rows.join(broadcast(t),
+                  col("skeleton_hash") === col("t_hash"))
+                .select(col("t_hash"), col("ngram"), col("cnt").as("t_cnt"))
+              rows.join(tRows, Seq("ngram"))
+                .where(col("skeleton_hash") =!= col("t_hash"))
+                .groupBy(col("t_hash"), col("skeleton_hash"))
+                .agg(sum(col("cnt") * col("t_cnt")).cast("double").as("dot"))
+                .join(norms.toDF("t_hash", "t_norm"), "t_hash")
+                .join(norms, "skeleton_hash")
+                .select(col("t_hash").as("a_id"), col("skeleton_hash").as("b_id"),
+                  (col("dot") / (col("t_norm") * col("norm"))).as("cosine"))
+                .where(col("cosine") >= cosineThreshold)
+          }
+          // same once-only contract as the interface leg
+          Some(ck(Layout.nquadLines(pairs, "Skeleton.similar_code")))
         }
-        Some(Layout.nquadLines(pairs, "Skeleton.similar_code")
-          .localCheckpoint()) // same once-only contract as the interface leg
-      }
 
-    val lines = (ifcLines.toSeq ++ cosLines.toSeq).reduce(_.unionByName(_))
-    lines.write.mode("overwrite").text(outFile)
-    Map(
-      "interface_pairs" -> ifcLines.map(_.count() / 2).getOrElse(0L),
-      "cosine_pairs" -> cosLines.map(_.count() / 2).getOrElse(0L))
+      val lines = (ifcLines.toSeq ++ cosLines.toSeq).reduce(_.unionByName(_))
+      lines.write.mode("overwrite").text(outFile)
+      Map(
+        "interface_pairs" -> ifcLines.map(_.count() / 2).getOrElse(0L),
+        "cosine_pairs" -> cosLines.map(_.count() / 2).getOrElse(0L))
+    }
   }
 
   /** ContractLife rows (datetime stamped through the Block edge) +
     * the RQ1-RQ4 report, landed as `lifetimes` parquet + `res.txt`
     * (lifetimes.rs:296-300's output_path contract). */
   def lifetimes(spark: SparkSession, root: String, outPath: String): Map[String, Long] = {
-    val blockTimes = spark.read.parquet(s"$root/static/blocks")
+    val blockTimes = static(spark, root, "blocks")
       .select(col("number").as("block_number"), col("datetime").as("block_datetime"))
     def stamped(entity: String) =
-      spark.read.parquet(s"$root/static/$entity")
+      static(spark, root, entity)
         .select(col("contract"), col("block_number"), col("tx_hash"))
         .join(broadcast(blockTimes), Seq("block_number"), "left")
     val dep = stamped("deployments")
@@ -135,7 +145,8 @@ object Analyse {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outPath))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outPath/res.txt"), reportText + "\n")
-    Map("lives" -> spark.read.parquet(s"$outPath/lifetimes").count())
+    Map("lives" ->
+      spark.read.schema(lives.schema).parquet(s"$outPath/lifetimes").count())
   }
 
   /** CLI face mirroring the reference's `analyse` subcommands

@@ -1,6 +1,8 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions.{col, format_string}
 
 /** Entity sinks (SURVEY.md §2.2 K1-K5). The reference's hand-rolled
@@ -157,11 +159,37 @@ object Layout {
     }
   }
 
+  /** Plan a read of one flat parquet directory with its schema resolved
+    * on the DRIVER, or None when the directory is missing or holds no
+    * data file (a run killed during its FIRST write leaves only
+    * `_temporary` debris). `spark.read.parquet(path)` would infer the
+    * schema with a one-task Spark job that reads a footer; here the
+    * directory is listed once, its first data file by path (`_`/`.`
+    * names skipped — the file Spark's non-merging inference touches)
+    * has its footer read with row groups skipped, and Spark's own
+    * footer conversion ([[FooterSchema]]) turns it into the schema the
+    * read is planned with — so row-metadata preference, timestamp rules
+    * and nullability stay exactly Spark's, and the read starts no job.
+    * Static stores are flat part-file directories by construction: every
+    * static writer here writes unpartitioned. */
+  private def readFlat(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[DataFrame] = {
+    val fs = hadoopFs(spark, path)
+    val listed =
+      try fs.listStatus(new org.apache.hadoop.fs.Path(path))
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    listed.iterator
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .minByOption(_.getPath.toString)
+      .map(f => spark.read.schema(FooterSchema(f, spark)).parquet(path))
+  }
+
   /** Read `static/<entity>`, treating "absent" and "exists but holds no
-    * committed parquet footer" (a run killed during its FIRST write
-    * leaves `_temporary` debris) identically as None — so the
-    * advertised idempotent re-run resumes instead of dying on
-    * UNABLE_TO_INFER_SCHEMA until someone hand-deletes the directory.
+    * data file" identically as None — so the advertised idempotent
+    * re-run resumes instead of dying on a footer-less directory until
+    * someone hand-deletes it. The schema comes from one footer read on
+    * the driver ([[readFlat]]): planning the read starts no Spark job.
     *
     * `recover = true` additionally runs [[recoverStatic]] swap
     * recovery first — WRITER entry points only (upsert/merge set it).
@@ -178,14 +206,6 @@ object Layout {
   def readStatic(spark: org.apache.spark.sql.SparkSession, root: String,
       entity: String, recover: Boolean = false): Option[DataFrame] = {
     if (recover) recoverStatic(spark, root, entity)
-    val fs = hadoopFs(spark, root)
-    def tryRead(path: String): Option[DataFrame] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(path))) None
-      else try Some(spark.read.parquet(path)) catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getErrorClass != null &&
-              e.getErrorClass.contains("UNABLE_TO_INFER_SCHEMA") => None
-      }
     // A plain reader that finds the destination missing may be looking
     // at a HEALTHY writer's between-renames window (the table is parked
     // under .__old for microseconds) — fall back to the parked copy,
@@ -194,8 +214,8 @@ object Layout {
     // the frame is still lazy, its files vanish mid-read — the same
     // hazard any non-transactional overwrite-while-read has; callers
     // needing stability localCheckpoint the result.
-    tryRead(s"$root/static/$entity")
-      .orElse(tryRead(oldDir(root, entity)))
+    readFlat(spark, s"$root/static/$entity")
+      .orElse(readFlat(spark, oldDir(root, entity)))
   }
 
   /** Atomic-by-rename overwrite of a static table: write the new
@@ -445,13 +465,7 @@ object Layout {
     }
     val fs = hadoopFs(spark, root)
     val q = new org.apache.hadoop.fs.Path(quarantineDir(root, entity))
-    val quarantined =
-      if (!fs.exists(q)) None
-      else try Some(spark.read.parquet(q.toString)) catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getErrorClass != null &&
-              e.getErrorClass.contains("UNABLE_TO_INFER_SCHEMA") => None
-      }
+    val quarantined = readFlat(spark, q.toString)
     // allowMissingColumns: a quarantine written by an older build may
     // lack columns a newer schema added — widen with nulls, same as the
     // upsert evolution path

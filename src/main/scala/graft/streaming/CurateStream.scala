@@ -217,20 +217,6 @@ object CurateStream {
     * both the exact and MinHash layers; only span coverage sees it). */
   val SpanDupFrac = 0.5
 
-  /** Bounded pool for the per-batch index upserts: the index entities
-    * are mutually independent (each is its own directory and its own
-    * anti-join), so their writes overlap — the per-batch bill is the
-    * slowest upsert, not the sum. Daemon threads; sized to the entity
-    * count (4 curate + 2 lexical + 1 certificate), not the data. */
-  private lazy val upsertPool = java.util.concurrent.Executors
-    .newFixedThreadPool(7, (r: Runnable) => {
-      val t = new Thread(r, "graft-curate-upsert")
-      t.setDaemon(true)
-      t
-    })
-  private lazy val upsertEc =
-    scala.concurrent.ExecutionContext.fromExecutor(upsertPool)
-
   private def contentKey(text: Column): Column = md5(text.cast("binary"))
 
   /** Per-doc DISTINCT 8-token span-hash rows (doc_id, sp) — q134's
@@ -639,17 +625,15 @@ object CurateStream {
     // directory, each an idempotent anti-join — so they run in
     // PARALLEL (the per-batch bill becomes the slowest upsert, not the
     // sum); the two ordering invariants that matter survive: the
-    // sketch merge lands BEFORE the keys it covers (chained inside one
-    // future — superset invariant; a crash between the two only costs
+    // sketch merge lands BEFORE the keys it covers (inside one chain —
+    // superset invariant; a crash between the two only costs
     // false positives), and the manifest waits for ALL index writes
     // (a crash mid-fan-out leaves any SUBSET of entities landed with
     // no manifest, which the replay's self-excluding probes already
     // absorb — no worse than the old sequential prefix).
     val kept = manifest.where(col("status") === "kept").select("doc_id")
-    implicit val ec: scala.concurrent.ExecutionContext = upsertEc
-    import scala.concurrent.{Await, Future}
-    def lw[T](desc: String)(f: => T): Future[T] =
-      Future(graft.Sessions.labeled(s, desc)(f))
+    def lw(desc: String)(f: => Unit): () => Unit =
+      () => graft.Sessions.labeled(s, desc)(f)
     val writes = Seq(
       lw("curate-ingest:keys") {
         if (keptN > 0) {
@@ -708,19 +692,27 @@ object CurateStream {
           upsertCert(landed.join(broadcast(kept), Seq("doc_id"), "left_semi")
             .select("doc_id", "n_toks"), root)
       })
-    Await.result(Future.sequence(writes), scala.concurrent.duration.Duration.Inf)
-    Layout.upsertStatic(manifest, root, ManifestEntity, Seq("doc_id"),
-      flipProbe = true)
-    // a long-lived ingest process calls this once per micro-batch in
-    // ONE session: the localCheckpoints above would otherwise stay
-    // pinned in executor storage forever (2-3 blocks per batch ×
-    // thousands of batches → eviction churn). Everything they fed has
-    // landed; only the returned manifest stays materialized.
-    landed.unpersist()
-    bSpans.foreach(_.unpersist())
-    candCorpus.unpersist()
-    candBatch.unpersist()
-    if (sketch.exists(_.shardCount > 1)) dupExactCorpus.unpersist()
+    // a failed chain fails the batch only once every chain has settled,
+    // so no index write is still running when the caller sees the error
+    try {
+      Layout.fanout(writes)
+      Layout.upsertStatic(manifest, root, ManifestEntity, Seq("doc_id"),
+        flipProbe = true)
+    } catch {
+      case e: Throwable =>
+        graft.Checkpoints.release(manifest)
+        throw e
+    } finally {
+      // a long-lived ingest process calls this once per micro-batch in
+      // ONE session: the localCheckpoints above would otherwise stay
+      // pinned in executor storage forever (2-3 blocks per batch ×
+      // thousands of batches → eviction churn). Everything they fed has
+      // landed (or the batch failed); only the returned manifest stays
+      // materialized.
+      (Seq(landed, candCorpus, candBatch) ++ bSpans ++
+        Option.when(sketch.exists(_.shardCount > 1))(dupExactCorpus))
+        .foreach(graft.Checkpoints.release)
+    }
     manifest
   }
 
@@ -750,7 +742,7 @@ object CurateStream {
         // the stream has no consumer for the manifest frame — drop its
         // pinned blocks too (ingestBatch keeps it materialized for
         // batch callers that read statuses back)
-        ingestBatch(b, root).unpersist()
+        graft.Checkpoints.release(ingestBatch(b, root))
         if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
           // SpansEntity rides the same window: compactStatic is a no-op
           // None when the store was never armed (spanGate off)

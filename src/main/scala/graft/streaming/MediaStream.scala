@@ -190,9 +190,7 @@ object MediaStream {
       root, QuartersEntity, Seq("media_id"), flipProbe = true)
     Layout.upsertStatic(manifest, root, ManifestEntity, Seq("media_id"),
       flipProbe = true)
-    qsB.unpersist()
-    candCorpus.unpersist()
-    candBatch.unpersist()
+    Seq(qsB, candCorpus, candBatch).foreach(graft.Checkpoints.release)
     manifest
   }
 
@@ -247,7 +245,8 @@ object MediaStream {
       .parquet(rawDir)
       .writeStream.option("checkpointLocation", checkpoint)
       .foreachBatch { (b: DataFrame, id: Long) =>
-        ingestBatch(b, root, maxHamming, gridRows, gridCols).unpersist()
+        graft.Checkpoints.release(
+          ingestBatch(b, root, maxHamming, gridRows, gridCols))
         if (compactEvery > 0 && (id + 1) % compactEvery == 0)
           Seq(QuartersEntity, ManifestEntity)
             .foreach(Layout.compactStatic(spark, root, _))

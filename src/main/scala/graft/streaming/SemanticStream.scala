@@ -901,7 +901,7 @@ object SemanticStream {
         if (slotAutoThreshold > 0)
           slotRetrainIfUnbalanced(spark, root, man, slotAutoThreshold,
             slotAutoK, minBatchesBetween = slotMinBatchesBetween)
-        man.unpersist()
+        graft.Checkpoints.release(man)
         if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
           Seq(CellsEntity, ManifestEntity, PqCodesEntity, SqCodesEntity,
               JlVecsEntity)
@@ -2022,7 +2022,7 @@ object SemanticStream {
     // drop the per-batch pinned checkpoints (see CurateStream: a
     // long-lived ingest session would otherwise accumulate them);
     // the returned manifest stays materialized for the caller
-    batch.unpersist(); asg.unpersist()
+    Seq(batch, asg).foreach(graft.Checkpoints.release)
     manifest
   }
 }

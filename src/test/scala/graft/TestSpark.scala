@@ -18,4 +18,13 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** The id of the RDD holding a `localCheckpoint`'s blocks. Leak checks
+    * compare `getPersistentRDDs` key sets, not sizes: the map holds its
+    * RDDs weakly, so a GC may drop an unrelated unreferenced one. */
+  def checkpointedRddId(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      case other => sys.error(s"not a checkpointed frame: ${other.nodeName}")
+    }
 }

@@ -337,6 +337,81 @@ class LayoutSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/static/sigs").count() === 1)
   }
 
+  /** Jobs started by `f` on this thread, counted by a listener: `f`
+    * runs under its own job description, then a sentinel job does; the
+    * listener bus delivers in order, so once the sentinel is seen every
+    * job `f` started has been counted. */
+  private def jobsStartedBy[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-probe-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(tag)
+      val out = try f finally sc.setJobDescription(null)
+      sc.setJobDescription(s"$tag-sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(s"$tag-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$tag-sentinel"), "sentinel job never reached the listener")
+      (out, seen.toArray.count(_ == tag))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readStatic: an existing store plans from the driver-side footer, starting no job") {
+    import spark.implicits._
+    val out = graft.Temps.dir("read-nojob")
+    Layout.writeStatic(Seq(("0xaa", 1L), ("0xbb", 2L)).toDF("signature", "v")
+      .repartition(2), out, "sigs")
+    val (read, jobs) = jobsStartedBy(Layout.readStatic(spark, out, "sigs"))
+    assert(jobs === 0, "readStatic started a Spark job")
+    assert(read.get.as[(String, Long)].collect().toSet ===
+      Set(("0xaa", 1L), ("0xbb", 2L)))
+    // the probe sees inference jobs: a plain read of the same store
+    // infers its schema with one
+    val (_, plainJobs) = jobsStartedBy(spark.read.parquet(s"$out/static/sigs"))
+    assert(plainJobs >= 1, "the job probe counted no inference job")
+  }
+
+  test("readStatic: the footer schema equals Spark's inferred schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("amount", DecimalType(38, 18)),
+      StructField("price", DecimalType(9, 2), nullable = false),
+      StructField("ts", TimestampType),
+      StructField("ts_ntz", TimestampNTZType),
+      StructField("tags", ArrayType(StringType, containsNull = true)),
+      StructField("calls", ArrayType(StructType(Seq(
+        StructField("sig", StringType, nullable = false),
+        StructField("args", ArrayType(LongType, containsNull = false)),
+        StructField("meta", MapType(StringType, DoubleType)))),
+        containsNull = false)),
+      StructField("note", StringType)))
+    val rows = Seq(
+      Row(1L, new java.math.BigDecimal("1.000000000000000001"),
+        new java.math.BigDecimal("9.99"),
+        java.sql.Timestamp.valueOf("2021-01-01 00:00:00.123456"),
+        java.time.LocalDateTime.parse("2021-01-01T00:00:00.5"),
+        Seq("a", null), Seq(Row("0xab", Seq(1L, 2L), Map("w" -> 0.5))), null),
+      Row(2L, null, new java.math.BigDecimal("0.01"), null, null, null,
+        Seq.empty[Row], "x"))
+    val out = graft.Temps.dir("read-schema")
+    Layout.writeStatic(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), schema), out, "mixed")
+    val got = Layout.readStatic(spark, out, "mixed").get
+    val inferred = spark.read.parquet(s"$out/static/mixed")
+    assert(got.schema === inferred.schema)
+    assert(got.collect().toSet === inferred.collect().toSet)
+  }
+
   test("bucket arithmetic: 10k blocks per partition") {
     import spark.implicits._
     val b = Layout.withBlockBucket(Seq(0L, 9999L, 10000L, 123456789L).toDF("block_number"))

@@ -264,4 +264,62 @@ class CurateStreamSpec extends AnyFunSuite {
     assert((ab - shard).view.mapValues(_._4).toMap
       === (ba - shard).view.mapValues(_._4).toMap)
   }
+
+  test("a failed index chain fails the ingest after every chain settled, before the manifest") {
+    import java.nio.file.{Files, Paths}
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def rows(root: String, entity: String) =
+      Layout.readStatic(spark, root, entity).map(_.collect().toSet)
+    val corpus = docsDF(Seq(1L -> qtext(1), 2L -> qtext(2), 29L -> qtext(6)))
+    // kept docs (40, 50), an exact corpus dup (0) and a bench member
+    // (58): the keys, bands, bench, postings and dl chains all write
+    val batch = docsDF(Seq(0L -> qtext(1), 40L -> qtext(8), 50L -> qtext(9),
+      58L -> qtext(10)))
+    val entities = Seq(CurateStream.KeysEntity, CurateStream.BandsEntity,
+      CurateStream.BenchEntity, CurateStream.PostingsEntity,
+      CurateStream.DlEntity, CurateStream.ManifestEntity)
+
+    val clean = graft.Temps.dir("curate-fail-clean")
+    CurateStream.bootstrap(corpus, clean)
+    val cleanMan = {
+      val m = CurateStream.ingestBatch(batch, clean, lexIndex = true)
+      try m.collect().toSet finally graft.Checkpoints.release(m)
+    }
+
+    // a plain file where the postings store should be: that chain fails
+    // at its first read, long before its siblings finish writing
+    val root = graft.Temps.dir("curate-fail")
+    CurateStream.bootstrap(corpus, root)
+    val obstacle = Paths.get(s"$root/static/${CurateStream.PostingsEntity}")
+    Files.writeString(obstacle, "not a table")
+    val before = persisted
+    intercept[Exception](CurateStream.ingestBatch(batch, root, lexIndex = true))
+    assert((persisted -- before).isEmpty, "the failed ingest left persisted RDDs")
+    assert(rows(root, CurateStream.ManifestEntity).forall(_.isEmpty),
+      "manifest rows landed although an index chain failed")
+    // it threw only after the sibling chains settled: each landed in full
+    for (e <- Seq(CurateStream.KeysEntity, CurateStream.BandsEntity,
+        CurateStream.BenchEntity, CurateStream.DlEntity))
+      assert(rows(root, e) === rows(clean, e), s"$e unsettled")
+
+    // obstacle gone: the re-run equals a clean run, entity by entity
+    Files.delete(obstacle)
+    val man = CurateStream.ingestBatch(batch, root, lexIndex = true)
+    assert(man.collect().toSet === cleanMan)
+    for (e <- entities) assert(rows(root, e) === rows(clean, e), e)
+  }
+
+  test("ingestBatch leaves only its returned manifest persisted") {
+    val corpus = docsDF(Seq(1L -> qtext(1), 2L -> qtext(2), 29L -> qtext(6)))
+    val root = graft.Temps.dir("curate-leak")
+    // every per-batch checkpoint armed: the span layer and the sharded
+    // sketch's exact-dup probe
+    CurateStream.bootstrap(corpus, root, withSpans = true,
+      withSketch = true, sketchShards = 2)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val man = CurateStream.ingestBatch(docsDF(Seq(0L -> qtext(1),
+      40L -> qtext(8), 41L -> (qtext(8) + " tail"))), root, spanGate = true)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before ===
+      Set(graft.TestSpark.checkpointedRddId(man)))
+  }
 }

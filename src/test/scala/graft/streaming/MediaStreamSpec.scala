@@ -132,4 +132,14 @@ class MediaStreamSpec extends AnyFunSuite {
     assert(files(MediaStream.ManifestEntity) === 1)
     assert((indexIds(root), manifestOf(root)) === rowsBefore)
   }
+
+  test("ingestBatch leaves only its returned manifest persisted") {
+    val root = graft.Temps.dir("media-leak")
+    MediaStream.bootstrap(mediaDF(Seq(10L -> alpha)), root)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val man = MediaStream.ingestBatch(
+      mediaDF(Seq(20L -> zz, 21L -> alphaVar, 5L -> omega, 22L -> omegaVar)), root)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before ===
+      Set(TestSpark.checkpointedRddId(man)))
+  }
 }

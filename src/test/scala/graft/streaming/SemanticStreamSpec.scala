@@ -120,4 +120,15 @@ class SemanticStreamSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSet
     assert(cells === Set(1L, 2L, 3L, 4L, 5L, 200L))
   }
+
+  test("ingestVectors leaves only its returned manifest persisted") {
+    val corpus = df(Seq(1L -> vec(0 -> 1.0), 2L -> vec(1 -> 1.0)))
+    val root = graft.Temps.dir("semantic-leak")
+    SemanticStream.bootstrap(corpus, root)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val man = SemanticStream.ingestVectors(df(Seq(
+      10L -> vec(0 -> 1.0), 20L -> vec(0 -> 0.25, 2 -> 1.0))), root)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before ===
+      Set(graft.TestSpark.checkpointedRddId(man)))
+  }
 }
