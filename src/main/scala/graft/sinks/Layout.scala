@@ -57,22 +57,35 @@ object Layout {
   private lazy val fanoutEc =
     scala.concurrent.ExecutionContext.fromExecutor(fanoutPool)
 
+  /** The Spark local properties a fan-out chain takes from the thread
+    * that submitted it: job group, description, tags, scheduler pool
+    * and enclosing SQL execution. */
+  private val chainProperties = Seq("spark.jobGroup.id",
+    "spark.job.description", "spark.job.interruptOnCancel",
+    "spark.job.tags", "spark.scheduler.pool", "spark.sql.execution.id",
+    "spark.sql.execution.root.id")
+
   /** Run independent write chains concurrently and wait for all.
     * Callers own the independence argument: each thunk must touch its
     * own entity directories only, with any required ordering (e.g.
     * commit-marker-last, books-before-codes) kept INSIDE one thunk. A
     * failure in any chain propagates after ALL chains settle (the first
     * failure thrown, later ones suppressed on it), so the caller never
-    * returns while a sibling chain is still writing. */
+    * returns while a sibling chain is still writing. Each chain runs
+    * under the submitting thread's [[chainProperties]]. */
   def fanout(writes: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, Future}
     implicit val ec: scala.concurrent.ExecutionContext = fanoutEc
+    // local properties are inheritable thread-locals, and a cached pool
+    // thread keeps those of whichever thread created it: set the
+    // submitter's on every chain (null clears a stale one)
+    val sc = org.apache.spark.sql.SparkSession.getDefaultSession
+      .map(_.sparkContext)
+    val props = sc.toSeq.flatMap(c =>
+      chainProperties.map(k => k -> c.getLocalProperty(k)))
     val chains = writes.map(w => Future {
-      // job descriptions are THREAD-LOCAL and the cached pool reuses
-      // threads, so a chain that doesn't label itself would inherit
-      // a stale label from a previous task on this thread — clear it
-      org.apache.spark.sql.SparkSession.getDefaultSession.foreach(
-        _.sparkContext.setLocalProperty("spark.job.description", null))
+      sc.foreach(c =>
+        props.foreach { case (k, v) => c.setLocalProperty(k, v) })
       w()
     })
     // NOT Future.sequence: it fails fast on the first failure, while
@@ -217,6 +230,15 @@ object Layout {
     readFlat(spark, s"$root/static/$entity")
       .orElse(readFlat(spark, oldDir(root, entity)))
   }
+
+  /** [[readStatic]] with writer-side recovery, or an empty frame of
+    * `ddl` when the entity has never been written: how the streaming
+    * indexes, each the one writer of its root, read their entities. */
+  private[graft] def readStaticOrEmpty(spark: org.apache.spark.sql.SparkSession,
+      root: String, entity: String, ddl: String): DataFrame =
+    readStatic(spark, root, entity, recover = true).getOrElse(
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL(ddl)))
 
   /** Atomic-by-rename overwrite of a static table: write the new
     * contents to a hidden swap directory (the write's plan may still

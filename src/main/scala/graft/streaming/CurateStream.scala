@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -287,15 +287,6 @@ object CurateStream {
         graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
       .distinct()
 
-  private def emptyFrame(s: SparkSession, ddl: String): DataFrame =
-    s.createDataFrame(java.util.Collections.emptyList[Row](),
-      StructType.fromDDL(ddl))
-
-  private def stored(s: SparkSession, root: String, entity: String,
-      ddl: String): DataFrame =
-    Layout.readStatic(s, root, entity, recover = true)
-      .getOrElse(emptyFrame(s, ddl))
-
   /** Seed the index from an existing corpus (assumed already curated:
     * ALL its docs contribute keys and signatures; its bench members
     * contribute shingles). Idempotent — re-bootstrapping is a no-op.
@@ -434,10 +425,10 @@ object CurateStream {
 
     // probes EXCLUDE this batch's own ids — a replayed half-applied
     // batch must not see its own landed rows (bit-stable statuses)
-    val sigIdx = stored(s, root, BandsEntity,
+    val sigIdx = Layout.readStaticOrEmpty(s, root, BandsEntity,
         "doc_id bigint, h0 bigint, h1 bigint, h2 bigint, h3 bigint")
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
-    val benchIdx = stored(s, root, BenchEntity, "sh bigint")
+    val benchIdx = Layout.readStaticOrEmpty(s, root, BenchEntity, "sh bigint")
 
     // exact layer: stored content-key probe + within-batch keep-best.
     // When the maintained Bloom sketch exists ([[KeySketch]]; opt-in at
@@ -461,7 +452,8 @@ object CurateStream {
     // semi (batch SEMI corpus-keys) had the corpus as the build side,
     // which the planner could only sort-merge = one corpus-key shuffle
     // per batch
-    val keyHits = stored(s, root, KeysEntity, "key string, doc_id bigint")
+    val keyHits = Layout.readStaticOrEmpty(s, root, KeysEntity,
+        "key string, doc_id bigint")
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
       .join(broadcast(exactProbe.select("key")), Seq("key"), "left_semi")
       .select("key").distinct()
@@ -559,7 +551,7 @@ object CurateStream {
       else Some(spanSetOf(landed.join(broadcast(b2), Seq("doc_id"), "left_semi")
         .where(col("doc_id") % 29 =!= 0)).localCheckpoint())
     val spanDup: DataFrame = bSpans match {
-      case None => emptyFrame(s, "doc_id bigint")
+      case None => ids.where(lit(false)) // no span layer: nothing flagged
       case Some(sp) =>
         // flipped probe (discipline note above): the corpus-token-linear
         // span store streams through broadcast anti + semi joins; only
@@ -567,7 +559,8 @@ object CurateStream {
         // the coverage left join (the distinct keeps the left join's
         // row multiplicity at 1 per batch span, exactly as the old
         // full-index distinct did — n_sp/n_dup are unchanged)
-        val spanHits = stored(s, root, SpansEntity, "doc_id bigint, sp bigint")
+        val spanHits = Layout.readStaticOrEmpty(s, root, SpansEntity,
+            "doc_id bigint, sp bigint")
           .join(broadcast(ids), Seq("doc_id"), "left_anti")
           .join(broadcast(sp.select("sp")), Seq("sp"), "left_semi")
           .select("sp").distinct()

@@ -181,11 +181,13 @@ object Incremental {
     * destructions per block). Blocks are always fetched; traces and
     * logs fetch LAZILY on first access — a derive map that never touches
     * them costs no extra RPC round — and each materializes exactly once
-    * (every consumer would otherwise re-run its HTTP hop). */
-  final class Gap(val blocks: DataFrame,
-      tracesF: () => DataFrame, logsF: () => DataFrame) {
-    lazy val traces: DataFrame = tracesF().localCheckpoint()
-    lazy val logs: DataFrame = logsF().localCheckpoint()
+    * (every consumer would otherwise re-run its HTTP hop), through the
+    * tick's checkpoint scope: a Gap is valid only during its tick. */
+  final class Gap private[streaming] (val blocks: DataFrame,
+      tracesF: () => DataFrame, logsF: () => DataFrame,
+      scope: graft.Checkpoints.Scope) {
+    lazy val traces: DataFrame = scope(tracesF())
+    lazy val logs: DataFrame = scope(logsF())
   }
 
   /** The multi-entity follow's explicit resume point: a `_synced_head`
@@ -362,7 +364,9 @@ object Incremental {
             case _ => conservativeScan
           }
         }
-        if (head > last) {
+        // the tick's checkpoints (blocks, and the gap's traces/logs once
+        // read) are released when it ends, onGap included
+        if (head > last) graft.Checkpoints.scoped { ck =>
           // observable BEFORE any write: a waiter that saw a tick start
           // must not trust per-entity row maxima for its stop decision
           // (they go stale-complete between replaceEntities and
@@ -371,14 +375,14 @@ object Incremental {
           onTickStart()
           // durable twin of onTickStart, for the CROSS-PROCESS window
           writeTickIntent(spark, outRoot, last, names)
-          val blocks = graft.sources.Rpc
+          val blocks = ck(graft.sources.Rpc
             .fetchBlocks(spark, endpoint, last + 1, head, slots)
-            .withColumnRenamed("number", "block_number")
-            .localCheckpoint()
+            .withColumnRenamed("number", "block_number"))
           val gap = new Gap(blocks,
             () => graft.sources.Rpc.traceEntities(
               graft.sources.Rpc.fetchTraces(spark, endpoint, last + 1, head, slots)),
-            () => graft.sources.Rpc.fetchLogs(spark, endpoint, last + 1, head, slots))
+            () => graft.sources.Rpc.fetchLogs(spark, endpoint, last + 1, head, slots),
+            ck)
           val batchBlocks = blocks.select(col("block_number")).distinct().persist()
           try {
             replaceEntities(spark, batchBlocks, outRoot,

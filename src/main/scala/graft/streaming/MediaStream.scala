@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -62,15 +62,6 @@ object MediaStream {
     ("media_id bigint" +: (0 until nb).map(k => s"q$k bigint"))
       .mkString(", ")
 
-  private def emptyFrame(s: SparkSession, ddl: String): DataFrame =
-    s.createDataFrame(java.util.Collections.emptyList[Row](),
-      StructType.fromDDL(ddl))
-
-  private def stored(s: SparkSession, root: String, entity: String,
-      ddl: String): DataFrame =
-    Layout.readStatic(s, root, entity, recover = true)
-      .getOrElse(emptyFrame(s, ddl))
-
   /** The stored quarters index at the caller's grid width, failing
     * LOUDLY when the store was built at a different width — a
     * mismatched probe would silently find zero band matches and mark
@@ -80,7 +71,7 @@ object MediaStream {
     * with the one-shot face — r14 review). */
   private def storedQuarters(s: SparkSession, root: String,
       nb: Int): DataFrame = {
-    val qs = stored(s, root, QuartersEntity, quartersDdl(nb))
+    val qs = Layout.readStaticOrEmpty(s, root, QuartersEntity, quartersDdl(nb))
     require(qs.columns.length == nb + 1,
       s"media_quarters under $root has ${qs.columns.length - 1} quarter " +
         s"columns but the call expects $nb — the store's grid width is " +

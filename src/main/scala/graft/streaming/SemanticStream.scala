@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import graft.ops.SimSearch
 import graft.sinks.Layout
+import graft.sinks.Layout.readStaticOrEmpty
 
 /** ONLINE semantic dedup over a maintained IVF index — the vector-side
   * analog of [[CurateStream]] and the online face of q135's SemDeDup
@@ -218,15 +220,6 @@ object SemanticStream {
   private val SlotForwardMetaDdl =
     "tbl string, buckets int, ver string, cnt bigint"
 
-  private def emptyFrame(s: SparkSession, ddl: String): DataFrame =
-    s.createDataFrame(java.util.Collections.emptyList[Row](),
-      StructType.fromDDL(ddl))
-
-  private def stored(s: SparkSession, root: String, entity: String,
-      ddl: String): DataFrame =
-    Layout.readStatic(s, root, entity, recover = true)
-      .getOrElse(emptyFrame(s, ddl))
-
   /** Content hash of a collected codebook — deterministic (the
     * codebook itself is: id-seeded init, fixed rounds, decimal means)
     * so a replayed retrain produces the same tag. */
@@ -251,7 +244,7 @@ object SemanticStream {
     * repeats. */
   private def reassignAll(s: SparkSession, root: String,
       cb: Seq[(Long, Seq[Double], Double)], ver: String): Unit = {
-    val cells = stored(s, root, CellsEntity, CellsDdl)
+    val cells = readStaticOrEmpty(s, root, CellsEntity, CellsDdl)
     val reassigned = SimSearch.ivfAssign(cells, "id", "v", cb, p = 1)
       .select(col("id"),
         element_at(col("probes"), 1).getField("cid").as("cell"),
@@ -259,36 +252,49 @@ object SemanticStream {
     Layout.replaceStatic(reassigned, root, CellsEntity)
   }
 
-  /** Clean-check memo for the MAIN inverted file's torn-retrain check
-    * — the slot memo's twin ([[cleanSlotChecks]]): every serve face
-    * and ingest ran one `ver`-mismatch job per call; once a root
-    * verified consistent under codebook hash `ver`, later calls in
-    * this process skip it. Sound for the same reason: anything that
-    * could invalidate the state ([[retrain]], a concurrent process's
-    * retrain, a repair) lands a NEW codebook whose content hash
-    * misses the memo — and the book is re-read per call — while
-    * ingest folds rows tagged with the live hash. */
-  private val cleanCellChecks =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The last live `ver` each (root, entity) sidecar verified clean
+    * under, in this process. Anything that could tear a sidecar again
+    * (a retrain, rotation or repair, here or in another process) lands
+    * a new book whose content hash misses the memo, and the book is
+    * re-read per call; ingest folds rows tagged with the live hash. */
+  private val cleanChecks =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  /** Roll a torn [[retrain]] forward if needed; memoized per (root,
-    * codebook hash). The not-torn scan is metadata-cheap besides (ver
+  /** Roll a torn two-entity swap forward: when any row of `entity`
+    * carries a `ver` other than the live book's (or no `ver` column at
+    * all: a store written before the tag existed), or `torn` says so,
+    * run `redo`, the pass the swap ends with. Memoised per (root,
+    * entity, ver). The mismatch scan is metadata-cheap besides: `ver`
     * is constant per file, so parquet stats answer the pushed
-    * not-equal) — the memo removes even the job-launch. */
-  private def repairCells(s: SparkSession, root: String,
-      cb: Seq[(Long, Seq[Double], Double)], ver: String): Unit = {
-    if (ver == cleanCellChecks.get(root)) return
-    val torn = !stored(s, root, CellsEntity, CellsDdl)
-      .where(!(col("ver") <=> lit(ver))).isEmpty
-    if (torn) reassignAll(s, root, cb, ver)
-    cleanCellChecks.put(root, ver)
-    ()
+    * not-equal. */
+  private def rollForward(s: SparkSession, root: String, entity: String,
+      ddl: String, ver: String, torn: DataFrame => Boolean = _ => false)(
+      redo: => Unit): Unit = {
+    if (ver == cleanChecks.get((root, entity))) return
+    val rows = readStaticOrEmpty(s, root, entity, ddl)
+    if (!rows.columns.contains("ver") ||
+        !rows.where(!(col("ver") <=> lit(ver))).isEmpty || torn(rows)) redo
+    cleanChecks.put((root, entity), ver)
+  }
+
+  /** The live codebook and its version, a torn [[retrain]] rolled
+    * forward first: every face that reads the inverted file reads the
+    * book here, so it never scores cells assigned under another one. */
+  private def liveCodebook(s: SparkSession, root: String)
+      : (Seq[(Long, Seq[Double], Double)], String) = {
+    val cb = SimSearch.collectCodebook(
+      readStaticOrEmpty(s, root, CodebookEntity, CodebookDdl))
+    require(cb.nonEmpty, s"no codebook under $root — bootstrap first")
+    val ver = codebookVersion(cb)
+    rollForward(s, root, CellsEntity, CellsDdl, ver)(
+      reassignAll(s, root, cb, ver))
+    (cb, ver)
   }
 
   /** The stored PQ books, as the nested structure the kernel
     * expressions take. */
   def readBooks(s: SparkSession, root: String): Option[Seq[Seq[Seq[Double]]]] = {
-    val rows = stored(s, root, PqBooksEntity, PqBooksDdl).collect()
+    val rows = readStaticOrEmpty(s, root, PqBooksEntity, PqBooksDdl).collect()
     if (rows.isEmpty) None
     else Some(rows.map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -297,7 +303,7 @@ object SemanticStream {
 
   /** The stored SQ grid as (mins, scales, isteps). */
   def readGrid(s: SparkSession, root: String): Option[(Seq[Double], Seq[Double], Seq[Double])] = {
-    val rows = stored(s, root, SqGridEntity, SqGridDdl).collect()
+    val rows = readStaticOrEmpty(s, root, SqGridEntity, SqGridDdl).collect()
     if (rows.isEmpty) None
     else {
       val sorted = rows.map(r =>
@@ -324,7 +330,7 @@ object SemanticStream {
 
   /** The stored JL family as (dOut, seed, ver). */
   def readJlMeta(s: SparkSession, root: String): Option[(Int, Long, String)] =
-    stored(s, root, JlMetaEntity, JlMetaDdl).collect().headOption
+    readStaticOrEmpty(s, root, JlMetaEntity, JlMetaDdl).collect().headOption
       .map(r => (r.getInt(0), r.getLong(1), r.getString(2)))
 
   /** Content tag of a JL family — the projection matrix is a pure
@@ -358,7 +364,8 @@ object SemanticStream {
   private def reprojectAll(s: SparkSession, root: String, dOut: Int,
       seed: Long): Unit =
     Layout.replaceStatic(
-      jlRows(stored(s, root, CellsEntity, CellsDdl), "id", "v", dOut, seed),
+      jlRows(readStaticOrEmpty(s, root, CellsEntity, CellsDdl), "id", "v",
+        dOut, seed),
       root, JlVecsEntity)
 
   /** Swap the JL plane family (e.g. widen d′ as the corpus grows):
@@ -377,32 +384,22 @@ object SemanticStream {
     jlVersion(dOut, seed)
   }
 
-  /** Clean-check memo for the JL family tag — the cell/slot memos'
-    * twin; a rotation lands a new (dOut, seed) whose version misses
-    * the memo, and ingest folds rows tagged with the live family. */
-  private val cleanJlChecks =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Roll a torn [[rotateJlFamily]] forward if the projected rows'
-    * family tag disagrees with the stored meta (memoized per (root,
-    * family version); the scan itself is column-pruned `ver` only). */
-  private def repairJl(s: SparkSession, root: String, dOut: Int,
-      seed: Long): Unit = {
-    val ver = jlVersion(dOut, seed)
-    if (ver == cleanJlChecks.get(root)) return
-    val torn = !stored(s, root, JlVecsEntity, JlVecsDdl)
-      .where(!(col("ver") <=> lit(ver))).isEmpty
-    if (torn) reprojectAll(s, root, dOut, seed)
-    cleanJlChecks.put(root, ver)
-    ()
-  }
+  /** The stored JL family, a torn [[rotateJlFamily]] rolled forward
+    * first, so the projected rows carry the family the meta names. */
+  private def repairedJlMeta(s: SparkSession,
+      root: String): Option[(Int, Long, String)] =
+    readJlMeta(s, root).map { case meta @ (dOut, seed, _) =>
+      rollForward(s, root, JlVecsEntity, JlVecsDdl, jlVersion(dOut, seed))(
+        reprojectAll(s, root, dOut, seed))
+      meta
+    }
 
   /** The stored slot codebook as (codebook, slices): centroids in the
     * w-dim slot space plus the slice count the sidecar was built at
     * (the vector dim re-derives as slices·w). */
   def readSlotBook(s: SparkSession, root: String)
       : Option[(Seq[(Long, Seq[Double], Double)], Int)] = {
-    val rows = stored(s, root, SlotBookEntity, SlotBookDdl).collect()
+    val rows = readStaticOrEmpty(s, root, SlotBookEntity, SlotBookDdl).collect()
     if (rows.isEmpty) None
     else Some((rows.map(r => (r.getLong(0), r.getSeq[Double](1),
       r.getDouble(2))).sortBy(_._1).toSeq, rows.head.getInt(3)))
@@ -440,7 +437,7 @@ object SemanticStream {
       ver: String): Unit = {
     val dim = slices * scb.head._2.length
     Layout.replaceStatic(
-      slotCellRows(stored(s, root, CellsEntity, CellsDdl), "id", "v",
+      slotCellRows(readStaticOrEmpty(s, root, CellsEntity, CellsDdl), "id", "v",
         scb, slices, dim, ver),
       root, SlotCellsEntity)
     // a REGISTERED forward projection is a downstream copy of the
@@ -452,54 +449,36 @@ object SemanticStream {
     // [[readSlotForward]]'s guard rejects — stale reads are
     // impossible, only a (correct) plain-path fallback until the next
     // swap path re-runs this refresh.
-    stored(s, root, SlotForwardMetaEntity, SlotForwardMetaDdl)
+    readStaticOrEmpty(s, root, SlotForwardMetaEntity, SlotForwardMetaDdl)
       .collect().headOption.foreach { r =>
         landSlotForward(s, root, r.getString(0), r.getInt(1), ver)
       }
   }
 
-  /** Clean-check memo for [[repairSlots]]: once a root's slot cells
-    * verified consistent under book hash `ver`, later calls in this
-    * process skip the check entirely — every path that could
-    * invalidate it (retrain, rotation, repair) lands a NEW book whose
-    * content hash misses the memo, forcing one fresh scan under the
-    * new hash. Ingest folds rows tagged with the live hash, which
-    * preserves a recorded clean state. */
-  private val cleanSlotChecks =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The stored slot codebook and slice count, a torn [[slotRetrain]]
+    * rolled forward first: every slot-face read and ingest path reads
+    * the book here, so gather never mixes assignments from two slot
+    * codebooks. Besides the shared torn shapes, a present book over an
+    * EMPTY `slot_cells` next to a NONEMPTY inverted file is torn: a
+    * crash between the bootstrap's book and cells upserts leaves the
+    * mismatch scan vacuously clean, and memoising that verdict would
+    * serve zero gather candidates for the process lifetime. */
+  private def repairedSlotBook(s: SparkSession, root: String)
+      : Option[(Seq[(Long, Seq[Double], Double)], Int)] =
+    readSlotBook(s, root).map { case book @ (scb, slices) =>
+      val ver = codebookVersion(scb)
+      rollForward(s, root, SlotCellsEntity, SlotCellsDdl, ver, slotCells =>
+        slotCells.isEmpty &&
+          !readStaticOrEmpty(s, root, CellsEntity, CellsDdl).isEmpty)(
+        reassignSlots(s, root, scb, slices, ver))
+      book
+    }
 
-  /** Roll a torn [[slotRetrain]] forward if any stored slot-cell row's
-    * tag disagrees with the live slot book's content hash. The
-    * not-torn check is metadata-cheap (ver is constant per file, so
-    * parquet min/max stats answer the pushed not-equal without row
-    * reads) and memoized per (root, book hash) besides
-    * ([[cleanSlotChecks]]) — the common case costs nothing. A store
-    * written BEFORE the ver column existed reads without the tag at
-    * all and is treated as torn: the reassignment pass migrates it in
-    * place instead of every slot-face call crashing on the missing
-    * column (r12 review). Every slot-face read/ingest path calls this
-    * after reading the book, so gather never mixes assignments from
-    * two slot codebooks. */
-  private def repairSlots(s: SparkSession, root: String,
-      scb: Seq[(Long, Seq[Double], Double)], slices: Int): Unit = {
-    val ver = codebookVersion(scb)
-    if (ver == cleanSlotChecks.get(root)) return
-    val cells = stored(s, root, SlotCellsEntity, SlotCellsDdl)
-    val torn =
-      if (!cells.columns.contains("ver")) true // pre-ver store: migrate
-      else if (!cells.where(!(col("ver") <=> lit(ver))).isEmpty) true
-      // A present slot book over an EMPTY slot_cells entity next to a
-      // NONEMPTY inverted file is the other torn-bootstrap shape: a
-      // crash between the book and cells upserts leaves the mismatch
-      // scan vacuously clean, and memoizing that verdict would serve
-      // zero gather candidates silently for the process lifetime
-      // (r12 advice). Both isEmpty probes are limit-1 scans and only
-      // run when the mismatch scan found nothing.
-      else cells.isEmpty && !stored(s, root, CellsEntity, CellsDdl).isEmpty
-    if (torn) reassignSlots(s, root, scb, slices, ver)
-    cleanSlotChecks.put(root, ver)
-    ()
-  }
+  /** [[repairedSlotBook]] of a store that must have the slot sidecar. */
+  private def liveSlotBook(s: SparkSession,
+      root: String): (Seq[(Long, Seq[Double], Double)], Int) =
+    repairedSlotBook(s, root).getOrElse(throw new IllegalStateException(
+      s"no slot sidecar under $root — bootstrap(withSlots = true) first"))
 
   /** Re-fit the frozen SLOT codebook to the corpus the index has
     * accumulated — [[retrain]]'s twin for the late-interaction sidecar
@@ -511,7 +490,7 @@ object SemanticStream {
     * two-entity crash contract verbatim: slot book first (its content
     * hash is the commit marker), reassigned slot cells second; a kill
     * between the swaps leaves rows tagged with the old hash and the
-    * next slot-face serve/ingest rolls forward ([[repairSlots]]).
+    * next slot-face serve/ingest rolls forward ([[repairedSlotBook]]).
     * Gather semantics after retrain: past dedup decisions are
     * untouched (the manifest is historical); only which cells future
     * probes land in changes. `afterBookSwap` is the crash-injection
@@ -521,7 +500,7 @@ object SemanticStream {
     val (oldScb, slices) = readSlotBook(spark, root).getOrElse(
       throw new IllegalStateException(
         s"no slot sidecar under $root — bootstrap(withSlots = true) first"))
-    val cells = stored(spark, root, CellsEntity, CellsDdl)
+    val cells = readStaticOrEmpty(spark, root, CellsEntity, CellsDdl)
     require(!cells.isEmpty, s"no inverted file under $root — bootstrap first")
     val dim = slices * oldScb.head._2.length
     val sr = slotRows(cells, "id", "v", slices, dim)
@@ -550,8 +529,12 @@ object SemanticStream {
     * it the way [[cellImbalance]] is trended to set the
     * [[slotRetrain]] cadence. */
   def slotCellImbalance(spark: SparkSession, root: String): Double =
-    stored(spark, root, SlotCellsEntity, SlotCellsDdl)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
+    topCellShare(readStaticOrEmpty(spark, root, SlotCellsEntity, SlotCellsDdl))
+
+  /** Row share of the most populated `cell` in `rows` (0 when empty):
+    * the one aggregate every imbalance metric here reads. */
+  private def topCellShare(rows: DataFrame): Double =
+    rows.groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .agg((max(col("n")).cast("double") / sum(col("n"))).as("s"))
       .collect().headOption.map(r => if (r.isNullAt(0)) 0.0 else r.getDouble(0))
       .getOrElse(0.0)
@@ -568,23 +551,13 @@ object SemanticStream {
     * Catalyst broadcasts it, and on the cell-sorted compacted layout
     * the ingest's fresh (uncompacted) files hold most of the hits. */
   def slotBatchImbalance(spark: SparkSession, root: String,
-      manifest: DataFrame): Double = readSlotBook(spark, root) match {
-    case None => 0.0 // no slot sidecar — nothing to trigger on
-    case Some((scb, slices)) =>
-      // every slot-face read path repairs first (the repairSlots
-      // invariant): a torn retrain/bootstrap would otherwise feed the
-      // trigger mixed-book assignments (r13 review). Memoized — the
-      // common clean case costs nothing.
-      repairSlots(spark, root, scb, slices)
-      stored(spark, root, SlotCellsEntity, SlotCellsDdl)
+      manifest: DataFrame): Double =
+    // no slot sidecar: nothing to trigger on
+    repairedSlotBook(spark, root).fold(0.0) { _ =>
+      topCellShare(readStaticOrEmpty(spark, root, SlotCellsEntity, SlotCellsDdl)
         .join(manifest.where(col("status") === "kept")
-          .select(col("vec_id").as("id")), Seq("id"), "left_semi")
-        .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-        .agg((max(col("n")).cast("double") / sum(col("n"))).as("s"))
-        .collect().headOption
-        .map(r => if (r.isNullAt(0)) 0.0 else r.getDouble(0))
-        .getOrElse(0.0)
-  }
+          .select(col("vec_id").as("id")), Seq("id"), "left_semi"))
+    }
 
   /** Process-local cadence bookkeeping for the slot drift trigger:
     * batches seen / batch index of the last fired retrain, per root.
@@ -776,7 +749,7 @@ object SemanticStream {
   def retrain(spark: SparkSession, root: String, k: Int = SimSearch.IvfK,
       rounds: Int = 3,
       afterCodebookSwap: () => Unit = () => ()): String = {
-    val cells = stored(spark, root, CellsEntity, CellsDdl)
+    val cells = readStaticOrEmpty(spark, root, CellsEntity, CellsDdl)
     require(!cells.isEmpty, s"no inverted file under $root — bootstrap first")
     val cb = SimSearch.trainCodebook(cells, "id", "v", k, rounds)
     val ver = codebookVersion(cb)
@@ -797,11 +770,7 @@ object SemanticStream {
     * distribution is already degenerate. Watch [[batchImbalance]] for
     * the drift signal; watch this for accumulated index health. */
   def cellImbalance(spark: SparkSession, root: String): Double =
-    stored(spark, root, CellsEntity, CellsDdl)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg((max(col("n")).cast("double") / sum(col("n"))).as("s"))
-      .collect().headOption.map(r => if (r.isNullAt(0)) 0.0 else r.getDouble(0))
-      .getOrElse(0.0)
+    topCellShare(readStaticOrEmpty(spark, root, CellsEntity, CellsDdl))
 
   /** Top-cell share of ONE ingest's manifest — the batch-level
     * imbalance, and the metric the mechanized retrain trigger watches:
@@ -809,11 +778,7 @@ object SemanticStream {
     * collapse-mode drift shows here (measured 0.075 → 0.116+ at K=32)
     * even while [[cellImbalance]] stays calm. Costs one aggregate over
     * the already-materialized manifest. */
-  def batchImbalance(manifest: DataFrame): Double =
-    manifest.groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      .agg((max(col("n")).cast("double") / sum(col("n"))).as("s"))
-      .collect().headOption.map(r => if (r.isNullAt(0)) 0.0 else r.getDouble(0))
-      .getOrElse(0.0)
+  def batchImbalance(manifest: DataFrame): Double = topCellShare(manifest)
 
   /** The maintenance policy, mechanized: [[retrain]] when the batch's
     * assignment imbalance crosses `threshold`, else leave the codebook
@@ -844,7 +809,7 @@ object SemanticStream {
     * Output: (cell, n_stored, n_moved). */
   def retrainPressure(spark: SparkSession, root: String,
       k: Int = SimSearch.IvfK, rounds: Int = 3): DataFrame = {
-    val cells = stored(spark, root, CellsEntity, CellsDdl)
+    val cells = readStaticOrEmpty(spark, root, CellsEntity, CellsDdl)
     require(!cells.isEmpty, s"no inverted file under $root — bootstrap first")
     val cb = SimSearch.trainCodebook(cells, "id", "v", k, rounds)
     cells.select(col("cell"),
@@ -939,32 +904,59 @@ object SemanticStream {
   def queryTopK(queries: DataFrame, root: String, topK: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       nProbe: Int = SimSearch.IvfProbe): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = queries.sparkSession
-    val cb = SimSearch.collectCodebook(
-      stored(s, root, CodebookEntity, CodebookDdl))
-    require(cb.nonEmpty, s"no codebook under $root — bootstrap first")
-    val ver = codebookVersion(cb)
-    repairCells(s, root, cb, ver)
-    val probes = SimSearch.ivfAssign(queries, idCol, vecCol, cb, p = nProbe)
-      .select(col("id").as("q_id"), col("v").as("qv"), col("n").as("qn"),
-        explode(col("probes").getField("cid")).as("cell"))
-    val cells = stored(s, root, CellsEntity, CellsDdl)
+    val (cb, _) = liveCodebook(s, root)
+    val cells = readStaticOrEmpty(s, root, CellsEntity, CellsDdl)
       .select(col("id").as("c_id"), col("cell"),
         col("v").as("cv"), col("n").as("cn"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id").asc)
-    // broadcast the probe fold (≤ nq·nProbe rows — the sqCandidates
-    // bound verbatim): without the hint the planner can sort-merge
-    // shuffle the corpus-sized inverted file by cell to meet it
-    broadcast(probes).join(cells, Seq("cell"))
-      .where(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
+    cosineTopK(broadcast(probeFold(queries, idCol, vecCol, cb, nProbe))
+      .join(cells, Seq("cell")).where(col("q_id") =!= col("c_id")), topK)
+  }
+
+  /** One row per (query, probed cell) over the live codebook `cb`:
+    * (q_id, qv, qn, extra…, cell), ≤ nq·nProbe rows, the fold every
+    * IVF serve face starts from. `widen` adds columns to the
+    * assignment rows before the fold. Each face reads its fold once,
+    * as the broadcast side of its cell join (without the hint the
+    * planner can sort-merge shuffle the corpus-sized inverted file by
+    * cell to meet it), so the fold is not checkpointed. */
+  private def probeFold(queries: DataFrame, idCol: String, vecCol: String,
+      cb: Seq[(Long, Seq[Double], Double)], nProbe: Int,
+      extra: Seq[Column] = Nil,
+      widen: DataFrame => DataFrame = identity): DataFrame =
+    widen(SimSearch.ivfAssign(queries, idCol, vecCol, cb, p = nProbe))
+      .select(Seq(col("id").as("q_id"), col("v").as("qv"), col("n").as("qn"))
+        ++ extra :+ explode(col("probes").getField("cid")).as("cell"): _*)
+
+  /** The `prefilterC` best candidates per query by `order` (ties to
+    * the lower c_id): the cheap stage of every compressed face. */
+  private def prefilter(scored: DataFrame, order: Column,
+      prefilterC: Int): DataFrame =
+    scored.withColumn("prn", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(order, col("c_id").asc)))
+      .where(col("prn") <= prefilterC)
+
+  /** Exact 6-dp cosine of each (q_id, qv, qn) × (c_id, cv, cn) pair,
+    * top-`topK` per query (ties to the lower c_id). */
+  private def cosineTopK(pairs: DataFrame, topK: Int): DataFrame =
+    pairs.select(col("q_id"), col("c_id"),
         round(SimSearch.cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
           .as("cos"))
-      .withColumn("rn", row_number().over(w))
+      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("cos").desc, col("c_id").asc)))
       .where(col("rn") <= topK)
-  }
+
+  /** The one exact refine of the compressed faces: candidates
+    * (q_id, qv, qn, c_id) fetch their stored full vectors and re-rank
+    * by [[cosineTopK]]. The candidates are HARD-bounded (≤
+    * nq·prefilterC rows), so they broadcast and the full-vector fetch
+    * streams the inverted file instead of shuffling it by c_id. */
+  private def exactRerank(cand: DataFrame, root: String,
+      topK: Int): DataFrame =
+    cosineTopK(broadcast(cand).join(
+      readStaticOrEmpty(cand.sparkSession, root, CellsEntity, CellsDdl)
+        .select(col("id").as("c_id"), col("v").as("cv"), col("n").as("cn")),
+      Seq("c_id")), topK)
 
   /** [[queryTopKPq]]'s training-free twin (requires
     * `bootstrap(withSq = true)`): the probed cells scan as SQ code
@@ -978,25 +970,9 @@ object SemanticStream {
   def queryTopKSq(queries: DataFrame, root: String, topK: Int,
       prefilterC: Int, idCol: String = "vec_id", vecCol: String = "embedding",
       nProbe: Int = SimSearch.IvfProbe,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val s = queries.sparkSession
-    val cand = sqCandidates(queries, root, prefilterC, idCol, vecCol, nProbe,
-      allowed)
-    val vecs = stored(s, root, CellsEntity, CellsDdl)
-      .select(col("id").as("c_id"), col("v").as("cv"), col("n").as("cn"))
-    val w2 = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id").asc)
-    // the candidate set is HARD-bounded (≤ nq·prefilterC rows — the
-    // prefilter window just cut it): broadcast it so the full-vector
-    // fetch streams the inverted file instead of shuffling it by c_id
-    broadcast(cand).join(vecs, Seq("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(SimSearch.cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
-          .as("cos"))
-      .withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= topK)
-  }
+      allowed: Option[DataFrame] = None): DataFrame =
+    exactRerank(sqCandidates(queries, root, prefilterC, idCol, vecCol,
+      nProbe, allowed), root, topK)
 
   /** [[queryTopKSq]]'s candidate stage as a reusable face: probe
     * assignment → stored-cell equi-join → asymmetric SQ distance over
@@ -1021,21 +997,12 @@ object SemanticStream {
       idCol: String = "vec_id", vecCol: String = "embedding",
       nProbe: Int = SimSearch.IvfProbe,
       allowed: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = queries.sparkSession
     val (mins, _, isteps) = readGrid(s, root).getOrElse(
       throw new IllegalStateException(
         s"no SQ grid under $root — bootstrap(withSq = true) first"))
-    val cb = SimSearch.collectCodebook(
-      stored(s, root, CodebookEntity, CodebookDdl))
-    require(cb.nonEmpty, s"no codebook under $root — bootstrap first")
-    val ver = codebookVersion(cb)
-    repairCells(s, root, cb, ver)
-    val probes = SimSearch.ivfAssign(queries, idCol, vecCol, cb, p = nProbe)
-      .select(col("id").as("q_id"), col("v").as("qv"), col("n").as("qn"),
-        explode(col("probes").getField("cid")).as("cell"))
-      .localCheckpoint() // bound assignment work to one pass
-    val cellIds0 = stored(s, root, CellsEntity, CellsDdl)
+    val (cb, _) = liveCodebook(s, root)
+    val cellIds0 = readStaticOrEmpty(s, root, CellsEntity, CellsDdl)
       .select(col("id").as("c_id"), col("cell"))
     val cellIds = allowed match {
       case Some(ok) =>
@@ -1043,22 +1010,16 @@ object SemanticStream {
           "left_semi")
       case None => cellIds0
     }
-    val codes = stored(s, root, SqCodesEntity, SqCodesDdl)
+    val codes = readStaticOrEmpty(s, root, SqCodesEntity, SqCodesDdl)
       .select(col("id").as("c_id"), col("codes"))
-    val w1 = Window.partitionBy(col("q_id"))
-      .orderBy(col("sdist").asc, col("c_id").asc)
-    // broadcast the probe fold (≤ nq·nProbe rows, a checkpointed RDD
-    // with unknown stats): without the hint the planner sort-merge
-    // shuffles the corpus-sized inverted file by cell to meet it
-    // (guide §3.1 — broadcast the side that fits)
-    broadcast(probes).join(cellIds, Seq("cell"))
-      .where(col("q_id") =!= col("c_id"))
-      .join(codes, Seq("c_id"))
-      .select(col("q_id"), col("qv"), col("qn"), col("c_id"),
-        graft.functions.SqExprs.dist(col("qv"), col("codes"), mins, isteps)
-          .as("sdist"))
-      .withColumn("prn", row_number().over(w1))
-      .where(col("prn") <= prefilterC)
+    prefilter(broadcast(probeFold(queries, idCol, vecCol, cb, nProbe))
+        .join(cellIds, Seq("cell"))
+        .where(col("q_id") =!= col("c_id"))
+        .join(codes, Seq("c_id"))
+        .select(col("q_id"), col("qv"), col("qn"), col("c_id"),
+          graft.functions.SqExprs.dist(col("qv"), col("codes"), mins, isteps)
+            .as("sdist")),
+        col("sdist").asc, prefilterC)
       .select(col("q_id"), col("qv"), col("qn"), col("c_id"))
   }
 
@@ -1092,7 +1053,7 @@ object SemanticStream {
     val s = queries.sparkSession
     val pre = sqCandidates(queries, root, prefilterC, idCol, vecCol, nProbe)
       .select(col("q_id"), col("c_id"))
-    val corpus = stored(s, root, CellsEntity, CellsDdl)
+    val corpus = readStaticOrEmpty(s, root, CellsEntity, CellsDdl)
       .select(col("id"), col("v"))
     graft.ops.LateInteraction.maxSimRerank(
       pre, queries.select(col(idCol), col(vecCol)), corpus,
@@ -1110,10 +1071,7 @@ object SemanticStream {
       slotNProbe: Int = 2, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val s = queries.sparkSession
-    val (scb, slices) = readSlotBook(s, root).getOrElse(
-      throw new IllegalStateException(
-        s"no slot sidecar under $root — bootstrap(withSlots = true) first"))
-    repairSlots(s, root, scb, slices)
+    val (scb, slices) = liveSlotBook(s, root)
     val w = scb.head._2.length
     val dim = slices * w
     val asg = SimSearch.ivfAssign(
@@ -1128,7 +1086,7 @@ object SemanticStream {
     val probeCells = asg.select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toIndexedSeq
     asg
-      .join(stored(s, root, SlotCellsEntity, SlotCellsDdl)
+      .join(readStaticOrEmpty(s, root, SlotCellsEntity, SlotCellsDdl)
         .select(col("id").as("c_id"), col("cell"))
         .where(col("cell").isin(probeCells: _*)), Seq("cell"))
       .where(col("q_id") =!= col("c_id"))
@@ -1235,7 +1193,7 @@ object SemanticStream {
           col("v").as("qv"), col("probes"))
         .localCheckpoint()
     }
-    val scells0 = stored(s, root, SlotCellsEntity, SlotCellsDdl)
+    val scells0 = readStaticOrEmpty(s, root, SlotCellsEntity, SlotCellsDdl)
       .select(col("id").as("c_id"), col("cell"))
     val scells = allowed match {
       case Some(ok) =>
@@ -1267,12 +1225,8 @@ object SemanticStream {
       prefilterC: Int, slotNProbe: Int = 2, cutC: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding",
       allowed: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = queries.sparkSession
-    val (scb, slices) = readSlotBook(s, root).getOrElse(
-      throw new IllegalStateException(
-        s"no slot sidecar under $root — bootstrap(withSlots = true) first"))
-    repairSlots(s, root, scb, slices)
+    val (scb, slices) = liveSlotBook(s, root)
     val w = scb.head._2.length
     val dim = slices * w
     val (mins, _, isteps) = readGrid(s, root).getOrElse(
@@ -1295,8 +1249,6 @@ object SemanticStream {
     val pre1 =
       if (cutC <= 0) cand
       else {
-        val wc = Window.partitionBy(col("q_id"))
-          .orderBy(col("ccut").desc, col("c_id").asc)
         // the cut's candidate-keyed join reads the doc_id-bucketed
         // FORWARD projection when a registered fresh copy exists
         // (measured 6→5 exchanges, `slot_forward`; BucketingSpec plan
@@ -1309,10 +1261,8 @@ object SemanticStream {
         // join on c_id cannot resurrect ineligible rows.
         val cutCells = readSlotForward(s, root, codebookVersion(scb))
           .getOrElse(scells)
-        centroidCutScores(cand, cutCells, queryCellCosines(asg), slices)
-          .withColumn("crn", row_number().over(wc))
-          .where(col("crn") <= cutC)
-          .select(col("q_id"), col("c_id"))
+        prefilter(centroidCutScores(cand, cutCells, queryCellCosines(asg),
+          slices), col("ccut").desc, cutC).select(col("q_id"), col("c_id"))
       }
     // stage 1b (scoring — PLAID's decompression stage on the SQ
     // sidecar): every gathered candidate's FULL T×T slot interaction
@@ -1323,21 +1273,36 @@ object SemanticStream {
     // 0.87 recall ceiling — docs strong outside the probed cells
     // under-rank; centroid-only scoring measured 0.37 — the w-dim
     // coarse quantizer can't order docs. SlotSweep, SCALE.md r11.)
-    val codes = stored(s, root, SqCodesEntity, SqCodesDdl)
-      .select(col("id").as("c_id"), col("codes"))
-    // BROADCAST the bounded sides (the query fold ≤ nq·T rows always;
-    // pre1 ≤ cutC·nq pairs — but ONLY when the cut armed it: the uncut
-    // path's pre1 is the raw gather, whose width is corpus-fraction at
-    // small K, so it keeps the planner's choice): both are
-    // checkpointed/derived frames with unknown stats, so without hints
-    // the planner shuffles the corpus-sized code store against them
-    // (guide §3.1). The fold is then ONE aggregation
-    // ([[graft.ops.LateInteraction.qposMaxSum]] — exchange per pair
-    // instead of per (pair, qpos) plus a second exchange; decimal adds
-    // exact, results bit-identical).
-    val pre1b = if (cutC > 0) broadcast(pre1) else pre1
-    val s1 = graft.ops.LateInteraction.qposMaxSum(
-      codes.join(pre1b, Seq("c_id"))
+    // pre1 is broadcast ONLY when the cut bounded it (≤ cutC·nq
+    // pairs): the uncut path's pre1 is the raw gather, whose width is
+    // corpus-fraction at small K, so it keeps the planner's choice.
+    val pre = prefilter(codeScores(if (cutC > 0) broadcast(pre1) else pre1,
+        asg, root, w, slices, mins, isteps), col("s1").desc, prefilterC)
+      .select(col("q_id"), col("c_id"))
+    // stage 2: the unchanged candidate-bounded exact MaxSim cascade
+    graft.ops.LateInteraction.maxSimRerank(
+      pre, queries.select(col(idCol), col(vecCol)),
+      readStaticOrEmpty(s, root, CellsEntity, CellsDdl)
+        .select(col("id"), col("v")),
+      qIdCol = idCol, qVecCol = vecCol, cIdCol = "id", cVecCol = "v",
+      k = topK, slices = slices, dim = dim)
+  }
+
+  /** Stage 1b's score `s1` of each candidate pair (q_id, c_id): the
+    * full T×T slot interaction from the candidate's stored SQ code
+    * row, de-quantized slice-in-place (≤ istep/2 per dim), folded by
+    * ONE [[graft.ops.LateInteraction.qposMaxSum]] (one exchange, one
+    * shuffled row per pair) into the decimal-exact Σ_qpos max. The
+    * query fold `asg` (≤ nq·T rows) is broadcast so the corpus-sized
+    * code store streams. Shared by the serve path and the alignment
+    * diagnostic, so both score with the identical plan. */
+  private def codeScores(pairs: DataFrame, asg: DataFrame, root: String,
+      w: Int, slices: Int, mins: Seq[Double],
+      isteps: Seq[Double]): DataFrame =
+    graft.ops.LateInteraction.qposMaxSum(
+      readStaticOrEmpty(asg.sparkSession, root, SqCodesEntity, SqCodesDdl)
+        .select(col("id").as("c_id"), col("codes"))
+        .join(pairs, Seq("c_id"))
         .join(broadcast(asg.select(col("q_id"), col("qpos"), col("qv"))),
           Seq("q_id"))
         .select(col("q_id"), col("c_id"), col("qpos"),
@@ -1347,18 +1312,6 @@ object SemanticStream {
           graft.functions.SqExprs.slotCos(col("qv"), col("codes"),
             col("cpos"), mins, isteps, w).as("sc")),
       Seq("q_id", "c_id"), "qpos", "sc", slices, "s1")
-    val w1 = Window.partitionBy(col("q_id"))
-      .orderBy(col("s1").desc, col("c_id").asc)
-    val pre = s1.withColumn("prn", row_number().over(w1))
-      .where(col("prn") <= prefilterC)
-      .select(col("q_id"), col("c_id"))
-    // stage 2: the unchanged candidate-bounded exact MaxSim cascade
-    graft.ops.LateInteraction.maxSimRerank(
-      pre, queries.select(col(idCol), col(vecCol)),
-      stored(s, root, CellsEntity, CellsDdl).select(col("id"), col("v")),
-      qIdCol = idCol, qVecCol = vecCol, cIdCol = "id", cVecCol = "v",
-      k = topK, slices = slices, dim = dim)
-  }
 
   /** The per-(query, qpos, cell) centroid cosines off a p = K
     * assignment fold — the plan-carried scalars stage 1a′ and the
@@ -1408,10 +1361,7 @@ object SemanticStream {
       slotNProbe: Int = SlotPolicy.SlotNProbe, idCol: String = "vec_id",
       vecCol: String = "embedding"): (DataFrame, DataFrame) = {
     val s = queries.sparkSession
-    val (scb, slices) = readSlotBook(s, root).getOrElse(
-      throw new IllegalStateException(
-        s"no slot sidecar under $root — bootstrap(withSlots = true) first"))
-    repairSlots(s, root, scb, slices)
+    val (scb, slices) = liveSlotBook(s, root)
     val (asg, _, cand) = slotStage01(queries, root, idCol, vecCol,
       slotNProbe, p = scb.size, allowed = None, scb, slices)
     (cand.localCheckpoint(), queryCellCosines(asg))
@@ -1442,13 +1392,9 @@ object SemanticStream {
     * [[run]]'s compaction window. */
   def writeSlotForward(spark: SparkSession, root: String, table: String,
       buckets: Int): Unit = {
-    val (scb, slices) = readSlotBook(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no slot sidecar under $root — bootstrap(withSlots = true) first"))
     // project the REPAIRED entity: a torn retrain rolled forward here
-    // rather than projected as-is (the old scaladoc's caller contract,
-    // now mechanized)
-    repairSlots(spark, root, scb, slices)
+    // rather than projected as-is
+    val (scb, _) = liveSlotBook(spark, root)
     landSlotForward(spark, root, table, buckets, codebookVersion(scb))
   }
 
@@ -1460,7 +1406,7 @@ object SemanticStream {
   private def landSlotForward(spark: SparkSession, root: String,
       table: String, buckets: Int, ver: String): Unit = {
     graft.sinks.Bucketing.writeBucketed(
-      stored(spark, root, SlotCellsEntity, SlotCellsDdl)
+      readStaticOrEmpty(spark, root, SlotCellsEntity, SlotCellsDdl)
         .select(col("id"), col("cell")),
       table, "id", buckets)
     val cnt = graft.sinks.Bucketing.readBucketed(spark, table).count()
@@ -1477,10 +1423,9 @@ object SemanticStream {
     * when nothing is registered or the store has no slot sidecar. */
   private def refreshSlotForwardIfRegistered(spark: SparkSession,
       root: String): Unit =
-    stored(spark, root, SlotForwardMetaEntity, SlotForwardMetaDdl)
+    readStaticOrEmpty(spark, root, SlotForwardMetaEntity, SlotForwardMetaDdl)
       .collect().headOption.foreach { r =>
-        readSlotBook(spark, root).foreach { case (scb, slices) =>
-          repairSlots(spark, root, scb, slices)
+        repairedSlotBook(spark, root).foreach { case (scb, _) =>
           landSlotForward(spark, root, r.getString(0), r.getInt(1),
             codebookVersion(scb))
         }
@@ -1519,8 +1464,8 @@ object SemanticStream {
       .flatMap(_.collect().headOption).collect {
         case r if r.getString(2) == liveVer && !r.isNullAt(3) &&
             spark.catalog.tableExists(r.getString(0)) &&
-            stored(spark, root, SlotCellsEntity, SlotCellsDdl).count() ==
-              r.getLong(3) =>
+            readStaticOrEmpty(spark, root, SlotCellsEntity, SlotCellsDdl)
+              .count() == r.getLong(3) =>
           graft.sinks.Bucketing.readBucketed(spark, r.getString(0))
             .select(col("id").as("c_id"), col("cell"))
       }
@@ -1560,12 +1505,8 @@ object SemanticStream {
   def slotCutAgreement(queries: DataFrame, root: String, k: Int,
       slotNProbe: Int = SlotPolicy.SlotNProbe, cutC: Int = SlotPolicy.CutC,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = queries.sparkSession
-    val (scb, slices) = readSlotBook(s, root).getOrElse(
-      throw new IllegalStateException(
-        s"no slot sidecar under $root — bootstrap(withSlots = true) first"))
-    repairSlots(s, root, scb, slices)
+    val (scb, slices) = liveSlotBook(s, root)
     val w = scb.head._2.length
     val (mins, _, isteps) = readGrid(s, root).getOrElse(
       throw new IllegalStateException(
@@ -1580,33 +1521,13 @@ object SemanticStream {
       .localCheckpoint() // both orderings + the denominator read it
     // centroid ordering over ALL gathered candidates (stage 1a′ minus
     // the cut itself — the identical factored plan the serve path runs)
-    val ccut = centroidCutScores(cand, scells, queryCellCosines(asg), slices)
-    // code ordering over the same candidates (stage 1b, uncut)
-    val codes = stored(s, root, SqCodesEntity, SqCodesDdl)
-      .select(col("id").as("c_id"), col("codes"))
-    // same fused fold + bounded-broadcast shape as the serve path's
-    // stage 1b (qposMaxSum: one exchange, one shuffled row per pair;
-    // the query fold is ≤ sampleN·T rows — broadcast; `cand` is the
-    // raw gather, NOT broadcast)
-    val s1 = graft.ops.LateInteraction.qposMaxSum(
-      cand.join(codes, Seq("c_id"))
-        .join(broadcast(asg.select(col("q_id"), col("qpos"), col("qv"))),
-          Seq("q_id"))
-        .select(col("q_id"), col("c_id"), col("qpos"),
-          explode(sequence(lit(0), lit(slices - 1))).as("cpos"),
-          col("qv"), col("codes"))
-        .select(col("q_id"), col("c_id"), col("qpos"),
-          graft.functions.SqExprs.slotCos(col("qv"), col("codes"),
-            col("cpos"), mins, isteps, w).as("sc")),
-      Seq("q_id", "c_id"), "qpos", "sc", slices, "s1")
-    val wC = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccut").desc, col("c_id").asc)
-    val wS = Window.partitionBy(col("q_id"))
-      .orderBy(col("s1").desc, col("c_id").asc)
-    val topC = ccut.withColumn("rn", row_number().over(wC))
-      .where(col("rn") <= cutC).select(col("q_id"), col("c_id"))
-    val topS = s1.withColumn("rn", row_number().over(wS))
-      .where(col("rn") <= k).select(col("q_id"), col("c_id"))
+    val topC = prefilter(
+        centroidCutScores(cand, scells, queryCellCosines(asg), slices),
+        col("ccut").desc, cutC).select(col("q_id"), col("c_id"))
+    // code ordering over the same candidates (stage 1b, uncut: `cand`
+    // is the raw gather, NOT broadcast)
+    val topS = prefilter(codeScores(cand, asg, root, w, slices, mins,
+      isteps), col("s1").desc, k).select(col("q_id"), col("c_id"))
     // both rankings are HARD-bounded by their windows (topC ≤
     // sampleN·cutC rows, topS ≤ sampleN·k): broadcast the code top-k
     // into the semi so neither ranking shuffles, and broadcast the
@@ -1623,7 +1544,7 @@ object SemanticStream {
   }
 
   /** Memoized [[slotAlignmentRead]] verdicts, keyed by (root, slot
-    * book hash, knobs) — the [[cleanSlotChecks]] invalidation
+    * book hash, knobs) — the [[cleanChecks]] invalidation
     * argument verbatim: the only paths that change alignment
     * (retrain, reassignment) land a NEW book whose content hash
     * misses the memo, and ingests fold rows under the live book. */
@@ -1654,12 +1575,10 @@ object SemanticStream {
   def slotAlignmentRead(spark: SparkSession, root: String,
       sampleN: Int = 8, k: Int = 8, cutC: Int = SlotPolicy.CutC,
       slotNProbe: Int = SlotPolicy.SlotNProbe): Double = {
-    val (scb, _) = readSlotBook(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"no slot sidecar under $root — bootstrap(withSlots = true) first"))
+    val (scb, _) = liveSlotBook(spark, root)
     val key = s"$root#${codebookVersion(scb)}#$sampleN#$k#$cutC#$slotNProbe"
     alignmentReads.computeIfAbsent(key, _ => {
-      val sample = stored(spark, root, CellsEntity, CellsDdl)
+      val sample = readStaticOrEmpty(spark, root, CellsEntity, CellsDdl)
         .select(col("id").as("vec_id"), col("v").as("embedding"))
         .orderBy(col("vec_id")).limit(sampleN)
       val read = slotCutAgreement(sample, root, k, slotNProbe, cutC)
@@ -1712,55 +1631,30 @@ object SemanticStream {
   def queryTopKJl(queries: DataFrame, root: String, topK: Int,
       prefilterC: Int, idCol: String = "vec_id", vecCol: String = "embedding",
       nProbe: Int = SimSearch.IvfProbe): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = queries.sparkSession
-    val (dOut, seed, _) = readJlMeta(s, root).getOrElse(
+    val (dOut, seed, _) = repairedJlMeta(s, root).getOrElse(
       throw new IllegalStateException(
         s"no JL sidecar under $root — bootstrap(withJl = true) first"))
-    val cb = SimSearch.collectCodebook(
-      stored(s, root, CodebookEntity, CodebookDdl))
-    require(cb.nonEmpty, s"no codebook under $root — bootstrap first")
-    val ver = codebookVersion(cb)
-    repairCells(s, root, cb, ver)
-    repairJl(s, root, dOut, seed)
+    val (cb, _) = liveCodebook(s, root)
     // assignment + the query's own projection in one pass
-    val probes = SimSearch.ivfAssign(queries, idCol, vecCol, cb, p = nProbe)
-      .join(jlRows(queries, idCol, vecCol, dOut, seed)
+    val probes = probeFold(queries, idCol, vecCol, cb, nProbe,
+      Seq(col("qpv"), col("qpn")),
+      _.join(jlRows(queries, idCol, vecCol, dOut, seed)
         .select(col("id"), col("pv").as("qpv"), col("pn").as("qpn")),
-        Seq("id"))
-      .select(col("id").as("q_id"), col("v").as("qv"), col("n").as("qn"),
-        col("qpv"), col("qpn"),
-        explode(col("probes").getField("cid")).as("cell"))
-      .localCheckpoint() // bound assignment/projection work to one pass
-    val cellIds = stored(s, root, CellsEntity, CellsDdl)
+        Seq("id")))
+    val cellIds = readStaticOrEmpty(s, root, CellsEntity, CellsDdl)
       .select(col("id").as("c_id"), col("cell"))
-    val pvs = stored(s, root, JlVecsEntity, JlVecsDdl)
+    val pvs = readStaticOrEmpty(s, root, JlVecsEntity, JlVecsDdl)
       .select(col("id").as("c_id"), col("pv").as("cpv"), col("pn").as("cpn"))
-    val w1 = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcos").desc, col("c_id").asc)
-    // broadcast the probe fold (≤ nq·nProbe rows, checkpointed and so
-    // stats-less — the sqCandidates discipline): the corpus-sized cell
-    // index and JL sidecar stream instead of being shuffled per query
-    val cand = broadcast(probes).join(cellIds, Seq("cell"))
+    // the corpus-sized cell index and JL sidecar stream past the
+    // broadcast fold instead of being shuffled per query
+    val cand = prefilter(broadcast(probes).join(cellIds, Seq("cell"))
       .where(col("q_id") =!= col("c_id"))
       .join(pvs, Seq("c_id"))
       .select(col("q_id"), col("qv"), col("qn"), col("c_id"),
         round(SimSearch.cosine(col("qpv"), col("cpv"), col("qpn"),
-          col("cpn")), 6).as("pcos"))
-      .withColumn("prn", row_number().over(w1))
-      .where(col("prn") <= prefilterC)
-    val vecs = stored(s, root, CellsEntity, CellsDdl)
-      .select(col("id").as("c_id"), col("v").as("cv"), col("n").as("cn"))
-    val w2 = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id").asc)
-    // candidates are HARD-bounded (≤ nq·prefilterC): broadcast into the
-    // exact re-rank so the full-vector fetch streams the inverted file
-    broadcast(cand).join(vecs, Seq("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(SimSearch.cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
-          .as("cos"))
-      .withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= topK)
+          col("cpn")), 6).as("pcos")), col("pcos").desc, prefilterC)
+    exactRerank(cand, root, topK)
   }
 
   /** FAISS-style two-stage serving from the stored index (requires
@@ -1778,51 +1672,27 @@ object SemanticStream {
   def queryTopKPq(queries: DataFrame, root: String, topK: Int,
       prefilterC: Int, idCol: String = "vec_id", vecCol: String = "embedding",
       nProbe: Int = SimSearch.IvfProbe): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = queries.sparkSession
     val books = readBooks(s, root).getOrElse(
       throw new IllegalStateException(
         s"no PQ books under $root — bootstrap(withPq = true) first"))
     val ksub = books.head.length
-    val cb = SimSearch.collectCodebook(
-      stored(s, root, CodebookEntity, CodebookDdl))
-    require(cb.nonEmpty, s"no codebook under $root — bootstrap first")
-    val ver = codebookVersion(cb)
-    repairCells(s, root, cb, ver)
-    val probes = SimSearch.ivfAssign(queries, idCol, vecCol, cb, p = nProbe)
-      .select(col("id").as("q_id"), col("v").as("qv"), col("n").as("qn"),
-        graft.functions.PqExprs.distTable(col("v"), books).as("dtab"),
-        explode(col("probes").getField("cid")).as("cell"))
-      .localCheckpoint() // bound dtab/assignment work to one pass
-    val cellIds = stored(s, root, CellsEntity, CellsDdl)
+    val (cb, _) = liveCodebook(s, root)
+    val probes = probeFold(queries, idCol, vecCol, cb, nProbe,
+      Seq(graft.functions.PqExprs.distTable(col("v"), books).as("dtab")))
+    val cellIds = readStaticOrEmpty(s, root, CellsEntity, CellsDdl)
       .select(col("id").as("c_id"), col("cell"))
-    val codes = stored(s, root, PqCodesEntity, PqCodesDdl)
+    val codes = readStaticOrEmpty(s, root, PqCodesEntity, PqCodesDdl)
       .select(col("id").as("c_id"), col("codes"))
-    val w1 = Window.partitionBy(col("q_id"))
-      .orderBy(col("adist").asc, col("c_id").asc)
-    // broadcast the probe fold (≤ nq·nProbe rows, checkpointed and so
-    // stats-less — the sqCandidates discipline): the corpus-sized cell
-    // index and PQ code sidecar stream instead of being shuffled
-    val cand = broadcast(probes).join(cellIds, Seq("cell"))
+    // the corpus-sized cell index and PQ code sidecar stream past the
+    // broadcast fold instead of being shuffled
+    val cand = prefilter(broadcast(probes).join(cellIds, Seq("cell"))
       .where(col("q_id") =!= col("c_id"))
       .join(codes, Seq("c_id"))
       .select(col("q_id"), col("qv"), col("qn"), col("c_id"),
         graft.functions.PqExprs.adcScore(col("dtab"), col("codes"), ksub)
-          .as("adist"))
-      .withColumn("prn", row_number().over(w1))
-      .where(col("prn") <= prefilterC)
-    val vecs = stored(s, root, CellsEntity, CellsDdl)
-      .select(col("id").as("c_id"), col("v").as("cv"), col("n").as("cn"))
-    val w2 = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id").asc)
-    // candidates are HARD-bounded (≤ nq·prefilterC): broadcast into the
-    // exact re-rank so the full-vector fetch streams the inverted file
-    broadcast(cand).join(vecs, Seq("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(SimSearch.cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
-          .as("cos"))
-      .withColumn("rn", row_number().over(w2))
-      .where(col("rn") <= topK)
+          .as("adist")), col("adist").asc, prefilterC)
+    exactRerank(cand, root, topK)
   }
 
   /** Dedup one vector batch against the stored index; returns (and
@@ -1867,15 +1737,7 @@ object SemanticStream {
       residualProbes: Int = 4): DataFrame = {
     val s = batch0.sparkSession
     val batch = batch0.localCheckpoint()
-    val cb = SimSearch.collectCodebook(
-      stored(s, root, CodebookEntity, CodebookDdl))
-    require(cb.nonEmpty, s"no codebook under $root — bootstrap first")
-    val ver = codebookVersion(cb)
-    // torn-retrain repair: any cell row not tagged with the live
-    // codebook's version was assigned under a different codebook —
-    // finish the interrupted reassignment before probing (memoized
-    // clean check; see repairCells)
-    repairCells(s, root, cb, ver)
+    val (cb, ver) = liveCodebook(s, root)
     // zero-shuffle assignment of the batch against the frozen codebook;
     // probe 1 is the assignment cell (what a kept vector is stored
     // under), probes 2..p only widen the match search
@@ -1892,7 +1754,7 @@ object SemanticStream {
     // are micro-batch-bounded and stats-less (checkpointed RDDs), the
     // inverted file is corpus-sized — hint the batch side broadcast so
     // the corpus scan STREAMS instead of being shuffled per ingest
-    val corpusCells = stored(s, root, CellsEntity, CellsDdl)
+    val corpusCells = readStaticOrEmpty(s, root, CellsEntity, CellsDdl)
       .select("id", "cell", "v", "n")
       .join(broadcast(ids), Seq("id"), "left_anti")
     val a = asg.select(col("vec_id"), explode(col("pcells")).as("cell"),
@@ -1931,8 +1793,7 @@ object SemanticStream {
     val manifest = (residual match {
       case None => manifest0
       case Some(lo) =>
-        import org.apache.spark.sql.expressions.Window
-        val pr = SimSearch.ivfAssign(batch, idCol, vecCol, cb,
+            val pr = SimSearch.ivfAssign(batch, idCol, vecCol, cb,
             p = residualProbes)
           .select(col("id").as("vec_id"),
             explode(col("probes").getField("cid")).as("cell"),
@@ -1995,8 +1856,7 @@ object SemanticStream {
       // project ONCE at ingest under the stored plane family (a torn
       // family rotation is rolled forward first so the fold never lands
       // rows of a family the meta no longer names)
-      () => readJlMeta(s, root).foreach { case (dOut, seed, _) =>
-        repairJl(s, root, dOut, seed)
+      () => repairedJlMeta(s, root).foreach { case (dOut, seed, _) =>
         Layout.upsertStatic(
           jlRows(asg.select(col("vec_id"), col("v")), "vec_id", "v",
               dOut, seed)
@@ -2008,8 +1868,7 @@ object SemanticStream {
       // — 3 integers + a version tag per (doc, slot), same anti-join
       // discipline; a torn slotRetrain is rolled forward first so the
       // fold never lands rows of a book the store no longer holds
-      () => readSlotBook(s, root).foreach { case (scb, slices) =>
-        repairSlots(s, root, scb, slices)
+      () => repairedSlotBook(s, root).foreach { case (scb, slices) =>
         val dim = slices * scb.head._2.length
         Layout.upsertStatic(
           slotCellRows(asg.select(col("vec_id"), col("v")), "vec_id", "v",

@@ -412,6 +412,43 @@ class LayoutSpec extends AnyFunSuite {
     assert(got.collect().toSet === inferred.collect().toSet)
   }
 
+  test("fanout: a reused pool thread runs its chain under the submitter's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"fanout-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      // a chain submitted under group `a` leaves an idle pool thread
+      // that inherited `a` when it was created
+      sc.setJobGroup(s"$tag-a", s"$tag-a")
+      Layout.fanout(Seq(() => ()))
+      Thread.sleep(500) // the thread is back in the pool, so it is reused
+      sc.setJobGroup(s"$tag-b", s"$tag-b")
+      Layout.fanout(Seq(() => { sc.parallelize(Seq(1), 1).count(); () }))
+      // the listener bus delivers in order: once this thread's sentinel
+      // job is seen, the chain's job has been counted
+      sc.setJobGroup(s"$tag-sentinel", s"$tag-sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      def groups = seen.toArray(Array.empty[(String, String)]).toSeq
+        .filter(g => g._1 != null && g._1.startsWith(tag))
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.exists(_._1 == s"$tag-sentinel") &&
+          System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups === Seq((s"$tag-b", s"$tag-b"),
+        (s"$tag-sentinel", s"$tag-sentinel")))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("bucket arithmetic: 10k blocks per partition") {
     import spark.implicits._
     val b = Layout.withBlockBucket(Seq(0L, 9999L, 10000L, 123456789L).toDF("block_number"))

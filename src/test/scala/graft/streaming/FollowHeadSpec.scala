@@ -126,6 +126,33 @@ class FollowHeadSpec extends AnyFunSuite {
     assert(Incremental.maxIndexedBlock(spark, out, "blocks") === Some(RpcStub.Head))
   }
 
+  test("a committed tick leaves no persisted RDD behind, traces and logs read") {
+    val out = graft.Temps.dir("follow-leak-out")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val q = Incremental.followHeadEntities(
+      spark, RpcStub.endpoint, out, graft.Temps.dir("follow-leak-ckpt"),
+      startBlock = 745L, Stream.derivations(includeTx = false,
+        includeTokens = true, includeLogs = true))
+    try {
+      def lastBatch = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (q.exception.isEmpty &&
+          !Incremental.syncedHead(spark, out).contains(RpcStub.Head) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(100)
+      q.exception.foreach(throw _)
+      assert(Incremental.syncedHead(spark, out) === Some(RpcStub.Head))
+      // the tick that wrote the marker has ended once a later batch
+      // reports progress
+      val seen = lastBatch
+      while (q.exception.isEmpty && lastBatch <= seen &&
+          System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(lastBatch > seen, "no batch completed after the marker")
+    } finally q.stop()
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before === Set.empty)
+  }
+
   test("a derive map that gains an entity backfills it despite an at-head marker") {
     val out = graft.Temps.dir("follow-grow-out")
     val blocksOnly: Seq[(String, Incremental.Gap => DataFrame)] = Seq(

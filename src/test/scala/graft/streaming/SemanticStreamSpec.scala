@@ -131,4 +131,27 @@ class SemanticStreamSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.keySet -- before ===
       Set(graft.TestSpark.checkpointedRddId(man)))
   }
+
+  test("the queryTopK, Sq, Pq and Jl serve faces leave no persisted RDD") {
+    val corpus = df((1L to 8L).map(i =>
+      i -> vec((i % 6).toInt -> 1.0, ((i + 1) % 6).toInt -> 0.1 * i)))
+    val root = graft.Temps.dir("semantic-serve-leak")
+    SemanticStream.bootstrap(corpus, root, k = 2, withPq = true, pqM = 3,
+      pqKsub = 4, withSq = true, withJl = true, jlDOut = 4)
+    val q = df(Seq(500L -> vec(2 -> 1.0, 0 -> 0.1),
+      510L -> vec(0 -> 1.0, 3 -> 0.1)))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val served = Seq(
+      SemanticStream.queryTopK(q, root, topK = 2, nProbe = 2),
+      SemanticStream.queryTopKSq(q, root, topK = 2, prefilterC = 4,
+        nProbe = 2),
+      SemanticStream.queryTopKPq(q, root, topK = 2, prefilterC = 4,
+        nProbe = 2),
+      SemanticStream.queryTopKJl(q, root, topK = 2, prefilterC = 4,
+        nProbe = 2))
+    served.foreach(r => assert(r.collect().nonEmpty))
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before === Set.empty)
+    // the caller still holds the served frames while the check runs
+    java.lang.ref.Reference.reachabilityFence(served)
+  }
 }
