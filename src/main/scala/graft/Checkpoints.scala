@@ -27,8 +27,10 @@ object Checkpoints {
     private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     /** `df.localCheckpoint()`, released when the scope closes. */
-    def apply(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint()
+    def apply(df: DataFrame): DataFrame = adopt(df.localCheckpoint())
+
+    /** A frame checkpointed elsewhere, released when the scope closes. */
+    private[graft] def adopt(ck: DataFrame): DataFrame = {
       held.synchronized(held += ck)
       ck
     }

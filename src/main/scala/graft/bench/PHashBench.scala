@@ -2,7 +2,7 @@ package graft.bench
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Multimodal
+import graft.ops.{Lsh, Multimodal}
 
 /** The perceptual-hash BAND/RECALL law — q216's machinery measured
   * against brute force (the q163/LexPrune self-probe discipline: the
@@ -80,13 +80,7 @@ object PHashBench {
           .select(col("a_id"), col("b_id"), hamming.as("h"))
           .localCheckpoint()
         // band-join candidate volume (radius-independent)
-        val bands = (0 until nb).map(k =>
-            qs.select(col("media_id"), lit(k).as("band"), col(s"q$k").as("key")))
-          .reduce(_.unionByName(_))
-        val cand = bands.toDF("a_id", "band", "key")
-          .join(bands.toDF("b_id", "band", "key"), Seq("band", "key"))
-          .where(col("a_id") < col("b_id"))
-          .select("a_id", "b_id").distinct().count()
+        val cand = Lsh.selfPairs(Lsh.quarterBands(qs, nb)).count()
         for (t <- radii) {
           val exactN = exact.where(col("h") <= t).count()
           val bandedN = Multimodal.dHashNearDupPairs(media, t, gridRows, 9)

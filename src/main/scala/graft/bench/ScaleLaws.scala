@@ -2,7 +2,7 @@ package graft.bench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.SimSearch
+import graft.ops.{Lsh, SimSearch}
 
 /** Empirical validation of the SCALE.md candidate-volume laws — the
   * dedup/ANN family's scale claims, MEASURED instead of reasoned.
@@ -135,10 +135,7 @@ object ScaleLaws {
         (col("sh") / 256L).cast("long").as("key"))
       .unionByName(sh.select(col("doc_id"), lit(1).as("half"),
         (col("sh") % 256L).as("key")))
-    val cand = bands.toDF("a_id", "half", "key")
-      .join(bands.toDF("b_id", "half", "key"), Seq("half", "key"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct().localCheckpoint()
+    val cand = Lsh.selfPairs(bands).localCheckpoint()
     val pairs = cand
       .join(sh.toDF("a_id", "a_sh"), "a_id")
       .join(sh.toDF("b_id", "b_sh"), "b_id")
@@ -157,13 +154,7 @@ object ScaleLaws {
       .select(col("doc_id") +: (0 until 4).map(k =>
         element_at(col("QS"), k + 1).as(s"q$k")): _*)
       .localCheckpoint()
-    val bands = (0 until 4).map(k =>
-        sh.select(col("doc_id"), lit(k).as("band"), col(s"q$k").as("key")))
-      .reduce(_.unionByName(_))
-    val cand = bands.toDF("a_id", "band", "key")
-      .join(bands.toDF("b_id", "band", "key"), Seq("band", "key"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct().localCheckpoint()
+    val cand = Lsh.selfPairs(Lsh.quarterBands(sh, 4)).localCheckpoint()
     val hamming = (0 until 4).map(k =>
       bit_count(col(s"a_q$k").bitwiseXOR(col(s"b_q$k")))).reduce(_ + _)
     val pairs = cand
@@ -179,28 +170,12 @@ object ScaleLaws {
     * 2-hash key space, so random collisions are rare and candidates
     * track the corpus's TRUE resemblance structure (near-linear). */
   def minhashBands(docs: DataFrame): (Long, Long) = {
-    val sig = docs
-      .withColumn("sig", graft.functions.EvmExprs.minHashSigFromText(col("text")))
-      .where(col("sig").isNotNull)
-      .select(col("doc_id") +: (0 until 4).map(j =>
-        element_at(col("sig"), j + 1).as(s"h$j")): _*)
-      .localCheckpoint()
-    val bands = sig.select(col("doc_id"), lit(0).as("band"),
-        col("h0").as("x"), col("h1").as("y"))
-      .unionByName(sig.select(col("doc_id"), lit(1).as("band"),
-        col("h2").as("x"), col("h3").as("y")))
-    val cand = bands.toDF("a_id", "band", "x", "y")
-      .join(bands.toDF("b_id", "band", "x", "y"), Seq("band", "x", "y"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct().localCheckpoint()
+    val sig = Lsh.signatures(docs).localCheckpoint()
+    val cand = Lsh.selfPairs(Lsh.bands(sig)).localCheckpoint()
     val pairs = cand
-      .join(sig.toDF("a_id", "a0", "a1", "a2", "a3"), "a_id")
-      .join(sig.toDF("b_id", "b0", "b1", "b2", "b3"), "b_id")
-      .where(((when(col("a0") === col("b0"), 1).otherwise(0) +
-        when(col("a1") === col("b1"), 1).otherwise(0) +
-        when(col("a2") === col("b2"), 1).otherwise(0) +
-        when(col("a3") === col("b3"), 1).otherwise(0)).cast("double") / 4)
-        >= 0.5).count()
+      .join(Lsh.prefixed(sig, "a_id", "a"), "a_id")
+      .join(Lsh.prefixed(sig, "b_id", "b"), "b_id")
+      .where(Lsh.agreement("a", "b") >= 0.5).count()
     val nCand = cand.count()
     sig.unpersist(true); cand.unpersist(true)
     (nCand, pairs)

@@ -176,28 +176,6 @@ object Multimodal {
         col("rep_id"))
   }
 
-  /** Image near-dup pairs by banded perceptual Hamming distance — the
-    * q121 wide-SimHash machinery applied to the media payloads (NEVER
-    * all-pairs): any pair within total Hamming distance bands − 1
-    * agrees exactly on ≥ 1 of the ≤16-bit quarters (pigeonhole), so
-    * the (band, quarter) equi-join over 2¹⁶-value keys finds ALL such
-    * pairs at ~n²/2¹⁶ candidates per band; candidates then re-rank by
-    * the exact full-width Hamming distance and keep ≤ `maxHamming`.
-    * EXACT for maxHamming ≤ bands − 1 (3 at the default 8×9 grid, 7
-    * at 16×9); above that the bands are a recall<1 prefilter
-    * (PHashBench measures the band/recall law at both widths). The
-    * grid is the scale knob: wider grid → more bands at the SAME
-    * per-band key cardinality → larger exact radius as n² outruns
-    * 2¹⁶. */
-  /** The (media_id, band, key) projection of a quarters frame — nb
-    * rows per signature. Shared by the one-shot pair pipeline here
-    * and the maintained-index probes ([[graft.streaming.MediaStream]]
-    * — one implementation per width-sensitive piece, r14 review). */
-  private[graft] def bandRows(qs: DataFrame, nb: Int): DataFrame =
-    (0 until nb).map(k =>
-        qs.select(col("media_id"), lit(k).as("band"), col(s"q$k").as("key")))
-      .reduce(_.unionByName(_))
-
   /** Exact Hamming between quarter row-sets prefixed a_/b_, joined by
     * a candidate frame (aId, bId) — the banded pipelines' shared
     * re-rank. `broadcastPairs = true` hints the pair side (and the
@@ -221,18 +199,26 @@ object Multimodal {
       .select(col(aId), col(bId), h.as("hamming"))
   }
 
+  /** Image near-dup pairs by banded perceptual Hamming distance — the
+    * q121 wide-SimHash machinery applied to the media payloads (NEVER
+    * all-pairs): any pair within total Hamming distance bands − 1
+    * agrees exactly on ≥ 1 of the ≤16-bit quarters (pigeonhole), so
+    * the (band, quarter) equi-join over 2¹⁶-value keys finds ALL such
+    * pairs at ~n²/2¹⁶ candidates per band; candidates then re-rank by
+    * the exact full-width Hamming distance and keep ≤ `maxHamming`.
+    * EXACT for maxHamming ≤ bands − 1 (3 at the default 8×9 grid, 7
+    * at 16×9); above that the bands are a recall<1 prefilter
+    * (PHashBench measures the band/recall law at both widths). The
+    * grid is the scale knob: wider grid → more bands at the SAME
+    * per-band key cardinality → larger exact radius as n² outruns
+    * 2¹⁶. */
   def dHashNearDupPairs(media: DataFrame, maxHamming: Int = 3,
       gridRows: Int = graft.functions.MediaExprs.GridRows,
       gridCols: Int = graft.functions.MediaExprs.GridCols): DataFrame = {
     val nb = gridRows / 2
     val qs = dHashQuarters(media, gridRows, gridCols)
       .localCheckpoint() // bands + re-rank read it
-    val bands = bandRows(qs, nb)
-    val cand = bands.toDF("a_id", "band", "key")
-      .join(bands.toDF("b_id", "band", "key"), Seq("band", "key"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    hammingJoin(cand, qs, qs, "a_id", "b_id", nb)
+    hammingJoin(Lsh.selfPairs(Lsh.quarterBands(qs, nb)), qs, qs, "a_id", "b_id", nb)
       .where(col("hamming") <= maxHamming)
   }
 }

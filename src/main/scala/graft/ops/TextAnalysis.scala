@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis building blocks for LLM-data-pipeline work (tokenizing,
@@ -114,6 +114,31 @@ object TextAnalysis {
     val (a, b) = MinHashCoeffs(k)
     simHash(transform(tokenHashes, h => (h * a + lit(b)) % MinHashP), 16)
   }
+
+  /** Exact-dedup content key of a text column (q83's key). */
+  private[graft] def contentKey(text: Column): Column = md5(text.cast("binary"))
+
+  /** q27's per-doc quality features over `text`: the token array `T`,
+    * `n_toks` and the stopword ratio rounded to 6 places. The ratio of
+    * an empty doc is 0.0, so it lands low_quality instead of failing
+    * the ANSI division. */
+  private[graft] def withQuality(df: DataFrame): DataFrame = df
+    .withColumn("T", tokens(col("text")))
+    .withColumn("n_toks", size(col("T")).cast("long"))
+    .withColumn("stopword_ratio",
+      when(col("n_toks") === 0, lit(0.0)).otherwise(round(
+        size(filter(col("T"), w => w.isin("the", "a", "of", "and", "to")))
+          .cast("double") / col("n_toks"), 6)))
+
+  /** The curation quality gate over [[withQuality]]'s columns. */
+  private[graft] def qualityGate: Column =
+    col("n_toks") >= 40L && col("stopword_ratio") >= 0.03
+
+  /** One row per 4-token shingle hash `sh` of a doc's `text` (a
+    * generator for `select`) — decontamination's benchmark and probe
+    * rows. */
+  private[graft] def shingleRows: Column =
+    explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh")
 
   /** Rolling document fingerprint: fold of (acc*131 + tokenHash) % HashMod
     * over tokens in order — order-sensitive, content-defined. */

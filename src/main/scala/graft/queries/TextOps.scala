@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Lsh
 import graft.ops.TextAnalysis._
 import Tables._
 
@@ -74,31 +75,13 @@ object TextOps {
     * table. */
   private def bandPairsOf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
-    val sig = docs
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .withColumn("sig", graft.functions.EvmExprs.minHashSigFromText(col("text")))
-      .where(col("sig").isNotNull)
-      .select(col("doc_id") +: MinHashCoeffs.indices.map(j =>
-        element_at(col("sig"), j + 1).as(s"h$j")): _*)
+    val sig = Lsh.signatures(
+        docs.repartition(s.sparkContext.defaultParallelism, col("doc_id")))
       .localCheckpoint() // read by both band explodes + the scorer
-    // 2 bands of 2 hashes: candidates share band 0 (h0,h1) or band 1 (h2,h3)
-    val bands = sig.select(col("doc_id"), lit(0).as("band"),
-        col("h0").as("x"), col("h1").as("y"))
-      .unionByName(sig.select(col("doc_id"), lit(1).as("band"),
-        col("h2").as("x"), col("h3").as("y")))
-    val cand = bands.toDF("a_id", "band", "x", "y")
-      .join(bands.toDF("b_id", "band", "x", "y"), Seq("band", "x", "y"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    val sa = sig.toDF("a_id", "a0", "a1", "a2", "a3")
-    val sb = sig.toDF("b_id", "b0", "b1", "b2", "b3")
-    cand.join(sa, "a_id").join(sb, "b_id")
-      .select(col("a_id"), col("b_id"),
-        ((when(col("a0") === col("b0"), 1).otherwise(0) +
-          when(col("a1") === col("b1"), 1).otherwise(0) +
-          when(col("a2") === col("b2"), 1).otherwise(0) +
-          when(col("a3") === col("b3"), 1).otherwise(0)).cast("double") / 4)
-          .as("est_jaccard"))
+    Lsh.selfPairs(Lsh.bands(sig))
+      .join(Lsh.prefixed(sig, "a_id", "a"), "a_id")
+      .join(Lsh.prefixed(sig, "b_id", "b"), "b_id")
+      .select(col("a_id"), col("b_id"), Lsh.agreement("a", "b").as("est_jaccard"))
       .where(col("est_jaccard") >= 0.5)
   }
 
@@ -143,12 +126,11 @@ object TextOps {
     * the INPUT frame (doc_id % 29), mirroring the registered query. */
   def curateStagesOf(docs: DataFrame): Seq[(String, DataFrame)] = {
     import org.apache.spark.sql.expressions.Window
-    val s = docs.sparkSession
     // stage 1: exact dedup, best representative per content hash (q83)
     val w1 = Window.partitionBy(col("key"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
     val s1 = docs
-      .withColumn("key", md5(col("text").cast("binary")))
+      .withColumn("key", contentKey(col("text")))
       .withColumn("rn", row_number().over(w1))
       .where(col("rn") === 1)
       .select(col("doc_id"), col("text"), col("source"))
@@ -163,29 +145,16 @@ object TextOps {
     // stage 3: decontamination — the benchmark's shingles come from the
     // ORIGINAL corpus (the eval suite exists independently of what
     // dedup kept) and broadcast into a semi-join (q98)
-    val shape = (df: DataFrame) => df
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
-    val bench = shape(docs.where(col("doc_id") % 29 === 0))
+    val bench = shingleRowsOf(docs.where(col("doc_id") % 29 === 0))
       .select(col("sh").as("b_sh")).distinct()
-    val contaminated = shape(s2.where(col("doc_id") % 29 =!= 0))
+    val contaminated = shingleRowsOf(s2.where(col("doc_id") % 29 =!= 0))
       .join(broadcast(bench), col("sh") === col("b_sh"), "left_semi")
       .select("doc_id").distinct()
     val s3 = s2.where(col("doc_id") % 29 =!= 0)
       .join(contaminated, Seq("doc_id"), "left_anti")
       .localCheckpoint() // same: shingle explode runs once, not 3×
     // stage 4: quality gate on q27's exact statistics
-    val s4 = s3
-      .withColumn("T", tokens(col("text")))
-      .withColumn("n_toks", size(col("T")).cast("long"))
-      .withColumn("stopword_ratio",
-        // empty-doc guard (mirrors CurateStream.ingestBatch and the
-        // replay SQL): 0 tokens → ratio 0.0, lands low_quality
-        when(col("n_toks") === 0, lit(0.0)).otherwise(round(
-          size(filter(col("T"), w => w.isin("the", "a", "of", "and", "to")))
-            .cast("double") / col("n_toks"), 6)))
-      .where(col("n_toks") >= 40L && col("stopword_ratio") >= 0.03)
+    val s4 = withQuality(s3).where(qualityGate)
     // stage 5: PII scrub (q126's injected fixture so the redaction
     // provably fires; chars_removed rides the manifest)
     val dirty = concat(col("text"),
@@ -362,6 +331,12 @@ object TextOps {
           .as("n_dup_spans_confirmed"))
   }
 
+  /** Shingle-hash rows (doc_id, sh) of a (doc_id, text) frame, spread
+    * by doc_id first — the decontamination probe of q141/q143. */
+  private def shingleRowsOf(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+      .select(col("doc_id"), shingleRows)
+
   /** The q143 chain over an arbitrary (doc_id, text, source, n_chars)
     * frame: batch = doc_id % 5 = 0 curated against the rest as the
     * existing corpus, one row per batch doc with its drop-provenance
@@ -374,12 +349,12 @@ object TextOps {
     val batch0 = docs.where(col("doc_id") % 5 === 0)
     val corpus = docs.where(col("doc_id") % 5 =!= 0)
     // exact layer: corpus content-hash probe + within-batch keep-best
-    val keyed = batch0.withColumn("key", md5(col("text").cast("binary")))
+    val keyed = batch0.withColumn("key", contentKey(col("text")))
       .withColumn("rn", row_number().over(Window.partitionBy(col("key"))
         .orderBy(col("n_chars").desc, col("doc_id").asc)))
       .localCheckpoint() // read by the probe, the rn filter, and the final join
     val dupExactCorpus = keyed
-      .join(corpus.select(md5(col("text").cast("binary")).as("key")).distinct(),
+      .join(corpus.select(contentKey(col("text")).as("key")).distinct(),
         Seq("key"), "left_semi")
       .select("doc_id")
     val dupExactBatch = keyed.where(col("rn") > 1).select("doc_id")
@@ -389,41 +364,21 @@ object TextOps {
     // near-dup layer: ONE signature pass over the whole table (the
     // corpus side is the stored band index in production), then the
     // batch probes the corpus index AND self-joins its own bands
-    val sig = docs
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .withColumn("sig", graft.functions.EvmExprs.minHashSigFromText(col("text")))
-      .where(col("sig").isNotNull)
-      .select(col("doc_id") +: MinHashCoeffs.indices.map(j =>
-        element_at(col("sig"), j + 1).as(s"h$j")): _*)
+    val sig = Lsh.signatures(
+        docs.repartition(s.sparkContext.defaultParallelism, col("doc_id")))
       .localCheckpoint() // bands ×2 sides + the two scorers read it
     val bsig = sig.join(b1, Seq("doc_id"), "left_semi")
     val csig = sig.where(col("doc_id") % 5 =!= 0)
-    def bands(df: DataFrame) =
-      df.select(col("doc_id"), lit(0).as("band"),
-          col("h0").as("x"), col("h1").as("y"))
-        .unionByName(df.select(col("doc_id"), lit(1).as("band"),
-          col("h2").as("x"), col("h3").as("y")))
-    def agree(a: DataFrame, aId: String, b: DataFrame, bId: String,
-        cand: DataFrame): DataFrame = cand
-      .join(a.toDF(aId, "a0", "a1", "a2", "a3"), aId)
-      .join(b.toDF(bId, "b0", "b1", "b2", "b3"), bId)
-      .where(((when(col("a0") === col("b0"), 1).otherwise(0) +
-        when(col("a1") === col("b1"), 1).otherwise(0) +
-        when(col("a2") === col("b2"), 1).otherwise(0) +
-        when(col("a3") === col("b3"), 1).otherwise(0)).cast("double") / 4)
-        >= 0.5)
-    val candCorpus = bands(bsig).toDF("b_id", "band", "x", "y")
-      .join(bands(csig).toDF("c_id", "band", "x", "y"), Seq("band", "x", "y"))
-      .select("b_id", "c_id").distinct()
-    val dupNearCorpus = agree(bsig, "b_id", csig, "c_id", candCorpus)
+    val dupNearCorpus = Lsh.probePairs(Lsh.bands(bsig), Lsh.bands(csig))
+      .join(Lsh.prefixed(bsig, "b_id", "a"), "b_id")
+      .join(Lsh.prefixed(csig, "c_id", "b"), "c_id")
+      .where(Lsh.agreement("a", "b") >= 0.5)
       .select(col("b_id").as("doc_id")).distinct()
-    val bb = bands(bsig)
-    val candBatch = bb.toDF("a_id", "band", "x", "y")
-      .join(bb.toDF("b_id", "band", "x", "y"), Seq("band", "x", "y"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
     // q141's keep-first rule: the LARGER id of a scoring pair drops
-    val dupNearBatch = agree(bsig, "a_id", bsig, "b_id", candBatch)
+    val dupNearBatch = Lsh.selfPairs(Lsh.bands(bsig))
+      .join(Lsh.prefixed(bsig, "a_id", "a"), "a_id")
+      .join(Lsh.prefixed(bsig, "b_id", "b"), "b_id")
+      .where(Lsh.agreement("a", "b") >= 0.5)
       .select(col("b_id").as("doc_id")).distinct()
     val b2 = b1
       .join(dupNearCorpus, Seq("doc_id"), "left_anti")
@@ -431,28 +386,16 @@ object TextOps {
     // decontamination: benchmark shingles from the FULL corpus
     // (q141's rule — the eval suite exists independently of the
     // batch split); bench members themselves route to the suite
-    val shape = (df: DataFrame) => df
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
-    val bench = shape(docs.where(col("doc_id") % 29 === 0))
+    val bench = shingleRowsOf(docs.where(col("doc_id") % 29 === 0))
       .select(col("sh").as("b_sh")).distinct()
-    val contaminated = shape(
+    val contaminated = shingleRowsOf(
         batch0.join(b2, Seq("doc_id"), "left_semi")
           .where(col("doc_id") % 29 =!= 0))
       .join(broadcast(bench), col("sh") === col("b_sh"), "left_semi")
       .select("doc_id").distinct()
     // quality stats per-row for EVERY batch doc (they ride the
     // manifest even for dropped docs — provenance plus evidence)
-    val withQ = keyed
-      .withColumn("T", tokens(col("text")))
-      .withColumn("n_toks", size(col("T")).cast("long"))
-      .withColumn("stopword_ratio",
-        // empty-doc guard (mirrors CurateStream.ingestBatch and the
-        // replay SQL): 0 tokens → ratio 0.0, lands low_quality
-        when(col("n_toks") === 0, lit(0.0)).otherwise(round(
-          size(filter(col("T"), w => w.isin("the", "a", "of", "and", "to")))
-            .cast("double") / col("n_toks"), 6)))
+    val withQ = withQuality(keyed)
     def flag(df: DataFrame, name: String) =
       df.withColumn(name, lit(1))
     withQ
@@ -467,7 +410,7 @@ object TextOps {
           .when(col("f_dnb") === 1, "dup_near_batch")
           .when(col("doc_id") % 29 === 0, "bench_member")
           .when(col("f_cont") === 1, "contaminated")
-          .when(col("n_toks") < 40L || col("stopword_ratio") < 0.03, "low_quality")
+          .when(!qualityGate, "low_quality")
           .otherwise("kept").as("status"))
   }
 
@@ -501,25 +444,12 @@ object TextOps {
     * pairs from a stored curate_bands frame (doc_id, h0..h3) — the
     * signature arithmetic is never recomputed. Caller should
     * localCheckpoint `sig` (read 4×). */
-  private def residualPairsOf(sig: DataFrame): DataFrame = {
-    val bands = sig.select(col("doc_id"), lit(0).as("band"),
-        col("h0").as("x"), col("h1").as("y"))
-      .unionByName(sig.select(col("doc_id"), lit(1).as("band"),
-        col("h2").as("x"), col("h3").as("y")))
-    val cand = bands.toDF("a_id", "band", "x", "y")
-      .join(bands.toDF("b_id", "band", "x", "y"), Seq("band", "x", "y"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-    cand
-      .join(sig.toDF("a_id", "a0", "a1", "a2", "a3"), "a_id")
-      .join(sig.toDF("b_id", "b0", "b1", "b2", "b3"), "b_id")
-      .where(((when(col("a0") === col("b0"), 1).otherwise(0) +
-        when(col("a1") === col("b1"), 1).otherwise(0) +
-        when(col("a2") === col("b2"), 1).otherwise(0) +
-        when(col("a3") === col("b3"), 1).otherwise(0)).cast("double") / 4)
-        >= 0.5)
+  private def residualPairsOf(sig: DataFrame): DataFrame =
+    Lsh.selfPairs(Lsh.bands(sig))
+      .join(Lsh.prefixed(sig, "a_id", "a"), "a_id")
+      .join(Lsh.prefixed(sig, "b_id", "b"), "b_id")
+      .where(Lsh.agreement("a", "b") >= 0.5)
       .select("a_id", "b_id")
-  }
 
   /** The q196 two-micro-batch curate scenario built ONCE per
     * (JVM, sfDir) with the lex + cert layers armed, and SHARED by the
@@ -889,7 +819,7 @@ object TextOps {
     // exact dedup keyed on content hash
     "q23_exact_dedup" -> Q(
       (s, d) => documents(s, d)
-        .groupBy(md5(col("text").cast("binary")).as("key"))
+        .groupBy(contentKey(col("text")).as("key"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies")),
       Some("""SELECT md5(text) AS key, min(doc_id) AS keep_id, count(*) AS n_copies
              |FROM documents GROUP BY 1""".stripMargin),
@@ -1018,9 +948,8 @@ object TextOps {
         // fused native signature — tokenize + shingle + hash + min in
         // ONE pass over the text, no intermediate arrays
         documents(s, d)
-          .withColumn("sig", graft.functions.EvmExprs.minHashSigFromText(col("text")))
-          .select(col("doc_id") +: MinHashCoeffs.indices.map(j =>
-            element_at(col("sig"), j + 1).as(s"h$j")): _*)
+          .withColumn("sig", Lsh.minHashSig)
+          .select(col("doc_id") +: Lsh.hashes: _*)
       },
       Some {
         val sig = MinHashCoeffs.zipWithIndex.map { case ((a, b), j) =>
@@ -1160,7 +1089,7 @@ object TextOps {
         val w = Window.partitionBy(col("key"))
           .orderBy(col("n_chars").desc, col("doc_id").asc)
         documents(s, d)
-          .withColumn("key", md5(col("text").cast("binary")))
+          .withColumn("key", contentKey(col("text")))
           .withColumn("rn", row_number().over(w))
           .withColumn("n_copies", count(lit(1)).over(
             Window.partitionBy(col("key"))))
@@ -1458,11 +1387,7 @@ object TextOps {
             (col("sh") / 256L).cast("long").as("key"))
           .unionByName(sh.select(col("doc_id"), lit(1).as("half"),
             (col("sh") % 256L).as("key")))
-        val cand = bands.toDF("a_id", "half", "key")
-          .join(bands.toDF("b_id", "half", "key"), Seq("half", "key"))
-          .where(col("a_id") < col("b_id"))
-          .select("a_id", "b_id").distinct()
-        cand
+        Lsh.selfPairs(bands)
           .join(sh.toDF("a_id", "a_sh"), "a_id")
           .join(sh.toDF("b_id", "b_sh"), "b_id")
           .select(col("a_id"), col("b_id"),
@@ -1511,17 +1436,10 @@ object TextOps {
           .select(col("doc_id") +: (0 until 4).map(k =>
             element_at(col("QS"), k + 1).as(s"q$k")): _*)
           .localCheckpoint() // all four band sides + the re-rank read it
-        val bands = (0 until 4).map(k =>
-            sh.select(col("doc_id"), lit(k).as("band"), col(s"q$k").as("key")))
-          .reduce(_.unionByName(_))
-        val cand = bands.toDF("a_id", "band", "key")
-          .join(bands.toDF("b_id", "band", "key"), Seq("band", "key"))
-          .where(col("a_id") < col("b_id"))
-          .select("a_id", "b_id").distinct()
         val hamming = (0 until 4).map(k =>
             bit_count(col(s"a_q$k").bitwiseXOR(col(s"b_q$k"))))
           .reduce(_ + _).cast("long")
-        cand
+        Lsh.selfPairs(Lsh.quarterBands(sh, 4))
           .join(sh.toDF("a_id", "a_q0", "a_q1", "a_q2", "a_q3"), "a_id")
           .join(sh.toDF("b_id", "b_q0", "b_q1", "b_q2", "b_q3"), "b_id")
           .select(col("a_id"), col("b_id"), hamming.as("hamming"))
@@ -1686,33 +1604,15 @@ object TextOps {
     // batch is small) — never a corpus×corpus or batch×batch pass.
     "q133_incremental_dedup" -> Q(
       (s, d) => {
-        val sig = documents(s, d)
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .withColumn("sig", graft.functions.EvmExprs.minHashSigFromText(col("text")))
-          .where(col("sig").isNotNull)
-          .select(col("doc_id") +: MinHashCoeffs.indices.map(j =>
-            element_at(col("sig"), j + 1).as(s"h$j")): _*)
+        val sig = Lsh.signatures(documents(s, d)
+            .repartition(s.sparkContext.defaultParallelism, col("doc_id")))
           .localCheckpoint() // batch + corpus sides + the scorer read it
         val batch = sig.where(col("doc_id") % 5 === 0)
         val corpus = sig.where(col("doc_id") % 5 =!= 0)
-        def bands(df: DataFrame) =
-          df.select(col("doc_id"), lit(0).as("band"),
-              col("h0").as("x"), col("h1").as("y"))
-            .unionByName(df.select(col("doc_id"), lit(1).as("band"),
-              col("h2").as("x"), col("h3").as("y")))
-        val cand = bands(batch).toDF("b_id", "band", "x", "y")
-          .join(bands(corpus).toDF("c_id", "band", "x", "y"), Seq("band", "x", "y"))
-          .select("b_id", "c_id").distinct()
-        val dup = cand
-          .join(batch.select(col("doc_id").as("b_id"), col("h0").as("b0"),
-            col("h1").as("b1"), col("h2").as("b2"), col("h3").as("b3")), "b_id")
-          .join(corpus.select(col("doc_id").as("c_id"), col("h0").as("c0"),
-            col("h1").as("c1"), col("h2").as("c2"), col("h3").as("c3")), "c_id")
-          .where(((when(col("b0") === col("c0"), 1).otherwise(0) +
-            when(col("b1") === col("c1"), 1).otherwise(0) +
-            when(col("b2") === col("c2"), 1).otherwise(0) +
-            when(col("b3") === col("c3"), 1).otherwise(0)).cast("double") / 4)
-            >= 0.5)
+        val dup = Lsh.probePairs(Lsh.bands(batch), Lsh.bands(corpus))
+          .join(Lsh.prefixed(batch, "b_id", "b"), "b_id")
+          .join(Lsh.prefixed(corpus, "c_id", "c"), "c_id")
+          .where(Lsh.agreement("b", "c") >= 0.5)
           .select(col("b_id").as("doc_id")).distinct()
         batch.select(col("doc_id"))
           .join(dup.withColumn("dup_in_corpus", lit(true)), Seq("doc_id"), "left")
@@ -2752,42 +2652,25 @@ object TextOps {
     "q190_split_assign" -> Q(
       (s, d) => {
         val docs = documents(s, d)
-        val sig = docs
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .withColumn("sig",
-            graft.functions.EvmExprs.minHashSigFromText(col("text")))
-          .where(col("sig").isNotNull)
-          .select(col("doc_id") +: MinHashCoeffs.indices.map(j =>
-            element_at(col("sig"), j + 1).as(s"h$j")): _*)
+        val sig = Lsh.signatures(
+            docs.repartition(s.sparkContext.defaultParallelism, col("doc_id")))
           .localCheckpoint() // batch + corpus bands + both scorers
-        def bandsOf(df: DataFrame) =
-          df.select(col("doc_id"), lit(0).as("band"),
-              col("h0").as("x"), col("h1").as("y"))
-            .unionByName(df.select(col("doc_id"), lit(1).as("band"),
-              col("h2").as("x"), col("h3").as("y")))
         val corpusSig = sig.where(col("doc_id") % 5 =!= 0)
         val batchSig = sig.where(col("doc_id") % 5 === 0)
         val cpairs = bandPairsOf(docs.where(col("doc_id") % 5 =!= 0))
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         val comp = graft.analytics.GraphOps.connectedComponents(cpairs)
           .toDF("c_id", "canonical")
-        val cand = bandsOf(batchSig).toDF("b_id", "band", "x", "y")
-          .join(bandsOf(corpusSig).toDF("c_id", "band", "x", "y"),
-            Seq("band", "x", "y"))
-          .select("b_id", "c_id").distinct()
+        val cand = Lsh.probePairs(Lsh.bands(batchSig), Lsh.bands(corpusSig))
         val splitOf = (c: Column) => when(
           pmod(graft.functions.EvmExprs.tokenHash(c.cast("string")),
             lit(10L)) < 9, lit("train")).otherwise(lit("test"))
         // the scored (post-agreement) match pairs, materialized once —
         // read twice below (cluster-lookup key set + the left join)
         val scored = cand
-          .join(batchSig.toDF("b_id", "b0", "b1", "b2", "b3"), "b_id")
-          .join(corpusSig.toDF("c_id", "c0", "c1", "c2", "c3"), "c_id")
-          .where(((when(col("b0") === col("c0"), 1).otherwise(0) +
-            when(col("b1") === col("c1"), 1).otherwise(0) +
-            when(col("b2") === col("c2"), 1).otherwise(0) +
-            when(col("b3") === col("c3"), 1).otherwise(0)).cast("double") / 4)
-            >= 0.5)
+          .join(Lsh.prefixed(batchSig, "b_id", "b"), "b_id")
+          .join(Lsh.prefixed(corpusSig, "c_id", "c"), "c_id")
+          .where(Lsh.agreement("b", "c") >= 0.5)
           .select(col("b_id"), col("c_id"))
           .localCheckpoint()
         // FLIP the cluster lookup (r14's CurateStream discipline): comp
@@ -3011,7 +2894,7 @@ object TextOps {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val base = documents(s, d)
-          .withColumn("key", md5(col("text").cast("binary")))
+          .withColumn("key", contentKey(col("text")))
           .withColumn("T", tokens(col("text")))
           .withColumn("n_toks", size(col("T")).cast("long"))
           .withColumn("n_types", size(array_distinct(col("T"))).cast("long"))

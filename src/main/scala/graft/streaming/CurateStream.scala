@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import graft.sinks.Layout
+import graft.ops.Lsh
 import graft.ops.TextAnalysis._
 
 /** ONLINE curation over a maintained corpus index — the production
@@ -217,8 +218,6 @@ object CurateStream {
     * both the exact and MinHash layers; only span coverage sees it). */
   val SpanDupFrac = 0.5
 
-  private def contentKey(text: Column): Column = md5(text.cast("binary"))
-
   /** Per-doc DISTINCT 8-token span-hash rows (doc_id, sp) — q134's
     * 60-bit composite keys ([[graft.ops.TextAnalysis.spanHashes]];
     * the measured-width discipline). Doc-attributed, like the
@@ -259,33 +258,10 @@ object CurateStream {
         Seq("t", "doc_id")),
       () => Layout.upsertStatic(dlOf(docs), root, DlEntity, Seq("doc_id"))))
 
-  /** MinHash signature frame (doc_id, h0..h3); docs with no shingles
-    * (under 4 tokens) have no signature and skip the near-dup layer. */
-  private def sigsOf(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    docs
-      .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      .withColumn("sig", graft.functions.EvmExprs.minHashSigFromText(col("text")))
-      .where(col("sig").isNotNull)
-      .select(col("doc_id") +: MinHashCoeffs.indices.map(j =>
-        element_at(col("sig"), j + 1).as(s"h$j")): _*)
-  }
-
-  /** 2 bands of 2 hashes — the q28 band projection of a signature
-    * frame (works for both the batch side and the stored index). */
-  private def bandsOf(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id"), lit(0).as("band"),
-        col("h0").as("x"), col("h1").as("y"))
-      .unionByName(sig.select(col("doc_id"), lit(1).as("band"),
-        col("h2").as("x"), col("h3").as("y")))
-
   /** Distinct shingle hashes of bench-member docs (doc_id % 29 = 0,
     * the corpus's bench-membership rule — q98/q141/q143). */
   private def benchShinglesOf(docs: DataFrame): DataFrame =
-    docs.where(col("doc_id") % 29 === 0)
-      .select(explode(
-        graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
-      .distinct()
+    docs.where(col("doc_id") % 29 === 0).select(shingleRows).distinct()
 
   /** Seed the index from an existing corpus (assumed already curated:
     * ALL its docs contribute keys and signatures; its bench members
@@ -329,7 +305,11 @@ object CurateStream {
         root, KeysEntity, Seq("key", "doc_id"))
     }
     builds += lab("curate-bootstrap:bands") {
-      Layout.upsertStatic(sigsOf(corpus), root, BandsEntity, Seq("doc_id"))
+      // docs with no shingle (under 4 tokens) have no signature and
+      // skip the near-dup layer
+      Layout.upsertStatic(Lsh.signatures(corpus.repartition(
+        s.sparkContext.defaultParallelism, col("doc_id"))), root, BandsEntity,
+        Seq("doc_id"))
     }
     builds += lab("curate-bootstrap:bench") {
       Layout.upsertStatic(benchShinglesOf(corpus), root, BenchEntity,
@@ -382,27 +362,16 @@ object CurateStream {
     // per-batch bill is per-action overhead × action count, so the
     // fused frame is the first lever). The window shuffle on `key`
     // also spreads the signature/tokenize arithmetic across the
-    // cluster, which is what sigsOf's explicit repartition bought.
-    val landed0 = batch0
+    // cluster, which is what the bootstrap's explicit repartition buys.
+    // An EMPTY doc is routine crawl input: its guarded stopword ratio
+    // lands it low_quality (the replay SQL mirrors the CASE).
+    val landed0 = withQuality(batch0
       .withColumn("key", contentKey(col("text")))
       .withColumn("rn", row_number().over(Window.partitionBy(col("key"))
         .orderBy(col("n_chars").desc, col("doc_id").asc)))
-      .withColumn("sig", graft.functions.EvmExprs.minHashSigFromText(col("text")))
-      .withColumn("T", tokens(col("text")))
-      .withColumn("n_toks", size(col("T")).cast("long"))
-      .withColumn("stopword_ratio",
-        // guarded: an EMPTY doc (n_toks = 0) is routine crawl input
-        // and must land low_quality, not kill the whole micro-batch
-        // with an ANSI division error (r12 sweep — the zero-slot
-        // class at the text layer; the replay SQL mirrors the CASE)
-        when(col("n_toks") === 0, lit(0.0)).otherwise(round(
-          size(filter(col("T"), w => w.isin("the", "a", "of", "and", "to")))
-            .cast("double") / col("n_toks"), 6)))
-      .select(
-        (batch0.columns.map(col) ++ Seq(col("key"), col("rn"),
-          col("n_toks"), col("stopword_ratio")) ++
-          MinHashCoeffs.indices.map(j =>
-            element_at(col("sig"), j + 1).as(s"h$j"))): _*)
+      .withColumn("sig", Lsh.minHashSig))
+      .select((batch0.columns.map(col) ++ Seq(col("key"), col("rn"),
+          col("n_toks"), col("stopword_ratio")) ++ Lsh.hashes): _*)
     val landed = graft.Sessions.labeled(s, "curate-ingest:landed") {
       landed0.localCheckpoint()
     }
@@ -483,42 +452,29 @@ object CurateStream {
     val sigB = landed.where(col("h0").isNotNull)
       .select((col("doc_id") +: MinHashCoeffs.indices.map(j => col(s"h$j"))): _*)
     val bsig = sigB.join(broadcast(b1), Seq("doc_id"), "left_semi")
-    // `a` is a batch-bounded signature frame, broadcast unconditionally;
-    // `cand` is a band-COLLISION pair frame — bounded in expectation
-    // only, so its broadcast is GUARDED on the exact pair count
-    // ([[PairGuard]], r14 verdict #2: an explicit hint bypasses
-    // autoBroadcastJoinThreshold, and a degenerate band key would turn
-    // the hint into a driver OOM at scale; past the cap the scorer join
-    // falls back to planner choice — row sets unchanged either way)
-    def agree(a: DataFrame, aId: String, b: DataFrame, bId: String,
-        cand: DataFrame, bcPairs: Boolean): DataFrame = {
-      val pre = cand.join(broadcast(a.toDF(aId, "a0", "a1", "a2", "a3")), aId)
+    // Each scorer joins a pair frame to the batch-bounded signatures
+    // `a` (broadcast unconditionally), then to `b`. The pair frame is a
+    // band-COLLISION frame — bounded in expectation only, so its
+    // broadcast is GUARDED on the exact pair count ([[PairGuard]], r14
+    // verdict #2: an explicit hint bypasses autoBroadcastJoinThreshold,
+    // and a degenerate band key would turn the hint into a driver OOM at
+    // scale; past the cap the scorer join falls back to planner choice —
+    // row sets unchanged either way)
+    def scored(cand: DataFrame, bcPairs: Boolean, a: DataFrame, aId: String,
+        b: DataFrame, bId: String): DataFrame = {
+      val pre = cand.join(broadcast(Lsh.prefixed(a, aId, "a")), aId)
       (if (bcPairs) broadcast(pre) else pre)
-        .join(b.toDF(bId, "b0", "b1", "b2", "b3"), bId)
-        .where(((when(col("a0") === col("b0"), 1).otherwise(0) +
-          when(col("a1") === col("b1"), 1).otherwise(0) +
-          when(col("a2") === col("b2"), 1).otherwise(0) +
-          when(col("a3") === col("b3"), 1).otherwise(0)).cast("double") / 4)
-          >= 0.5)
+        .join(Lsh.prefixed(b, bId, "b"), bId)
+        .where(Lsh.agreement("a", "b") >= 0.5)
+        .select(col("b_id").as("doc_id")).distinct()
     }
     val (candCorpus, bcCorpus) = PairGuard.checkpointAndDecide(
-      broadcast(bandsOf(bsig).toDF("b_id", "band", "x", "y"))
-        .join(bandsOf(sigIdx).toDF("c_id", "band", "x", "y"),
-          Seq("band", "x", "y"))
-        .select("b_id", "c_id").distinct(),
+      Lsh.probePairs(Lsh.bands(bsig), Lsh.bands(sigIdx), broadcastLeft = true),
       "curate-ingest:cand-corpus")
-    val dupNearCorpus = agree(bsig, "b_id", sigIdx, "c_id", candCorpus,
-        bcCorpus)
-      .select(col("b_id").as("doc_id")).distinct()
-    val bb = bandsOf(bsig)
+    val dupNearCorpus = scored(candCorpus, bcCorpus, bsig, "b_id", sigIdx, "c_id")
     val (candBatch, bcBatch) = PairGuard.checkpointAndDecide(
-      bb.toDF("a_id", "band", "x", "y")
-        .join(bb.toDF("b_id", "band", "x", "y"), Seq("band", "x", "y"))
-        .where(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").distinct(),
-      "curate-ingest:cand-batch")
-    val dupNearBatch = agree(bsig, "a_id", bsig, "b_id", candBatch, bcBatch)
-      .select(col("b_id").as("doc_id")).distinct()
+      Lsh.selfPairs(Lsh.bands(bsig)), "curate-ingest:cand-batch")
+    val dupNearBatch = scored(candBatch, bcBatch, bsig, "a_id", bsig, "b_id")
     val b2 = b1
       .join(broadcast(dupNearCorpus), Seq("doc_id"), "left_anti")
       .join(broadcast(dupNearBatch), Seq("doc_id"), "left_anti")
@@ -533,8 +489,7 @@ object CurateStream {
     val bench = benchIdx.unionByName(batchBench)
     val contaminated = landed.join(broadcast(b2), Seq("doc_id"), "left_semi")
       .where(col("doc_id") % 29 =!= 0)
-      .select(col("doc_id"), explode(
-        graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
+      .select(col("doc_id"), shingleRows)
       .join(broadcast(bench.toDF("b_sh")), col("sh") === col("b_sh"),
         "left_semi")
       .select("doc_id").distinct()
@@ -594,8 +549,7 @@ object CurateStream {
           .when(col("doc_id") % 29 === 0, "bench_member")
           .when(col("f_span") === 1, "dup_span_corpus")
           .when(col("f_cont") === 1, "contaminated")
-          .when(col("n_toks") < 40L || col("stopword_ratio") < 0.03,
-            "low_quality")
+          .when(!qualityGate, "low_quality")
           .otherwise("kept").as("status"))
     val manifest = graft.Sessions.labeled(s, "curate-ingest:manifest") {
       manifest0.localCheckpoint()

@@ -66,8 +66,8 @@ object MediaStream {
     * LOUDLY when the store was built at a different width — a
     * mismatched probe would silently find zero band matches and mark
     * every duplicate `kept` (the store's width is fixed at
-    * [[bootstrap]]; the bands/Hamming machinery itself is the
-    * width-generic [[graft.ops.Multimodal]] implementation, shared
+    * [[bootstrap]]; the bands ([[graft.ops.Lsh]]) and the Hamming
+    * re-rank ([[graft.ops.Multimodal]]) are width-generic and shared
     * with the one-shot face — r14 review). */
   private def storedQuarters(s: SparkSession, root: String,
       nb: Int): DataFrame = {
@@ -100,14 +100,16 @@ object MediaStream {
   def ingestBatch(batch: DataFrame, root: String,
       maxHamming: Int = 3,
       gridRows: Int = graft.functions.MediaExprs.GridRows,
-      gridCols: Int = graft.functions.MediaExprs.GridCols): DataFrame = {
-    import graft.ops.Multimodal
+      gridCols: Int = graft.functions.MediaExprs.GridCols): DataFrame =
+      graft.Checkpoints.scoped { ck =>
+    import graft.ops.{Lsh, Multimodal}
     val s = batch.sparkSession
     val nb = gridRows / 2
     // one fused hash pass over the batch; everything downstream (two
-    // band joins, two Hamming re-ranks, the kept fold) reads it
-    val qsB = Multimodal.dHashQuarters(batch, gridRows, gridCols)
-      .localCheckpoint()
+    // band joins, two Hamming re-ranks, the kept fold) reads it. The
+    // per-batch checkpoints are released when the ingest returns or
+    // fails; only the returned manifest stays materialized.
+    val qsB = ck(Multimodal.dHashQuarters(batch, gridRows, gridCols))
     val ids = qsB.select("media_id")
 
     // probe EXCLUDES this batch's own ids — a replayed half-applied
@@ -129,25 +131,20 @@ object MediaStream {
     // [[bandSkew]]'s est_cand/top_share diagnostic measures. Past the
     // cap the re-rank falls back to planner choice; row sets unchanged.
     val (candCorpus, bcCorpus) = PairGuard.checkpointAndDecide(
-      broadcast(
-          Multimodal.bandRows(qsB, nb).toDF("b_id", "band", "key"))
-        .join(Multimodal.bandRows(qsIdx, nb).toDF("c_id", "band", "key"),
-          Seq("band", "key"))
-        .select("b_id", "c_id").distinct(),
+      Lsh.probePairs(Lsh.quarterBands(qsB, nb), Lsh.quarterBands(qsIdx, nb),
+        broadcastLeft = true),
       "media-ingest:cand-corpus")
+    ck.adopt(candCorpus)
     val corpusPart = Multimodal
       .hammingJoin(candCorpus, qsB, qsIdx, "b_id", "c_id", nb,
         broadcastPairs = bcCorpus)
       .where(col("hamming") <= maxHamming)
       .select(col("b_id").as("media_id"), col("c_id").as("pid"),
         lit("corpus").as("tag"))
-    val bb = Multimodal.bandRows(qsB, nb)
     val (candBatch, bcBatch) = PairGuard.checkpointAndDecide(
-      broadcast(bb.toDF("a_id", "band", "key"))
-        .join(bb.toDF("b_id", "band", "key"), Seq("band", "key"))
-        .where(col("a_id") < col("b_id"))
-        .select("a_id", "b_id").distinct(),
+      Lsh.selfPairs(Lsh.quarterBands(qsB, nb), broadcastLeft = true),
       "media-ingest:cand-batch")
+    ck.adopt(candBatch)
     val batchPart = Multimodal
       .hammingJoin(candBatch, qsB, qsB, "a_id", "b_id", nb,
         broadcastPairs = bcBatch)
@@ -177,11 +174,16 @@ object MediaStream {
 
     // kept quarters first, manifest LAST (the batch's commit marker)
     val kept = manifest.where(col("status") === "kept").select("media_id")
-    Layout.upsertStatic(qsB.join(broadcast(kept), Seq("media_id"), "left_semi"),
-      root, QuartersEntity, Seq("media_id"), flipProbe = true)
-    Layout.upsertStatic(manifest, root, ManifestEntity, Seq("media_id"),
-      flipProbe = true)
-    Seq(qsB, candCorpus, candBatch).foreach(graft.Checkpoints.release)
+    try {
+      Layout.upsertStatic(qsB.join(broadcast(kept), Seq("media_id"), "left_semi"),
+        root, QuartersEntity, Seq("media_id"), flipProbe = true)
+      Layout.upsertStatic(manifest, root, ManifestEntity, Seq("media_id"),
+        flipProbe = true)
+    } catch {
+      case e: Throwable =>
+        graft.Checkpoints.release(manifest)
+        throw e
+    }
     manifest
   }
 
@@ -203,7 +205,7 @@ object MediaStream {
   def bandSkew(spark: SparkSession, root: String,
       gridRows: Int = graft.functions.MediaExprs.GridRows): DataFrame = {
     val nb = gridRows / 2
-    graft.ops.Multimodal.bandRows(storedQuarters(spark, root, nb), nb)
+    graft.ops.Lsh.quarterBands(storedQuarters(spark, root, nb), nb)
       .groupBy(col("band"), col("key"))
       .agg(count(lit(1)).as("n"))
       .groupBy(col("band"))

@@ -1734,19 +1734,22 @@ object SemanticStream {
   def ingestVectors(batch0: DataFrame, root: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       probes: Int = 1, residual: Option[Double] = None,
-      residualProbes: Int = 4): DataFrame = {
+      residualProbes: Int = 4): DataFrame = graft.Checkpoints.scoped { ck =>
     val s = batch0.sparkSession
-    val batch = batch0.localCheckpoint()
+    // the per-batch checkpoints (batch, asg) are released when the
+    // ingest returns or fails (a long-lived ingest session would
+    // otherwise accumulate them); only the returned manifest stays
+    // materialized
+    val batch = ck(batch0)
     val (cb, ver) = liveCodebook(s, root)
     // zero-shuffle assignment of the batch against the frozen codebook;
     // probe 1 is the assignment cell (what a kept vector is stored
     // under), probes 2..p only widen the match search
-    val asg = SimSearch.ivfAssign(batch, idCol, vecCol, cb, p = probes)
+    val asg = ck(SimSearch.ivfAssign(batch, idCol, vecCol, cb, p = probes)
       .select(col("id").as("vec_id"),
         element_at(col("probes"), 1).getField("cid").as("cell"),
         col("probes").getField("cid").as("pcells"),
-        col("v"), col("n"))
-      .localCheckpoint()
+        col("v"), col("n")))
     val ids = asg.select(col("vec_id").as("id"))
     // the inverted file, minus this batch's own (possibly half-landed
     // on a replay) rows. Broadcast discipline (guide §3.1, the
@@ -1827,7 +1830,7 @@ object SemanticStream {
     // self-excluding probes absorb exactly like the old sequential
     // prefix. Per-sidecar ordering (repair before fold) stays inside
     // one chain.
-    Layout.fanout(Seq(
+    val writes: Seq[() => Unit] = Seq(
       () => Layout.upsertStatic(
         asg.select(col("vec_id").as("id"), col("cell"), col("v"), col("n"))
           .withColumn("ver", lit(ver))
@@ -1875,13 +1878,16 @@ object SemanticStream {
               scb, slices, dim, codebookVersion(scb))
             .join(broadcast(kept), Seq("id"), "left_semi"),
           root, SlotCellsEntity, Seq("id", "pos"), flipProbe = true)
-      }))
-    Layout.upsertStatic(manifest, root, ManifestEntity, Seq("vec_id"),
-      flipProbe = true)
-    // drop the per-batch pinned checkpoints (see CurateStream: a
-    // long-lived ingest session would otherwise accumulate them);
-    // the returned manifest stays materialized for the caller
-    Seq(batch, asg).foreach(graft.Checkpoints.release)
+      })
+    try {
+      Layout.fanout(writes)
+      Layout.upsertStatic(manifest, root, ManifestEntity, Seq("vec_id"),
+        flipProbe = true)
+    } catch {
+      case e: Throwable =>
+        graft.Checkpoints.release(manifest)
+        throw e
+    }
     manifest
   }
 }

@@ -142,4 +142,18 @@ class MediaStreamSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.keySet -- before ===
       Set(TestSpark.checkpointedRddId(man)))
   }
+
+  test("a failed manifest write leaves no persisted RDD") {
+    import java.nio.file.{Files, Paths}
+    val root = graft.Temps.dir("media-fail")
+    MediaStream.bootstrap(mediaDF(Seq(10L -> alpha)), root)
+    // a plain file where the manifest store should be: the commit fails
+    Files.writeString(
+      Paths.get(s"$root/static/${MediaStream.ManifestEntity}"), "not a table")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](MediaStream.ingestBatch(
+      mediaDF(Seq(20L -> zz, 21L -> alphaVar, 5L -> omega, 22L -> omegaVar)), root))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "the failed ingest left persisted RDDs")
+  }
 }

@@ -132,6 +132,21 @@ class SemanticStreamSpec extends AnyFunSuite {
       Set(graft.TestSpark.checkpointedRddId(man)))
   }
 
+  test("a failed manifest write leaves no persisted RDD") {
+    import java.nio.file.{Files, Paths}
+    val corpus = df(Seq(1L -> vec(0 -> 1.0), 2L -> vec(1 -> 1.0)))
+    val root = graft.Temps.dir("semantic-fail")
+    SemanticStream.bootstrap(corpus, root)
+    // a plain file where the manifest store should be: the commit fails
+    Files.writeString(
+      Paths.get(s"$root/static/${SemanticStream.ManifestEntity}"), "not a table")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](SemanticStream.ingestVectors(df(Seq(
+      10L -> vec(0 -> 1.0), 20L -> vec(0 -> 0.25, 2 -> 1.0))), root))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "the failed ingest left persisted RDDs")
+  }
+
   test("the queryTopK, Sq, Pq and Jl serve faces leave no persisted RDD") {
     val corpus = df((1L to 8L).map(i =>
       i -> vec((i % 6).toInt -> 1.0, ((i + 1) % 6).toInt -> 0.1 * i)))
