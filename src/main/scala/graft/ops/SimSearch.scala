@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -109,10 +109,14 @@ object SimSearch {
     * plan; the kernel's (cc desc, cid asc) order is insertion-order
     * independent. */
   def collectCodebook(centroids: DataFrame): Seq[(Long, Seq[Double], Double)] =
-    centroids.select(col("cid").cast("long"), col("cv"), col("cn"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
-      .sortBy(_._1).toSeq
+    codebookOf(centroids.select(col("cid").cast("long").as("cid"), col("cv"),
+      col("cn")).collect().toSeq)
+
+  /** Collected codebook rows (`cid` bigint, `cv`, `cn`; other columns
+    * ignored) as the codebook, sorted by cid. */
+  def codebookOf(rows: Seq[Row]): Seq[(Long, Seq[Double], Double)] =
+    rows.map(r => (r.getAs[Long]("cid"), r.getSeq[Double](r.fieldIndex("cv")),
+      r.getAs[Double]("cn"))).sortBy(_._1)
 
   /** Single-pass nearest-cells assignment: (id, v, n, probes) where
     * `probes` is the top-`p` `struct<cc, cid>` list from the per-row

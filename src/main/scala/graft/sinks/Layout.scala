@@ -186,16 +186,22 @@ object Layout {
     * Static stores are flat part-file directories by construction: every
     * static writer here writes unpartitioned. */
   private def readFlat(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
+      path: String): Option[DataFrame] =
+    dataFiles(spark, path).headOption
+      .map(f => spark.read.schema(FooterSchema(f, spark)).parquet(path))
+
+  /** The data files of one flat parquet directory, sorted by path:
+    * `_`/`.` names skipped, empty when the directory is missing. */
+  private def dataFiles(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[FileStatus] = {
     val fs = hadoopFs(spark, path)
     val listed =
       try fs.listStatus(new org.apache.hadoop.fs.Path(path))
       catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-    listed.iterator
+    listed.toSeq
       .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
         !f.getPath.getName.startsWith("."))
-      .minByOption(_.getPath.toString)
-      .map(f => spark.read.schema(FooterSchema(f, spark)).parquet(path))
+      .sortBy(_.getPath.toString)
   }
 
   /** Read `static/<entity>`, treating "absent" and "exists but holds no
@@ -239,6 +245,55 @@ object Layout {
     readStatic(spark, root, entity, recover = true).getOrElse(
       spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+
+  /** One collected static entity: the data-file listing it was read
+    * from (path, length, mtime of each file) and its rows. */
+  private final case class Frozen(listing: Seq[(String, Long, Long)],
+      rows: Seq[org.apache.spark.sql.Row])
+
+  /** The last [[frozenRows]] read of each (root, entity), the least
+    * recently read dropped past [[FrozenCap]] entries. */
+  private val FrozenCap = 64
+  private val frozen = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, String), Frozen](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), Frozen]): Boolean =
+        size > FrozenCap
+    })
+
+  /** The rows of a small static entity that is only ever replaced or
+    * appended whole (a codebook, a quantizer's books or grid, a
+    * projection family's meta), collected once and served from a driver
+    * cache while its data files stay the same. Writer-side recovery
+    * ([[recoverStatic]], as [[readStaticOrEmpty]] runs it) comes first,
+    * so a parked `.__old` copy has been promoted to the live table
+    * before `static/<entity>` is listed. The cache holds one entry per
+    * (root, entity), keyed by that listing's path, length and mtime of
+    * every file, so a hit starts no Spark job and any append, atomic
+    * swap or promotion (new file paths either way) misses and re-reads.
+    * It lives as long as the driver, bounded at [[FrozenCap]] entries.
+    * Empty when the entity holds no data file. */
+  private[graft] def frozenRows(spark: org.apache.spark.sql.SparkSession,
+      root: String, entity: String): Seq[org.apache.spark.sql.Row] = {
+    recoverStatic(spark, root, entity)
+    val dir = s"$root/static/$entity"
+    val files = dataFiles(spark, dir)
+    if (files.isEmpty) {
+      frozen.remove((root, entity))
+      Nil
+    } else {
+      val listing = files.map(f =>
+        (f.getPath.toString, f.getLen, f.getModificationTime))
+      Option(frozen.get((root, entity))).filter(_.listing == listing)
+        .getOrElse {
+          val rows = spark.read.schema(FooterSchema(files.head, spark))
+            .parquet(dir).collect().toSeq
+          val read = Frozen(listing, rows)
+          frozen.put((root, entity), read)
+          read
+        }.rows
+    }
+  }
 
   /** Atomic-by-rename overwrite of a static table: write the new
     * contents to a hidden swap directory (the write's plan may still
@@ -307,9 +362,14 @@ object Layout {
     * the anti. Existence algebra: df ANTI store ≡ df ANTI (store SEMI
     * df.keys) on the same null-safe keys, so the appended rows are
     * identical. The caller owns the bound: flip ONLY frames bounded
-    * by a micro-batch (the incoming frame is localCheckpointed here,
-    * read twice — key broadcast + anti probe — and released once the
-    * write committed or failed). */
+    * by a micro-batch. The incoming frame is read twice — key
+    * broadcast + anti probe — inside the one write query, and is NOT
+    * checkpointed here: every caller passes a frame built only from
+    * its own checkpoints or driver literals, so the second read re-runs
+    * a cheap, deterministic projection of pinned blocks (the key side
+    * prunes to the key columns) instead of paying one materialization
+    * job per upsert. A caller whose frame is expensive or
+    * nondeterministic to recompute checkpoints it first. */
   def upsertStatic(df: DataFrame, root: String, entity: String,
       keys: Seq[String], maxRecordsPerFile: Long = 1000000L,
       flipProbe: Boolean = false): Unit = {
@@ -331,32 +391,29 @@ object Layout {
         val probe = existing
           .select(keys.map(k => col(k).as(s"__k_$k")): _*)
         val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-        graft.Checkpoints.scoped { ck =>
-          val fresh =
-            if (flipProbe) {
-              val inc = ck(df)
-              val hits = probe.join(
-                broadcast(inc.select(keys.map(col): _*)), cond, "left_semi")
-              inc.join(broadcast(hits), cond, "left_anti")
-            } else df.join(probe, cond, "left_anti")
-          if (existing.columns.toSet == df.columns.toSet)
-            fresh.write.mode("append")
-              .option("maxRecordsPerFile", maxRecordsPerFile)
-              .parquet(path)
-          else
-            // SCHEMA EVOLUTION: a blind append of a different column set
-            // would create a mixed-footer directory where a plain
-            // spark.read.parquet (no mergeSchema) silently drops the new
-            // column depending on which footer wins schema inference.
-            // Pay one atomic rewrite instead: widen BOTH sides
-            // (unionByName, missing columns null) so the store stays
-            // single-schema — the one-time cost of extending a store
-            // written by a previous build (e.g. deployments gaining
-            // verified_source_code).
-            overwriteStaticAtomic(
-              existing.unionByName(fresh, allowMissingColumns = true),
-              root, entity, maxRecordsPerFile)
-        }
+        val fresh =
+          if (flipProbe) {
+            val hits = probe.join(
+              broadcast(df.select(keys.map(col): _*)), cond, "left_semi")
+            df.join(broadcast(hits), cond, "left_anti")
+          } else df.join(probe, cond, "left_anti")
+        if (existing.columns.toSet == df.columns.toSet)
+          fresh.write.mode("append")
+            .option("maxRecordsPerFile", maxRecordsPerFile)
+            .parquet(path)
+        else
+          // SCHEMA EVOLUTION: a blind append of a different column set
+          // would create a mixed-footer directory where a plain
+          // spark.read.parquet (no mergeSchema) silently drops the new
+          // column depending on which footer wins schema inference.
+          // Pay one atomic rewrite instead: widen BOTH sides
+          // (unionByName, missing columns null) so the store stays
+          // single-schema — the one-time cost of extending a store
+          // written by a previous build (e.g. deployments gaining
+          // verified_source_code).
+          overwriteStaticAtomic(
+            existing.unionByName(fresh, allowMissingColumns = true),
+            root, entity, maxRecordsPerFile)
     }
     spark.catalog.refreshByPath(path)
   }

@@ -352,9 +352,15 @@ object CurateStream {
     * and the same replay argument. */
   def ingestBatch(batch0: DataFrame, root: String,
       spanGate: Boolean = false, lexIndex: Boolean = false,
-      certIndex: Boolean = false): DataFrame = {
+      certIndex: Boolean = false): DataFrame = graft.Checkpoints.scoped { ck =>
     import org.apache.spark.sql.expressions.Window
     val s = batch0.sparkSession
+    // a long-lived ingest process calls this once per micro-batch in
+    // ONE session: every per-batch checkpoint below is released when the
+    // ingest returns or fails (2-3 pinned blocks per batch × thousands
+    // of batches would otherwise churn executor storage); only the
+    // returned manifest stays materialized.
+    //
     // ONE materialization of the whole per-doc batch state: content
     // key, keep-best rank, MinHash signature and the quality stats all
     // ride a single localCheckpoint (formerly three separate
@@ -373,7 +379,7 @@ object CurateStream {
       .select((batch0.columns.map(col) ++ Seq(col("key"), col("rn"),
           col("n_toks"), col("stopword_ratio")) ++ Lsh.hashes): _*)
     val landed = graft.Sessions.labeled(s, "curate-ingest:landed") {
-      landed0.localCheckpoint()
+      ck(landed0)
     }
     // no distinct: the ids frame only ever feeds anti-join probes,
     // where duplicate rows collapse in the hash relation for free —
@@ -390,7 +396,50 @@ object CurateStream {
     // (so it can't be the build side), the probe is flipped into two
     // broadcast joins: index SEMI broadcast(batch keys) → tiny hit set
     // → batch SEMI/LEFT broadcast(hit set). Row sets are unchanged.
-    val ids = landed.select("doc_id")
+    val landedIds = landed.select("doc_id")
+
+    // exact layer: stored content-key probe + within-batch keep-best.
+    // When the maintained Bloom sketch exists ([[KeySketch]]; opt-in at
+    // bootstrap), only sketch-POSITIVE keys reach the confirm
+    // semi-join — the novel-key majority is settled by a per-row bit
+    // test. No false negatives + the same confirm join ⇒ statuses are
+    // bit-identical to the ungated path (CurateStreamSpec pins the
+    // equality), including under replay: a half-landed batch's own
+    // keys sit in the sketch, but the id-excluded key store confirm
+    // rejects them exactly as it always did.
+    val sketch = KeySketch.read(s, root)
+    val exactProbe = sketch match {
+      case Some(sk) => sk.gate(landed, "key")
+      case None => landed
+    }
+    // flipped probe (see discipline note above): the corpus key store
+    // streams through two broadcast hash joins — self-exclusion anti +
+    // batch-key semi — leaving only the ≤|batch| matched keys to
+    // distinct; the old direct semi (batch SEMI corpus-keys) had the
+    // corpus as the build side, which the planner could only
+    // sort-merge = one corpus-key shuffle per batch
+    val keyHits = Layout.readStaticOrEmpty(s, root, KeysEntity,
+        "key string, doc_id bigint")
+      .join(broadcast(landedIds), Seq("doc_id"), "left_anti")
+      .join(broadcast(exactProbe.select("key")), Seq("key"), "left_semi")
+      .select("key").distinct()
+    // The whole exact layer is ONE column of ONE checkpoint: `f_dec` =
+    // 1 on every landed row whose key the store holds. Spark reuses an
+    // exchange only inside one query, so the probe chain above, left
+    // lazy, re-ran in every action that reads it (both pair
+    // checkpoints and the manifest); here it runs once, and the corpus
+    // duplicates, the first exact layer's survivors `b1` and their
+    // signatures are filters of this frame. Equivalent to the gated
+    // semi-join: the sketch gate is a function of the key alone, so a
+    // landed row whose key is a hit passed the gate too. The frame
+    // carries every landed column, so `landed` is released as soon as
+    // it exists.
+    val keyed = graft.Sessions.labeled(s, "curate-ingest:exact") {
+      ck(landed.join(broadcast(keyHits.withColumn("f_dec", lit(1))),
+        Seq("key"), "left"))
+    }
+    graft.Checkpoints.release(landed)
+    val ids = keyed.select("doc_id")
 
     // probes EXCLUDE this batch's own ids — a replayed half-applied
     // batch must not see its own landed rows (bit-stable statuses)
@@ -399,97 +448,67 @@ object CurateStream {
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
     val benchIdx = Layout.readStaticOrEmpty(s, root, BenchEntity, "sh bigint")
 
-    // exact layer: stored content-key probe + within-batch keep-best.
-    // When the maintained Bloom sketch exists ([[KeySketch]]; opt-in at
-    // bootstrap), only sketch-POSITIVE rows reach the confirm
-    // semi-join — the novel-key majority is settled by a per-row bit
-    // test. No false negatives + the same confirm join ⇒ statuses are
-    // bit-identical to the ungated path (CurateStreamSpec pins the
-    // equality), including under replay: a half-landed batch's own
-    // keys sit in the sketch, but the id-excluded keyIdx confirm
-    // rejects them exactly as it always did.
-    val sketch = KeySketch.read(s, root)
-    val keyed = landed
-    val exactProbe = sketch match {
-      case Some(sk) => sk.gate(keyed, "key")
-      case None => keyed
-    }
-    // flipped probe (see discipline note above): the corpus key store
-    // streams through two broadcast hash joins — self-exclusion anti +
-    // batch-key semi — leaving only the ≤|batch| matched keys to
-    // distinct and re-broadcast at the confirm join; the old direct
-    // semi (batch SEMI corpus-keys) had the corpus as the build side,
-    // which the planner could only sort-merge = one corpus-key shuffle
-    // per batch
-    val keyHits = Layout.readStaticOrEmpty(s, root, KeysEntity,
-        "key string, doc_id bigint")
-      .join(broadcast(ids), Seq("doc_id"), "left_anti")
-      .join(broadcast(exactProbe.select("key")), Seq("key"), "left_semi")
-      .select("key").distinct()
-    val dupExactCorpus0 = exactProbe
-      .join(broadcast(keyHits), Seq("key"), "left_semi")
-      .select("doc_id")
-    // the sharded gate is a UNION of S branch scans, and this frame's
-    // subtree re-evaluates inside every downstream join branch (b1 →
-    // bsig/b2 → near/contamination/span paths) — S× tasks × ~8
-    // re-evaluations turned the free S=4 gate into +2.5 s/batch
-    // (measured, r10 rehearsal). A LAZY checkpoint materializes the
-    // tiny id frame once on first use and caches it, without the
-    // extra eager action the r9 fused-frame work removed; the
-    // monolithic/ungated probes stay uncheckpointed (single cheap
-    // subtree, same as always).
-    val dupExactCorpus =
-      if (sketch.exists(_.shardCount > 1)) dupExactCorpus0.localCheckpoint(false)
-      else dupExactCorpus0
-    val dupExactBatch = keyed.where(col("rn") > 1).select("doc_id")
-    val b1 = keyed.select("doc_id")
-      .join(broadcast(dupExactCorpus), Seq("doc_id"), "left_anti")
-      .join(broadcast(dupExactBatch), Seq("doc_id"), "left_anti")
+    val b1 = keyed.where(col("f_dec").isNull && col("rn") === 1)
 
     // near-dup layer: batch signatures probe the stored band index AND
     // self-join their own bands (q143's two scorers); the signature
-    // columns are already materialized on the landed frame
-    val sigB = landed.where(col("h0").isNotNull)
+    // columns are already materialized on the keyed frame
+    def sigs(df: DataFrame): DataFrame = df.where(col("h0").isNotNull)
       .select((col("doc_id") +: MinHashCoeffs.indices.map(j => col(s"h$j"))): _*)
-    val bsig = sigB.join(broadcast(b1), Seq("doc_id"), "left_semi")
+    val bsig = sigs(b1)
     // Each scorer joins a pair frame to the batch-bounded signatures
     // `a` (broadcast unconditionally), then to `b`. The pair frame is a
     // band-COLLISION frame — bounded in expectation only, so its
-    // broadcast is GUARDED on the exact pair count ([[PairGuard]], r14
+    // broadcast is GUARDED on the pair count ([[PairGuard]], r14
     // verdict #2: an explicit hint bypasses autoBroadcastJoinThreshold,
     // and a degenerate band key would turn the hint into a driver OOM at
     // scale; past the cap the scorer join falls back to planner choice —
     // row sets unchanged either way)
     def scored(cand: DataFrame, bcPairs: Boolean, a: DataFrame, aId: String,
-        b: DataFrame, bId: String): DataFrame = {
+        b: DataFrame, bId: String, corpus: Boolean): DataFrame = {
       val pre = cand.join(broadcast(Lsh.prefixed(a, aId, "a")), aId)
       (if (bcPairs) broadcast(pre) else pre)
         .join(Lsh.prefixed(b, bId, "b"), bId)
         .where(Lsh.agreement("a", "b") >= 0.5)
-        .select(col("b_id").as("doc_id")).distinct()
+        .select(col("b_id").as("doc_id"), lit(corpus).as("corpus"))
     }
     val (candCorpus, bcCorpus) = PairGuard.checkpointAndDecide(
       Lsh.probePairs(Lsh.bands(bsig), Lsh.bands(sigIdx), broadcastLeft = true),
       "curate-ingest:cand-corpus")
-    val dupNearCorpus = scored(candCorpus, bcCorpus, bsig, "b_id", sigIdx, "c_id")
+    ck.adopt(candCorpus)
     val (candBatch, bcBatch) = PairGuard.checkpointAndDecide(
       Lsh.selfPairs(Lsh.bands(bsig)), "curate-ingest:cand-batch")
-    val dupNearBatch = scored(candBatch, bcBatch, bsig, "a_id", bsig, "b_id")
-    val b2 = b1
-      .join(broadcast(dupNearCorpus), Seq("doc_id"), "left_anti")
-      .join(broadcast(dupNearBatch), Seq("doc_id"), "left_anti")
+    ck.adopt(candBatch)
+    // both scorers' hits as ONE grouped frame of per-doc flags (the
+    // MediaStream `reps` shape): one shuffle instead of a distinct per
+    // scorer, joined onto every keyed row once. The survivors `b2` (a
+    // filter of that join, every keyed column kept, so the
+    // contamination and span probes filter it instead of semi-joining
+    // a broadcast id set) and the manifest read the SAME broadcast of
+    // `near`, which the manifest query then builds once
+    val near = scored(candCorpus, bcCorpus, bsig, "b_id", sigIdx, "c_id", corpus = true)
+      .unionByName(scored(candBatch, bcBatch, bsig, "a_id", bsig, "b_id", corpus = false))
+      .groupBy(col("doc_id"))
+      .agg(max(when(col("corpus"), 1)).as("f_dnc"),
+        max(when(!col("corpus"), 1)).as("f_dnb"))
+    val nearFlagged = keyed.join(broadcast(near), Seq("doc_id"), "left")
+    val b2 = nearFlagged.where(col("f_dec").isNull && col("rn") === 1 &&
+      col("f_dnc").isNull && col("f_dnb").isNull)
 
     // decontamination: stored bench shingles ∪ THIS batch's members'
     // (a batch doc contaminated by a batch-mate bench member is caught
     // in the same ingest, matching q143's full-corpus bench rule).
     // No distinct before the broadcast: the semi-join's hash relation
     // collapses duplicate shingles for free — the distinct was a whole
-    // extra shuffle of the stored bench set per batch
-    val batchBench = benchShinglesOf(landed)
+    // extra shuffle of the stored bench set per batch. Bench members
+    // are NOT filtered out here: the manifest routes them to
+    // `bench_member` before it reads this flag, and a `doc_id % 29`
+    // filter on `b2` would be inferred into its `near` side as well,
+    // leaving that subtree different from the manifest's, so the query
+    // would build it twice
+    val batchBench = benchShinglesOf(keyed)
     val bench = benchIdx.unionByName(batchBench)
-    val contaminated = landed.join(broadcast(b2), Seq("doc_id"), "left_semi")
-      .where(col("doc_id") % 29 =!= 0)
-      .select(col("doc_id"), shingleRows)
+    val contaminated = b2.select(col("doc_id"), shingleRows)
       .join(broadcast(bench.toDF("b_sh")), col("sh") === col("b_sh"),
         "left_semi")
       .select("doc_id").distinct()
@@ -503,43 +522,39 @@ object CurateStream {
     // fold is a filter of this frame, not a recompute).
     val bSpans: Option[DataFrame] =
       if (!spanGate) None
-      else Some(spanSetOf(landed.join(broadcast(b2), Seq("doc_id"), "left_semi")
-        .where(col("doc_id") % 29 =!= 0)).localCheckpoint())
-    val spanDup: DataFrame = bSpans match {
-      case None => ids.where(lit(false)) // no span layer: nothing flagged
-      case Some(sp) =>
-        // flipped probe (discipline note above): the corpus-token-linear
-        // span store streams through broadcast anti + semi joins; only
-        // the ≤|batch spans| HIT set is distinct'd and re-broadcast into
-        // the coverage left join (the distinct keeps the left join's
-        // row multiplicity at 1 per batch span, exactly as the old
-        // full-index distinct did — n_sp/n_dup are unchanged)
-        val spanHits = Layout.readStaticOrEmpty(s, root, SpansEntity,
-            "doc_id bigint, sp bigint")
-          .join(broadcast(ids), Seq("doc_id"), "left_anti")
-          .join(broadcast(sp.select("sp")), Seq("sp"), "left_semi")
-          .select("sp").distinct()
-        sp.join(broadcast(spanHits.withColumn("isdup", lit(1))),
-            Seq("sp"), "left")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_sp"),
-            sum(coalesce(col("isdup"), lit(0))).as("n_dup"))
-          .where(col("n_dup") >= col("n_sp") * SpanDupFrac)
-          .select("doc_id")
+      else Some(ck(spanSetOf(b2.where(col("doc_id") % 29 =!= 0))))
+    // no span layer: nothing flagged, and no join
+    val spanDup: Option[DataFrame] = bSpans.map { sp =>
+      // flipped probe (discipline note above): the corpus-token-linear
+      // span store streams through broadcast anti + semi joins; only
+      // the ≤|batch spans| HIT set is distinct'd and re-broadcast into
+      // the coverage left join (the distinct keeps the left join's
+      // row multiplicity at 1 per batch span, exactly as the old
+      // full-index distinct did — n_sp/n_dup are unchanged)
+      val spanHits = Layout.readStaticOrEmpty(s, root, SpansEntity,
+          "doc_id bigint, sp bigint")
+        .join(broadcast(ids), Seq("doc_id"), "left_anti")
+        .join(broadcast(sp.select("sp")), Seq("sp"), "left_semi")
+        .select("sp").distinct()
+      sp.join(broadcast(spanHits.withColumn("isdup", lit(1))),
+          Seq("sp"), "left")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_sp"),
+          sum(coalesce(col("isdup"), lit(0))).as("n_dup"))
+        .where(col("n_dup") >= col("n_sp") * SpanDupFrac)
+        .select("doc_id")
     }
 
-    // per-row quality stats already ride the landed frame for EVERY doc
-    val withQ = keyed
+    // per-row quality stats and the exact flag already ride the keyed
+    // frame for EVERY doc; the near flags join as the one grouped frame
     def flag(df: DataFrame, name: String) = df.withColumn(name, lit(1))
     // materialize BEFORE any index write: the manifest's plan reads the
     // stored tables, and the upserts below mutate them — an unmaterial-
     // ized manifest would re-probe the post-write store and flag the
     // batch's own kept docs as corpus duplicates
-    val manifest0 = withQ
-      .join(broadcast(flag(dupExactCorpus, "f_dec")), Seq("doc_id"), "left")
-      .join(broadcast(flag(dupNearCorpus, "f_dnc")), Seq("doc_id"), "left")
-      .join(broadcast(flag(dupNearBatch, "f_dnb")), Seq("doc_id"), "left")
-      .join(broadcast(flag(spanDup, "f_span")), Seq("doc_id"), "left")
+    val manifest0 = spanDup
+      .fold(nearFlagged.withColumn("f_span", lit(null).cast("int")))(sd =>
+        nearFlagged.join(broadcast(flag(sd, "f_span")), Seq("doc_id"), "left"))
       .join(broadcast(flag(contaminated, "f_cont")), Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"), col("n_toks"),
         when(col("f_dec") === 1, "dup_exact_corpus")
@@ -555,93 +570,96 @@ object CurateStream {
       manifest0.localCheckpoint()
     }
 
-    // one tiny collect off the checkpointed manifest settles which
-    // entities this batch touches at all (and the kept-key count the
-    // sketch merge needs): a batch with no kept docs skips the
-    // keys/bands/spans upserts entirely, a batch with no bench members
-    // skips the bench upsert — deterministic, so a replay makes the
-    // same skip decisions it made the first time
-    val cRow = manifest.agg(
-      sum(when(col("status") === "kept", 1L).otherwise(0L)),
-      sum(when(col("doc_id") % 29 === 0, 1L).otherwise(0L))).head
-    val keptN = if (cRow.isNullAt(0)) 0L else cRow.getLong(0)
-    val benchN = if (cRow.isNullAt(1)) 0L else cRow.getLong(1)
-
-    // index entities first, manifest LAST (the batch's commit marker).
-    // The four index upserts are mutually independent — each its own
-    // directory, each an idempotent anti-join — so they run in
-    // PARALLEL (the per-batch bill becomes the slowest upsert, not the
-    // sum); the two ordering invariants that matter survive: the
-    // sketch merge lands BEFORE the keys it covers (inside one chain —
-    // superset invariant; a crash between the two only costs
-    // false positives), and the manifest waits for ALL index writes
-    // (a crash mid-fan-out leaves any SUBSET of entities landed with
-    // no manifest, which the replay's self-excluding probes already
-    // absorb — no worse than the old sequential prefix).
-    val kept = manifest.where(col("status") === "kept").select("doc_id")
-    def lw(desc: String)(f: => Unit): () => Unit =
-      () => graft.Sessions.labeled(s, desc)(f)
-    val writes = Seq(
-      lw("curate-ingest:keys") {
-        if (keptN > 0) {
-          sketch.foreach { sk =>
-            KeySketch.write(s, root, KeySketch.merge(sk,
-              keyed.join(broadcast(kept), Seq("doc_id"), "left_semi").select("key"),
-              "key", knownCount = keptN))
-          }
-          Layout.upsertStatic(
-            keyed.join(broadcast(kept), Seq("doc_id"), "left_semi")
-              .select("key", "doc_id"),
-            root, KeysEntity, Seq("key", "doc_id"), flipProbe = true)
-        }
-      },
-      lw("curate-ingest:bands") {
-        if (keptN > 0)
-          Layout.upsertStatic(sigB.join(broadcast(kept), Seq("doc_id"), "left_semi"),
-            root, BandsEntity, Seq("doc_id"), flipProbe = true)
-      },
-      lw("curate-ingest:bench") {
-        if (benchN > 0)
-          Layout.upsertStatic(batchBench, root, BenchEntity, Seq("sh"),
-            flipProbe = true)
-      },
-      lw("curate-ingest:spans") {
-        bSpans.foreach { sp =>
-          if (keptN > 0)
-            Layout.upsertStatic(sp.join(broadcast(kept), Seq("doc_id"), "left_semi"),
-              root, SpansEntity, Seq("sp", "doc_id"), flipProbe = true)
-        }
-      },
-      // lexical fold: postings re-tokenize the kept texts off the
-      // checkpointed landed frame (one pass over kept tokens — cheaper
-      // than carrying the token arrays through the checkpoint for every
-      // batch whether or not the lex layer is armed); dl reuses the
-      // n_toks already materialized on it
-      lw("curate-ingest:postings") {
-        if (lexIndex && keptN > 0)
-          Layout.upsertStatic(
-            postingsOf(landed.join(broadcast(kept), Seq("doc_id"), "left_semi")
-              .select("doc_id", "text")),
-            root, PostingsEntity, Seq("t", "doc_id"), flipProbe = true)
-      },
-      lw("curate-ingest:dl") {
-        if (lexIndex && keptN > 0)
-          Layout.upsertStatic(
-            landed.join(broadcast(kept), Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), col("n_toks").as("dl")),
-            root, DlEntity, Seq("doc_id"), flipProbe = true)
-      },
-      // certificate delta (opt-in): one agg over the batch's kept rows
-      // off the checkpointed landed frame; statuses are bit-stable so a
-      // replay lands the identical (bkey, shard) rows — a no-op upsert
-      lw("curate-ingest:cert") {
-        if (certIndex && keptN > 0)
-          upsertCert(landed.join(broadcast(kept), Seq("doc_id"), "left_semi")
-            .select("doc_id", "n_toks"), root)
-      })
-    // a failed chain fails the batch only once every chain has settled,
-    // so no index write is still running when the caller sees the error
+    // the manifest is the caller's; any failure from here on releases it
     try {
+      // one tiny collect off the checkpointed manifest settles which
+      // entities this batch touches at all (and the kept-key count the
+      // sketch merge needs): a batch with no kept docs skips the
+      // keys/bands/spans upserts entirely, a batch with no bench members
+      // skips the bench upsert — deterministic, so a replay makes the
+      // same skip decisions it made the first time
+      val cRow = manifest.agg(
+        sum(when(col("status") === "kept", 1L).otherwise(0L)),
+        sum(when(col("doc_id") % 29 === 0, 1L).otherwise(0L))).head
+      val keptN = if (cRow.isNullAt(0)) 0L else cRow.getLong(0)
+      val benchN = if (cRow.isNullAt(1)) 0L else cRow.getLong(1)
+
+      // index entities first, manifest LAST (the batch's commit marker).
+      // The four index upserts are mutually independent — each its own
+      // directory, each an idempotent anti-join — so they run in
+      // PARALLEL (the per-batch bill becomes the slowest upsert, not the
+      // sum); the two ordering invariants that matter survive: the
+      // sketch merge lands BEFORE the keys it covers (inside one chain —
+      // superset invariant; a crash between the two only costs
+      // false positives), and the manifest waits for ALL index writes
+      // (a crash mid-fan-out leaves any SUBSET of entities landed with
+      // no manifest, which the replay's self-excluding probes already
+      // absorb — no worse than the old sequential prefix).
+      val kept = manifest.where(col("status") === "kept").select("doc_id")
+      // the kept docs' keyed rows, materialized once: every index fold
+      // below (keys, sketch, bands, postings, dl, cert) reads them, and
+      // each read would otherwise pay its own broadcast of `kept`
+      val keptRows =
+        if (keptN == 0) keyed.where(lit(false))
+        else graft.Sessions.labeled(s, "curate-ingest:kept") {
+          ck(keyed.join(broadcast(kept), Seq("doc_id"), "left_semi"))
+        }
+      def lw(desc: String)(f: => Unit): () => Unit =
+        () => graft.Sessions.labeled(s, desc)(f)
+      val writes = Seq(
+        lw("curate-ingest:keys") {
+          if (keptN > 0) {
+            sketch.foreach { sk =>
+              KeySketch.write(s, root, KeySketch.merge(sk,
+                keptRows.select("key"), "key", knownCount = keptN))
+            }
+            Layout.upsertStatic(keptRows.select("key", "doc_id"),
+              root, KeysEntity, Seq("key", "doc_id"), flipProbe = true)
+          }
+        },
+        lw("curate-ingest:bands") {
+          if (keptN > 0)
+            Layout.upsertStatic(sigs(keptRows), root, BandsEntity, Seq("doc_id"),
+              flipProbe = true)
+        },
+        lw("curate-ingest:bench") {
+          if (benchN > 0)
+            Layout.upsertStatic(batchBench, root, BenchEntity, Seq("sh"),
+              flipProbe = true)
+        },
+        lw("curate-ingest:spans") {
+          bSpans.foreach { sp =>
+            if (keptN > 0)
+              Layout.upsertStatic(sp.join(broadcast(kept), Seq("doc_id"), "left_semi"),
+                root, SpansEntity, Seq("sp", "doc_id"), flipProbe = true)
+          }
+        },
+        // lexical fold: postings re-tokenize the kept texts off the
+        // checkpointed keyed frame (one pass over kept tokens — cheaper
+        // than carrying the token arrays through the checkpoint for every
+        // batch whether or not the lex layer is armed); dl reuses the
+        // n_toks already materialized on it
+        lw("curate-ingest:postings") {
+          if (lexIndex && keptN > 0)
+            Layout.upsertStatic(
+              postingsOf(keptRows.select("doc_id", "text")),
+              root, PostingsEntity, Seq("t", "doc_id"), flipProbe = true)
+        },
+        lw("curate-ingest:dl") {
+          if (lexIndex && keptN > 0)
+            Layout.upsertStatic(
+              keptRows.select(col("doc_id"), col("n_toks").as("dl")),
+              root, DlEntity, Seq("doc_id"), flipProbe = true)
+        },
+        // certificate delta (opt-in): one agg over the batch's kept rows
+        // off the checkpointed keyed frame; statuses are bit-stable so a
+        // replay lands the identical (bkey, shard) rows — a no-op upsert
+        lw("curate-ingest:cert") {
+          if (certIndex && keptN > 0)
+            upsertCert(keptRows.select("doc_id", "n_toks"), root)
+        })
+      // a failed chain fails the batch only once every chain has settled,
+      // so no index write is still running when the caller sees the error
       Layout.fanout(writes)
       Layout.upsertStatic(manifest, root, ManifestEntity, Seq("doc_id"),
         flipProbe = true)
@@ -649,16 +667,6 @@ object CurateStream {
       case e: Throwable =>
         graft.Checkpoints.release(manifest)
         throw e
-    } finally {
-      // a long-lived ingest process calls this once per micro-batch in
-      // ONE session: the localCheckpoints above would otherwise stay
-      // pinned in executor storage forever (2-3 blocks per batch ×
-      // thousands of batches → eviction churn). Everything they fed has
-      // landed (or the batch failed); only the returned manifest stays
-      // materialized.
-      (Seq(landed, candCorpus, candBatch) ++ bSpans ++
-        Option.when(sketch.exists(_.shardCount > 1))(dupExactCorpus))
-        .foreach(graft.Checkpoints.release)
     }
     manifest
   }

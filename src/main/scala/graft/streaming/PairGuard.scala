@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Guard for the banded-join CANDIDATE-PAIR broadcasts (r14 verdict #2).
   *
@@ -11,12 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * under band-key skew (a degenerate bucket — exactly the mode
   * [[MediaStream.bandSkew]]'s `est_cand`/`top_share` diagnostic trends) the
   * hint turns a slow query into a driver OOM at scale. The guard makes the
-  * decision on the EXACT pair count instead of an estimate: the pair frame
-  * is materialized once (localCheckpoint — every downstream join reads the
-  * cached blocks, so the count action re-scans nothing), and the hint is
-  * kept only while the count is under the cap; past it the join falls back
-  * to planner choice (sort-merge — slow but safe, and AQE's skew split
-  * applies). Row sets are unchanged either way.
+  * decision on the pair count instead of an estimate: the pair frame is
+  * materialized once (localCheckpoint — every downstream join reads the
+  * cached blocks) and COUNTED BY THAT SAME ACTION through an
+  * [[Observation]], so the decision costs no job of its own; the hint is
+  * kept only while the count is under the cap, and past it the join falls
+  * back to planner choice (sort-merge — slow but safe, and AQE's skew
+  * split applies). Row sets are unchanged either way.
+  *
+  * The observed count is accumulator-based: a retried task can add its
+  * rows twice, never fewer. An over-count can only push the decision to
+  * the sort-merge fallback, so it never risks the broadcast it guards.
   *
   * The cap is scale-parameterised (`spark.graft.maxBroadcastPairs`, rows):
   * the default 1M pair rows ≈ tens of MB as a hash relation — comfortably
@@ -34,12 +40,14 @@ private[graft] object PairGuard {
     s.conf.getOption(ConfKey).map(_.toLong).getOrElse(DefaultMaxRows)
 
   /** Materialize a candidate-pair frame and decide its broadcast fate:
-    * returns (checkpointed frame, hint-allowed). Callers must unpersist
-    * the frame once its consumers have run. */
+    * returns (checkpointed frame, hint-allowed), on the row count the
+    * checkpoint's own job observed. Callers must unpersist the frame
+    * once its consumers have run. */
   def checkpointAndDecide(pairs: DataFrame, desc: String): (DataFrame, Boolean) = {
     val s = pairs.sparkSession
-    val ck = graft.Sessions.labeled(s, desc)(pairs.localCheckpoint())
-    val n = graft.Sessions.labeled(s, s"$desc:count")(ck.count())
-    (ck, n <= maxRows(s))
+    val rows = Observation()
+    val ck = graft.Sessions.labeled(s, desc)(
+      pairs.observe(rows, count(lit(1)).as("n")).localCheckpoint())
+    (ck, rows.get("n").asInstanceOf[Long] <= maxRows(s))
   }
 }

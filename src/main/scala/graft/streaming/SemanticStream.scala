@@ -206,16 +206,9 @@ object SemanticStream {
 
   private val CellsDdl =
     "id bigint, cell bigint, v array<double>, n double, ver string"
-  private val CodebookDdl =
-    "cid bigint, cv array<double>, cn double, ver string"
-  private val PqBooksDdl = "m int, j int, c array<double>"
   private val PqCodesDdl = "id bigint, codes array<int>"
-  private val SqGridDdl = "pos int, mn double, sc double, istep double"
   private val SqCodesDdl = "id bigint, codes array<bigint>"
-  private val JlMetaDdl = "dout int, seed bigint, ver string"
   private val JlVecsDdl = "id bigint, pv array<double>, pn double, ver string"
-  private val SlotBookDdl =
-    "cid bigint, cv array<double>, cn double, slices int"
   private val SlotCellsDdl = "id bigint, pos int, cell bigint, ver string"
   private val SlotForwardMetaDdl =
     "tbl string, buckets int, ver string, cnt bigint"
@@ -279,11 +272,15 @@ object SemanticStream {
 
   /** The live codebook and its version, a torn [[retrain]] rolled
     * forward first: every face that reads the inverted file reads the
-    * book here, so it never scores cells assigned under another one. */
-  private def liveCodebook(s: SparkSession, root: String)
+    * book here, so it never scores cells assigned under another one.
+    * The sidecar readers below ([[readBooks]], [[readGrid]],
+    * [[readJlMeta]], [[readSlotBook]] and this one) read their entity
+    * through [[Layout.frozenRows]]: a frozen sidecar changes only by a
+    * whole-table swap or append, so an unchanged file listing serves the
+    * collected rows again without a Spark job. */
+  private[streaming] def liveCodebook(s: SparkSession, root: String)
       : (Seq[(Long, Seq[Double], Double)], String) = {
-    val cb = SimSearch.collectCodebook(
-      readStaticOrEmpty(s, root, CodebookEntity, CodebookDdl))
+    val cb = SimSearch.codebookOf(Layout.frozenRows(s, root, CodebookEntity))
     require(cb.nonEmpty, s"no codebook under $root — bootstrap first")
     val ver = codebookVersion(cb)
     rollForward(s, root, CellsEntity, CellsDdl, ver)(
@@ -294,7 +291,7 @@ object SemanticStream {
   /** The stored PQ books, as the nested structure the kernel
     * expressions take. */
   def readBooks(s: SparkSession, root: String): Option[Seq[Seq[Seq[Double]]]] = {
-    val rows = readStaticOrEmpty(s, root, PqBooksEntity, PqBooksDdl).collect()
+    val rows = Layout.frozenRows(s, root, PqBooksEntity)
     if (rows.isEmpty) None
     else Some(rows.map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -303,7 +300,7 @@ object SemanticStream {
 
   /** The stored SQ grid as (mins, scales, isteps). */
   def readGrid(s: SparkSession, root: String): Option[(Seq[Double], Seq[Double], Seq[Double])] = {
-    val rows = readStaticOrEmpty(s, root, SqGridEntity, SqGridDdl).collect()
+    val rows = Layout.frozenRows(s, root, SqGridEntity)
     if (rows.isEmpty) None
     else {
       val sorted = rows.map(r =>
@@ -330,7 +327,7 @@ object SemanticStream {
 
   /** The stored JL family as (dOut, seed, ver). */
   def readJlMeta(s: SparkSession, root: String): Option[(Int, Long, String)] =
-    readStaticOrEmpty(s, root, JlMetaEntity, JlMetaDdl).collect().headOption
+    Layout.frozenRows(s, root, JlMetaEntity).headOption
       .map(r => (r.getInt(0), r.getLong(1), r.getString(2)))
 
   /** Content tag of a JL family — the projection matrix is a pure
@@ -399,10 +396,9 @@ object SemanticStream {
     * (the vector dim re-derives as slices·w). */
   def readSlotBook(s: SparkSession, root: String)
       : Option[(Seq[(Long, Seq[Double], Double)], Int)] = {
-    val rows = readStaticOrEmpty(s, root, SlotBookEntity, SlotBookDdl).collect()
+    val rows = Layout.frozenRows(s, root, SlotBookEntity)
     if (rows.isEmpty) None
-    else Some((rows.map(r => (r.getLong(0), r.getSeq[Double](1),
-      r.getDouble(2))).sortBy(_._1).toSeq, rows.head.getInt(3)))
+    else Some((SimSearch.codebookOf(rows), rows.head.getAs[Int]("slices")))
   }
 
   /** Slot rows of a vector frame flattened to one synthetic id
@@ -1736,11 +1732,12 @@ object SemanticStream {
       probes: Int = 1, residual: Option[Double] = None,
       residualProbes: Int = 4): DataFrame = graft.Checkpoints.scoped { ck =>
     val s = batch0.sparkSession
-    // the per-batch checkpoints (batch, asg) are released when the
+    // the per-batch checkpoints (asg, the kept rows, and the batch when
+    // the residual probe reads it a second time) are released when the
     // ingest returns or fails (a long-lived ingest session would
     // otherwise accumulate them); only the returned manifest stays
     // materialized
-    val batch = ck(batch0)
+    val batch = if (residual.isDefined) ck(batch0) else batch0
     val (cb, ver) = liveCodebook(s, root)
     // zero-shuffle assignment of the batch against the frozen codebook;
     // probe 1 is the assignment cell (what a kept vector is stored
@@ -1819,67 +1816,65 @@ object SemanticStream {
             when(col("status") === "kept" && col("s_id").isNotNull,
               col("s_id")).otherwise(col("rep_id")).as("rep_id"))
     }).localCheckpoint() // materialize before the index writes below
-    val kept = manifest.where(col("status") === "kept")
-      .select(col("vec_id").as("id"))
-    // index entities fan out in PARALLEL, manifest (the commit marker)
-    // last — CurateStream's argument verbatim (optimization-guide
-    // §2.6): the chains are mutually independent (each its own entity
-    // directories, each an idempotent anti-join off the checkpointed
-    // asg/manifest frames), a crash mid-fan-out leaves any SUBSET of
-    // entities landed with no manifest, which the replay's
-    // self-excluding probes absorb exactly like the old sequential
-    // prefix. Per-sidecar ordering (repair before fold) stays inside
-    // one chain.
-    val writes: Seq[() => Unit] = Seq(
-      () => Layout.upsertStatic(
-        asg.select(col("vec_id").as("id"), col("cell"), col("v"), col("n"))
-          .withColumn("ver", lit(ver))
-          .join(broadcast(kept), Seq("id"), "left_semi"),
-        root, CellsEntity, Seq("id"), flipProbe = true),
-      // PQ sidecar (present iff bootstrap(withPq = true)): kept vectors
-      // fold their code rows in under the frozen books — same anti-join
-      // upsert discipline, before the manifest commit marker
-      () => readBooks(s, root).foreach { books =>
-        Layout.upsertStatic(
-          asg.select(col("vec_id").as("id"),
-              graft.functions.PqExprs.encode(col("v"), books).as("codes"))
-            .join(broadcast(kept), Seq("id"), "left_semi"),
-          root, PqCodesEntity, Seq("id"), flipProbe = true)
-      },
-      // SQ sidecar (present iff bootstrap(withSq = true)): kept vectors
-      // encode under the frozen grid — same discipline as the PQ codes
-      () => readGrid(s, root).foreach { case (mins, scales, _) =>
-        Layout.upsertStatic(
-          asg.select(col("vec_id").as("id"),
-              graft.functions.SqExprs.encode(col("v"), mins, scales).as("codes"))
-            .join(broadcast(kept), Seq("id"), "left_semi"),
-          root, SqCodesEntity, Seq("id"), flipProbe = true)
-      },
-      // JL sidecar (present iff bootstrap(withJl = true)): kept vectors
-      // project ONCE at ingest under the stored plane family (a torn
-      // family rotation is rolled forward first so the fold never lands
-      // rows of a family the meta no longer names)
-      () => repairedJlMeta(s, root).foreach { case (dOut, seed, _) =>
-        Layout.upsertStatic(
-          jlRows(asg.select(col("vec_id"), col("v")), "vec_id", "v",
-              dOut, seed)
-            .join(broadcast(kept), Seq("id"), "left_semi"),
-          root, JlVecsEntity, Seq("id"), flipProbe = true)
-      },
-      // slot sidecar (present iff bootstrap(withSlots = true)): kept
-      // vectors' slot assignments fold in under the frozen slot codebook
-      // — 3 integers + a version tag per (doc, slot), same anti-join
-      // discipline; a torn slotRetrain is rolled forward first so the
-      // fold never lands rows of a book the store no longer holds
-      () => repairedSlotBook(s, root).foreach { case (scb, slices) =>
-        val dim = slices * scb.head._2.length
-        Layout.upsertStatic(
-          slotCellRows(asg.select(col("vec_id"), col("v")), "vec_id", "v",
-              scb, slices, dim, codebookVersion(scb))
-            .join(broadcast(kept), Seq("id"), "left_semi"),
-          root, SlotCellsEntity, Seq("id", "pos"), flipProbe = true)
-      })
     try {
+      // the kept vectors' assignment rows, materialized once: every
+      // sidecar fold below reads them, and each read would otherwise pay
+      // its own broadcast of the kept ids
+      val kept = ck(asg.join(broadcast(manifest.where(col("status") === "kept")
+        .select("vec_id")), Seq("vec_id"), "left_semi"))
+      // index entities fan out in PARALLEL, manifest (the commit marker)
+      // last — CurateStream's argument verbatim (optimization-guide
+      // §2.6): the chains are mutually independent (each its own entity
+      // directories, each an idempotent anti-join off the checkpointed
+      // kept/manifest frames), a crash mid-fan-out leaves any SUBSET of
+      // entities landed with no manifest, which the replay's
+      // self-excluding probes absorb exactly like the old sequential
+      // prefix. Per-sidecar ordering (repair before fold) stays inside
+      // one chain.
+      val writes: Seq[() => Unit] = Seq(
+        () => Layout.upsertStatic(
+          kept.select(col("vec_id").as("id"), col("cell"), col("v"), col("n"))
+            .withColumn("ver", lit(ver)),
+          root, CellsEntity, Seq("id"), flipProbe = true),
+        // PQ sidecar (present iff bootstrap(withPq = true)): kept vectors
+        // fold their code rows in under the frozen books — same anti-join
+        // upsert discipline, before the manifest commit marker
+        () => readBooks(s, root).foreach { books =>
+          Layout.upsertStatic(
+            kept.select(col("vec_id").as("id"),
+              graft.functions.PqExprs.encode(col("v"), books).as("codes")),
+            root, PqCodesEntity, Seq("id"), flipProbe = true)
+        },
+        // SQ sidecar (present iff bootstrap(withSq = true)): kept vectors
+        // encode under the frozen grid — same discipline as the PQ codes
+        () => readGrid(s, root).foreach { case (mins, scales, _) =>
+          Layout.upsertStatic(
+            kept.select(col("vec_id").as("id"),
+              graft.functions.SqExprs.encode(col("v"), mins, scales).as("codes")),
+            root, SqCodesEntity, Seq("id"), flipProbe = true)
+        },
+        // JL sidecar (present iff bootstrap(withJl = true)): kept vectors
+        // project ONCE at ingest under the stored plane family (a torn
+        // family rotation is rolled forward first so the fold never lands
+        // rows of a family the meta no longer names)
+        () => repairedJlMeta(s, root).foreach { case (dOut, seed, _) =>
+          Layout.upsertStatic(
+            jlRows(kept.select(col("vec_id"), col("v")), "vec_id", "v",
+              dOut, seed),
+            root, JlVecsEntity, Seq("id"), flipProbe = true)
+        },
+        // slot sidecar (present iff bootstrap(withSlots = true)): kept
+        // vectors' slot assignments fold in under the frozen slot codebook
+        // — 3 integers + a version tag per (doc, slot), same anti-join
+        // discipline; a torn slotRetrain is rolled forward first so the
+        // fold never lands rows of a book the store no longer holds
+        () => repairedSlotBook(s, root).foreach { case (scb, slices) =>
+          val dim = slices * scb.head._2.length
+          Layout.upsertStatic(
+            slotCellRows(kept.select(col("vec_id"), col("v")), "vec_id", "v",
+              scb, slices, dim, codebookVersion(scb)),
+            root, SlotCellsEntity, Seq("id", "pos"), flipProbe = true)
+        })
       Layout.fanout(writes)
       Layout.upsertStatic(manifest, root, ManifestEntity, Seq("vec_id"),
         flipProbe = true)

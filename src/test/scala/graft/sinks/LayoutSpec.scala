@@ -337,45 +337,18 @@ class LayoutSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/static/sigs").count() === 1)
   }
 
-  /** Jobs started by `f` on this thread, counted by a listener: `f`
-    * runs under its own job description, then a sentinel job does; the
-    * listener bus delivers in order, so once the sentinel is seen every
-    * job `f` started has been counted. */
-  private def jobsStartedBy[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = s"jobs-probe-${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription(tag)
-      val out = try f finally sc.setJobDescription(null)
-      sc.setJobDescription(s"$tag-sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(s"$tag-sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$tag-sentinel"), "sentinel job never reached the listener")
-      (out, seen.toArray.count(_ == tag))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("readStatic: an existing store plans from the driver-side footer, starting no job") {
     import spark.implicits._
     val out = graft.Temps.dir("read-nojob")
     Layout.writeStatic(Seq(("0xaa", 1L), ("0xbb", 2L)).toDF("signature", "v")
       .repartition(2), out, "sigs")
-    val (read, jobs) = jobsStartedBy(Layout.readStatic(spark, out, "sigs"))
+    val (read, jobs) = TestSpark.jobsStartedBy(Layout.readStatic(spark, out, "sigs"))
     assert(jobs === 0, "readStatic started a Spark job")
     assert(read.get.as[(String, Long)].collect().toSet ===
       Set(("0xaa", 1L), ("0xbb", 2L)))
     // the probe sees inference jobs: a plain read of the same store
     // infers its schema with one
-    val (_, plainJobs) = jobsStartedBy(spark.read.parquet(s"$out/static/sigs"))
+    val (_, plainJobs) = TestSpark.jobsStartedBy(spark.read.parquet(s"$out/static/sigs"))
     assert(plainJobs >= 1, "the job probe counted no inference job")
   }
 

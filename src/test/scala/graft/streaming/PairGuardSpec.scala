@@ -12,7 +12,9 @@ import graft.sinks.Layout
   * batch — every payload a near-variant of one family, so every band
   * key collides — produces IDENTICAL statuses with the broadcast
   * forced off (cap 0) as with the default cap: the fallback changes
-  * join strategy only, never row sets. */
+  * join strategy only, never row sets. Also pins (c) that the count is
+  * observed on the checkpoint's own job: it equals `count()` on
+  * non-empty, empty and filtered-out frames, and a call runs one job. */
 class PairGuardSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -38,6 +40,59 @@ class PairGuardSpec extends AnyFunSuite {
       assert(ck2.count() === 3) // the frame itself is untouched
       ck2.unpersist()
     } finally spark.conf.unset(PairGuard.ConfKey)
+  }
+
+  private def pairs = {
+    val s = spark
+    import s.implicits._
+    Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("a_id", "b_id")
+  }
+
+  test("the observed count equals count() on non-empty, empty and filtered-out pair frames") {
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    val frames = Seq(
+      "non-empty" -> pairs,
+      "empty relation" -> spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), pairs.schema),
+      "where(lit(false))" -> pairs.where(lit(false)),
+      "broadcast join + distinct" -> pairs
+        .join(broadcast(pairs.select(col("b_id").as("a_id"))), Seq("a_id"))
+        .distinct())
+    // the decision holds at a cap of exactly count() and flips one
+    // below it, so the observed count IS count()
+    def allowedUnder(f: org.apache.spark.sql.DataFrame, cap: Long): Boolean = {
+      spark.conf.set(PairGuard.ConfKey, cap.toString)
+      try {
+        val (ck, ok) = PairGuard.checkpointAndDecide(f, "spec")
+        graft.Checkpoints.release(ck)
+        ok
+      } finally spark.conf.unset(PairGuard.ConfKey)
+    }
+    frames.foreach { case (name, f) =>
+      val n = f.count()
+      assert(allowedUnder(f, n), s"$name: count $n read as more")
+      assert(!allowedUnder(f, n - 1), s"$name: count $n read as less")
+    }
+  }
+
+  test("maxBroadcastPairs = 0 flips the decision") {
+    val (ck1, ok1) = PairGuard.checkpointAndDecide(pairs, "spec")
+    graft.Checkpoints.release(ck1)
+    assert(ok1)
+    spark.conf.set(PairGuard.ConfKey, "0")
+    try {
+      val (ck2, ok2) = PairGuard.checkpointAndDecide(pairs, "spec")
+      graft.Checkpoints.release(ck2)
+      assert(!ok2)
+    } finally spark.conf.unset(PairGuard.ConfKey)
+  }
+
+  test("deciding costs no job beyond the checkpoint: one job per call") {
+    val ((ck, ok), jobs) = TestSpark.jobsStartedBy(
+      PairGuard.checkpointAndDecide(pairs, "spec"))
+    graft.Checkpoints.release(ck)
+    assert(ok)
+    assert(jobs === 1)
   }
 
   // one degenerate family: every payload a tiny variant of the same
