@@ -39,6 +39,16 @@ object Checkpoints {
       held.synchronized { held.foreach(release); held.clear() }
   }
 
+  /** `build`, run by the first call of the returned thunk, from
+    * whichever thread makes it, and never again: every later call,
+    * concurrent ones included, gets the same value or rethrows the same
+    * exception. The outcome is memoised whole, because a bare
+    * `lazy val` re-runs its initializer after a throw. */
+  def once[T](build: => T): () => T = {
+    lazy val outcome = scala.util.Try(build)
+    () => outcome.get
+  }
+
   def scoped[T](f: Scope => T): T = {
     val scope = new Scope
     try f(scope) finally scope.releaseAll()

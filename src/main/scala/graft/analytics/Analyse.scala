@@ -145,8 +145,8 @@ object Analyse {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outPath))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outPath/res.txt"), reportText + "\n")
-    Map("lives" ->
-      spark.read.schema(lives.schema).parquet(s"$outPath/lifetimes").count())
+    // counted from the landed footers: no job reads the table back
+    Map("lives" -> Layout.footerRows(spark, s"$outPath/lifetimes"))
   }
 
   /** CLI face mirroring the reference's `analyse` subcommands

@@ -24,14 +24,17 @@ object Lifetimes {
     // exactly what na.fill(0) produced), and min/max over the
     // side-tagged null columns reproduce the outer join's
     // null-when-absent min/max; counts/min/max are order-independent,
-    // no floating point anywhere.
-    val bnT = deployments.schema("block_number").dataType
-    val tsT = deployments.schema("block_datetime").dataType
+    // no floating point anywhere. Each leg's null placeholders take the
+    // OTHER leg's column types, so every output column keeps the type
+    // of the side it comes from.
+    def typeOf(side: DataFrame, c: String) = side.schema(c).dataType
     val dep = deployments.select(col("contract"), lit(1L).as("is_dep"),
       col("block_number").as("dep_bn"), col("block_datetime").as("dep_ts"),
-      lit(null).cast(bnT).as("des_bn"), lit(null).cast(tsT).as("des_ts"))
+      lit(null).cast(typeOf(destructions, "block_number")).as("des_bn"),
+      lit(null).cast(typeOf(destructions, "block_datetime")).as("des_ts"))
     val des = destructions.select(col("contract"), lit(0L).as("is_dep"),
-      lit(null).cast(bnT).as("dep_bn"), lit(null).cast(tsT).as("dep_ts"),
+      lit(null).cast(typeOf(deployments, "block_number")).as("dep_bn"),
+      lit(null).cast(typeOf(deployments, "block_datetime")).as("dep_ts"),
       col("block_number").as("des_bn"), col("block_datetime").as("des_ts"))
     dep.unionAll(des)
       .groupBy(col("contract"))

@@ -103,8 +103,8 @@ object Decompile {
     val outTypes =
       array_join(transform(col("outputs"), f => f.getField("internalType")), ",")
     val canonical = concat(col("name"), lit("("), inTypes, lit(")"))
-    val keccakSig = concat(lit("0x"),
-      lower(hex(graft.functions.Keccak.keccak256(canonical.cast("binary")))))
+    val keccakSig = graft.functions.Formats.hexLower(
+      graft.functions.Keccak.keccak256(canonical.cast("binary")))
     // the reference's embedded-hash rule is PER KIND: event.rs
     // (get_signature_hash) accepts only the Event_ prefix, error.rs
     // only Error_ — an error named Event_<64hex> keccaks like any
@@ -118,12 +118,13 @@ object Decompile {
       val embedded =
         when(col("name").rlike(s"^${prefix}_") &&
           lastSeg.rlike("^[0-9a-fA-F]{64}$"), lastSeg).otherwise(lit(""))
-      when(embedded =!= "", concat(lit("0x"), lower(embedded)))
+      when(embedded =!= "",
+        concat(lit("0x"), graft.functions.Formats.lowerHexDigits(embedded)))
         .otherwise(keccakSig)
     }
     val unresolved = regexp_extract(col("name"), "^Unresolved_([0-9a-fA-F]{8})$", 1)
     val bytes4 =
-      when(unresolved =!= "", lower(unresolved))
+      when(unresolved =!= "", graft.functions.Formats.lowerHexDigits(unresolved))
         .otherwise(substring(keccakSig, 3, 8))
     def entity(kind: String, cols: Seq[org.apache.spark.sql.Column]): DataFrame =
       abi.filter(col("kind") === kind).select(cols: _*)

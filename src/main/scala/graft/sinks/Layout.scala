@@ -2,8 +2,11 @@ package graft.sinks
 
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.execution.datasources.parquet.{FooterSchema, ParquetFooterReader}
 import org.apache.spark.sql.functions.{col, format_string}
+import scala.jdk.CollectionConverters._
 
 /** Entity sinks (SURVEY.md §2.2 K1-K5). The reference's hand-rolled
   * buffered writer + gzip JSON files map to Spark's parquet/json writers;
@@ -70,9 +73,9 @@ object Layout {
     * own entity directories only, with any required ordering (e.g.
     * commit-marker-last, books-before-codes) kept INSIDE one thunk. A
     * failure in any chain propagates after ALL chains settle (the first
-    * failure thrown, later ones suppressed on it), so the caller never
-    * returns while a sibling chain is still writing. Each chain runs
-    * under the submitting thread's [[chainProperties]]. */
+    * failure thrown, later distinct ones suppressed on it), so the
+    * caller never returns while a sibling chain is still writing. Each
+    * chain runs under the submitting thread's [[chainProperties]]. */
   def fanout(writes: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, Future}
     implicit val ec: scala.concurrent.ExecutionContext = fanoutEc
@@ -92,6 +95,10 @@ object Layout {
     // the other chains are still running
     val failures = chains.flatMap(c =>
       Await.ready(c, scala.concurrent.duration.Duration.Inf).value.get.failed.toOption)
+      // chains that share a memoised derivation rethrow ONE instance,
+      // and a throwable cannot suppress itself
+      .foldLeft(Vector.empty[Throwable])((seen, t) =>
+        if (seen.exists(_ eq t)) seen else seen :+ t)
     failures.headOption.foreach { first =>
       failures.tail.foreach(first.addSuppressed)
       throw first
@@ -190,18 +197,34 @@ object Layout {
     dataFiles(spark, path).headOption
       .map(f => spark.read.schema(FooterSchema(f, spark)).parquet(path))
 
-  /** The data files of one flat parquet directory, sorted by path:
-    * `_`/`.` names skipped, empty when the directory is missing. */
+  /** The data files under one parquet directory, partition
+    * directories included, sorted by path: `_`/`.` names skipped at
+    * every level (as Spark's file index skips them), empty when the
+    * directory is missing. */
   private def dataFiles(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[FileStatus] = {
     val fs = hadoopFs(spark, path)
-    val listed =
-      try fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
-    listed.toSeq
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.toString)
+    def under(dir: org.apache.hadoop.fs.Path): Seq[FileStatus] =
+      (try fs.listStatus(dir)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] })
+        .toSeq
+        .filter(f => !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .flatMap(f => if (f.isDirectory) under(f.getPath) else Seq(f))
+    under(new org.apache.hadoop.fs.Path(path)).sortBy(_.getPath.toString)
+  }
+
+  /** The row count of a parquet directory (static or block-bucketed
+    * dynamic), summed on the driver from the row-group row counts in
+    * its data files' footers: the same files a Spark read lists, so the
+    * sum equals `spark.read.parquet(path).count()`, and no Spark job
+    * runs. 0 when the directory is missing or holds no data file. */
+  def footerRows(spark: org.apache.spark.sql.SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(spark, path).map { f =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
   }
 
   /** Read `static/<entity>`, treating "absent" and "exists but holds no
@@ -450,19 +473,10 @@ object Layout {
       maxRecordsPerFile: Long = 1000000L,
       sortBy: Seq[String] = Nil): Option[(Int, Int)] =
     readStatic(spark, root, entity, recover = true).map { existing =>
-      val fs = hadoopFs(spark, root)
-      val dst = new org.apache.hadoop.fs.Path(s"$root/static/$entity")
-      def dataFiles(): Int = {
-        val it = fs.listFiles(dst, true)
-        var n = 0
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet")) n += 1
-        }
-        n
-      }
-      val before = dataFiles()
-      val bytes = fs.getContentSummary(dst).getLength
+      val dst = s"$root/static/$entity"
+      val before = dataFiles(spark, dst).size
+      val bytes = hadoopFs(spark, root)
+        .getContentSummary(new org.apache.hadoop.fs.Path(dst)).getLength
       val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       // repartition (not coalesce): coalesce would glue scan partitions
       // without a shuffle but inherits their skew; the rewrite is the
@@ -477,7 +491,7 @@ object Layout {
           .repartitionByRange(nFiles, sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
       overwriteStaticAtomic(laidOut, root, entity, maxRecordsPerFile)
-      (before, dataFiles())
+      (before, dataFiles(spark, dst).size)
     }
 
   /** K4 for MULTI-row-per-key entities (the `abi` table: one skeleton →

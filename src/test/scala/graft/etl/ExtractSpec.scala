@@ -217,4 +217,71 @@ class ExtractSpec extends AnyFunSuite {
     assert(counts === cleanCounts)
     for (t <- tables) assert(rows(out, t) === rows(clean, t), t)
   }
+
+  test("returned counts equal a read-back count of every landed table: fresh root, re-run, extension") {
+    val out = graft.Temps.dir("extract-counts")
+    val dynamic = Set("transactions", "transfers", "logs")
+    for ((from, to) <- Seq((700L, 710L), (700L, 710L), (711L, 715L))) {
+      val counts = Extract.run(spark, RpcStub.endpoint, from, to, out,
+        decompiler = Extract.standInDecompiler())
+      assert(counts.keySet === Set("blocks", "deployments", "destructions",
+        "skeletons", "functions", "events", "errors", "abi", "accounts",
+        "withdrawals", "fetch_failures") ++ dynamic)
+      for ((t, n) <- counts - "fetch_failures") {
+        val dir = s"$out/${if (dynamic(t)) "dynamic" else "static"}/$t"
+        assert(n === spark.read.parquet(dir).count(), s"$t after [$from, $to]")
+      }
+    }
+  }
+
+  test("a failed derivation fails the run once its independent chains landed, and a re-run converges") {
+    import java.nio.file.{Files, Paths}
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    def rows(root: String, table: String) =
+      spark.read.parquet(s"$root/$table").collect().toSet
+    val tables = Seq("blocks", "deployments", "destructions", "withdrawals",
+      "accounts", "abi", "functions", "events", "errors", "skeletons")
+      .map("static/" + _) ++
+      Seq("transactions", "transfers", "logs").map("dynamic/" + _)
+    // a sanctuary holding the verified source of one created contract
+    val sanctuary = graft.Temps.dir("extract-sanctuary")
+    val verified = RpcStub.createdAddressOf(701L, 1)
+    Files.writeString(Paths.get(sanctuary, s"${verified.stripPrefix("0x")}_Token.sol"),
+      "pragma v 1;")
+    def extract(root: String, sanctuaryRoot: String) =
+      Extract.run(spark, RpcStub.endpoint, 700L, 710L, root,
+        decompiler = Extract.standInDecompiler(),
+        sanctuaryRoot = Some(sanctuaryRoot))
+    val clean = graft.Temps.dir("extract-derive-clean")
+    val cleanCounts = extract(clean, sanctuary)
+    assert(spark.read.parquet(s"$clean/static/deployments")
+      .where(org.apache.spark.sql.functions.col("verified_source"))
+      .collect().map(_.getAs[String]("contract")).toSeq === Seq(verified))
+
+    // a missing sanctuary root fails the deployments derivation, which
+    // the deployments, accounts and decompile-family chains all need
+    val out = graft.Temps.dir("extract-derive")
+    val missing = s"$out-no-sanctuary"
+    val before = persisted
+    val thrown = intercept[org.apache.spark.sql.AnalysisException](extract(out, missing))
+    assert(thrown.getMessage.contains("no-sanctuary"), thrown.getMessage)
+    // the derivation ran once: every chain rethrew its one exception,
+    // so no second copy of it rides along as suppressed
+    assert(!thrown.getSuppressed.exists(_.isInstanceOf[org.apache.spark.sql.AnalysisException]),
+      thrown.getSuppressed.toSeq)
+    assert(persisted -- before === Set.empty, "the failed run left persisted RDDs")
+    // the chains that do not need deployments landed in full first
+    for (t <- Seq("static/blocks", "static/withdrawals", "static/destructions",
+        "dynamic/transactions", "dynamic/transfers", "dynamic/logs"))
+      assert(rows(out, t) === rows(clean, t), s"$t unsettled")
+    for (t <- Seq("deployments", "accounts", "skeletons", "abi", "functions",
+        "events", "errors"))
+      assert(!Files.exists(Paths.get(s"$out/static/$t")), s"static/$t landed")
+
+    // a valid root: the re-run completes the store to the clean state
+    val counts = extract(out, sanctuary)
+    assert(persisted -- before === Set.empty, "the re-run left persisted RDDs")
+    assert(counts === cleanCounts)
+    for (t <- tables) assert(rows(out, t) === rows(clean, t), t)
+  }
 }

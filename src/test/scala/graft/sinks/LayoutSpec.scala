@@ -422,6 +422,54 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
+  test("fanout: chains that rethrow one shared failure rethrow that instance") {
+    val shared = new IllegalStateException("derivation failed")
+    val ran = new java.util.concurrent.atomic.AtomicInteger
+    val thrown = intercept[IllegalStateException] {
+      Layout.fanout(Seq(() => throw shared, () => { ran.incrementAndGet(); () },
+        () => throw shared))
+    }
+    assert(thrown eq shared)
+    assert(thrown.getSuppressed.isEmpty)
+    assert(ran.get === 1, "the healthy chain did not run")
+    // distinct failures still ride along as suppressed
+    val other = new RuntimeException("sink failed")
+    val both = intercept[RuntimeException] {
+      Layout.fanout(Seq(() => throw shared, () => throw other, () => throw shared))
+    }
+    assert(both eq shared)
+    assert(both.getSuppressed.toSeq === Seq(other))
+  }
+
+  test("footerRows: equals count() on static and bucketed dynamic dirs, 0 when absent") {
+    import spark.implicits._
+    val out = graft.Temps.dir("footer-rows")
+    // a static store of several files from two appends
+    Layout.writeStatic((0 until 50).map(i => (s"0x$i", i.toLong)).toDF("signature", "v")
+      .repartition(3), out, "sigs")
+    Layout.writeStatic((50 until 57).map(i => (s"0x$i", i.toLong)).toDF("signature", "v"),
+      out, "sigs")
+    val static = s"$out/static/sigs"
+    val (rows, jobs) = TestSpark.jobsStartedBy(Layout.footerRows(spark, static))
+    assert(jobs === 0, "footerRows started a Spark job")
+    assert(rows === 57L)
+    assert(rows === spark.read.parquet(static).count())
+    // a dynamic store across three block_bucket partitions
+    Layout.writeDynamic(Seq(5000L, 15000L, 25000L).flatMap(b =>
+      (0 until 10 + (b / 10000L).toInt).map(i => (b + i, s"tx$b-$i")))
+      .toDF("block_number", "tx_hash"), out, "txs")
+    val dynamic = s"$out/dynamic/txs"
+    assert(Layout.footerRows(spark, dynamic) === 33L)
+    assert(Layout.footerRows(spark, dynamic) === spark.read.parquet(dynamic).count())
+    // missing, and footer-less (a first write killed before its commit)
+    assert(Layout.footerRows(spark, s"$out/static/missing") === 0L)
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$out/static/torn/_temporary/0"))
+    fs.create(new org.apache.hadoop.fs.Path(s"$out/static/torn/_SUCCESS")).close()
+    assert(Layout.footerRows(spark, s"$out/static/torn") === 0L)
+  }
+
   test("bucket arithmetic: 10k blocks per partition") {
     import spark.implicits._
     val b = Layout.withBlockBucket(Seq(0L, 9999L, 10000L, 123456789L).toDF("block_number"))

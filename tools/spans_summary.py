@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Summarise the spans of a traced perfbench run, op by op.
 
-    python3 tools/spans_summary.py perfbench/results/<run>.spans.jsonl [--frames]
+    python3 tools/spans_summary.py perfbench/results/<run>.spans.jsonl [--frames] [--timeline]
 
 A traced run (`perfbench/run.py --trace 1`) writes one JSON line per timed
 operation (`"kind": "op"`) and one per Spark job started inside it
@@ -9,8 +9,10 @@ operation (`"kind": "op"`) and one per Spark job started inside it
 `frame`). For every op this prints its wall time, its busy time (the union
 of its jobs' intervals clipped to the op, so overlapping jobs count once),
 the driver gap (wall minus busy) and its job count; `--frames` adds the job
-count of each call-site frame under its op. The last lines give, per op
-name, the job counts of its calls.
+count of each call-site frame under its op, and `--timeline` lists every
+job of the op in start order: its start and end offset from the op's start,
+its duration, task count and frame. The last lines give, per op name, the
+job counts of its calls.
 """
 import argparse
 import collections
@@ -67,11 +69,24 @@ def summarise(ops, jobs):
     return rows
 
 
+def timeline(op, js):
+    """(start_ms, end_ms, duration_ms, tasks, frame) of each job of one op,
+    offsets from the op's start, in start order (job id breaks ties)."""
+    rows = []
+    for j in sorted(js, key=lambda j: (j["start_ms"], j["job_id"])):
+        end = max(j["end_ms"], j["start_ms"])
+        rows.append((j["start_ms"] - op["start_ms"], end - op["start_ms"],
+                     end - j["start_ms"], j.get("tasks", 0), j["frame"]))
+    return rows
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("spans", help="a perfbench .spans.jsonl file")
     ap.add_argument("--frames", action="store_true",
                     help="also print job counts per call-site frame")
+    ap.add_argument("--timeline", action="store_true",
+                    help="also print every job of each op in start order")
     args = ap.parse_args(argv)
     ops, jobs = load(args.spans)
     rows = summarise(ops, jobs)
@@ -84,6 +99,11 @@ def main(argv=None):
         if args.frames:
             for frame, c in sorted(frames.items(), key=lambda kv: (-kv[1], kv[0])):
                 print(f"{'':>10}{c:>4}  {frame}")
+        if args.timeline:
+            print(f"{'':>10}{'start_s':>8} {'end_s':>8} {'dur_s':>7} {'tasks':>5}  frame")
+            for start, end, dur, tasks, frame in timeline(op, jobs.get(op["op_id"], [])):
+                print(f"{'':>10}{start / 1000:>+8.3f} {end / 1000:>+8.3f} "
+                      f"{dur / 1000:>7.3f} {tasks:>5}  {frame}")
     print()
     for name in sorted(per_name):
         print(f"{name:<16} jobs per call: {'/'.join(map(str, per_name[name]))}")

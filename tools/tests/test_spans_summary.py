@@ -29,6 +29,8 @@ SPANS = [
     {"kind": "job", "op_id": 0, "job_id": 3, "frame": "graft.B.g(B.scala:2)",
      "layer": "sinks", "start_ms": 1800, "end_ms": 1900},
 ]
+for job, tasks in zip(SPANS[2:], (4, 2, 1)):
+    job["tasks"] = tasks
 
 
 class SpansSummary(unittest.TestCase):
@@ -61,6 +63,26 @@ class SpansSummary(unittest.TestCase):
         self.assertIn("ingest_text", text)
         self.assertIn("   2  graft.A.f(A.scala:1)", text)
         self.assertIn("ingest_text      jobs per call: 3", text)
+
+    def test_timeline_lists_jobs_in_start_order(self):
+        ops, jobs = spans_summary.load(self.path)
+        # the order jobs are read in does not matter
+        jobs[0].reverse()
+        self.assertEqual(spans_summary.timeline(ops[0], jobs[0]), [
+            (100, 400, 300, 4, "graft.A.f(A.scala:1)"),
+            (300, 600, 300, 2, "graft.A.f(A.scala:1)"),
+            (800, 900, 100, 1, "graft.B.g(B.scala:2)")])
+        self.assertEqual(spans_summary.timeline(ops[1], jobs.get(1, [])), [])
+
+    def test_cli_prints_timeline(self):
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            self.assertEqual(spans_summary.main([self.path, "--timeline"]), 0)
+        lines = out.getvalue().splitlines()
+        self.assertIn("            +0.100   +0.400   0.300     4  graft.A.f(A.scala:1)", lines)
+        self.assertIn("            +0.800   +0.900   0.100     1  graft.B.g(B.scala:2)", lines)
+        starts = [l.split()[0] for l in lines if l.strip().startswith("+")]
+        self.assertEqual(starts, ["+0.100", "+0.300", "+0.800"])
 
 
 if __name__ == "__main__":
