@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 import graft.functions.{Evm, Hex}
+import graft.ops.Pairs
 
 /** The `analyse similarities` pipeline (SURVEY.md §2.5 A5-A9, §2.4
   * J7/J8; reference src/analysys/similarities.rs). Two similarity
@@ -15,9 +16,9 @@ import graft.functions.{Evm, Hex}
   * Scale design: the reference's rayon upper-triangle loop is O(n²); we
   * keep that as the exact formulation (with `$"a.id" < $"b.id"`) and
   * provide the 100-TB path as an exploded-ngram EQUI-join — pairs only
-  * materialize for skeletons sharing at least one n-gram, and the
-  * per-ngram fan-out is bounded by dropping ubiquitous n-grams
-  * (df > maxDocFreq), the same trick as text shingle dedup.
+  * materialize for skeletons sharing at least one n-gram. The
+  * per-ngram fan-out is not capped: an n-gram in d skeletons yields
+  * d(d-1)/2 join rows.
   */
 object Similarity {
 
@@ -33,32 +34,15 @@ object Similarity {
   }
 
   /** A6/J7 (scale path): all skeleton pairs with n-gram cosine ≥
-    * threshold, via equi-join on shared n-grams. `maxDocFreq` drops
-    * n-grams present in more than that many skeletons (they contribute
-    * little discrimination but quadratic join fan-out); norms still use
-    * ALL n-grams so retained pairs' scores are lower bounds ≤ exact —
-    * pass maxDocFreq=Int.MaxValue for the exact reference semantics. */
-  def cosinePairs(skeletons: DataFrame, n: Int, threshold: Double,
-      maxDocFreq: Int = Int.MaxValue): DataFrame = {
+    * threshold, via equi-join on shared n-grams; the norms read all of a
+    * skeleton's n-grams, so scores are the reference's exact cosine. */
+  def cosinePairs(skeletons: DataFrame, n: Int, threshold: Double): DataFrame = {
     val rows = ngramRows(skeletons, n)
     val norms = rows.groupBy(col("skeleton_hash"))
       .agg(sqrt(sum(col("cnt") * col("cnt"))).as("norm"))
-    val joinable =
-      if (maxDocFreq == Int.MaxValue) rows
-      else {
-        val hot = rows.groupBy(col("ngram")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDocFreq).select("ngram")
-        rows.join(broadcast(hot), Seq("ngram"), "left_anti")
-      }
-    val a = joinable.toDF("a_id", "ngram", "a_cnt")
-    val b = joinable.toDF("b_id", "ngram", "b_cnt")
-    a.join(b, Seq("ngram")).where(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(sum(col("a_cnt") * col("b_cnt")).cast("double").as("dot"))
-      .join(norms.toDF("a_id", "a_norm"), "a_id")
-      .join(norms.toDF("b_id", "b_norm"), "b_id")
+    Pairs.sides(Pairs.sharedKey(rows, "ngram"), norms, Seq("a_norm"), Seq("b_norm"))
       .select(col("a_id"), col("b_id"),
-        (col("dot") / (col("a_norm") * col("b_norm"))).as("cosine"))
+        (col("dot").cast("double") / (col("a_norm") * col("b_norm"))).as("cosine"))
       .where(col("cosine") >= threshold)
   }
 
@@ -93,12 +77,8 @@ object Similarity {
     val sizes = interfaces.select(col("skeleton_hash"), size(col("interface")).as("n"))
     val names = interfaces.select(col("skeleton_hash"),
       explode(col("interface")).as("name"))
-    val a = names.toDF("a_id", "name")
-    val b = names.toDF("b_id", "name")
-    a.join(b, Seq("name")).where(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
-      .join(sizes.toDF("a_id", "a_n"), "a_id")
-      .join(sizes.toDF("b_id", "b_n"), "b_id")
+    Pairs.sides(Pairs.sharedKey(names, "name"),
+        sizes, Seq("a_n"), Seq("b_n"))
       .select(col("a_id"), col("b_id"),
         (col("inter").cast("double") /
           (col("a_n") + col("b_n") - col("inter"))).as("jaccard"))

@@ -3,6 +3,7 @@ package graft.bench
 import org.apache.spark.sql.functions._
 
 import graft.sinks.Bucketing
+import graft.bench.ScaleLaws.time
 
 /** Measures the q193/q206/q209 "bucketed attribution table" claim —
   * the last narrative-only scale shape the r11 verdict flagged: the
@@ -25,12 +26,6 @@ import graft.sinks.Bucketing
   * Usage: `runMain graft.bench.AttrBucketBench
   * [sfDir=/root/testdata/sf0.1] [buckets=16]`. */
 object AttrBucketBench {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

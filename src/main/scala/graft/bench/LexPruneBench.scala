@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sinks.Layout
 import graft.streaming.CurateStream
+import graft.bench.ScaleLaws.time
 
 /** MEASURED proof of the served-BM25 postings-fetch pruning — the one
   * scale claim of the lexical index that had no family row (r10
@@ -30,12 +31,6 @@ import graft.streaming.CurateStream
   * Usage: `runMain graft.bench.LexPruneBench [sfDir=/root/testdata/sf0.1]
   * [targetKB=96]`. */
 object LexPruneBench {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{LateInteraction, SimSearch}
 import graft.streaming.SemanticStream
+import graft.bench.ScaleLaws.time
 
 /** Late-interaction serving laws over ONE maintained index — the
   * measured companions to q176/q177's cost arithmetic:
@@ -29,12 +30,6 @@ import graft.streaming.SemanticStream
   * `runMain graft.bench.MaxSimBench [sfDir=/root/testdata/sf0.1]
   * [factor=4]`. */
 object MaxSimBench {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Multimodal
 import graft.streaming.MediaStream
+import graft.bench.ScaleLaws.time
 
 /** Upkeep cost of the ONLINE media-dedup face — the `curate_ingest`
   * discipline applied to [[MediaStream]] (r13 verdict #2's pricing
@@ -29,12 +30,6 @@ import graft.streaming.MediaStream
   * Usage: `runMain graft.bench.MediaStreamBench [batches=6]
   * [sfDir=/root/testdata/sf0.1] [amp=8]`. */
 object MediaStreamBench {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val batches = args.headOption.map(_.toInt).getOrElse(6)

@@ -2,7 +2,7 @@ package graft.bench
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Lsh, Multimodal}
+import graft.ops.{Lsh, Multimodal, Pairs}
 
 /** The perceptual-hash BAND/RECALL law — q216's machinery measured
   * against brute force (the q163/LexPrune self-probe discipline: the
@@ -70,14 +70,11 @@ object PHashBench {
         val qs = Multimodal.dHashQuarters(media, gridRows, 9)
           .localCheckpoint()
         // measurement baseline: all-pairs exact Hamming (bounded corpus)
-        val hamming = (0 until nb).map(k =>
-            bit_count(col(s"a_q$k").bitwiseXOR(col(s"b_q$k"))))
-          .reduce(_ + _).cast("long")
         val exact = qs
           .toDF(("a_id" +: (0 until nb).map(k => s"a_q$k")): _*)
           .join(qs.toDF(("b_id" +: (0 until nb).map(k => s"b_q$k")): _*),
             col("a_id") < col("b_id"))
-          .select(col("a_id"), col("b_id"), hamming.as("h"))
+          .select(col("a_id"), col("b_id"), Pairs.hamming(nb).as("h"))
           .localCheckpoint()
         // band-join candidate volume (radius-independent)
         val cand = Lsh.selfPairs(Lsh.quarterBands(qs, nb)).count()

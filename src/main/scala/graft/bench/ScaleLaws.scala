@@ -2,7 +2,7 @@ package graft.bench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Lsh, SimSearch}
+import graft.ops.{Lsh, Pairs, SimSearch, TextAnalysis}
 
 /** Empirical validation of the SCALE.md candidate-volume laws — the
   * dedup/ANN family's scale claims, MEASURED instead of reasoned.
@@ -136,9 +136,7 @@ object ScaleLaws {
       .unionByName(sh.select(col("doc_id"), lit(1).as("half"),
         (col("sh") % 256L).as("key")))
     val cand = Lsh.selfPairs(bands).localCheckpoint()
-    val pairs = cand
-      .join(sh.toDF("a_id", "a_sh"), "a_id")
-      .join(sh.toDF("b_id", "b_sh"), "b_id")
+    val pairs = Pairs.sides(cand, sh, Seq("a_sh"), Seq("b_sh"))
       .where(bit_count(col("a_sh").bitwiseXOR(col("b_sh"))) <= 1).count()
     val nCand = cand.count()
     sh.unpersist(true); cand.unpersist(true)
@@ -155,12 +153,8 @@ object ScaleLaws {
         element_at(col("QS"), k + 1).as(s"q$k")): _*)
       .localCheckpoint()
     val cand = Lsh.selfPairs(Lsh.quarterBands(sh, 4)).localCheckpoint()
-    val hamming = (0 until 4).map(k =>
-      bit_count(col(s"a_q$k").bitwiseXOR(col(s"b_q$k")))).reduce(_ + _)
-    val pairs = cand
-      .join(sh.toDF("a_id", "a_q0", "a_q1", "a_q2", "a_q3"), "a_id")
-      .join(sh.toDF("b_id", "b_q0", "b_q1", "b_q2", "b_q3"), "b_id")
-      .where(hamming <= 3).count()
+    val pairs = Pairs.hammingJoin(cand, sh, sh, "a_id", "b_id", 4)
+      .where(col("hamming") <= 3).count()
     val nCand = cand.count()
     sh.unpersist(true); cand.unpersist(true)
     (nCand, pairs)
@@ -185,23 +179,12 @@ object ScaleLaws {
     * Σ_shingle df² over surviving shingles — the df cap is the lever
     * that keeps it from going quadratic on hot shingles. */
   def shingleJaccard(docs: DataFrame): (Long, Long) = {
-    val sh = docs
-      .select(col("doc_id"),
-        explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
-      .localCheckpoint()
-    val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .where(col("df") > graft.queries.TextOps.MaxShingleDF).select("sh")
-    val joinable = sh.join(broadcast(hot), Seq("sh"), "left_anti")
-      .localCheckpoint()
+    val sh = docs.select(col("doc_id"), TextAnalysis.shingleRows).localCheckpoint()
+    val joinable = TextAnalysis.dfCappedShingles(sh).localCheckpoint()
     val sizes = joinable.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = joinable.toDF("sh", "a_id")
-      .join(joinable.toDF("sh", "b_id"), Seq("sh"))
-      .where(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
+    val inter = Pairs.sharedKey(joinable, "sh")
       .where(col("inter") >= 2).localCheckpoint()
-    val pairs = inter
-      .join(sizes.toDF("a_id", "na"), "a_id")
-      .join(sizes.toDF("b_id", "nb"), "b_id")
+    val pairs = Pairs.sides(inter, sizes, Seq("na"), Seq("nb"))
       .where(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")) >= 0.5).count()
     val nCand = inter.count()
@@ -492,12 +475,9 @@ object ScaleLaws {
     val pairs = qterms.join(tf, Seq("t"))
       .select(col("q_id"), col("doc_id")).distinct()
     val nCand = pairs.count()
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("n_shared").desc, col("doc_id").asc)
-    val topk = qterms.join(tf, Seq("t"))
-      .groupBy(col("q_id"), col("doc_id")).agg(count(lit(1)).as("n_shared"))
-      .withColumn("rn", row_number().over(w)).where(col("rn") <= 5)
-      .count()
+    val topk = Pairs.topK(qterms.join(tf, Seq("t"))
+        .groupBy(col("q_id"), col("doc_id")).agg(count(lit(1)).as("n_shared")),
+      Seq(col("q_id")), Seq(col("n_shared").desc, col("doc_id").asc), 5).count()
     toks.unpersist(true)
     (nCand, topk)
   }
@@ -580,23 +560,12 @@ object ScaleLaws {
     * pairs := contained pairs at the 0.8 bar. Same law as
     * shingle_jaccard — the extra per-pair division is free. */
   def containment(docs: DataFrame): (Long, Long) = {
-    val sh = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
-      .localCheckpoint()
-    val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .where(col("df") > graft.queries.TextOps.MaxShingleDF).select("sh")
-    val joinable = sh.join(broadcast(hot), Seq("sh"), "left_anti")
-      .localCheckpoint()
+    val sh = TextAnalysis.shingleRowsOf(docs).localCheckpoint()
+    val joinable = TextAnalysis.dfCappedShingles(sh).localCheckpoint()
     val sizes = joinable.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val a = joinable.toDF("sh", "a_id")
-    val b = joinable.toDF("sh", "b_id")
-    val pairs = a.join(b, Seq("sh")).where(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
-      .where(col("inter") >= 2)
-      .join(sizes.toDF("a_id", "na"), "a_id")
-      .join(sizes.toDF("b_id", "nb"), "b_id")
+    val pairs = Pairs.sides(
+        Pairs.sharedKey(joinable, "sh").where(col("inter") >= 2),
+        sizes, Seq("na"), Seq("nb"))
       .localCheckpoint()
     val cand = pairs.count()
     val contained = pairs.where(
@@ -656,16 +625,12 @@ object ScaleLaws {
     * (one task each). candidates := rows the rank touches (all of
     * them), pairs := selected rows. */
   def sampleWindow(docs: DataFrame): (Long, Long) = {
-    import org.apache.spark.sql.expressions.Window
     val base = docs.select(col("doc_id"), col("source"),
       graft.queries.ShardOps.sampleHash.as("h"))
     val quota = base.groupBy(col("source"))
       .agg(expr("(count(1) + 3) div 4").as("k"))
-    val sel = base.join(broadcast(quota), Seq("source"))
-      .withColumn("rn", row_number().over(Window
-        .partitionBy(col("source"))
-        .orderBy(col("h").asc, col("doc_id").asc)))
-      .where(col("rn") <= col("k"))
+    val sel = Pairs.topK(base.join(broadcast(quota), Seq("source")),
+      Seq(col("source")), Seq(col("h").asc, col("doc_id").asc), col("k"), "rn")
     (docs.count(), sel.count())
   }
 
@@ -770,7 +735,7 @@ object ScaleLaws {
     (nBatch, confirmed)
   }
 
-  private def time[A](f: => A): (A, Double) = {
+  private[bench] def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = f
     (a, (System.nanoTime() - t0) / 1e9)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.SimSearch
 import graft.streaming.SemanticStream
+import graft.bench.ScaleLaws.time
 
 /** Serving-path matrix over ONE maintained index — the measured
   * answer to "which dense leg should the online hybrid use":
@@ -31,12 +32,6 @@ import graft.streaming.SemanticStream
   * codegen). Usage: `runMain graft.bench.ServePathBench
   * [sfDir=/root/testdata/sf0.1] [factor=4]`. */
 object ServePathBench {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

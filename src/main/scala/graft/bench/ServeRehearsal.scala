@@ -3,6 +3,7 @@ package graft.bench
 import org.apache.spark.sql.functions._
 import graft.ops.SimSearch
 import graft.streaming.SemanticStream
+import graft.bench.ScaleLaws.time
 
 /** The serving-path law for the maintained vector index
   * ([[SemanticStream.queryTopK]] vs [[SemanticStream.queryTopKPq]]):
@@ -19,12 +20,6 @@ import graft.streaming.SemanticStream
   * One JSON line per (path, factor) + a markdown table for SCALE.md.
   */
 object ServeRehearsal {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.SimSearch
 import graft.streaming.SemanticStream
+import graft.bench.ScaleLaws.time
 
 /** Operating-point sweep for the maintained serving paths — the
   * follow-up ServePathBench's single-knob rows called for: that
@@ -27,12 +28,6 @@ import graft.streaming.SemanticStream
   * Usage: `runMain graft.bench.ServeSweep [sfDir=/root/testdata/sf0.1]
   * [factor=4]`. */
 object ServeSweep {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

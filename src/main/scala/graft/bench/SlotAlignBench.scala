@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.SemanticStream
+import graft.bench.ScaleLaws.time
 
 /** Measures the slot-alignment DIAGNOSTIC
   * ([[SemanticStream.slotCutAgreement]]) on the two `slot_policy`
@@ -31,12 +32,6 @@ import graft.streaming.SemanticStream
   * [sfDir=/root/testdata/sf0.1] [factor=4] [n=8000] [topics=1024]
   * [slotK=512] [k=8]`. */
 object SlotAlignBench {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.LateInteraction
 import graft.streaming.SemanticStream
+import graft.bench.ScaleLaws.time
 
 /** The JOINT slot-face operating surface — the r11 verdict's #1 ask:
   * `slot_kladder` varied K alone at (np = 2, C = 32) and found the
@@ -38,12 +39,6 @@ import graft.streaming.SemanticStream
   * Usage: `runMain graft.bench.SlotPolicyBench
   * [sfDir=/root/testdata/sf0.1] [factor=4] [n=8000] [topics=1024]`. */
 object SlotPolicyBench {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sinks.Layout
 import graft.streaming.SemanticStream
+import graft.bench.ScaleLaws.time
 
 /** MEASURED proof of the slot-gather fetch pruning — [[LexPruneBench]]'s
   * method applied to the slot index: the r12 serve path collects the
@@ -26,12 +27,6 @@ import graft.streaming.SemanticStream
   * Usage: `runMain graft.bench.SlotPruneBench
   * [sfDir=/root/testdata/sf0.1] [factor=4] [slotK=256] [targetKB=24]`. */
 object SlotPruneBench {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

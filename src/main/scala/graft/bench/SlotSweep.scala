@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.LateInteraction
 import graft.streaming.SemanticStream
+import graft.bench.ScaleLaws.time
 
 /** Slot-face operating-point grid — ServeSweep's twin for the
   * late-interaction stage-1 (q210): recall@3 of
@@ -24,12 +25,6 @@ import graft.streaming.SemanticStream
   * Usage: `runMain graft.bench.SlotSweep [sfDir=/root/testdata/sf0.1]
   * [factor=4]`. */
 object SlotSweep {
-
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")

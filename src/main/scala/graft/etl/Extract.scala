@@ -348,8 +348,10 @@ object Extract {
       // dynamic entities go through the SAME per-block replacement core
       // as the live follow (not a bare dynamic-partition overwrite, which
       // would clobber a bucket's rows from an EARLIER range sharing it):
-      // a re-run replaces its own blocks, a later range extends, and a
-      // batch backfill + live follower are interchangeable on one root
+      // a re-run replaces its own blocks and a later range extends. The
+      // follower's derivations land other shapes, so it cannot follow an
+      // extract-built root (`python3 perfbench/run.py
+      // --repro-follow-after-extract` prints REPRODUCED)
       () => if (dynamic.nonEmpty) {
         val batchBlocks =
           blocks().select(col("number").as("block_number")).distinct().persist()

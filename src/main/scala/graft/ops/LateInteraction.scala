@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Late-interaction (multi-vector) retrieval: MaxSim re-ranking in the
@@ -143,10 +142,7 @@ object LateInteraction {
           .as("cos"))
     val scored = qposMaxSum(pairCos, Seq("q_id", "c_id"), "qpos", "cos",
       slices, "maxsim")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("maxsim").desc, col("c_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
+    Pairs.topK(scored, Seq(col("q_id")), Seq(col("maxsim").desc, col("c_id").asc), k)
       .select(col("q_id"), col("rn"), col("c_id"), col("maxsim"))
   }
 }

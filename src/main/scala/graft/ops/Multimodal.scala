@@ -176,29 +176,6 @@ object Multimodal {
         col("rep_id"))
   }
 
-  /** Exact Hamming between quarter row-sets prefixed a_/b_, joined by
-    * a candidate frame (aId, bId) — the banded pipelines' shared
-    * re-rank. `broadcastPairs = true` hints the pair side (and the
-    * pair⋈aQs composite) broadcast — correct ONLY when the caller can
-    * bound it (MediaStream's per-batch probe: pairs and aQs are
-    * micro-batch-bounded, bQs is the corpus-sized stored index, which
-    * then STREAMS instead of being shuffled per batch — guide §3.1).
-    * The offline all-corpus faces (q216/q218/q221/q222) keep the
-    * default: their pair set is corpus-candidate-sized and must stay
-    * on the planner's choice. */
-  private[graft] def hammingJoin(cand: DataFrame, aQs: DataFrame,
-      bQs: DataFrame, aId: String, bId: String, nb: Int,
-      broadcastPairs: Boolean = false): DataFrame = {
-    val h = (0 until nb).map(k =>
-        bit_count(col(s"a_q$k").bitwiseXOR(col(s"b_q$k"))))
-      .reduce(_ + _).cast("long")
-    def bc(df: DataFrame) = if (broadcastPairs) broadcast(df) else df
-    bc(bc(cand)
-        .join(aQs.toDF((aId +: (0 until nb).map(k => s"a_q$k")): _*), aId))
-      .join(bQs.toDF((bId +: (0 until nb).map(k => s"b_q$k")): _*), bId)
-      .select(col(aId), col(bId), h.as("hamming"))
-  }
-
   /** Image near-dup pairs by banded perceptual Hamming distance — the
     * q121 wide-SimHash machinery applied to the media payloads (NEVER
     * all-pairs): any pair within total Hamming distance bands − 1
@@ -218,7 +195,7 @@ object Multimodal {
     val nb = gridRows / 2
     val qs = dHashQuarters(media, gridRows, gridCols)
       .localCheckpoint() // bands + re-rank read it
-    hammingJoin(Lsh.selfPairs(Lsh.quarterBands(qs, nb)), qs, qs, "a_id", "b_id", nb)
+    Pairs.hammingJoin(Lsh.selfPairs(Lsh.quarterBands(qs, nb)), qs, qs, "a_id", "b_id", nb)
       .where(col("hamming") <= maxHamming)
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PqExprs
@@ -130,12 +129,10 @@ object Pq {
     val q = queryTables(queries, idCol, vecCol, books)
     val ksub = books.head.length
     val codesM = codes.localCheckpoint()
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist").asc, col("c_id").asc)
-    broadcast(q).join(codesM, col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        PqExprs.adcScore(col("dtab"), col("codes"), ksub).as("adist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+    Pairs.topK(broadcast(q).join(codesM, col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"),
+          PqExprs.adcScore(col("dtab"), col("codes"), ksub).as("adist")),
+      Seq(col("q_id")), Seq(col("adist").asc, col("c_id").asc), topK)
   }
 
   /** The production two-stage scan: ADC top-`prefilterK` candidates
@@ -157,12 +154,10 @@ object Pq {
       col(vecCol).cast("array<double>").as("qv"))
     val cv = corpus.select(col(idCol).as("c_id"),
       col(vecCol).cast("array<double>").as("cv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist").asc, col("c_id").asc)
-    cand.join(broadcast(qv), Seq("q_id")).join(cv, Seq("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(PqExprs.l2sq(col("qv"), col("cv")), 6).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+    Pairs.topK(cand.join(broadcast(qv), Seq("q_id")).join(cv, Seq("c_id"))
+        .select(col("q_id"), col("c_id"),
+          round(PqExprs.l2sq(col("qv"), col("cv")), 6).as("dist")),
+      Seq(col("q_id")), Seq(col("dist").asc, col("c_id").asc), topK)
   }
 
   /** Exact squared-L2 top-k — the uncompressed baseline the ADC scan
@@ -174,12 +169,10 @@ object Pq {
       col(vecCol).cast("array<double>").as("qv"))
     val c = corpus.select(col(idCol).as("c_id"),
       col(vecCol).cast("array<double>").as("cv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist").asc, col("c_id").asc)
-    broadcast(q).join(c, col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(PqExprs.l2sq(col("qv"), col("cv")), 6).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+    Pairs.topK(broadcast(q).join(c, col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"),
+          round(PqExprs.l2sq(col("qv"), col("cv")), 6).as("dist")),
+      Seq(col("q_id")), Seq(col("dist").asc, col("c_id").asc), topK)
   }
 
   /** IVF+PQ: coarse IVF cells bound WHICH codes a query scores (probe
@@ -202,11 +195,9 @@ object Pq {
       .select(col("id").as("q_id"),
         PqExprs.distTable(col("v"), books).as("dtab"),
         explode(col("probes").getField("cid")).as("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist").asc, col("c_id").asc)
-    probes.join(cells, Seq("cell")).where(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        PqExprs.adcScore(col("dtab"), col("codes"), ksub).as("adist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+    Pairs.topK(probes.join(cells, Seq("cell")).where(col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"),
+          PqExprs.adcScore(col("dtab"), col("codes"), ksub).as("adist")),
+      Seq(col("q_id")), Seq(col("adist").asc, col("c_id").asc), topK)
   }
 }

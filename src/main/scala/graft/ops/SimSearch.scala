@@ -37,11 +37,9 @@ object SimSearch {
       .withColumn("cn", l2norm(col("cv")))
     val cosRaw = cosine(col("qv"), col("cv"), col("qn"), col("cn"))
     val cos = if (round6dp) round(cosRaw, 6) else cosRaw
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
-    broadcast(q).join(c, col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"), cos.as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
+    Pairs.topK(broadcast(q).join(c, col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"), cos.as("cos")),
+      Seq(col("q_id")), Seq(col("cos").desc, col("c_id").asc), k)
   }
 
   /** All near-duplicate pairs by cosine ≥ threshold (upper triangle).
@@ -188,12 +186,10 @@ object SimSearch {
     val probes = ivfAssign(queries, idCol, vecCol, cb, p = nProbe)
       .select(col("id").as("q_id"), col("v").as("qv"), col("n").as("qn"),
         explode(col("probes").getField("cid")).as("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
-    probes.join(cells, Seq("cell")).where(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6).as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+    Pairs.topK(probes.join(cells, Seq("cell")).where(col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"),
+          round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6).as("cos")),
+      Seq(col("q_id")), Seq(col("cos").desc, col("c_id").asc), topK)
   }
 
   /** [[ivfTopK]] specialized for queries ⊆ corpus (selected by a
@@ -219,12 +215,10 @@ object SimSearch {
     val probes = assigned.where(queryPred)
       .select(col("id").as("q_id"), col("v").as("qv"), col("n").as("qn"),
         explode(col("probes").getField("cid")).as("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id").asc)
-    probes.join(cells, Seq("cell")).where(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6).as("cos"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+    Pairs.topK(probes.join(cells, Seq("cell")).where(col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"),
+          round(cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6).as("cos")),
+      Seq(col("q_id")), Seq(col("cos").desc, col("c_id").asc), topK)
   }
 
   /** Deterministic fixed-round Lloyd's k-means over the corpus — the

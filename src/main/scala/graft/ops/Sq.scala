@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PqExprs
@@ -103,12 +102,10 @@ object Sq {
       .localCheckpoint()
     val q = queries.select(col(idCol).as("q_id"),
       col(vecCol).cast("array<double>").as("qv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sdist").asc, col("c_id").asc)
-    broadcast(q).join(codes, col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        sqDist(col("qv"), col("codes"), mins, isteps).as("sdist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
+    Pairs.topK(broadcast(q).join(codes, col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"),
+          sqDist(col("qv"), col("codes"), mins, isteps).as("sdist")),
+      Seq(col("q_id")), Seq(col("sdist").asc, col("c_id").asc), k)
   }
 
   /** IVF+SQ: coarse IVF cells bound WHICH codes a query scores (probe
@@ -130,12 +127,10 @@ object Sq {
     val probes = assigned.where(queryPred)
       .select(col("id").as("q_id"), col("v").as("qv"),
         explode(col("probes").getField("cid")).as("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sdist").asc, col("c_id").asc)
-    probes.join(cells, Seq("cell")).where(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        sqDist(col("qv"), col("codes"), mins, isteps).as("sdist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+    Pairs.topK(probes.join(cells, Seq("cell")).where(col("q_id") =!= col("c_id"))
+        .select(col("q_id"), col("c_id"),
+          sqDist(col("qv"), col("codes"), mins, isteps).as("sdist")),
+      Seq(col("q_id")), Seq(col("sdist").asc, col("c_id").asc), topK)
   }
 
   /** Two-stage scan: SQ prefilter from codes, exact squared-L2
@@ -150,11 +145,9 @@ object Sq {
       col(vecCol).cast("array<double>").as("qv"))
     val cv = corpus.select(col(idCol).as("c_id"),
       col(vecCol).cast("array<double>").as("cv"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dist").asc, col("c_id").asc)
-    cand.join(broadcast(qv), Seq("q_id")).join(cv, Seq("c_id"))
-      .select(col("q_id"), col("c_id"),
-        round(PqExprs.l2sq(col("qv"), col("cv")), 6).as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= topK)
+    Pairs.topK(cand.join(broadcast(qv), Seq("q_id")).join(cv, Seq("c_id"))
+        .select(col("q_id"), col("c_id"),
+          round(PqExprs.l2sq(col("qv"), col("cv")), 6).as("dist")),
+      Seq(col("q_id")), Seq(col("dist").asc, col("c_id").asc), topK)
   }
 }

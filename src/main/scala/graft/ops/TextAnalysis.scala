@@ -140,6 +140,29 @@ object TextAnalysis {
   private[graft] def shingleRows: Column =
     explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh")
 
+  /** Shingle-hash rows (doc_id, sh) of a (doc_id, text) frame, spread
+    * by doc_id first: a small parquet file reads as ONE partition, and
+    * the compute-heavy shingle explode would run single-core. */
+  private[graft] def shingleRowsOf(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+      .select(col("doc_id"), shingleRows)
+
+  /** Shingles present in more than this many documents are excluded
+    * from near-dup CANDIDATE GENERATION (not from the exact re-rank).
+    * 500 > any df at the driver's verify scale, so results there equal
+    * the unpruned formulation. */
+  val MaxShingleDF = 500
+
+  /** The df-capped shingle frame: the rows of a (doc_id, sh) frame
+    * whose shingle at most [[MaxShingleDF]] docs share, as (sh, doc_id)
+    * — the key leads after the anti-join. Bounds the pair fan-out of
+    * a shared-shingle join at df² ≤ MaxShingleDF·|sh|. */
+  private[graft] def dfCappedShingles(sh: DataFrame): DataFrame = {
+    val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+      .where(col("df") > MaxShingleDF).select("sh")
+    sh.join(broadcast(hot), Seq("sh"), "left_anti")
+  }
+
   /** Rolling document fingerprint: fold of (acc*131 + tokenHash) % HashMod
     * over tokens in order — order-sensitive, content-defined. */
   def fingerprint(text: Column): Column =

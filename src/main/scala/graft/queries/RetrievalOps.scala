@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.SimSearch
+import graft.ops.{Pairs, SimSearch}
 import Tables._
 
 /** Sparse lexical retrieval over the documents table — the query-side
@@ -38,7 +38,6 @@ object RetrievalOps {
     * longer superset doc above the source itself). Returns
     * (q_id, rn, doc_id, score). */
   private[queries] def bm25TopK(s: SparkSession, d: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = documents(s, d)
     val toks = docs.select(col("doc_id"),
         explode(graft.ops.TextAnalysis.tokens(col("text"))).as("t"))
@@ -59,24 +58,21 @@ object RetrievalOps {
       (col("df") + lit(0.5)), 6)
     val tfn = round((col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 6)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
     // broadcast the query-term frame (bounded by the 5 query docs'
     // vocabulary; stats-less off the checkpointed token frame): the
     // posting-shaped tf side streams instead of shuffling by term.
     // dl stays on planner choice — it is doc-count-sized (corpus-scale
     // at 100 TB), the one join here with no bounded side.
-    broadcast(qterms).join(tf, Seq("t"))
-      .join(broadcast(dfreq), Seq("t"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .select(col("q_id"), col("doc_id"),
-        round(idf * tfn, 6).as("term_score"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(round(sum(col("term_score").cast("decimal(30,15)"))
-        .cast("double"), 6).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
+    Pairs.topK(broadcast(qterms).join(tf, Seq("t"))
+        .join(broadcast(dfreq), Seq("t"))
+        .join(dl, Seq("doc_id"))
+        .crossJoin(broadcast(stats))
+        .select(col("q_id"), col("doc_id"),
+          round(idf * tfn, 6).as("term_score"))
+        .groupBy(col("q_id"), col("doc_id"))
+        .agg(round(sum(col("term_score").cast("decimal(30,15)"))
+          .cast("double"), 6).as("score")),
+      Seq(col("q_id")), Seq(col("score").desc, col("doc_id").asc), k)
       .select(col("q_id"), col("rn"), col("doc_id"), col("score"))
   }
 
@@ -100,7 +96,6 @@ object RetrievalOps {
     * hybrid (q173) had left. */
   private[queries] def bm25ServedTopK(s: SparkSession, d: String,
       root: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import graft.sinks.Layout
     import graft.streaming.CurateStream
     val post = Layout.readStatic(s, root, CurateStream.PostingsEntity)
@@ -135,23 +130,20 @@ object RetrievalOps {
       (col("df") + lit(0.5)), 6)
     val tfn = round((col("tf") * lit(2.2)) /
       (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))), 6)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
     // broadcast the query-term frame (bounded by the query docs'
     // vocabulary — the same bound that sanctioned its collect into the
     // In-filter above): the fetched posting slice streams instead of
     // shuffling by term. dl stays on planner choice (doc-count-sized).
-    broadcast(qterms).join(slice, Seq("t"))
-      .join(broadcast(dfreq), Seq("t"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .select(col("q_id"), col("doc_id"),
-        round(idf * tfn, 6).as("term_score"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(round(sum(col("term_score").cast("decimal(30,15)"))
-        .cast("double"), 6).as("score"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
+    Pairs.topK(broadcast(qterms).join(slice, Seq("t"))
+        .join(broadcast(dfreq), Seq("t"))
+        .join(dl, Seq("doc_id"))
+        .crossJoin(broadcast(stats))
+        .select(col("q_id"), col("doc_id"),
+          round(idf * tfn, 6).as("term_score"))
+        .groupBy(col("q_id"), col("doc_id"))
+        .agg(round(sum(col("term_score").cast("decimal(30,15)"))
+          .cast("double"), 6).as("score")),
+      Seq(col("q_id")), Seq(col("score").desc, col("doc_id").asc), k)
       .select(col("q_id"), col("rn"), col("doc_id"), col("score"))
   }
 
@@ -343,15 +335,12 @@ object RetrievalOps {
     // corpus is never touched again.
     "q162_rrf_fusion" -> Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val lex = bm25TopK(s, d, 5)
           .select(col("q_id"), col("doc_id"), col("rn").as("lex_rn"))
         val dense = SimSearch.bruteForceTopK(
             embeddings(s, d).where(col("vec_id") < 5), embeddings(s, d),
             "vec_id", "embedding", k = 5)
           .select(col("q_id"), col("c_id").as("doc_id"), col("rn").as("dense_rn"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("rrf").desc, col("doc_id").asc)
         // the full-outer fusion join rewritten as union + max-aggregate:
         // broadcast hash join is NOT supported for full outer (the hint
         // is silently dropped and the planner sort-merges — 2 Exchange +
@@ -363,21 +352,20 @@ object RetrievalOps {
         // max(rn) recovers exactly the full-outer's lex_rn/dense_rn —
         // null when the leg is absent, the leg's rn otherwise; the rrf
         // arithmetic below is unchanged on identical inputs.
-        lex.select(col("q_id"), col("doc_id"), col("lex_rn"),
-            lit(null).cast("int").as("dense_rn"))
-          .unionAll(dense.select(col("q_id"), col("doc_id"),
-            lit(null).cast("int").as("lex_rn"), col("dense_rn")))
-          .groupBy(col("q_id"), col("doc_id"))
-          .agg(max(col("lex_rn")).as("lex_rn"),
-            max(col("dense_rn")).as("dense_rn"))
-          .select(col("q_id"), col("doc_id"),
-            round(
-              coalesce(lit(1.0) / (lit(60) + col("lex_rn")), lit(0.0)) +
-                coalesce(lit(1.0) / (lit(60) + col("dense_rn")), lit(0.0)), 6).as("rrf"),
-            coalesce(col("lex_rn"), lit(0)).as("lex_rn"),
-            coalesce(col("dense_rn"), lit(0)).as("dense_rn"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5)
+        Pairs.topK(lex.select(col("q_id"), col("doc_id"), col("lex_rn"),
+              lit(null).cast("int").as("dense_rn"))
+            .unionAll(dense.select(col("q_id"), col("doc_id"),
+              lit(null).cast("int").as("lex_rn"), col("dense_rn")))
+            .groupBy(col("q_id"), col("doc_id"))
+            .agg(max(col("lex_rn")).as("lex_rn"),
+              max(col("dense_rn")).as("dense_rn"))
+            .select(col("q_id"), col("doc_id"),
+              round(
+                coalesce(lit(1.0) / (lit(60) + col("lex_rn")), lit(0.0)) +
+                  coalesce(lit(1.0) / (lit(60) + col("dense_rn")), lit(0.0)), 6).as("rrf"),
+              coalesce(col("lex_rn"), lit(0)).as("lex_rn"),
+              coalesce(col("dense_rn"), lit(0)).as("dense_rn")),
+          Seq(col("q_id")), Seq(col("rrf").desc, col("doc_id").asc), 5)
           .select(col("q_id"), col("rn"), col("doc_id"), col("rrf"),
             col("lex_rn"), col("dense_rn"))
       },
@@ -420,7 +408,6 @@ object RetrievalOps {
     // replays both index builds → probes → fusion end to end.
     "q173_rrf_fusion_served" -> Q(
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         import graft.streaming.SemanticStream
         val root = graft.Temps.dirFor(s"rrf-served-$d")
         val emb = embeddings(s, d)
@@ -432,29 +419,26 @@ object RetrievalOps {
             emb.where(col("vec_id") < 5), root, topK = 5, prefilterC = 10)
           .select(col("q_id"), col("c_id").as("doc_id"),
             col("rn").as("dense_rn"))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("rrf").desc, col("doc_id").asc)
         // full-outer fusion rewritten as union + max-aggregate (see
         // q162: BHJ is unsupported for full outer, so the planner
         // sort-merged two ≤5-rows-per-query frames; the union
         // aggregates map-side into one Exchange, no Sort). (q_id,
         // doc_id) is unique within each leg, so max over the ≤2-row
         // group reproduces the full-outer's columns exactly.
-        lex.select(col("q_id"), col("doc_id"), col("lex_rn"),
-            lit(null).cast("int").as("dense_rn"))
-          .unionAll(dense.select(col("q_id"), col("doc_id"),
-            lit(null).cast("int").as("lex_rn"), col("dense_rn")))
-          .groupBy(col("q_id"), col("doc_id"))
-          .agg(max(col("lex_rn")).as("lex_rn"),
-            max(col("dense_rn")).as("dense_rn"))
-          .select(col("q_id"), col("doc_id"),
-            round(
-              coalesce(lit(1.0) / (lit(60) + col("lex_rn")), lit(0.0)) +
-                coalesce(lit(1.0) / (lit(60) + col("dense_rn")), lit(0.0)), 6).as("rrf"),
-            coalesce(col("lex_rn"), lit(0)).as("lex_rn"),
-            coalesce(col("dense_rn"), lit(0)).as("dense_rn"))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") <= 5)
+        Pairs.topK(lex.select(col("q_id"), col("doc_id"), col("lex_rn"),
+              lit(null).cast("int").as("dense_rn"))
+            .unionAll(dense.select(col("q_id"), col("doc_id"),
+              lit(null).cast("int").as("lex_rn"), col("dense_rn")))
+            .groupBy(col("q_id"), col("doc_id"))
+            .agg(max(col("lex_rn")).as("lex_rn"),
+              max(col("dense_rn")).as("dense_rn"))
+            .select(col("q_id"), col("doc_id"),
+              round(
+                coalesce(lit(1.0) / (lit(60) + col("lex_rn")), lit(0.0)) +
+                  coalesce(lit(1.0) / (lit(60) + col("dense_rn")), lit(0.0)), 6).as("rrf"),
+              coalesce(col("lex_rn"), lit(0)).as("lex_rn"),
+              coalesce(col("dense_rn"), lit(0)).as("dense_rn")),
+          Seq(col("q_id")), Seq(col("rrf").desc, col("doc_id").asc), 5)
           .select(col("q_id"), col("rn"), col("doc_id"), col("rrf"),
             col("lex_rn"), col("dense_rn"))
       },

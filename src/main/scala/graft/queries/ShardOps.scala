@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Pairs
 import Tables._
 
 /** Training-order sharding — the step between a curated corpus and a
@@ -165,11 +166,9 @@ object ShardOps {
           .select(col("source"), col("n_docs"),
             (col("base") + when(col("rr") <= col("leftover"), 1L)
               .otherwise(0L)).as("quota"))
-        val ws = Window.partitionBy(col("source"))
-          .orderBy(col("h").asc, col("doc_id").asc)
-        pool.join(broadcast(alloc), Seq("source"))
-          .withColumn("rn", row_number().over(ws))
-          .where(col("rn") <= col("quota"))
+        Pairs.topK(pool.join(broadcast(alloc), Seq("source")),
+            Seq(col("source")), Seq(col("h").asc, col("doc_id").asc),
+            col("quota"), "rn")
           .select(col("doc_id"), col("source"), col("n_docs"),
             col("quota"), col("rn"))
       },

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.Lsh
+import graft.ops.{Lsh, Pairs}
 import graft.ops.TextAnalysis._
 import Tables._
 
@@ -12,12 +12,6 @@ import Tables._
   * (the SQL fragments below are generated from the same constants).
   */
 object TextOps {
-
-  /** Shingles present in more than this many documents are excluded
-    * from near-dup CANDIDATE GENERATION (not from the exact re-rank).
-    * 500 > any df at the driver's verify scale, so results there equal
-    * the unpruned formulation. */
-  val MaxShingleDF = 500
 
   // ---- DuckDB SQL fragments mirroring TextAnalysis ----
   private[queries] val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
@@ -330,12 +324,6 @@ object TextOps {
         countDistinct(when(col("isconf") === 1, col("sp")))
           .as("n_dup_spans_confirmed"))
   }
-
-  /** Shingle-hash rows (doc_id, sh) of a (doc_id, text) frame, spread
-    * by doc_id first — the decontamination probe of q141/q143. */
-  private def shingleRowsOf(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), shingleRows)
 
   /** The q143 chain over an arbitrary (doc_id, text, source, n_chars)
     * frame: batch = doc_id % 5 = 0 curated against the rest as the
@@ -842,27 +830,12 @@ object TextOps {
         // materialized once (localCheckpoint): sizes + both join sides
         // read it — recomputing the tokenize+shingle explode 3x was the
         // dominant cost at 10x scale
-        // a small parquet file reads as ONE partition; spread rows before
-        // the compute-heavy shingle explode or it runs single-core
-        val sh = documents(s, d)
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"),
-            explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
-          .localCheckpoint()
-        val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .where(col("df") > MaxShingleDF).select("sh")
-        // after join on "sh" the key column leads: columns are (sh, doc_id)
-        val joinable = sh.join(broadcast(hot), Seq("sh"), "left_anti")
-          .localCheckpoint()
+        val sh = shingleRowsOf(documents(s, d)).localCheckpoint()
+        val joinable = dfCappedShingles(sh).localCheckpoint()
         val sizes = joinable.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        val a = joinable.toDF("sh", "a_id")
-        val b = joinable.toDF("sh", "b_id")
-        val inter = a.join(b, Seq("sh")).where(col("a_id") < col("b_id"))
-          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
+        val inter = Pairs.sharedKey(joinable, "sh")
           .where(col("inter") >= 2)
-        inter
-          .join(sizes.toDF("a_id", "na"), "a_id")
-          .join(sizes.toDF("b_id", "nb"), "b_id")
+        Pairs.sides(inter, sizes, Seq("na"), Seq("nb"))
           .select(
             col("a_id"), col("b_id"), col("inter"),
             (col("na") + col("nb") - col("inter")).as("union_n"),
@@ -893,23 +866,12 @@ object TextOps {
     // extra flag marks pairs Jaccard would have missed at its 0.5 bar.
     "q170_containment" -> Q(
       (s, d) => {
-        val sh = documents(s, d)
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"),
-            explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
-          .localCheckpoint()
-        val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .where(col("df") > MaxShingleDF).select("sh")
-        val joinable = sh.join(broadcast(hot), Seq("sh"), "left_anti")
-          .localCheckpoint()
+        val sh = shingleRowsOf(documents(s, d)).localCheckpoint()
+        val joinable = dfCappedShingles(sh).localCheckpoint()
         val sizes = joinable.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        val a = joinable.toDF("sh", "a_id")
-        val b = joinable.toDF("sh", "b_id")
-        a.join(b, Seq("sh")).where(col("a_id") < col("b_id"))
-          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
-          .where(col("inter") >= 2)
-          .join(sizes.toDF("a_id", "na"), "a_id")
-          .join(sizes.toDF("b_id", "nb"), "b_id")
+        Pairs.sides(
+            Pairs.sharedKey(joinable, "sh").where(col("inter") >= 2),
+            sizes, Seq("na"), Seq("nb"))
           .withColumn("cont_a", round(col("inter").cast("double") / col("na"), 6))
           .withColumn("cont_b", round(col("inter").cast("double") / col("nb"), 6))
           .withColumn("contained",
@@ -1032,14 +994,8 @@ object TextOps {
           .localCheckpoint() // read by norms and both join sides
         val norms = tf.groupBy(col("doc_id"))
           .agg(sum(col("c") * col("c")).as("sq"))
-        val a = tf.toDF("a_id", "tok", "ca")
-        val b = tf.toDF("b_id", "tok", "cb")
-        val dots = a.join(b, Seq("tok")).where(col("a_id") < col("b_id"))
-          .groupBy(col("a_id"), col("b_id"))
-          .agg(sum(col("ca") * col("cb")).as("dot"))
-        dots
-          .join(norms.toDF("a_id", "sa"), "a_id")
-          .join(norms.toDF("b_id", "sb"), "b_id")
+        Pairs.sides(Pairs.sharedKey(tf, "tok"),
+            norms, Seq("sa"), Seq("sb"))
           .select(col("a_id"), col("b_id"),
             round(col("dot").cast("double") /
               (sqrt(col("sa").cast("double")) * sqrt(col("sb").cast("double"))), 6)
@@ -1116,30 +1072,21 @@ object TextOps {
     // all-pairs pass in either modality.
     "q84_cross_modal" -> Q(
       (s, d) => {
-        val sh = documents(s, d).where(col("doc_id") < 500)
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"),
-            explode(graft.functions.EvmExprs.shingleHashesFromText(col("text"))).as("sh"))
+        val sh = shingleRowsOf(documents(s, d).where(col("doc_id") < 500))
           .localCheckpoint()
         val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-        val a = sh.select(col("sh"), col("doc_id").as("a_id"))
-        val b = sh.select(col("sh"), col("doc_id").as("b_id"))
-        val inter = a.join(b, Seq("sh"))
-          .where(col("a_id") < col("b_id"))
-          .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("inter"))
+        // (sh, doc_id) rows, as the df-capped frames of q24/q170: each join
+        // side projects the key first
+        val inter = Pairs.sharedKey(sh.select("sh", "doc_id"), "sh")
           .where(col("inter") >= 2)
-        val jac = inter
-          .join(sizes.toDF("a_id", "na"), "a_id")
-          .join(sizes.toDF("b_id", "nb"), "b_id")
+        val jac = Pairs.sides(inter, sizes, Seq("na"), Seq("nb"))
           .select(col("a_id"), col("b_id"),
             round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 6)
               .as("jaccard"))
         val emb = Tables.embeddings(s, d).select(col("vec_id"),
             col("embedding").cast("array<double>").as("v"))
           .withColumn("nrm", graft.ops.SimSearch.l2norm(col("v")))
-        jac
-          .join(emb.toDF("a_id", "av", "an"), "a_id")
-          .join(emb.toDF("b_id", "bv", "bn"), "b_id")
+        Pairs.sides(jac, emb, Seq("av", "an"), Seq("bv", "bn"))
           .select(col("a_id"), col("b_id"), col("jaccard"),
             round(graft.ops.SimSearch.cosine(col("av"), col("bv"), col("an"), col("bn")), 6)
               .as("emb_cos"))
@@ -1387,9 +1334,7 @@ object TextOps {
             (col("sh") / 256L).cast("long").as("key"))
           .unionByName(sh.select(col("doc_id"), lit(1).as("half"),
             (col("sh") % 256L).as("key")))
-        Lsh.selfPairs(bands)
-          .join(sh.toDF("a_id", "a_sh"), "a_id")
-          .join(sh.toDF("b_id", "b_sh"), "b_id")
+        Pairs.sides(Lsh.selfPairs(bands), sh, Seq("a_sh"), Seq("b_sh"))
           .select(col("a_id"), col("b_id"),
             bit_count(col("a_sh").bitwiseXOR(col("b_sh"))).cast("long").as("hamming"))
           .where(col("hamming") <= 1)
@@ -1436,13 +1381,8 @@ object TextOps {
           .select(col("doc_id") +: (0 until 4).map(k =>
             element_at(col("QS"), k + 1).as(s"q$k")): _*)
           .localCheckpoint() // all four band sides + the re-rank read it
-        val hamming = (0 until 4).map(k =>
-            bit_count(col(s"a_q$k").bitwiseXOR(col(s"b_q$k"))))
-          .reduce(_ + _).cast("long")
-        Lsh.selfPairs(Lsh.quarterBands(sh, 4))
-          .join(sh.toDF("a_id", "a_q0", "a_q1", "a_q2", "a_q3"), "a_id")
-          .join(sh.toDF("b_id", "b_q0", "b_q1", "b_q2", "b_q3"), "b_id")
-          .select(col("a_id"), col("b_id"), hamming.as("hamming"))
+        Pairs.hammingJoin(Lsh.selfPairs(Lsh.quarterBands(sh, 4)), sh, sh,
+            "a_id", "b_id", 4)
           .where(col("hamming") <= 3)
       },
       Some {
@@ -2665,14 +2605,6 @@ object TextOps {
         val splitOf = (c: Column) => when(
           pmod(graft.functions.EvmExprs.tokenHash(c.cast("string")),
             lit(10L)) < 9, lit("train")).otherwise(lit("test"))
-        // the scored (post-agreement) match pairs, materialized once —
-        // read twice below (cluster-lookup key set + the left join)
-        val scored = cand
-          .join(Lsh.prefixed(batchSig, "b_id", "b"), "b_id")
-          .join(Lsh.prefixed(corpusSig, "c_id", "c"), "c_id")
-          .where(Lsh.agreement("b", "c") >= 0.5)
-          .select(col("b_id"), col("c_id"))
-          .localCheckpoint()
         // FLIP the cluster lookup (r14's CurateStream discipline): comp
         // is corpus-cluster-sized, so `scored LEFT JOIN comp` sort-merge
         // shuffled BOTH sides; instead comp is SEMI-joined against the
@@ -2684,8 +2616,15 @@ object TextOps {
         // bounded in expectation, not hard-bounded under band skew —
         // so the broadcasts ride the PairGuard cap like the streaming
         // probes do; past the cap the original planner-choice join runs.
-        val bcOk = scored.count() <=
-          graft.streaming.PairGuard.maxRows(s)
+        // The scored (post-agreement) match pairs are materialized once
+        // and counted by the same job — read twice below (cluster-lookup
+        // key set + the left join).
+        val (scored, bcOk) = graft.streaming.PairGuard.checkpointAndDecide(
+          cand.join(Lsh.prefixed(batchSig, "b_id", "b"), "b_id")
+            .join(Lsh.prefixed(corpusSig, "c_id", "c"), "c_id")
+            .where(Lsh.agreement("b", "c") >= 0.5)
+            .select(col("b_id"), col("c_id")),
+          "q190:scored")
         val matchedPairs = (if (bcOk) {
             val hits = comp.join(
               broadcast(scored.select("c_id").distinct()),
@@ -3421,17 +3360,14 @@ object TextOps {
     "q204_vocab_served" -> Q(
       (s, d) => {
         import graft.streaming.CurateStream
-        import org.apache.spark.sql.expressions.Window
         val root = curateScenarioRoot(s, d) // shared fixture; q196 bills the build
         val po = graft.sinks.Layout
           .readStatic(s, root, CurateStream.PostingsEntity).get
         val census = po.agg(countDistinct(col("t")).as("vocab_size"),
           sum(col("tf")).as("n_tokens"))
-        po.groupBy(col("t"))
-          .agg(sum(col("tf")).as("tf_total"), count(lit(1)).as("df"))
-          .withColumn("rn", row_number().over(
-            Window.orderBy(col("tf_total").desc, col("t").asc)))
-          .where(col("rn") <= 10).drop("rn")
+        Pairs.topK(po.groupBy(col("t"))
+            .agg(sum(col("tf")).as("tf_total"), count(lit(1)).as("df")),
+          Nil, Seq(col("tf_total").desc, col("t").asc), 10).drop("rn")
           .crossJoin(broadcast(census))
       },
       Some(s"""WITH $curateStreamCtesSql,

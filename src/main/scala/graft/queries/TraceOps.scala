@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Evm, Keccak, Sig}
+import graft.ops.Pairs
 import Tables._
 
 /** The reference's EVM decode/enrich operators (SURVEY.md §2.3 P1-P8,
@@ -413,14 +414,8 @@ object TraceOps {
               md5(col("text").cast("binary"))))).as(Seq("ngram", "c")))
           .localCheckpoint() // read by norms and both join sides
         val norms = tf.groupBy(col("doc_id")).agg(sum(col("c") * col("c")).as("sq"))
-        val a = tf.toDF("a_id", "ngram", "ca")
-        val b = tf.toDF("b_id", "ngram", "cb")
-        val dots = a.join(b, Seq("ngram")).where(col("a_id") < col("b_id"))
-          .groupBy(col("a_id"), col("b_id"))
-          .agg(sum(col("ca") * col("cb")).as("dot"))
-        dots
-          .join(norms.toDF("a_id", "sa"), "a_id")
-          .join(norms.toDF("b_id", "sb"), "b_id")
+        Pairs.sides(Pairs.sharedKey(tf, "ngram"),
+            norms, Seq("sa"), Seq("sb"))
           .select(col("a_id"), col("b_id"),
             round(col("dot").cast("double") /
               (sqrt(col("sa").cast("double")) * sqrt(col("sb").cast("double"))), 6)

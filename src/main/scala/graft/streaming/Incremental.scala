@@ -210,24 +210,9 @@ object Incremental {
     * that GAINS an entity must not trust a marker written without it,
     * or the new entity would never be backfilled below the marker. */
   private[graft] def syncedHeadMeta(spark: SparkSession,
-      outRoot: String): Option[(Long, Set[String])] = {
-    val p = new org.apache.hadoop.fs.Path(s"$outRoot/_synced_head")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text =
-          try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        val lines = text.trim.split("\n")
-        val names = lines.drop(1).headOption
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-          .getOrElse(Set.empty)
-        Some((lines.head.trim.toLong, names))
-      }
-    } catch { case _: Exception => None } // torn marker = replay the gap
-  }
+      outRoot: String): Option[(Long, Set[String])] =
+    try readMarker(spark, outRoot, "_synced_head")
+    catch { case _: Exception => None } // torn marker = replay the gap
 
   /** Durable tick-intent marker: written BEFORE a tick's first write,
     * cleared only after the tick's synced-head marker committed. Its
@@ -255,11 +240,21 @@ object Incremental {
     * map that GAINS an entity must not let the intent's replay point
     * mask the new entity's missing backfill below it. */
   private[graft] def tickIntentMeta(spark: SparkSession,
-      outRoot: String): Option[(Long, Set[String])] = {
-    val p = new org.apache.hadoop.fs.Path(s"$outRoot/_tick_intent")
+      outRoot: String): Option[(Long, Set[String])] =
+    try readMarker(spark, outRoot, "_tick_intent")
+    catch {
+      case _: java.io.FileNotFoundException => None // raced with clear
+    } // anything else (torn read, corrupt payload) propagates: treating
+      // it as "no intent" would silently skip a dead tick's replay
+
+  /** The `head\nnames` payload of the marker file `name` under
+    * `outRoot`, None when there is none; read errors propagate. */
+  private def readMarker(spark: SparkSession, outRoot: String,
+      name: String): Option[(Long, Set[String])] = {
+    val p = new org.apache.hadoop.fs.Path(s"$outRoot/$name")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else try {
+    else {
       val in = fs.open(p)
       val text =
         try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
@@ -269,10 +264,16 @@ object Incremental {
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
         .getOrElse(Set.empty)
       Some((lines.head.trim.toLong, names))
-    } catch {
-      case _: java.io.FileNotFoundException => None // raced with clear
-    } // anything else (torn read, corrupt payload) propagates: treating
-      // it as "no intent" would silently skip a dead tick's replay
+    }
+  }
+
+  /** Writes the `head\nnames` marker payload to `tmp`. */
+  private def writePayload(fs: org.apache.hadoop.fs.FileSystem,
+      tmp: org.apache.hadoop.fs.Path, head: Long, entities: Seq[String]): Unit = {
+    val out = fs.create(tmp, true)
+    try out.write((head.toString + "\n" + entities.sorted.mkString(","))
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   private[graft] def writeTickIntent(spark: SparkSession, outRoot: String,
@@ -285,10 +286,7 @@ object Incremental {
     // process's — already records a point ≤ `last`, so it stands.
     if (fs.exists(dst)) return
     val tmp = new org.apache.hadoop.fs.Path(s"$outRoot/._tick_intent.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((last.toString + "\n" + entities.sorted.mkString(","))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writePayload(fs, tmp, last, entities)
     if (!fs.rename(tmp, dst) && !fs.exists(dst))
       throw new java.io.IOException(s"rename $tmp -> $dst failed")
   }
@@ -303,13 +301,11 @@ object Incremental {
     val dst = new org.apache.hadoop.fs.Path(s"$outRoot/_synced_head")
     val tmp = new org.apache.hadoop.fs.Path(s"$outRoot/._synced_head.tmp")
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write((head.toString + "\n" + entities.sorted.mkString(","))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writePayload(fs, tmp, head, entities)
     // rename is atomic on HDFS/posix; object stores degrade to
-    // copy+delete, where a torn state reads back as "absent" via the
-    // catch above and the next tick simply replays — safe either way
+    // copy+delete, where a torn state reads back as "absent" via
+    // [[syncedHeadMeta]]'s catch and the next tick simply replays — safe
+    // either way
     fs.delete(dst, false)
     if (!fs.rename(tmp, dst))
       throw new java.io.IOException(s"rename $tmp -> $dst failed")

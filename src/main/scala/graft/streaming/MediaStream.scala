@@ -67,7 +67,7 @@ object MediaStream {
     * mismatched probe would silently find zero band matches and mark
     * every duplicate `kept` (the store's width is fixed at
     * [[bootstrap]]; the bands ([[graft.ops.Lsh]]) and the Hamming
-    * re-rank ([[graft.ops.Multimodal]]) are width-generic and shared
+    * re-rank ([[graft.ops.Pairs]]) are width-generic and shared
     * with the one-shot face — r14 review). */
   private def storedQuarters(s: SparkSession, root: String,
       nb: Int): DataFrame = {
@@ -102,7 +102,7 @@ object MediaStream {
       gridRows: Int = graft.functions.MediaExprs.GridRows,
       gridCols: Int = graft.functions.MediaExprs.GridCols): DataFrame =
       graft.Checkpoints.scoped { ck =>
-    import graft.ops.{Lsh, Multimodal}
+    import graft.ops.{Lsh, Multimodal, Pairs}
     val s = batch.sparkSession
     val nb = gridRows / 2
     // one fused hash pass over the batch; everything downstream (two
@@ -135,9 +135,8 @@ object MediaStream {
         broadcastLeft = true),
       "media-ingest:cand-corpus")
     ck.adopt(candCorpus)
-    val corpusPart = Multimodal
-      .hammingJoin(candCorpus, qsB, qsIdx, "b_id", "c_id", nb,
-        broadcastPairs = bcCorpus)
+    val corpusPart = Pairs.hammingJoin(candCorpus, qsB, qsIdx, "b_id", "c_id",
+        nb, broadcastPairs = bcCorpus)
       .where(col("hamming") <= maxHamming)
       .select(col("b_id").as("media_id"), col("c_id").as("pid"),
         lit("corpus").as("tag"))
@@ -145,9 +144,8 @@ object MediaStream {
       Lsh.selfPairs(Lsh.quarterBands(qsB, nb), broadcastLeft = true),
       "media-ingest:cand-batch")
     ck.adopt(candBatch)
-    val batchPart = Multimodal
-      .hammingJoin(candBatch, qsB, qsB, "a_id", "b_id", nb,
-        broadcastPairs = bcBatch)
+    val batchPart = Pairs.hammingJoin(candBatch, qsB, qsB, "a_id", "b_id",
+        nb, broadcastPairs = bcBatch)
       .where(col("hamming") <= maxHamming)
       .select(col("b_id").as("media_id"), col("a_id").as("pid"),
         lit("batch").as("tag"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
-import graft.ops.SimSearch
+import graft.ops.{Pairs, SimSearch}
 import graft.sinks.Layout
 import graft.sinks.Layout.readStaticOrEmpty
 
@@ -928,19 +928,16 @@ object SemanticStream {
     * the lower c_id): the cheap stage of every compressed face. */
   private def prefilter(scored: DataFrame, order: Column,
       prefilterC: Int): DataFrame =
-    scored.withColumn("prn", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(order, col("c_id").asc)))
-      .where(col("prn") <= prefilterC)
+    Pairs.topK(scored, Seq(col("q_id")), Seq(order, col("c_id").asc),
+      lit(prefilterC), "prn")
 
   /** Exact 6-dp cosine of each (q_id, qv, qn) × (c_id, cv, cn) pair,
     * top-`topK` per query (ties to the lower c_id). */
   private def cosineTopK(pairs: DataFrame, topK: Int): DataFrame =
-    pairs.select(col("q_id"), col("c_id"),
+    Pairs.topK(pairs.select(col("q_id"), col("c_id"),
         round(SimSearch.cosine(col("qv"), col("cv"), col("qn"), col("cn")), 6)
-          .as("cos"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("c_id").asc)))
-      .where(col("rn") <= topK)
+          .as("cos")),
+      Seq(col("q_id")), Seq(col("cos").desc, col("c_id").asc), topK)
 
   /** The one exact refine of the compressed faces: candidates
     * (q_id, qv, qn, c_id) fetch their stored full vectors and re-rank

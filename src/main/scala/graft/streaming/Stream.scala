@@ -15,10 +15,16 @@ import graft.sinks.Layout
   * head at launch (main.rs:49-51); the default behavior is
   * catch-up-then-live from the sink's resume point in one code path.
   *
-  * The reference streams into Dgraph; we stream into the same
-  * static/dynamic parquet layout `extract` lands (SURVEY S8: the
-  * landed layout is the store), so a live follower and a batch
-  * backfill produce interchangeable tables.
+  * The reference streams into Dgraph; we stream into a static/dynamic
+  * parquet root (SURVEY S8: the landed layout is the store), but NOT
+  * the tables `extract` lands: [[derivations]] writes narrower shapes
+  * (blocks keyed `block_number`, raw deployments, 9-column
+  * transactions) under `dynamic/`, where `extract` upserts blocks,
+  * deployments and destructions under `static/` and lands 17-column
+  * transactions. Following an extract-built root therefore fails with
+  * `NUM_COLUMNS_MISMATCH` (`python3 perfbench/run.py
+  * --repro-follow-after-extract` prints REPRODUCED), and `analyse`,
+  * which reads `static/`, never sees the rows a follower lands.
   */
 object Stream {
 

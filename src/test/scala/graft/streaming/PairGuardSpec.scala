@@ -76,14 +76,21 @@ class PairGuardSpec extends AnyFunSuite {
   }
 
   test("maxBroadcastPairs = 0 flips the decision") {
+    // q190 guards its scored match pairs the same way: the fallback
+    // join changes the strategy only, never the rows
+    def q190(): Seq[String] = graft.queries.Registry.all("q190_split_assign")
+      .fn(spark, "/root/testdata/sf0.001").collect().map(_.toString).toSeq.sorted
     val (ck1, ok1) = PairGuard.checkpointAndDecide(pairs, "spec")
     graft.Checkpoints.release(ck1)
     assert(ok1)
+    val q190AtDefault = q190()
+    assert(q190AtDefault.nonEmpty)
     spark.conf.set(PairGuard.ConfKey, "0")
     try {
       val (ck2, ok2) = PairGuard.checkpointAndDecide(pairs, "spec")
       graft.Checkpoints.release(ck2)
       assert(!ok2)
+      assert(q190() === q190AtDefault)
     } finally spark.conf.unset(PairGuard.ConfKey)
   }
 
