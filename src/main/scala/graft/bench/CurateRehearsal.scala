@@ -2,6 +2,9 @@ package graft.bench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.Checkpoints
+import graft.bench.ScaleLaws.{Cell, emit, time}
 import graft.sinks.Layout
 import graft.streaming.CurateStream
 
@@ -15,7 +18,7 @@ import graft.streaming.CurateStream
   * merged extract dimensions; this measures the curate-index face and
   * its remedy, [[Layout.compactStatic]].
   *
-  * Two variants over the same deterministic batch stream:
+  * Variants over the same deterministic batch stream:
   *   - `none`     — never compact (the disease: files grow ~4/batch,
   *     per-batch probe cost grows with the append history);
   *   - `everyC`   — compact all four entities every C batches (the
@@ -31,11 +34,9 @@ import graft.streaming.CurateStream
   * suffixes every token of the rest with a (batch, doc)-key (fresh
   * docs — same distinct-row discipline as [[ScaleLaws.amplifyDocs]]).
   *
-  * Usage: `runMain graft.bench.CurateRehearsal [batches=50]
-  * [compactEvery=10] [sfDir=/root/testdata/sf0.1]` — runs BOTH
-  * variants, prints one `curate_ingest` JSON line per (variant, batch)
-  * plus a `curate_compact` line per compaction pass, then a markdown
-  * summary for SCALE.md. */
+  * 50 batches, compaction every 10. One `curate_ingest` row per
+  * (variant, batch) and one `curate_compact` row per compaction pass;
+  * the ScaleLaws families `curate_ingest`/`curate_compact`. */
 object CurateRehearsal {
 
   private val Entities = Seq(CurateStream.KeysEntity, CurateStream.BandsEntity,
@@ -78,104 +79,54 @@ object CurateRehearsal {
       .withColumn("n_chars", length(col("text")))
   }
 
-  def main(args: Array[String]): Unit = {
-    val batches = args.headOption.map(_.toInt).getOrElse(50)
-    val compactEvery = args.lift(1).map(_.toInt).getOrElse(10)
-    val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    try {
-      val base = graft.queries.Tables.documents(spark, sfDir).localCheckpoint()
-      // span variants measure the q147 layer's marginal cost: the span
-      // store is the one index linear in corpus TOKENS, so its probe +
-      // fold dominate the delta vs the doc-level variants
-      // the sketch variant measures the gated exact layer's marginal
-      // effect: at this corpus/batch ratio the confirm join is small
-      // either way, so the expected result is parity on wall-clock with
-      // candidate-volume accounting living in the bloom_gate_q149
-      // ScaleLaws family — the rehearsal's job is to prove the gate
-      // rides the long-ingest maintenance loop (merge + saturation
-      // rebuild at compaction windows) without perturbing the law
-      // sketch variants by shard count: 0 = ungated, 1 = monolith,
-      // 4 = the sharded online gate (per-shard merge + rebuild)
-      // the lex variant measures the q175 inverted-index upkeep: two
-      // more anti-join upserts per batch (postings = one tokenize +
-      // groupBy over KEPT batch texts; dl = a projection of the landed
-      // frame), riding the same parallel fan-out — so the expected
-      // marginal cost is near zero unless the postings upsert becomes
-      // the slowest member of the fan-out
-      // the cert variant measures the q203 certificate upkeep: one
-      // ~8-row agg + upsert per batch riding the parallel fan-out —
-      // expected ≈ lex parity (never the slowest fan-out member)
-      val variants = Seq(
-        ("none", 0, false, 0, false, false),
-        (s"every$compactEvery", compactEvery, false, 0, false, false),
-        ("spans-none", 0, true, 0, false, false),
-        (s"spans-every$compactEvery", compactEvery, true, 0, false, false),
-        (s"sketch-every$compactEvery", compactEvery, false, 1, false, false),
-        (s"sketch4-every$compactEvery", compactEvery, false, 4, false, false),
-        (s"lex-every$compactEvery", compactEvery, false, 0, true, false),
-        (s"cert-every$compactEvery", compactEvery, false, 0, false, true))
-        // optional 4th arg: comma-separated variant-name filter for
-        // focused re-measurement (a full 7×50 matrix is ~30 min)
-        .filter { v =>
-          args.lift(3).forall(_.split(',').map(_.trim).contains(v._1))
-        }
-      val rows = variants.flatMap { case (variant, every, spans, sketch, lex, cert) =>
-        val root = graft.Temps.dir(s"curate-rehearsal-$variant")
-        CurateStream.bootstrap(base, root, withSpans = spans,
-          withSketch = sketch > 0, sketchShards = math.max(sketch, 1),
-          withLex = lex, withCert = cert)
-        (0 until batches).map { b =>
-          val batch = batchOf(base, b, batches).localCheckpoint()
-          val t0 = System.nanoTime()
-          val manifest = CurateStream.ingestBatch(batch, root,
-            spanGate = spans, lexIndex = lex, certIndex = cert)
-          val nMan = manifest.count() // manifest is localCheckpointed: free
-          val secs = (System.nanoTime() - t0) / 1e9
-          // the harness is a long-lived session too: drop the per-batch
-          // pinned frames (same discipline ingestBatch applies to its
-          // own intermediates)
-          batch.unpersist(); manifest.unpersist()
-          val files = parquetFiles(spark, root)
-          val keysRows = Layout.readStatic(spark, root, CurateStream.KeysEntity)
-            .map(_.count()).getOrElse(0L)
-          var compactSecs = 0.0
-          if (every > 0 && (b + 1) % every == 0) {
-            val c0 = System.nanoTime()
-            Entities.foreach(Layout.compactStatic(spark, root, _))
+  def measure(c: Cell): Unit = {
+    val batches = 50
+    val base = c.pin(c.docs)
+    // span variants measure the q147 layer's marginal cost: the span
+    // store is the one index linear in corpus TOKENS. Sketch variants
+    // (shards 1 = monolith, 4 = the sharded online gate) prove the gated
+    // exact layer rides the maintenance loop (merge + saturation rebuild
+    // at compaction windows) at wall-clock parity; its candidate volume
+    // is the bloom_gate_q149 law. The lex variant measures the q175
+    // inverted-index upkeep (postings + dl anti-join upserts riding the
+    // parallel fan-out), the cert variant the q203 certificate upkeep
+    // (one ~8-row agg + upsert per batch): both expected near parity.
+    // (name, compact every, span gate, sketch shards, lex, cert)
+    val variants = Seq(
+      ("none", 0, false, 0, false, false),
+      ("every10", 10, false, 0, false, false),
+      ("spans-none", 0, true, 0, false, false),
+      ("spans-every10", 10, true, 0, false, false),
+      ("sketch-every10", 10, false, 1, false, false),
+      ("sketch4-every10", 10, false, 4, false, false),
+      ("lex-every10", 10, false, 0, true, false),
+      ("cert-every10", 10, false, 0, false, true))
+    for ((variant, every, spans, sketch, lex, cert) <- variants) {
+      val root = graft.Temps.dir(s"curate-rehearsal-$variant")
+      CurateStream.bootstrap(base, root, withSpans = spans,
+        withSketch = sketch > 0, sketchShards = math.max(sketch, 1),
+        withLex = lex, withCert = cert)
+      for (b <- 0 until batches) Checkpoints.scoped { ck =>
+        val batch = ck(batchOf(base, b, batches))
+        val (nMan, secs) = time(ck.adopt(CurateStream.ingestBatch(batch, root,
+          spanGate = spans, lexIndex = lex, certIndex = cert)).count())
+        val files = parquetFiles(c.spark, root)
+        val keysRows = Layout.readStatic(c.spark, root, CurateStream.KeysEntity)
+          .map(_.count()).getOrElse(0L)
+        if (every > 0 && (b + 1) % every == 0) {
+          val (_, compactSecs) = time {
+            Entities.foreach(Layout.compactStatic(c.spark, root, _))
             if (sketch > 0)
-              Layout.readStatic(spark, root, CurateStream.KeysEntity)
-                .foreach { keys =>
-                  graft.streaming.KeySketch.maybeRebuild(
-                    spark, root, keys.select("key"), "key")
-                }
-            compactSecs = (System.nanoTime() - c0) / 1e9
-            println(s"""{"family":"curate_compact","variant":"$variant","batch":$b,""" +
-              s""""files_before":$files,"files_after":${parquetFiles(spark, root)},""" +
-              s""""secs":${math.round(compactSecs * 100) / 100.0}}""")
+              Layout.readStatic(c.spark, root, CurateStream.KeysEntity).foreach { keys =>
+                graft.streaming.KeySketch.maybeRebuild(c.spark, root, keys.select("key"), "key")
+              }
           }
-          println(s"""{"family":"curate_ingest","variant":"$variant","batch":$b,""" +
-            s""""batch_docs":$nMan,"index_keys":$keysRows,"files":$files,""" +
-            s""""secs":${math.round(secs * 100) / 100.0}}""")
-          (variant, b, nMan, keysRows, files, secs, compactSecs)
+          emit("curate_compact", "variant" -> variant, "batch" -> b, "files_before" -> files,
+            "files_after" -> parquetFiles(c.spark, root), "secs" -> compactSecs)
         }
+        emit("curate_ingest", "variant" -> variant, "batch" -> b, "batch_docs" -> nMan,
+          "index_keys" -> keysRows, "files" -> files, "secs" -> secs)
       }
-      println("\n| variant | batch | index keys | files | ingest secs | compact secs |")
-      println("|---|---|---|---|---|---|")
-      rows.foreach { case (v, b, _, k, f, s, cs) =>
-        println(f"| $v | $b%d | $k%d | $f%d | $s%.2f | $cs%.2f |")
-      }
-      // the law in two numbers per variant: mean ingest secs over the
-      // first and last fifth of the stream
-      val fifth = math.max(batches / 5, 1)
-      variants.foreach { case (v, _, _, _, _, _) =>
-        val vs = rows.filter(_._1 == v)
-        val head = vs.take(fifth).map(_._6).sum / fifth
-        val tail = vs.takeRight(fifth).map(_._6).sum / fifth
-        println(f"$v: mean ingest secs first-$fifth=$head%.2f last-$fifth=$tail%.2f " +
-          f"(x${tail / head}%.2f), files at end=${vs.last._5}")
-      }
-    } finally spark.stop()
+    }
   }
 }

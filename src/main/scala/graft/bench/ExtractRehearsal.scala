@@ -1,5 +1,7 @@
 package graft.bench
 
+import graft.bench.ScaleLaws.{Cell, emit, time}
+
 /** Dress-rehearsal for `graft.etl.Extract` at an amplified block range —
   * closes the loop on SCALE.md's K4 claim that a static MERGE's rewrite
   * cost is the DIMENSION'S SIZE (not the batch's), while dynamic
@@ -29,47 +31,30 @@ package graft.bench
   * windows rather than per-batch merges, while the dynamic stream never
   * needs one.
   *
-  * Usage: `runMain graft.bench.ExtractRehearsal [chunks, default 16]`.
+  * The ScaleLaws family `extract_rehearsal`, over 16 chunks.
   */
 object ExtractRehearsal {
-  def main(args: Array[String]): Unit = {
-    val chunks = args.headOption.map(_.toInt).getOrElse(16)
-    val blocksPerChunk = 50L
-    val from0 = 700L
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+  def measure(c: Cell): Unit = {
+    val (chunks, blocksPerChunk, from0) = (16, 50L, 700L)
     val outRoot = graft.Temps.dir("extract-rehearsal")
+    val decompiler = graft.etl.Extract.standInDecompiler()
     graft.sources.RpcStub.setHead(from0 + chunks * blocksPerChunk)
     try {
-      val decompiler = graft.etl.Extract.standInDecompiler()
-      var prevDynamic = 0L
-      var prevAppended = 0L
-      val rows = (0 until chunks).map { c =>
-        val from = from0 + c * blocksPerChunk
+      var (prevDynamic, prevAppended) = (0L, 0L)
+      for (chunk <- 0 until chunks) {
+        val from = from0 + chunk * blocksPerChunk
         val to = from + blocksPerChunk - 1
-        val t0 = System.nanoTime()
-        val counts = graft.etl.Extract.run(spark, graft.sources.RpcStub.endpoint,
-          from, to, outRoot, decompiler = decompiler)
-        val secs = (System.nanoTime() - t0) / 1e9
-        val merged = counts("accounts") + counts("skeletons")
+        val (counts, secs) = time(graft.etl.Extract.run(c.spark,
+          graft.sources.RpcStub.endpoint, from, to, outRoot, decompiler = decompiler))
         val dynTotal = counts("transactions") + counts("transfers") + counts("logs")
         val appTotal = Seq("blocks", "deployments", "destructions", "functions",
           "events", "errors", "abi", "withdrawals").map(counts).sum
-        val row = (c, merged, appTotal - prevAppended, dynTotal - prevDynamic, secs)
+        emit("extract_rehearsal", "chunk" -> chunk, "from" -> from, "to" -> to,
+          "merged_dim_rows" -> (counts("accounts") + counts("skeletons")),
+          "appended_rows" -> (appTotal - prevAppended),
+          "dynamic_rows" -> (dynTotal - prevDynamic), "secs" -> secs)
         prevDynamic = dynTotal; prevAppended = appTotal
-        println(s"""{"family":"extract_rehearsal","chunk":$c,"from":$from,"to":$to,""" +
-          s""""merged_dim_rows":${row._2},"appended_rows":${row._3},""" +
-          s""""dynamic_rows":${row._4},"secs":${math.round(secs * 100) / 100.0}}""")
-        row
       }
-      println("\n| chunk | merged dim rows (rewritten) | appended rows | dynamic rows | secs |")
-      println("|---|---|---|---|---|")
-      rows.foreach { case (c, m, a, d, s) =>
-        println(f"| $c%d | $m%d | $a%d | $d%d | $s%.2f |")
-      }
-    } finally {
-      graft.sources.RpcStub.setHead(graft.sources.RpcStub.Head)
-      spark.stop()
-    }
+    } finally graft.sources.RpcStub.setHead(graft.sources.RpcStub.Head)
   }
 }

@@ -1,11 +1,19 @@
 package graft.bench
 
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Lsh, Pairs, SimSearch, TextAnalysis}
+
+import graft.Checkpoints
+import graft.ops.{LateInteraction, Lsh, Pairs, SimSearch, TextAnalysis}
+import graft.queries.Tables
 
 /** Empirical validation of the SCALE.md candidate-volume laws — the
-  * dedup/ANN family's scale claims, MEASURED instead of reasoned.
+  * dedup/ANN family's scale claims, MEASURED instead of reasoned — and
+  * the one measurement harness every SCALE family runs through.
   *
   * The driver corpus tops out at 5k documents (sf0.1), far too small to
   * see a quadratic term, so [[amplifyDocs]]/[[amplifyEmbeddings]]
@@ -20,12 +28,16 @@ import graft.ops.{Lsh, Pairs, SimSearch, TextAnalysis}
   * `Σ_bucket |bucket|² ≈ n²/K` — the law under test — not
   * replica-cluster structure an amplifier would fabricate.
   *
-  * Each family method returns (candidates BEFORE re-rank, surviving
-  * pairs); `main` times them per scale and prints a JSON line + a
-  * markdown table row per (family, scale) for SCALE.md.
+  * Each law method returns (candidates BEFORE re-rank, surviving pairs)
+  * and runs once per factor ([[Laws]]). The fixed-corpus families
+  * ([[Families]]: serving grids, rehearsals, layout probes) run once on
+  * their own corpora, with their grids as constants. Every row is one
+  * JSON line, its family name first ([[line]]); `tools/assemble_scale.py`
+  * folds the logs into a SCALE_MEASURED file.
   *
   * Usage: `runMain graft.bench.ScaleLaws <sfDir> [factors csv, default
-  * 1,4,16] [family-substring filter csv]`.
+  * 1,4,16] [family-substring filter csv]`; `SPARK_GRAFT_CPUS` sizes the
+  * local session (default 32).
   */
 object ScaleLaws {
 
@@ -126,70 +138,59 @@ object ScaleLaws {
   /** q112's DEMO shape uncapped: one 16-bit SimHash (the native wide
     * expression's first quarter), 2×8-bit halves → K = 2⁸ bucket keys.
     * Predicted candidates ≈ n²/2⁸ — the narrow-key law term. */
-  def simhashNarrow(docs: DataFrame): (Long, Long) = {
-    val sh = docs
+  def simhashNarrow(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
+    val sh = ck(docs
       .withColumn("QS", graft.functions.EvmExprs.simHashQuartersFromText(col("text")))
-      .select(col("doc_id"), element_at(col("QS"), 1).as("sh"))
-      .localCheckpoint()
+      .select(col("doc_id"), element_at(col("QS"), 1).as("sh")))
     val bands = sh.select(col("doc_id"), lit(0).as("half"),
         (col("sh") / 256L).cast("long").as("key"))
       .unionByName(sh.select(col("doc_id"), lit(1).as("half"),
         (col("sh") % 256L).as("key")))
-    val cand = Lsh.selfPairs(bands).localCheckpoint()
+    val cand = ck(Lsh.selfPairs(bands))
     val pairs = Pairs.sides(cand, sh, Seq("a_sh"), Seq("b_sh"))
       .where(bit_count(col("a_sh").bitwiseXOR(col("b_sh"))) <= 1).count()
-    val nCand = cand.count()
-    sh.unpersist(true); cand.unpersist(true)
-    (nCand, pairs)
+    (cand.count(), pairs)
   }
 
   /** q121's scale shape: 4×16-bit quarters → K = 2¹⁶ bucket keys.
     * Predicted candidates ≈ 4·(n²/2)/2¹⁶ = n²/2¹⁵ per the same law —
     * 64× fewer than the narrow shape at every n. */
-  def simhashWide(docs: DataFrame): (Long, Long) = {
-    val sh = docs
+  def simhashWide(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
+    val sh = ck(docs
       .withColumn("QS", graft.functions.EvmExprs.simHashQuartersFromText(col("text")))
       .select(col("doc_id") +: (0 until 4).map(k =>
-        element_at(col("QS"), k + 1).as(s"q$k")): _*)
-      .localCheckpoint()
-    val cand = Lsh.selfPairs(Lsh.quarterBands(sh, 4)).localCheckpoint()
+        element_at(col("QS"), k + 1).as(s"q$k")): _*))
+    val cand = ck(Lsh.selfPairs(Lsh.quarterBands(sh, 4)))
     val pairs = Pairs.hammingJoin(cand, sh, sh, "a_id", "b_id", 4)
       .where(col("hamming") <= 3).count()
-    val nCand = cand.count()
-    sh.unpersist(true); cand.unpersist(true)
-    (nCand, pairs)
+    (cand.count(), pairs)
   }
 
   /** q28's MinHash banding: 2 bands of 2 hashes — K is the joint
     * 2-hash key space, so random collisions are rare and candidates
     * track the corpus's TRUE resemblance structure (near-linear). */
-  def minhashBands(docs: DataFrame): (Long, Long) = {
-    val sig = Lsh.signatures(docs).localCheckpoint()
-    val cand = Lsh.selfPairs(Lsh.bands(sig)).localCheckpoint()
+  def minhashBands(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
+    val sig = ck(Lsh.signatures(docs))
+    val cand = ck(Lsh.selfPairs(Lsh.bands(sig)))
     val pairs = cand
       .join(Lsh.prefixed(sig, "a_id", "a"), "a_id")
       .join(Lsh.prefixed(sig, "b_id", "b"), "b_id")
       .where(Lsh.agreement("a", "b") >= 0.5).count()
-    val nCand = cand.count()
-    sig.unpersist(true); cand.unpersist(true)
-    (nCand, pairs)
+    (cand.count(), pairs)
   }
 
   /** q24's shingle-hash equi-join with the df cap: candidate volume is
     * Σ_shingle df² over surviving shingles — the df cap is the lever
     * that keeps it from going quadratic on hot shingles. */
-  def shingleJaccard(docs: DataFrame): (Long, Long) = {
-    val sh = docs.select(col("doc_id"), TextAnalysis.shingleRows).localCheckpoint()
-    val joinable = TextAnalysis.dfCappedShingles(sh).localCheckpoint()
+  def shingleJaccard(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
+    val sh = ck(docs.select(col("doc_id"), TextAnalysis.shingleRows))
+    val joinable = ck(TextAnalysis.dfCappedShingles(sh))
     val sizes = joinable.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = Pairs.sharedKey(joinable, "sh")
-      .where(col("inter") >= 2).localCheckpoint()
+    val inter = ck(Pairs.sharedKey(joinable, "sh").where(col("inter") >= 2))
     val pairs = Pairs.sides(inter, sizes, Seq("na"), Seq("nb"))
       .where(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")) >= 0.5).count()
-    val nCand = inter.count()
-    sh.unpersist(true); joinable.unpersist(true); inter.unpersist(true)
-    (nCand, pairs)
+    (inter.count(), pairs)
   }
 
   /** q134's span-level exact-substring dedup. Documents are never
@@ -203,21 +204,19 @@ object ScaleLaws {
     * count CLIMBING 526 → 13 058 from 5k to 80k docs — pure birthday
     * collision of the narrow key — which is why q134 and this family
     * use the 60-bit composite (bases 131/137). */
-  def spanDedup(docs: DataFrame): (Long, Long) = {
+  def spanDedup(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
     val th = transform(graft.ops.TextAnalysis.tokens(col("text")),
       t => graft.ops.TextAnalysis.tokenHash(t))
     val spans = graft.ops.TextAnalysis.spanHashes(col("TH"), 8)
-    val spanSets = docs
+    val spanSets = ck(docs
       .withColumn("TH", th)
       .select(col("doc_id"), explode(spans).as("sp"))
-      .distinct().localCheckpoint()
+      .distinct())
     val dup = spanSets.groupBy(col("sp")).agg(count(lit(1)).as("nd"))
       .where(col("nd") >= 2).select("sp")
     val dupDocs = spanSets.join(dup, Seq("sp"), "left_semi")
       .select("doc_id").distinct().count()
-    val nCand = spanSets.count()
-    spanSets.unpersist(true)
-    (nCand, dupDocs)
+    (spanSets.count(), dupDocs)
   }
 
   /** q138's exact-confirm layer PROVEN against the deliberately
@@ -228,13 +227,11 @@ object ScaleLaws {
     * CONFIRMED dup span, which must stay at the copy-0 base under
     * amplification (copies share no tokens, so the confirm join — not
     * the key width — carries correctness). */
-  def spanConfirmNarrow(docs: DataFrame): (Long, Long) = {
-    val counts = graft.queries.TextOps.spanConfirmCounts(docs,
-      th => graft.ops.TextAnalysis.spanHashesNarrow(th, 8)).localCheckpoint()
-    val keyDup = counts.where(col("n_dup_spans") > 0).count()
-    val conf = counts.where(col("n_dup_spans_confirmed") > 0).count()
-    counts.unpersist(true)
-    (keyDup, conf)
+  def spanConfirmNarrow(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
+    val counts = ck(graft.queries.TextOps.spanConfirmCounts(docs,
+      th => graft.ops.TextAnalysis.spanHashesNarrow(th, 8)))
+    (counts.where(col("n_dup_spans") > 0).count(),
+      counts.where(col("n_dup_spans_confirmed") > 0).count())
   }
 
   /** Σ_key C(|group|, 2) — the exact equi-join pair volume of a keyed
@@ -250,9 +247,8 @@ object ScaleLaws {
     * `nPlanes` is the K lever — the scaled-K family grows it with n to
     * measure the documented remedy, not just the fixed-K disease. */
   def lshCosine(emb: DataFrame,
-      nPlanes: Int = SimSearch.LshPlanes): (Long, Long) = {
-    val bucketed = SimSearch.lshBuckets(emb, "vec_id", "embedding",
-      nPlanes).localCheckpoint()
+      nPlanes: Int = SimSearch.LshPlanes): (Long, Long) = Checkpoints.scoped { ck =>
+    val bucketed = ck(SimSearch.lshBuckets(emb, "vec_id", "embedding", nPlanes))
     val cand = pairVolume(bucketed, "bucket")
     val pairs = {
       val withN = bucketed.withColumn("n", SimSearch.l2norm(col("v")))
@@ -262,7 +258,6 @@ object ScaleLaws {
         .where(SimSearch.cosine(col("av"), col("bv"), col("an"), col("bn")) >= 0.2)
         .count()
     }
-    bucketed.unpersist(true)
     (cand, pairs)
   }
 
@@ -282,9 +277,9 @@ object ScaleLaws {
     * concentration), amplified by the global codebook assigning 74%
     * of vectors to another copy's centroid. The PINNABLE form is
     * [[semanticDedupSharded]]. */
-  def semanticDedup(emb: DataFrame, k: Int = SimSearch.IvfK): (Long, Long) = {
-    val cells = SimSearch.ivfCells(emb, "vec_id", "embedding", k)
-      .localCheckpoint()
+  def semanticDedup(emb: DataFrame, k: Int = SimSearch.IvfK): (Long, Long) =
+    Checkpoints.scoped { ck =>
+    val cells = ck(SimSearch.ivfCells(emb, "vec_id", "embedding", k))
     val cand = pairVolume(cells, "cell")
     val a = cells.toDF("vec_id", "cell", "av", "an")
     val b = cells.toDF("b_id", "cell", "bv", "bn")
@@ -293,7 +288,6 @@ object ScaleLaws {
       .where(round(SimSearch.cosine(
         col("av"), col("bv"), col("an"), col("bn")), 6) >= 0.3)
       .select("vec_id").distinct().count()
-    cells.unpersist(true)
     (cand, dups)
   }
 
@@ -320,20 +314,18 @@ object ScaleLaws {
     * a tunable constant. This family has no threshold re-rank, so the
     * "surviving pairs" slot is 0 by definition — candidates are the
     * measurement. */
-  def ivfProbe(emb: DataFrame, k: Int = SimSearch.IvfK): (Long, Long) = {
+  def ivfProbe(emb: DataFrame, k: Int = SimSearch.IvfK): (Long, Long) = Checkpoints.scoped { ck =>
     val cb = SimSearch.collectCodebook(
       SimSearch.ivfCentroids(emb, "vec_id", "embedding", k))
-    val assigned = SimSearch.ivfAssign(emb, "vec_id", "embedding", cb,
+    val assigned = ck(SimSearch.ivfAssign(emb, "vec_id", "embedding", cb,
         SimSearch.IvfProbe)
-      .select(col("id"), col("probes").getField("cid").as("pcids"))
-      .localCheckpoint()
+      .select(col("id"), col("probes").getField("cid").as("pcids")))
     val cells = assigned.select(element_at(col("pcids"), 1).as("cid"))
       .groupBy(col("cid")).agg(count(lit(1)).as("nc"))
     val probes = assigned.select(explode(col("pcids")).as("cid"))
       .groupBy(col("cid")).agg(count(lit(1)).as("np"))
     val cand = cells.join(probes, Seq("cid"))
       .agg(sum(col("nc") * col("np"))).head().getLong(0)
-    assigned.unpersist(true)
     (cand, 0L)
   }
 
@@ -370,7 +362,7 @@ object ScaleLaws {
     * per corpus row, not the vector). [[pqRecall]] prices the
     * approximation. */
   def l2ExactScan(emb: DataFrame): (Long, Long) = {
-    val q = emb.where(pmod(col("vec_id"), lit(97)) === 0)
+    val q = querySample(emb)
     val rows = graft.ops.Pq.l2TopK(q, emb, "vec_id", "embedding", 10).count()
     val nq = q.count()
     (nq * (emb.count() - 1), rows)
@@ -379,7 +371,7 @@ object ScaleLaws {
   def pqAdcScan(emb: DataFrame): (Long, Long) = {
     val books = graft.ops.Pq.seedBooks(emb, "vec_id", "embedding")
     val codes = graft.ops.Pq.encodeCodes(emb, "vec_id", "embedding", books)
-    val q = emb.where(pmod(col("vec_id"), lit(97)) === 0)
+    val q = querySample(emb)
     val rows = graft.ops.Pq.adcTopK(q, codes, "vec_id", "embedding", books, 10).count()
     val nq = q.count()
     (nq * (emb.count() - 1), rows)
@@ -391,19 +383,15 @@ object ScaleLaws {
     * pairs := recall hits@10 vs the exact scan — the measured claim is
     * that a 100-row prefilter recovers most of what raw ADC@10 loses
     * while touching full vectors for ~0.3% of the corpus. */
-  def pqRerank(emb: DataFrame): (Long, Long) = {
+  def pqRerank(emb: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
     import graft.ops.Pq
     val books = Pq.seedBooks(emb, "vec_id", "embedding")
-    val q = emb.where(pmod(col("vec_id"), lit(97)) === 0)
-    val exact = Pq.l2TopK(q, emb, "vec_id", "embedding", 10)
-      .select("q_id", "c_id").localCheckpoint()
-    val rr = Pq.adcRerankTopK(q, emb, "vec_id", "embedding", books,
-        prefilterK = 100, topK = 10)
-      .select("q_id", "c_id").localCheckpoint()
+    val q = querySample(emb)
+    val exact = ck(Pq.l2TopK(q, emb, "vec_id", "embedding", 10).select("q_id", "c_id"))
+    val rr = ck(Pq.adcRerankTopK(q, emb, "vec_id", "embedding", books,
+        prefilterK = 100, topK = 10).select("q_id", "c_id"))
     val hits = exact.join(rr, Seq("q_id", "c_id"), "left_semi").count()
-    val nCand = q.count() * 100
-    exact.unpersist(true); rr.unpersist(true)
-    (nCand, hits)
+    (q.count() * 100, hits)
   }
 
   /** Recall@10 of the ADC scan against the exact scan, seeded vs
@@ -412,21 +400,18 @@ object ScaleLaws {
     * runs both scans); the law is the recall RATIO between the
     * trained and seeded variants as n grows while the books stay
     * 8×16. */
-  def pqRecall(emb: DataFrame, trained: Boolean): (Long, Long) = {
+  def pqRecall(emb: DataFrame, trained: Boolean): (Long, Long) = Checkpoints.scoped { ck =>
     import graft.ops.Pq
     val books =
       if (trained) Pq.trainBooks(emb, "vec_id", "embedding", rounds = 2)
       else Pq.seedBooks(emb, "vec_id", "embedding")
     val codes = Pq.encodeCodes(emb, "vec_id", "embedding", books)
-    val q = emb.where(pmod(col("vec_id"), lit(97)) === 0)
-    val exact = Pq.l2TopK(q, emb, "vec_id", "embedding", 10)
-      .select("q_id", "c_id").localCheckpoint()
+    val q = querySample(emb)
+    val exact = ck(Pq.l2TopK(q, emb, "vec_id", "embedding", 10).select("q_id", "c_id"))
     val approx = Pq.adcTopK(q, codes, "vec_id", "embedding", books, 10)
       .select("q_id", "c_id")
     val hits = exact.join(approx, Seq("q_id", "c_id"), "left_semi").count()
-    val nExact = exact.count()
-    exact.unpersist(true)
-    (nExact, hits)
+    (exact.count(), hits)
   }
 
   /** The d=512 contrast pair: the d=64 scans above measure PARITY
@@ -439,23 +424,18 @@ object ScaleLaws {
     * ADC still pays M=8 table reads — the FLOP dividend, measured.
     * The one-off encode pass (16×512 mults/row) is part of the timed
     * ADC side; it amortizes over every query of the index's life. */
-  def scan512(emb: DataFrame, adc: Boolean): (Long, Long) = {
+  def scan512(emb: DataFrame, adc: Boolean): (Long, Long) = Checkpoints.scoped { ck =>
     import graft.ops.Pq
-    val e512 = emb.select(col("vec_id"),
-        flatten(array_repeat(col("embedding").cast("array<double>"), 8))
-          .as("embedding"))
-      .localCheckpoint()
-    val q = e512.where(pmod(col("vec_id"), lit(97)) === 0)
+    val e512 = ck(emb.select(col("vec_id"),
+      flatten(array_repeat(col("embedding").cast("array<double>"), 8)).as("embedding")))
+    val q = querySample(e512)
     val rows =
       if (adc) {
         val books = Pq.seedBooks(e512, "vec_id", "embedding")
         val codes = Pq.encodeCodes(e512, "vec_id", "embedding", books)
         Pq.adcTopK(q, codes, "vec_id", "embedding", books, 10).count()
       } else Pq.l2TopK(q, e512, "vec_id", "embedding", 10).count()
-    val n = e512.count()
-    val nq = q.count()
-    e512.unpersist(true)
-    (nq * (n - 1), rows)
+    (q.count() * (e512.count() - 1), rows)
   }
 
   /** q157's posting-join law: each query term meets only documents
@@ -465,10 +445,9 @@ object ScaleLaws {
     * must grow ~linearly in n even as the query count scales with the
     * corpus. candidates := scored (query, doc) pairs, pairs := top-5
     * rows. */
-  def bm25Postings(docs: DataFrame): (Long, Long) = {
-    val toks = docs.select(col("doc_id"),
-        explode(graft.ops.TextAnalysis.tokens(col("text"))).as("t"))
-      .localCheckpoint()
+  def bm25Postings(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
+    val toks = ck(docs.select(col("doc_id"),
+      explode(graft.ops.TextAnalysis.tokens(col("text"))).as("t")))
     val tf = toks.groupBy(col("doc_id"), col("t")).agg(count(lit(1)).as("tf"))
     val qterms = toks.where(pmod(col("doc_id"), lit(997)) === 0)
       .select(col("doc_id").as("q_id"), col("t")).distinct()
@@ -478,7 +457,6 @@ object ScaleLaws {
     val topk = Pairs.topK(qterms.join(tf, Seq("t"))
         .groupBy(col("q_id"), col("doc_id")).agg(count(lit(1)).as("n_shared")),
       Seq(col("q_id")), Seq(col("n_shared").desc, col("doc_id").asc), 5).count()
-    toks.unpersist(true)
     (nCand, topk)
   }
 
@@ -487,7 +465,7 @@ object ScaleLaws {
     * compression-ladder comparison (full vectors / 8× SQ codes / 64×
     * PQ codes) on identical candidate volume. */
   def sqScan(emb: DataFrame): (Long, Long) = {
-    val q = emb.where(pmod(col("vec_id"), lit(97)) === 0)
+    val q = querySample(emb)
     val rows = graft.ops.Sq.sqTopK(q, emb, "vec_id", "embedding", 10).count()
     val nq = q.count()
     (nq * (emb.count() - 1), rows)
@@ -497,18 +475,14 @@ object ScaleLaws {
     * prefilter, exact re-rank, hits@10 vs the exact scan. The law is
     * SQ recall ≥ PQ recall at the same prefilter (8× compression
     * keeps per-dim resolution PQ's 64× gives up). */
-  def sqRerank(emb: DataFrame): (Long, Long) = {
+  def sqRerank(emb: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
     import graft.ops.{Pq, Sq}
-    val q = emb.where(pmod(col("vec_id"), lit(97)) === 0)
-    val exact = Pq.l2TopK(q, emb, "vec_id", "embedding", 10)
-      .select("q_id", "c_id").localCheckpoint()
-    val rr = Sq.sqRerankTopK(q, emb, "vec_id", "embedding",
-        prefilterK = 100, topK = 10)
-      .select("q_id", "c_id").localCheckpoint()
+    val q = querySample(emb)
+    val exact = ck(Pq.l2TopK(q, emb, "vec_id", "embedding", 10).select("q_id", "c_id"))
+    val rr = ck(Sq.sqRerankTopK(q, emb, "vec_id", "embedding",
+        prefilterK = 100, topK = 10).select("q_id", "c_id"))
     val hits = exact.join(rr, Seq("q_id", "c_id"), "left_semi").count()
-    val nCand = q.count() * 100
-    exact.unpersist(true); rr.unpersist(true)
-    (nCand, hits)
+    (q.count() * 100, hits)
   }
 
   /** q163's skipping law on a uniform synthetic grid (x cycles with
@@ -518,12 +492,11 @@ object ScaleLaws {
     * z-order touched rows (should track band-fraction × n ≈ n/8 plus
     * file-boundary slack), pairs := x-major touched rows (→ n: every
     * file holds the full y extent). */
-  def zorderSkip(docs: DataFrame): (Long, Long) = {
+  def zorderSkip(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
     import org.apache.spark.sql.expressions.Window
-    val base = docs.select(
+    val base = ck(docs.select(
         (col("doc_id") % 256).as("x"), pmod(hash(col("doc_id")), lit(256)).cast("long").as("y"))
-      .withColumn("zkey", graft.ops.ZOrder.interleave(col("x"), col("y"), 8))
-      .localCheckpoint()
+      .withColumn("zkey", graft.ops.ZOrder.interleave(col("x"), col("y"), 8)))
     def bandRows(order: Seq[org.apache.spark.sql.Column]): Long =
       base.withColumn("f", ntile(64).over(Window.orderBy(order: _*)))
         .groupBy(col("f"))
@@ -531,27 +504,22 @@ object ScaleLaws {
         .where(col("mny") <= 31 && col("mxy") >= 0) // y-band [0, 31]
         .agg(coalesce(sum(col("n")), lit(0L)))
         .head().getLong(0)
-    val z = bandRows(Seq(col("zkey"), col("x"), col("y")))
-    val lin = bandRows(Seq(col("x"), col("y")))
-    base.unpersist(true)
-    (z, lin)
+    (bandRows(Seq(col("zkey"), col("x"), col("y"))), bandRows(Seq(col("x"), col("y"))))
   }
 
   /** q164's unigram-LM scoring: model build (one count agg) + the
     * posting-shaped scoring join + per-doc mean. candidates := token
     * instances (the join's probe side), pairs := docs scored — both
     * linear in n; the timing row is the law. */
-  def unigramLm(docs: DataFrame): (Long, Long) = {
-    val toks = docs.select(col("doc_id"),
-        explode(graft.ops.TextAnalysis.tokens(col("text"))).as("t"))
-      .localCheckpoint()
+  def unigramLm(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
+    val toks = ck(docs.select(col("doc_id"),
+      explode(graft.ops.TextAnalysis.tokens(col("text"))).as("t")))
     val nTok = toks.count()
     val cnt = toks.groupBy(col("t")).agg(count(lit(1)).as("ct"))
     val scored = toks.join(broadcast(cnt), Seq("t"))
       .groupBy(col("doc_id"))
       .agg((sum(col("ct")).cast("double") / count(lit(1))).as("mean_ct"))
       .count()
-    toks.unpersist(true)
     (nTok, scored)
   }
 
@@ -559,44 +527,36 @@ object ScaleLaws {
     * surviving shingle-join pairs (the df-cap holds them near-linear),
     * pairs := contained pairs at the 0.8 bar. Same law as
     * shingle_jaccard — the extra per-pair division is free. */
-  def containment(docs: DataFrame): (Long, Long) = {
-    val sh = TextAnalysis.shingleRowsOf(docs).localCheckpoint()
-    val joinable = TextAnalysis.dfCappedShingles(sh).localCheckpoint()
+  def containment(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
+    val sh = ck(TextAnalysis.shingleRowsOf(docs))
+    val joinable = ck(TextAnalysis.dfCappedShingles(sh))
     val sizes = joinable.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val pairs = Pairs.sides(
-        Pairs.sharedKey(joinable, "sh").where(col("inter") >= 2),
-        sizes, Seq("na"), Seq("nb"))
-      .localCheckpoint()
-    val cand = pairs.count()
-    val contained = pairs.where(
+    val pairs = ck(Pairs.sides(
+      Pairs.sharedKey(joinable, "sh").where(col("inter") >= 2),
+      sizes, Seq("na"), Seq("nb")))
+    (pairs.count(), pairs.where(
       greatest(col("inter").cast("double") / col("na"),
-        col("inter").cast("double") / col("nb")) >= 0.8).count()
-    sh.unpersist(true); joinable.unpersist(true); pairs.unpersist(true)
-    (cand, contained)
+        col("inter").cast("double") / col("nb")) >= 0.8).count())
   }
 
   /** q171's sequence layout: one per-shard running sum + integer
     * division — candidates := docs laid out, pairs := boundary-split
     * docs (expected ≈ docs · mean_toks/L). Linear; the timing row is
     * the law. */
-  def seqLayout(docs: DataFrame): (Long, Long) = {
+  def seqLayout(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
     import org.apache.spark.sql.expressions.Window
     val h = graft.functions.EvmExprs.tokenHash(col("doc_id").cast("string"))
     val wOrd = Window.partitionBy(col("shard")).orderBy(col("h").asc, col("doc_id").asc)
     val wSum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val laid = docs
+    val laid = ck(docs
       .select(col("doc_id"),
         size(graft.ops.TextAnalysis.tokens(col("text"))).cast("long").as("n_toks"))
       .withColumn("h", h)
       .withColumn("shard", pmod(col("h"), lit(8L)))
       .withColumn("cum", sum(col("n_toks")).over(wSum))
       .select(expr("(cum - n_toks) div 512").as("first_seq"),
-        expr("(cum - 1) div 512").as("last_seq"))
-      .localCheckpoint()
-    val n = laid.count()
-    val split = laid.where(col("last_seq") > col("first_seq")).count()
-    laid.unpersist(true)
-    (n, split)
+        expr("(cum - 1) div 512").as("last_seq")))
+    (laid.count(), laid.where(col("last_seq") > col("first_seq")).count())
   }
 
   /** q152's shard-balance concentration: hash-mod sharding engineers
@@ -656,18 +616,14 @@ object ScaleLaws {
     * batch at every n (the join the sketch buys away), and the two
     * families' pairs columns must be EQUAL at every scale — the
     * no-false-negatives law. */
-  def bloomGate(docs: DataFrame): (Long, Long) = {
+  def bloomGate(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
     val k = docs.select(col("doc_id"), md5(col("text")).as("key"))
-    val corpus = k.where(col("doc_id") % 5 =!= 0).select("key").localCheckpoint()
+    val corpus = ck(k.where(col("doc_id") % 5 =!= 0).select("key"))
     val batch = k.where(col("doc_id") % 5 === 0)
     val bf = corpus.stat.bloomFilter("key", math.max(corpus.count(), 1L), 0.01)
-    val cand = batch
-      .where(graft.functions.BloomExprs.mightContain(bf)(col("key")))
-      .localCheckpoint()
+    val cand = ck(batch.where(graft.functions.BloomExprs.mightContain(bf)(col("key"))))
     val confirmed = cand.join(corpus, Seq("key"), "left_semi").count()
-    val nCand = cand.count()
-    cand.unpersist(true); corpus.unpersist(true)
-    (nCand, confirmed)
+    (cand.count(), confirmed)
   }
 
   /** q186's learn loop under corpus growth. The shared mutated
@@ -690,7 +646,7 @@ object ScaleLaws {
     val row = dicts.last
       .select(col("freq"), explode(col("syms")).as("sym"))
       .agg(sum(col("freq")), countDistinct(col("sym"))).collect()(0)
-    dicts.foreach(_.unpersist(true))
+    dicts.foreach(Checkpoints.release)
     (row.getLong(0), row.getLong(1))
   }
 
@@ -704,14 +660,12 @@ object ScaleLaws {
     * law FilteredAnnSpec pins at one scale, measured across the
     * ladder. Timed cost includes the bootstrap (index build), like
     * every index-building family here. */
-  def filteredAnn(emb: DataFrame, factor: Int): (Long, Long) = {
+  def filteredAnn(emb: DataFrame, factor: Int): (Long, Long) = Checkpoints.scoped { ck =>
     import graft.streaming.SemanticStream
     val root = graft.Temps.dir(s"scalelaws-fann-f$factor")
     SemanticStream.bootstrap(emb, root, withSq = true)
-    val queries = emb.where(pmod(col("vec_id"), lit(97)) === 0)
-      .localCheckpoint()
-    val allowed = emb.where(col("label") === 3)
-      .select(col("vec_id").as("id")).localCheckpoint()
+    val queries = ck(querySample(emb))
+    val allowed = ck(emb.where(col("label") === 3).select(col("vec_id").as("id")))
     val pre = SemanticStream.queryTopKSq(queries, root, topK = 3,
       prefilterC = SemanticStream.ServePolicy.PrefilterC,
       nProbe = SemanticStream.ServePolicy.NProbe,
@@ -721,19 +675,21 @@ object ScaleLaws {
         nProbe = SemanticStream.ServePolicy.NProbe)
       .join(allowed.withColumnRenamed("id", "c_id"), Seq("c_id"), "left_semi")
       .count()
-    queries.unpersist(true); allowed.unpersist(true)
     (pre, post)
   }
 
-  def exactSemiJoin(docs: DataFrame): (Long, Long) = {
+  def exactSemiJoin(docs: DataFrame): (Long, Long) = Checkpoints.scoped { ck =>
     val k = docs.select(col("doc_id"), md5(col("text")).as("key"))
-    val corpus = k.where(col("doc_id") % 5 =!= 0).select("key").localCheckpoint()
-    val batch = k.where(col("doc_id") % 5 === 0).localCheckpoint()
+    val corpus = ck(k.where(col("doc_id") % 5 =!= 0).select("key"))
+    val batch = ck(k.where(col("doc_id") % 5 === 0))
     val confirmed = batch.join(corpus, Seq("key"), "left_semi").count()
-    val nBatch = batch.count()
-    batch.unpersist(true); corpus.unpersist(true)
-    (nBatch, confirmed)
+    (batch.count(), confirmed)
   }
+
+  /** The query sample every serving family scores: `vec_id % 97 = 0`. */
+  def querySample(emb: DataFrame): DataFrame = emb.where(pmod(col("vec_id"), lit(97)) === 0)
+
+  // ---------------------------------------------------------------- harness
 
   private[bench] def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
@@ -741,125 +697,183 @@ object ScaleLaws {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val factors = args.lift(1).getOrElse("1,4,16").split(",").map(_.trim.toInt).toSeq
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    try {
-      val docs0 = graft.queries.Tables.documents(spark, sfDir)
-      val emb0 = graft.queries.Tables.embeddings(spark, sfDir)
-      val nDocs0 = docs0.count()
-      val nEmb0 = emb0.count()
-      // log4(factor): the K levers grow one notch per 4× n, so a
-      // correctly-tuned index holds candidate growth LINEAR in n
-      def log4(f: Int): Int = (31 - Integer.numberOfLeadingZeros(f)) / 2
-      val fams: Seq[(String, Boolean, (DataFrame, Int) => (Long, Long))] = Seq(
-        ("simhash_narrow_q112", true, (df, _) => simhashNarrow(df)),
-        ("simhash_wide_q121", true, (df, _) => simhashWide(df)),
-        ("minhash_bands_q28", true, (df, _) => minhashBands(df)),
-        ("shingle_jaccard_q24", true, (df, _) => shingleJaccard(df)),
-        ("span_dedup_q134", true, (df, _) => spanDedup(df)),
-        ("span_confirm30_q138", true, (df, _) => spanConfirmNarrow(df)),
-        ("curate_pipeline_q141", true, (df, _) => curatePipeline(df)),
-        ("lsh_cosine_q32_33", false, (df, _) => lshCosine(df)),
-        // plane sweep AT EACH n (factors give the n axis): candidates
-        // at (4n, p+Δ) vs (n, p) across these rows measure how many
-        // plane notches a 4× corpus actually needs to hold candidate
-        // volume linear — the uniform-hash arithmetic says Δ=2, the
-        // r5 measurement hinted more; this pins the real rule
-        ("lsh_cosine_p10", false, (df, _) => lshCosine(df, 10)),
-        ("lsh_cosine_p12", false, (df, _) => lshCosine(df, 12)),
-        ("lsh_cosine_p14", false, (df, _) => lshCosine(df, 14)),
-        ("ivf_probe_q34_35", false, (df, _) => ivfProbe(df)),
-        ("semantic_dedup_q135", false, (df, _) => semanticDedup(df)),
-        ("semantic_dedup_scaledK", false, (df, f) =>
-          semanticDedup(df, SimSearch.IvfK * f)),
-        ("semantic_dedup_sharded", false, (df, f) =>
-          semanticDedupSharded(df, f)),
-        // the documented remedies, MEASURED: +4 planes per 4× n (the
-        // sweep above measured each plane dividing collisions by only
-        // ~1.36 on real sign-buckets, so the uniform-hash +2 leaves
-        // 8.6× growth per step — the notch rule is the measured one),
-        // and 4× IVF cells per 4× n — candidate volume should grow
-        // ~linearly instead of quadratically
-        ("lsh_cosine_scaledK", false, (df, f) =>
-          lshCosine(df, SimSearch.LshPlanes + 4 * log4(f))),
-        ("ivf_probe_scaledK", false, (df, f) =>
-          ivfProbe(df, SimSearch.IvfK * f)),
-        // PQ compression dividend + its recall price (q148): exact and
-        // ADC scans at identical candidate volume, then recall@10 for
-        // seeded vs Lloyd-refined books
-        ("l2_exact_scan_q148", false, (df, _) => l2ExactScan(df)),
-        ("pq_adc_scan_q148", false, (df, _) => pqAdcScan(df)),
-        ("pq_recall_seeded_q148", false, (df, _) => pqRecall(df, trained = false)),
-        ("pq_recall_trained_q148", false, (df, _) => pqRecall(df, trained = true)),
-        ("pq_rerank_q151", false, (df, _) => pqRerank(df)),
-        ("l2_exact_d512", false, (df, _) => scan512(df, adc = false)),
-        ("pq_adc_d512", false, (df, _) => scan512(df, adc = true)),
-        // Bloom gate (q149) vs its ungated twin: equal confirmed-dup
-        // columns at every n (no false negatives), candidate sliver
-        // ≈ dups + 1% of batch
-        ("bloom_gate_q149", true, (df, _) => bloomGate(df)),
-        ("exact_semijoin_q149", true, (df, _) => exactSemiJoin(df)),
-        ("shard_balance_q152", true, (df, _) => shardBalance(df)),
-        ("bm25_postings_q157", true, (df, _) => bm25Postings(df)),
-        // round-8 families: the SQ rungs of the compression ladder
-        // (compare against l2_exact_scan / pq_adc_scan rows), the
-        // z-order skipping law, and the unigram-LM scoring pass
-        ("sq_scan_q160", false, (df, _) => sqScan(df)),
-        ("sq_rerank_q161", false, (df, _) => sqRerank(df)),
-        ("zorder_skip_q163", true, (df, _) => zorderSkip(df)),
-        ("unigram_lm_q164", true, (df, _) => unigramLm(df)),
-        ("containment_q170", true, (df, _) => containment(df)),
-        ("seq_layout_q171", true, (df, _) => seqLayout(df)),
-        // round-10 families: BPE learn cost vs corpus growth (vocab
-        // must stay flat), and filtered-ANN pre- vs post-filter fill
-        ("bpe_learn_q186", true, (df, f) => bpeLearnLaw(df, f)),
-        ("filtered_ann_q188", false, (df, f) => filteredAnn(df, f)),
-        // q202's order-statistics twins: same exact selection, sorted
-        // rows n (window) vs ~n/1024 (histogram cutoff)
-        ("sample_window_q202", true, (df, _) => sampleWindow(df)),
-        ("sample_histcut_q202", true, (df, _) => sampleHistCut(df)))
-      // one amplified corpus per (factor, kind), shared by every family
-      // and unpersisted before the next factor — rebuilding it per
-      // family (and stacking 24 localCheckpoints) both wastes wall-clock
-      // and pressures executor storage toward eviction at high factors
-      // optional family filter (re-measure one family without paying
-      // for the whole matrix)
-      val famFilter: String => Boolean = args.lift(2) match {
-        case Some(subs) =>
-          val ps = subs.split(",").map(_.trim).filter(_.nonEmpty)
-          name => ps.exists(name.contains)
-        case None => _ => true
-      }
-      val selected = fams.filter(t => famFilter(t._1))
-      val rows = factors.flatMap { factor =>
-        // amplify only the corpus KINDS the selected families read — a
-        // doc-only (or embeddings-only) filtered run must not pay for
-        // the other corpus's amplification, which dominates wall-clock
-        // at high factors
-        val docsData = if (selected.exists(_._2))
-          Some(amplifyDocs(docs0, factor).localCheckpoint()) else None
-        val embData = if (selected.exists(!_._2))
-          Some(amplifyEmbeddings(emb0, factor).localCheckpoint()) else None
-        val rs = selected.map { case (name, isDoc, f) =>
-          val data = if (isDoc) docsData.get else embData.get
-          val n = (if (isDoc) nDocs0 else nEmb0) * factor
-          val ((cand, pairs), secs) = time(f(data, factor))
-          println(s"""{"family":"$name","n":$n,"factor":$factor,""" +
-            s""""candidates":$cand,"pairs":$pairs,"secs":${math.round(secs * 100) / 100.0}}""")
-          (name, n, factor, cand, pairs, secs)
+  private[bench] def roundTo(x: Double, dp: Int): Double = {
+    val s = math.pow(10, dp)
+    math.round(x * s) / s
+  }
+
+  private val Json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** One family row as a JSON object on one line, `family` first and the
+    * columns in the order given. A Double in a `secs` or `*_secs` column
+    * is rounded to 2 dp here; every other column is written as passed. */
+  def line(family: String, cols: (String, Any)*): String =
+    Json.writeValueAsString(ListMap(("family" -> family) +: cols.map {
+      case (k, x: Double) if k == "secs" || k.endsWith("_secs") => k -> roundTo(x, 2)
+      case kv => kv
+    }: _*))
+
+  def emit(family: String, cols: (String, Any)*): Unit = println(line(family, cols: _*))
+
+  /** A pinned gold top-k frame of (q_id, c_id) rows and its size. */
+  final class Gold private[bench] (rows: DataFrame) {
+    val n: Long = rows.count()
+
+    def hits(served: DataFrame): Long =
+      rows.join(served.select("q_id", "c_id"), Seq("q_id", "c_id"), "left_semi").count()
+
+    /** The recall@3 cell: gold ⋈ served hits over the gold size, 4 dp. */
+    def recall(hits: Long): Seq[(String, Any)] =
+      Seq("gold" -> n, "hits" -> hits, "recall3" -> roundTo(hits.toDouble / n, 4))
+  }
+
+  /** What a family body measures with: the session, the sf directory and
+    * the cell's checkpoint scope, which closes when the body returns. */
+  final class Cell private[bench] (val spark: SparkSession, val sfDir: String,
+      val pin: Checkpoints.Scope) {
+    def docs: DataFrame = Tables.documents(spark, sfDir)
+    def emb: DataFrame = Tables.embeddings(spark, sfDir)
+    def queries(emb: DataFrame): DataFrame = pin(querySample(emb))
+
+    def gold(topK: DataFrame): Gold = new Gold(pin(topK.select("q_id", "c_id")))
+
+    /** The exact full-scan top-3 of `queries` over `emb`. */
+    def bruteGold(queries: DataFrame, emb: DataFrame): Gold =
+      gold(SimSearch.bruteForceTopK(queries, emb, "vec_id", "embedding", k = 3))
+
+    /** The covering MaxSim top-3: a prefilter of n admits every pair, so
+      * the re-rank is the unbounded MaxSim. */
+    def maxSimGold(queries: DataFrame, emb: DataFrame): Gold =
+      gold(LateInteraction.maxSimTopK(queries, emb, "vec_id", "embedding",
+        k = 3, prefilterC = emb.count().toInt))
+
+    /** Serve `f` `reps` times, pinning and counting each result inside the
+      * timer, and score the fastest run against `gold`: the recall@3 cell
+      * plus its `secs`. Min-of-2 drops the first run's code generation. */
+    def served(gold: Gold, reps: Int = 1)(f: => DataFrame): Seq[(String, Any)] = {
+      val (hits, secs) = (1 to reps).map { _ =>
+        Checkpoints.scoped { ck =>
+          val (df, s) = time { val r = ck(f.select("q_id", "c_id")); r.count(); r }
+          (gold.hits(df), s)
         }
-        docsData.foreach(_.unpersist(true))
-        embData.foreach(_.unpersist(true))
-        rs
+      }.minBy(_._2)
+      gold.recall(hits) :+ ("secs" -> secs)
+    }
+  }
+
+  /** A candidate-volume law: run once per factor on the amplified docs or
+    * embeddings, returning (candidates, surviving pairs). */
+  final case class Law(name: String, docs: Boolean, f: (DataFrame, Int) => (Long, Long))
+
+  /** A family measured on its own fixed corpus, once per run: the family
+    * names its body emits and the body. */
+  final case class Family(names: Seq[String], body: Cell => Unit)
+
+  // log4(factor): the K levers grow one notch per 4× n, so a correctly
+  // tuned index holds candidate growth LINEAR in n
+  private def log4(f: Int): Int = (31 - Integer.numberOfLeadingZeros(f)) / 2
+
+  val Laws: Seq[Law] = Seq(
+    Law("simhash_narrow_q112", true, (df, _) => simhashNarrow(df)),
+    Law("simhash_wide_q121", true, (df, _) => simhashWide(df)),
+    Law("minhash_bands_q28", true, (df, _) => minhashBands(df)),
+    Law("shingle_jaccard_q24", true, (df, _) => shingleJaccard(df)),
+    Law("span_dedup_q134", true, (df, _) => spanDedup(df)),
+    Law("span_confirm30_q138", true, (df, _) => spanConfirmNarrow(df)),
+    Law("curate_pipeline_q141", true, (df, _) => curatePipeline(df)),
+    Law("lsh_cosine_q32_33", false, (df, _) => lshCosine(df)),
+    // plane sweep AT EACH n (factors give the n axis): candidates at
+    // (4n, p+Δ) vs (n, p) measure how many plane notches a 4× corpus
+    // needs to hold candidate volume linear
+    Law("lsh_cosine_p10", false, (df, _) => lshCosine(df, 10)),
+    Law("lsh_cosine_p12", false, (df, _) => lshCosine(df, 12)),
+    Law("lsh_cosine_p14", false, (df, _) => lshCosine(df, 14)),
+    Law("ivf_probe_q34_35", false, (df, _) => ivfProbe(df)),
+    Law("semantic_dedup_q135", false, (df, _) => semanticDedup(df)),
+    Law("semantic_dedup_scaledK", false, (df, f) => semanticDedup(df, SimSearch.IvfK * f)),
+    Law("semantic_dedup_sharded", false, (df, f) => semanticDedupSharded(df, f)),
+    // the documented remedies, MEASURED: +4 planes per 4× n (each plane
+    // divides collisions by only ~1.36 on real sign-buckets) and 4× IVF
+    // cells per 4× n — candidate volume should grow ~linearly
+    Law("lsh_cosine_scaledK", false, (df, f) => lshCosine(df, SimSearch.LshPlanes + 4 * log4(f))),
+    Law("ivf_probe_scaledK", false, (df, f) => ivfProbe(df, SimSearch.IvfK * f)),
+    // PQ compression dividend + its recall price (q148)
+    Law("l2_exact_scan_q148", false, (df, _) => l2ExactScan(df)),
+    Law("pq_adc_scan_q148", false, (df, _) => pqAdcScan(df)),
+    Law("pq_recall_seeded_q148", false, (df, _) => pqRecall(df, trained = false)),
+    Law("pq_recall_trained_q148", false, (df, _) => pqRecall(df, trained = true)),
+    Law("pq_rerank_q151", false, (df, _) => pqRerank(df)),
+    Law("l2_exact_d512", false, (df, _) => scan512(df, adc = false)),
+    Law("pq_adc_d512", false, (df, _) => scan512(df, adc = true)),
+    // Bloom gate (q149) vs its ungated twin: equal confirmed-dup columns
+    // at every n (no false negatives)
+    Law("bloom_gate_q149", true, (df, _) => bloomGate(df)),
+    Law("exact_semijoin_q149", true, (df, _) => exactSemiJoin(df)),
+    Law("shard_balance_q152", true, (df, _) => shardBalance(df)),
+    Law("bm25_postings_q157", true, (df, _) => bm25Postings(df)),
+    Law("sq_scan_q160", false, (df, _) => sqScan(df)),
+    Law("sq_rerank_q161", false, (df, _) => sqRerank(df)),
+    Law("zorder_skip_q163", true, (df, _) => zorderSkip(df)),
+    Law("unigram_lm_q164", true, (df, _) => unigramLm(df)),
+    Law("containment_q170", true, (df, _) => containment(df)),
+    Law("seq_layout_q171", true, (df, _) => seqLayout(df)),
+    Law("bpe_learn_q186", true, (df, f) => bpeLearnLaw(df, f)),
+    Law("filtered_ann_q188", false, (df, f) => filteredAnn(df, f)),
+    // q202's order-statistics twins: same exact selection, sorted rows
+    // n (window) vs ~n/1024 (histogram cutoff)
+    Law("sample_window_q202", true, (df, _) => sampleWindow(df)),
+    Law("sample_histcut_q202", true, (df, _) => sampleHistCut(df)))
+
+  val Families: Seq[Family] = Seq(
+    Family(Seq("attr_bucketed"), Layouts.attrBucketed),
+    Family(Seq("slot_forward"), Layouts.slotForward),
+    Family(Seq("lex_prune"), Layouts.lexPrune),
+    Family(Seq("slot_gather_prune"), Layouts.slotGatherPrune),
+    Family(Seq("phash_band"), Layouts.phashBand),
+    Family(Seq("phash_online"), Layouts.phashOnline),
+    Family(Seq("curate_ingest", "curate_compact"), CurateRehearsal.measure),
+    Family(Seq("semantic_ingest_drift"), SemanticRehearsal.measure),
+    Family(Seq("extract_rehearsal"), ExtractRehearsal.measure),
+    Family(Seq("jl_distortion"), Serving.jlDistortion),
+    Family(Seq("franken_residual"), Serving.frankenResidual),
+    Family(Seq("serve_path", "jl_rotate"), Serving.servePath),
+    Family(Seq("serve_sweep"), Serving.serveSweep),
+    Family(Seq("maxsim_serve", "maxsim_cost"), Serving.maxSim),
+    Family(Seq("slot_sweep", "slot_kladder"), Serving.slotSweep),
+    Family(Seq("slot_policy"), Serving.slotPolicy),
+    Family(Seq("slot_align"), Serving.slotAlign),
+    Family(Seq("slot_drift", "slot_drift_serve"), Serving.slotDrift))
+
+  /** Every selected law at every factor, then every selected fixed-corpus
+    * family once; `filter` is a csv of family-name substrings (empty
+    * selects all). Each family cell runs inside its own checkpoint scope,
+    * and each factor's amplified corpora inside one that closes before
+    * the next factor. */
+  def run(spark: SparkSession, sfDir: String, factors: Seq[Int], filter: String): Unit = {
+    val pats = filter.split(",").map(_.trim).filter(_.nonEmpty)
+    def picked(names: Seq[String]) = pats.isEmpty || names.exists(n => pats.exists(n.contains))
+    val laws = Laws.filter(l => picked(Seq(l.name)))
+    for (factor <- factors if laws.nonEmpty) Checkpoints.scoped { corpora =>
+      // amplify only the corpus kinds the selected laws read
+      lazy val docs = corpora(amplifyDocs(Tables.documents(spark, sfDir), factor))
+      lazy val emb = corpora(amplifyEmbeddings(Tables.embeddings(spark, sfDir), factor))
+      laws.foreach { l =>
+        val data = if (l.docs) docs else emb
+        val ((cand, pairs), secs) = time(l.f(data, factor))
+        emit(l.name, "n" -> data.count(), "factor" -> factor,
+          "candidates" -> cand, "pairs" -> pairs, "secs" -> secs)
       }
-      println("\n| family | n | candidates | pairs | secs |")
-      println("|---|---|---|---|---|")
-      rows.foreach { case (name, n, _, cand, pairs, secs) =>
-        println(f"| $name | $n%d | $cand%d | $pairs%d | $secs%.2f |")
-      }
-    } finally spark.stop()
+    }
+    Families.filter(f => picked(f.names)).foreach { f =>
+      Checkpoints.scoped(ck => f.body(new Cell(spark, sfDir, ck)))
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    try run(spark, args.headOption.getOrElse("/root/testdata/sf0.1"),
+      args.lift(1).getOrElse("1,4,16").split(",").map(_.trim.toInt).toSeq,
+      args.lift(2).getOrElse(""))
+    finally spark.stop()
   }
 }

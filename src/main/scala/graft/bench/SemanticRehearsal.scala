@@ -2,6 +2,9 @@ package graft.bench
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.Checkpoints
+import graft.bench.ScaleLaws.{Cell, emit, roundTo, time}
 import graft.streaming.SemanticStream
 
 /** Measures the DRIFT LAW behind [[SemanticStream]]'s frozen codebook —
@@ -23,9 +26,9 @@ import graft.streaming.SemanticStream
   *    sign-noise ≈ 0 ≪ 0.3), so per-batch canary recall measures
   *    exactly P(near-pair co-assigned) — the quantity cell-boundary
   *    geometry degrades as the codebook stops fitting;
-  *  - at batch `retrainAt` (2B/3 by default) one [[SemanticStream
-  *    .retrain]] re-fits the codebook to the accumulated inverted file
-  *    (base + every kept drifted vector) and the remaining batches
+  *  - at batch 2B/3 one [[SemanticStream.retrain]] re-fits the
+  *    codebook to the accumulated inverted file (base + every kept
+  *    drifted vector) and the remaining batches
   *    measure the recovery.
   *
   * Per batch it reports canary recall, the batch's max-cell share
@@ -36,13 +39,16 @@ import graft.streaming.SemanticStream
   * costs only ~3 recall points at p=1) and retraining does NOT win
   * those points back — finer cells straddle more; retrain is the
   * BALANCE remedy (collapse mode's top-cell share), multi-probe
-  * ingest (`probes` arg → [[SemanticStream.ingestVectors]]) is the
+  * ingest (`probes` → [[SemanticStream.ingestVectors]]) is the
   * RECALL remedy (p=2 holds drifted recall ≈ 0.99 at unchanged
   * candidate volume), and planted canaries are the in-band monitor
   * for both.
   *
-  * Usage: `runMain graft.bench.SemanticRehearsal [batches=24]
-  * [retrainAt=16] [sfDir=/root/testdata/sf0.1] [k=32] [probes=1]`. */
+  * The ScaleLaws family `semantic_ingest_drift`: 24 batches, K = 32,
+  * both drift modes, at three maintenance points — probes 1 with the
+  * scheduled retrain, probes 2 with it, and probes 1 under the
+  * MECHANIZED policy (no scheduled retrain: every batch runs the
+  * imbalance trigger at threshold 0.11). */
 object SemanticRehearsal {
 
   /** Deterministic per-dimension sign flip — the fixed "new domain"
@@ -103,101 +109,56 @@ object SemanticRehearsal {
       perturb(col("embedding"), col("vec_id")).as("embedding")))
   }
 
-  def main(args: Array[String]): Unit = {
-    val batches = args.headOption.map(_.toInt).getOrElse(24)
-    val retrainAt = args.lift(1).map(_.toInt).getOrElse(batches * 2 / 3)
-    val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
+  def measure(c: Cell): Unit = {
+    val batches = 24
+    val retrainAt = batches * 2 / 3
     // 2× the query default: the drift law is boundary geometry, and at
     // K=16 over 2k base vectors the cells are so coarse that even a
     // fully-drifted stream barely straddles them (measured ~0.96 recall
     // at α=1) — K=32 is also the K the √n rule would pick at this n
-    val k = args.lift(3).map(_.toInt).getOrElse(2 * graft.ops.SimSearch.IvfK)
-    // the dup-recall lever under test in the p-sweep: batch-side probe
-    // list width (assignment and the stored file are unchanged)
-    val probes = args.lift(4).map(_.toInt).getOrElse(1)
-    // > 0 switches maintenance to the MECHANIZED policy: no fixed
-    // retrainAt — every batch first runs
-    // SemanticStream.retrainIfUnbalanced(threshold) and the log records
-    // when the imbalance trigger actually fires on the drift stream
-    val autoThreshold = args.lift(5).map(_.toDouble).getOrElse(0.0)
-    val spark = graft.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    try {
-      val base = graft.queries.Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-        .localCheckpoint()
-      val all = Seq("shift", "collapse").map { mode =>
-        val root = graft.Temps.dir(s"semantic-rehearsal-$mode-p$probes")
-        SemanticStream.bootstrap(base, root, k)
-        SemanticStream.retrain(spark, root, k) // codebook fits the BASE distribution
-        val rows = (0 until batches).map { b =>
-          var retrainSecs = 0.0
-          if (autoThreshold <= 0 && b == retrainAt) {
-            val r0 = System.nanoTime()
-            SemanticStream.retrain(spark, root, k)
-            retrainSecs = (System.nanoTime() - r0) / 1e9
-          }
-          val batch = batchOf(base, b, batches, mode).localCheckpoint()
-          val t0 = System.nanoTime()
-          val man = SemanticStream.ingestVectors(batch, root, probes = probes)
-          val secs = (System.nanoTime() - t0) / 1e9
-          batch.unpersist()
-          // canaries: odd re-ids (orig + 1); caught = flagged any-dup
-          val twins = man.where(col("vec_id") % 2 === 1)
-          val planted = twins.count()
-          val caught = twins.where(col("status") =!= "kept").count()
-          val recall = caught.toDouble / planted
-          val maxShare = SemanticStream.batchImbalance(man)
-          // mechanized policy: the batch-level imbalance IS the trigger
-          // input (the stored index is dedup-shielded from collapse
-          // drift — see SemanticStream.cellImbalance's note)
-          if (autoThreshold > 0 && maxShare >= autoThreshold) {
-            val r0 = System.nanoTime()
-            SemanticStream.retrain(spark, root, k)
-            retrainSecs = (System.nanoTime() - r0) / 1e9
-          }
-          // the probe's join volume this batch: batch×corpus meeting on
-          // cell plus the batch-internal pairs — the cost face drift
-          // inflates when assignments unbalance (Σ over cells)
-          val batchHist = man.groupBy(col("cell")).agg(count(lit(1)).as("bn"))
-          val corpusHist = graft.sinks.Layout
-            .readStatic(spark, root, SemanticStream.CellsEntity).get
-            .groupBy(col("cell")).agg(count(lit(1)).as("cn"))
-          val cand = batchHist.join(corpusHist, Seq("cell"), "left")
-            .agg(sum(col("bn") * coalesce(col("cn"), lit(0L)) +
-              col("bn") * (col("bn") - 1) / 2).cast("long"))
-            .head().getLong(0)
-          val alpha = alphaOf(b, batches)
-          println(f"""{"family":"semantic_ingest_drift","mode":"$mode","probes":$probes,"auto_threshold":$autoThreshold%.2f,"batch":$b,""" +
-            f""""alpha":$alpha%.3f,"planted":$planted,"caught":$caught,""" +
-            f""""recall":$recall%.3f,"max_cell_share":$maxShare%.3f,""" +
-            f""""probe_candidates":$cand,"secs":${math.round(secs * 100) / 100.0},""" +
-            f""""retrain_secs":${math.round(retrainSecs * 100) / 100.0}}""")
-          man.unpersist()
-          (b, alpha, planted, caught, recall, maxShare, cand, secs, retrainSecs)
-        }
-        (mode, rows)
+    val k = 2 * graft.ops.SimSearch.IvfK
+    val base = c.pin(c.emb.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding")))
+    for ((probes, autoThreshold) <- Seq((1, 0.0), (2, 0.0), (1, 0.11));
+        mode <- Seq("shift", "collapse")) {
+      val root = graft.Temps.dir(s"semantic-rehearsal-$mode-p$probes")
+      SemanticStream.bootstrap(base, root, k)
+      SemanticStream.retrain(c.spark, root, k) // codebook fits the BASE distribution
+      for (b <- 0 until batches) Checkpoints.scoped { ck =>
+        var retrainSecs = 0.0
+        if (autoThreshold <= 0 && b == retrainAt)
+          retrainSecs = time(SemanticStream.retrain(c.spark, root, k))._2
+        val batch = ck(batchOf(base, b, batches, mode))
+        val (man, secs) = time(ck.adopt(
+          SemanticStream.ingestVectors(batch, root, probes = probes)))
+        // canaries: odd re-ids (orig + 1); caught = flagged any-dup
+        val twins = man.where(col("vec_id") % 2 === 1)
+        val planted = twins.count()
+        val caught = twins.where(col("status") =!= "kept").count()
+        val maxShare = SemanticStream.batchImbalance(man)
+        // the mechanized policy: the batch-level imbalance IS the trigger
+        // input (the stored index is dedup-shielded from collapse drift —
+        // see SemanticStream.cellImbalance's note)
+        if (autoThreshold > 0 && maxShare >= autoThreshold)
+          retrainSecs = time(SemanticStream.retrain(c.spark, root, k))._2
+        // the probe's join volume this batch: batch×corpus meeting on cell
+        // plus the batch-internal pairs — the cost face drift inflates
+        // when assignments unbalance (Σ over cells)
+        val batchHist = man.groupBy(col("cell")).agg(count(lit(1)).as("bn"))
+        val corpusHist = graft.sinks.Layout
+          .readStatic(c.spark, root, SemanticStream.CellsEntity).get
+          .groupBy(col("cell")).agg(count(lit(1)).as("cn"))
+        val cand = batchHist.join(corpusHist, Seq("cell"), "left")
+          .agg(sum(col("bn") * coalesce(col("cn"), lit(0L)) +
+            col("bn") * (col("bn") - 1) / 2).cast("long"))
+          .head().getLong(0)
+        emit("semantic_ingest_drift", "mode" -> mode, "probes" -> probes,
+          "auto_threshold" -> autoThreshold, "batch" -> b,
+          "alpha" -> roundTo(alphaOf(b, batches), 3), "planted" -> planted,
+          "caught" -> caught, "recall" -> roundTo(caught.toDouble / planted, 3),
+          "max_cell_share" -> roundTo(maxShare, 3), "probe_candidates" -> cand,
+          "secs" -> secs, "retrain_secs" -> retrainSecs)
       }
-      println("\n| mode | batch | alpha | recall | max cell share | probe cand | ingest secs | retrain secs |")
-      println("|---|---|---|---|---|---|---|---|")
-      all.foreach { case (mode, rows) =>
-        rows.foreach { case (b, a, _, _, r, m, c, s, rs) =>
-          println(f"| $mode | $b%d | $a%.3f | $r%.3f | $m%.3f | $c%d | $s%.2f | $rs%.2f |")
-        }
-      }
-      def mean(xs: Seq[Double]) = if (xs.isEmpty) 0.0 else xs.sum / xs.size
-      all.foreach { case (mode, rows) =>
-        val pre = rows.filter(_._1 < retrainAt)
-        val post = rows.filter(_._1 >= retrainAt)
-        println(f"$mode: recall trained=${mean(pre.take(3).map(_._5))}%.3f " +
-          f"drifted=${mean(pre.takeRight(3).map(_._5))}%.3f " +
-          f"retrained=${mean(post.map(_._5))}%.3f; " +
-          f"max-cell-share trained=${mean(pre.take(3).map(_._6))}%.3f " +
-          f"drifted=${mean(pre.takeRight(3).map(_._6))}%.3f " +
-          f"retrained=${mean(post.map(_._6))}%.3f; " +
-          f"probe-cand drifted=${mean(pre.takeRight(3).map(_._7.toDouble))}%.0f " +
-          f"retrained=${mean(post.map(_._7.toDouble))}%.0f")
-      }
-    } finally spark.stop()
+    }
   }
 }

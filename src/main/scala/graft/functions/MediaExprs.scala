@@ -46,8 +46,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * DOUBLING the pigeonhole budget (exact through radius 7) and
   * doubling the bits any fixed radius is spread over — a
   * grid-constant-only change, everything downstream (banding, Hamming
-  * re-rank, manifest) width-generic. PHashBench measures both widths
-  * (`phash_band`). One prerequisite the STUB exposes that a real
+  * re-rank, manifest) width-generic. The `phash_band` family of
+  * graft.bench.ScaleLaws measures both widths. One prerequisite the STUB exposes that a real
   * codec never would: the block-mean stand-in needs payloads ≳ 2
   * bytes per grid cell — shorter payloads leave wide-grid segments
   * empty (zero bits), degenerating the hash toward all-zero keys

@@ -185,7 +185,8 @@ object Multimodal {
     * the exact full-width Hamming distance and keep ≤ `maxHamming`.
     * EXACT for maxHamming ≤ bands − 1 (3 at the default 8×9 grid, 7
     * at 16×9); above that the bands are a recall<1 prefilter
-    * (PHashBench measures the band/recall law at both widths). The
+    * (the `phash_band` family of `graft.bench.ScaleLaws` measures the
+    * band/recall law at both widths). The
     * grid is the scale knob: wider grid → more bands at the SAME
     * per-band key cardinality → larger exact radius as n² outruns
     * 2¹⁶. */

@@ -268,7 +268,7 @@ object SimSearch {
     * entry generator. The [[planeComponent]] LCG is fine for SIGN
     * buckets but is affine in its seed, and an affine family's rows
     * are too correlated to serve as a projection BASIS: the first
-    * JlRehearsal run measured its cosine distortion FLAT in d′
+    * `jl_distortion` run measured its cosine distortion FLAT in d′
     * (0.38 → 0.31 over d′ = 8 → 64) where the law demands ~1/√d′
     * halving; with this mix the family sits on the i.i.d.-gaussian
     * reference at every d′ (0.283/0.195/0.138/0.100 vs
@@ -311,7 +311,8 @@ object SimSearch {
     * vectors — at d=4096 model embeddings, d′=64 cuts every
     * downstream per-pair and per-assignment cost 64× while JL
     * concentration bounds the cosine distortion (~1/√d′); q158 and
-    * JlRehearsal MEASURE the distortion instead of asserting it. */
+    * the `jl_distortion` ScaleLaws family MEASURE the distortion
+    * instead of asserting it. */
   def jlProject(vectors: DataFrame, idCol: String, vecCol: String,
       dOut: Int, dim: Int = LshDim, seed: Long = 0L): DataFrame = {
     val v = col(vecCol).cast("array<double>")

@@ -43,7 +43,8 @@ object TextOps {
   /** q193's attribution-join + overlap-matrix shape over an arbitrary
     * (a_id, b_id) pair frame and (doc_id, source) attribution frame —
     * factored out so the 100-TB claim in q193's comment is MEASURED
-    * instead of narrated: [[graft.bench.AttrBucketBench]] runs this
+    * instead of narrated: the `attr_bucketed` family of
+    * [[graft.bench.ScaleLaws]] runs this
     * SAME plan against a doc_id-bucketed attribution table
     * ([[graft.sinks.Bucketing]]) and counts the attribution-side
     * exchanges that disappear; BucketingSpec pins the plan shape. */

@@ -1099,7 +1099,7 @@ object VectorOps {
     // embedding franken-doc — a vector averaged from two stored corpus
     // vectors in DIFFERENT cells — can land in a cell holding NEITHER
     // parent, where the probe-local dup cosine structurally never sees
-    // either one. The r9 measure-first harness (FrankenResidualBench,
+    // either one. The r9 measure-first harness (ScaleLaws,
     // SCALE_MEASURED_r9 `franken_residual`) separates the populations
     // cleanly (blends: 98% top-1 stored cosine ≥ 0.60; novel
     // directions: zero), so the gate flags keepers whose WIDENED-probe

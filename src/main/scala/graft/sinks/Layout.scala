@@ -456,7 +456,8 @@ object Layout {
     * small files per batch; after hundreds of batches every probe of
     * the index pays file listing + per-footer schema reads + one scan
     * task per tiny file — the curate/vector index cost that
-    * CurateRehearsal measures growing with batch count. Compaction
+    * the `curate_ingest` family of graft.bench.ScaleLaws measures
+    * growing with batch count. Compaction
     * rewrites the table through the same crash-safe atomic swap
     * ([[overwriteStaticAtomic]] — a kill at any point leaves a
     * complete copy) into ~targetBytes-sized files, restoring the

@@ -34,7 +34,8 @@ import graft.sinks.Layout.readStaticOrEmpty
   * and never pairs against itself. The codebook is FROZEN between
   * ingests (standard IVF practice); [[retrain]] is the periodic
   * offline pass that re-fits it to the corpus the index has actually
-  * accumulated — SemanticRehearsal measures the drift law (dup recall
+  * accumulated — the `semantic_ingest_drift` family of
+  * `graft.bench.ScaleLaws` measures the drift law (dup recall
   * decays and cells unbalance as ingested batches leave the trained
   * distribution) that sets the retrain cadence, documented in
   * SCALE.md.
@@ -140,7 +141,7 @@ object SemanticStream {
     * tracks the entity without a caller-side refresh contract. */
   val SlotForwardMetaEntity = "slot_forward_meta"
   /** Default slot-space cell count and Lloyd's rounds, pinned from the
-    * SlotSweep grid (SCALE.md round 11): with the SQ-code scoring
+    * `slot_sweep` grid (SCALE.md round 11): with the SQ-code scoring
     * stage the quantizer only GATHERS — seed and 3-round-trained
     * codebooks measured indistinguishable (recall@3 = 1.0 across the
     * grid) — so the default stays the deterministic seed (rounds = 0),
@@ -152,7 +153,7 @@ object SemanticStream {
   /** q135's duplicate threshold. */
   val DupThreshold = 0.3
 
-  /** The PINNED serving operating point — the ServeSweep-measured
+  /** The PINNED serving operating point — the `serve_sweep`-measured
     * knobs at which the SQ serving path reaches recall@3 ≥ 0.9
     * against the full-scan gold on BOTH the raw sf0.1 corpus and the
     * ×4-amplified one (SCALE.md "Serving-recall operating policy";
@@ -169,8 +170,8 @@ object SemanticStream {
 
   /** The PINNED slot-face operating point — [[ServePolicy]]'s analog
     * for [[queryTopKMaxSimSlots]], measured on the JOINT (slotK ×
-    * slotNProbe × centroid-cut) grid ([[graft.bench.SlotPolicyBench]],
-    * `slot_policy` family, SCALE.md round 12) instead of the r11
+    * slotNProbe × centroid-cut) grid (the `slot_policy` family of
+    * [[graft.bench.ScaleLaws]], SCALE.md round 12) instead of the r11
     * one-knob ladders. The serve knobs pinned here are corpus-shape
     * independent; the BOOK knobs scale with the corpus and are pinned
     * as a rule, not a constant: slotK ≈ √(n·T) trained (rounds = 3 —
@@ -715,7 +716,7 @@ object SemanticStream {
       // oracle replays it round for round). Training matters here in a
       // way it doesn't for the main codebook: probe COVERAGE of the
       // slot space is the recall ceiling of the slot stage-1, and the
-      // SlotSweep grid measured seed-only cells leaving it low.
+      // `slot_sweep` grid measured seed-only cells leaving it low.
       val sr = slotRows(corpus, idCol, vecCol, slotSlices, slotDim)
       val scb =
         if (slotRounds <= 0) SimSearch.collectCodebook(
@@ -1037,7 +1038,8 @@ object SemanticStream {
     * recommended production face is [[queryTopKMaxSimSlots]], whose
     * slot-level stage-1 probes the signal MaxSim actually ranks by.
     * Measure the C ladder against the covering gold on your corpus
-    * (MaxSimBench) before trusting a bounded budget. */
+    * (the `maxsim_serve` family of graft.bench.ScaleLaws) before
+    * trusting a bounded budget. */
   def queryTopKMaxSim(queries: DataFrame, root: String, topK: Int,
       prefilterC: Int, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -1265,7 +1267,7 @@ object SemanticStream {
     // no missing terms. (Matched-slots-only exact scoring measured an
     // 0.87 recall ceiling — docs strong outside the probed cells
     // under-rank; centroid-only scoring measured 0.37 — the w-dim
-    // coarse quantizer can't order docs. SlotSweep, SCALE.md r11.)
+    // coarse quantizer can't order docs. `slot_sweep`, SCALE.md r11.)
     // pre1 is broadcast ONLY when the cut bounded it (≤ cutC·nq
     // pairs): the uncut path's pre1 is the raw gather, whose width is
     // corpus-fraction at small K, so it keeps the planner's choice.
@@ -1711,7 +1713,7 @@ object SemanticStream {
     * land in a cell holding NEITHER parent, where the probe-local dup
     * cosine never sees either one. The franken-residual measurement
     * (SCALE_MEASURED_r9 `franken_residual`;
-    * [[graft.bench.FrankenResidualBench]]) separates the populations
+    * [[graft.bench.ScaleLaws]]) separates the populations
     * cleanly at sf0.1: cross-cell blends' top-1 stored cosine sits at
     * p50 0.71 / p99 0.80 with 98% ≥ 0.60, while genuinely novel
     * directions (decorrelated twists) top out at p99 0.51 with ZERO

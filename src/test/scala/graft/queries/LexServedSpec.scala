@@ -112,8 +112,8 @@ class LexServedSpec extends AnyFunSuite {
   }
 
   test("range-sorted compaction makes a small term probe skip most files") {
-    // the measured face of the pushed-In pruning claim (LexPruneBench
-    // carries the sf0.1 family row; this pins the mechanism at spec
+    // the measured face of the pushed-In pruning claim (the `lex_prune`
+    // ScaleLaws family is the sf0.1 row; this pins the mechanism at spec
     // scale): after compaction range-sorts the postings by t, each
     // ACTUAL file owns a term range, and a small probe's terms
     // intersect few of them — the min/max rule parquet prunes

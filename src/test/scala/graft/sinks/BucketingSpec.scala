@@ -50,7 +50,7 @@ class BucketingSpec extends AnyFunSuite {
     // partitioning survives the a_id/b_id aliasing. Broadcast is
     // disabled so the test measures the 10^10-doc regime where
     // neither side broadcasts (the r10 finding that removed the
-    // hints). AttrBucketBench carries the measured family row.
+    // hints). The `attr_bucketed` ScaleLaws family is the measured row.
     import spark.implicits._
     val srcs = (1 to 400).map(i => (i.toLong, s"s${i % 5}"))
       .toDF("doc_id", "source")
@@ -90,7 +90,7 @@ class BucketingSpec extends AnyFunSuite {
     // (SemanticStream.centroidCutScores, the exact shape the serve
     // path executes) loses the corpus-side shuffle. Broadcast is
     // disabled so the test measures the regime where neither side
-    // broadcasts. SlotForwardBench carries the measured family row.
+    // broadcasts. The `slot_forward` ScaleLaws family is the measured row.
     import spark.implicits._
     val scells = (1 to 400).flatMap(i => Seq(0, 1).map(p =>
         (i.toLong, (i % 16 + p).toLong)))

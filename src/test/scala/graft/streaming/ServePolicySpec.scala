@@ -6,7 +6,7 @@ import graft.TestSpark
 import graft.ops.SimSearch
 
 /** Regression gate for the PINNED serving operating point
-  * ([[SemanticStream.ServePolicy]]): the ServeSweep-measured knobs at
+  * ([[SemanticStream.ServePolicy]]): the `serve_sweep`-measured knobs at
   * which the SQ serving path reaches recall@3 ≥ 0.9 against the
   * full-scan gold (SCALE.md "Serving-recall operating policy";
   * measured 0.937 raw / 0.924 ×4-amplified at sf0.1). This spec

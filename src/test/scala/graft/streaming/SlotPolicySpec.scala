@@ -6,7 +6,7 @@ import graft.TestSpark
 import graft.ops.LateInteraction
 
 /** Regression gate for the PINNED slot-face operating point
-  * ([[SemanticStream.SlotPolicy]]): the SlotPolicyBench-measured knobs
+  * ([[SemanticStream.SlotPolicy]]): the `slot_policy`-measured knobs
   * at which the slot MaxSim cascade WITH the centroid cut reaches
   * recall@3 ≥ 0.9 against the covering multi-vector gold on
   * slot-ALIGNED geometry (measured 0.96 at K = 512 on the n = 8000 /
