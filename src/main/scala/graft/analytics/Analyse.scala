@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sinks.Layout
 
@@ -20,9 +20,13 @@ import graft.sinks.Layout
   *  - `lifetimes`: ContractLife rows + the RQ1-RQ4 text report
   *    (lifetimes.rs:65-294), landed as parquet + `res.txt`.
   *
-  * Scale shape: pair generation is always an equi-join on a derived key
-  * (shared interface name / shared n-gram); one-vs-all broadcasts the
-  * single target row; the report's four aggregates are scalar rows.
+  * Scale shape: one pass per call, every result computed once. Pair
+  * generation is always an equi-join on a derived key (shared interface
+  * name / shared n-gram); one-vs-all broadcasts the single target row.
+  * Both similarity legs stream into the one N-Quad write, which also
+  * counts them. The ContractLife rows are built once and landed; the
+  * report reads them back as one fused RQ1/RQ2/RQ4 aggregate, plus one
+  * RQ3 aggregate over the unstamped deployments/destructions.
   */
 object Analyse {
 
@@ -46,8 +50,10 @@ object Analyse {
       .dropDuplicates("t_hash")
 
   /** All-pairs or one-vs-all similarity over the extract layout; writes
-    * the N-Quad artifact and returns per-metric pair counts. Every
-    * checkpoint it takes is released before it returns. */
+    * the N-Quad artifact and returns per-metric pair counts, observed by
+    * the write itself. Only the one-vs-all path checkpoints (the target
+    * hashes and the n-gram rows its joins read twice), and every
+    * checkpoint is released before it returns. */
   def similarities(spark: SparkSession, root: String, outFile: String,
       address: Option[String] = None,
       interfaceSim: Boolean = true, interfaceThreshold: Double = 0.75,
@@ -81,11 +87,7 @@ object Analyse {
                     .as("jaccard"))
                 .where(col("jaccard") >= interfaceThreshold)
           }
-          // materialize once: the text write AND the pair count below both
-          // consume this leg — uncheckpointed, each .count() would re-run
-          // the full pair generation (at mainnet scale, the most expensive
-          // job in the program, three times over)
-          Some(ck(Layout.nquadLines(pairs, "Skeleton.similar_interface")))
+          Some(Layout.nquadLines(pairs, "Skeleton.similar_interface"))
         }
 
       val cosLines: Option[DataFrame] =
@@ -115,38 +117,50 @@ object Analyse {
                   (col("dot") / (col("t_norm") * col("norm"))).as("cosine"))
                 .where(col("cosine") >= cosineThreshold)
           }
-          // same once-only contract as the interface leg
-          Some(ck(Layout.nquadLines(pairs, "Skeleton.similar_code")))
+          Some(Layout.nquadLines(pairs, "Skeleton.similar_code"))
         }
 
-      val lines = (ifcLines.toSeq ++ cosLines.toSeq).reduce(_.unionByName(_))
-      lines.write.mode("overwrite").text(outFile)
-      Map(
-        "interface_pairs" -> ifcLines.map(_.count() / 2).getOrElse(0L),
-        "cosine_pairs" -> cosLines.map(_.count() / 2).getOrElse(0L))
+      // both legs feed the one text write, and each leg's lines are
+      // counted by that write's own job: an Observation above the leg's
+      // last exchange sits in the write's result stage, whose
+      // accumulator updates the scheduler applies once per partition
+      val legs = Seq("interface_pairs" -> ifcLines, "cosine_pairs" -> cosLines)
+        .collect { case (name, Some(lines)) =>
+          val seen = Observation(name)
+          (name, seen, lines.observe(seen, count(lit(1)).as("lines")))
+        }
+      legs.map(_._3).reduce(_.unionByName(_)).write.mode("overwrite").text(outFile)
+      Map("interface_pairs" -> 0L, "cosine_pairs" -> 0L) ++ legs.map {
+        case (name, seen, _) => name -> seen.get("lines").asInstanceOf[Long] / 2
+      }
     }
   }
 
   /** ContractLife rows (datetime stamped through the Block edge) +
     * the RQ1-RQ4 report, landed as `lifetimes` parquet + `res.txt`
-    * (lifetimes.rs:296-300's output_path contract). */
+    * (lifetimes.rs:296-300's output_path contract). The rows are built
+    * once, by the write; the report reads the landed table. */
   def lifetimes(spark: SparkSession, root: String, outPath: String): Map[String, Long] = {
     val blockTimes = static(spark, root, "blocks")
       .select(col("number").as("block_number"), col("datetime").as("block_datetime"))
-    def stamped(entity: String) =
+    def unstamped(entity: String) =
       static(spark, root, entity)
         .select(col("contract"), col("block_number"), col("tx_hash"))
-        .join(broadcast(blockTimes), Seq("block_number"), "left")
-    val dep = stamped("deployments")
-    val des = stamped("destructions")
-    val lives = Lifetimes.contractLives(dep, des)
-    lives.write.mode("overwrite").parquet(s"$outPath/lifetimes")
-    val reportText = Lifetimes.report(dep, des)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outPath))
+    def stamped(entity: String) =
+      unstamped(entity).join(broadcast(blockTimes), Seq("block_number"), "left")
+    val livesPath = s"$outPath/lifetimes"
+    Lifetimes.contractLives(stamped("deployments"), stamped("destructions"))
+      .write.mode("overwrite").parquet(livesPath)
+    // the report reads the landed rows back (schema from the footer: no
+    // job), and RQ3 never reads a datetime, so it joins no block times
+    val landed = Layout.readFlat(spark, livesPath).getOrElse(
+      throw new java.io.FileNotFoundException(s"$livesPath holds no parquet data"))
+    val reportText = Lifetimes.report(landed,
+      unstamped("deployments"), unstamped("destructions"))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outPath/res.txt"), reportText + "\n")
     // counted from the landed footers: no job reads the table back
-    Map("lives" -> Layout.footerRows(spark, s"$outPath/lifetimes"))
+    Map("lives" -> Layout.footerRows(spark, livesPath))
   }
 
   /** CLI face mirroring the reference's `analyse` subcommands

@@ -6,8 +6,15 @@ import org.apache.spark.sql.functions._
 /** The `analyse lifetimes` research questions (SURVEY.md §2.5 A10-A13,
   * §2.4 J5/J6; reference src/analysys/lifetimes.rs). Each RQ is a short
   * aggregation over `deployments ⟗ destructions` — the reference's
-  * graph traversal + rayon folds collapse into two groupBys and a full
-  * outer join on `contract`.
+  * graph traversal + rayon folds collapse into grouped aggregates and
+  * one equi-join on `contract`.
+  *
+  * One pass: the ContractLife rows are built once ([[contractLives]],
+  * one grouped aggregate over a tagged union). The report reads them
+  * once: RQ1, RQ2 and RQ4 are one fused aggregate over those rows
+  * ([[rq124]]) and RQ3 is one aggregate over the intra-contract join, so
+  * a report is two actions. The standalone `rq1`-`rq4` operators stay
+  * as the per-question faces (and as the fused aggregate's reference).
   */
 object Lifetimes {
 
@@ -100,25 +107,69 @@ object Lifetimes {
         stddev_pop(col("life_blocks")).as("stddev_life_blocks"),
         avg(col("life_seconds")).as("avg_life_seconds"))
 
-  /** K7: the `res.txt` analysis report (lifetimes.rs:65-294, 300) — the
-    * four RQ results formatted as prose lines. The aggregates are tiny
-    * scalars, so collecting them to the driver is the right plan. */
-  def report(deployments: DataFrame, destructions: DataFrame): String = {
-    val lives = contractLives(deployments, destructions).cache()
-    try {
-      val r1 = rq1Destroyed(lives).head()
-      val r2 = rq2OnceVsMulti(lives).head()
-      val r3 = rq3SameBlockTx(deployments, destructions).head()
-      val r4 = rq4LifetimeStats(lives).head()
-      Seq(
-        s"RQ1: ${r1.getAs[Long]("n_destroyed")} of ${r1.getAs[Long]("n_total")} contracts were destroyed at least once",
-        s"RQ2: ${r2.getAs[Long]("n_once")} destroyed exactly once, ${r2.getAs[Long]("n_multi")} more than once",
-        s"RQ3: ${r3.getAs[Long]("n_same_block_pairs")} deploy/destroy pairs in the same block (different tx), " +
-          s"${r3.getAs[Long]("n_same_tx_pairs")} in the same tx",
-        s"RQ4: avg lifetime ${r4.getAs[Double]("avg_life_blocks")} blocks " +
-          s"(stddev ${r4.getAs[Double]("stddev_life_blocks")}), " +
-          s"${r4.getAs[Double]("avg_life_seconds")} seconds, over ${r4.getAs[Long]("n_contracts")} contracts"
-      ).mkString("\n")
-    } finally lives.unpersist()
+  /** RQ1, RQ2 and RQ4 as ONE aggregate over the ContractLife rows, so
+    * the three questions cost one scan and one single-row exchange.
+    * Each conditional aggregate ranges over exactly the row set its
+    * standalone operator filters to — RQ2 over the destroyed rows
+    * ([[rq2OnceVsMulti]]), RQ4 over the deployed-and-destroyed rows with
+    * a non-negative lifetime ([[rq4LifetimeStats]]) — and skips the
+    * nulls `when` leaves outside that set, so an empty set gives the
+    * operator's null. The counts and averages are the operators' own
+    * aggregates (a double sum of whole block or second counts is exact
+    * below 2^53).
+    * The population stddev is taken from exact decimal moments
+    * (n·Σx² − (Σx)²)/n², one rounding before the square root, instead of
+    * `stddev_pop`'s streaming update, whose last digit depends on how
+    * the rows are partitioned: the report prints it in full, and the
+    * landed table it reads is partitioned unlike the frame it was
+    * built from. */
+  def rq124(lives: DataFrame): DataFrame = {
+    val destroyed = col("n_destructions") > 0
+    val lifeBlocks = col("last_destr_block") - col("first_deploy_block")
+    val lived = col("n_deploys") > 0 && destroyed && lifeBlocks >= 0
+    val lifeSeconds =
+      unix_timestamp(col("last_destr_ts")) - unix_timestamp(col("first_deploy_ts"))
+    val x = when(lived, lifeBlocks.cast("decimal(38,0)"))
+    lives.agg(
+      sum(when(destroyed, 1L).otherwise(0L)).as("n_destroyed"),
+      count(lit(1)).as("n_total"),
+      sum(when(destroyed, when(col("n_destructions") === 1, 1L).otherwise(0L)))
+        .as("n_once"),
+      sum(when(destroyed, when(col("n_destructions") > 1, 1L).otherwise(0L)))
+        .as("n_multi"),
+      count(x).as("n_contracts"),
+      avg(when(lived, lifeBlocks)).as("avg_life_blocks"),
+      sum(x).as("sum_x"), sum(x * x).as("sum_xx"),
+      avg(when(lived, lifeSeconds)).as("avg_life_seconds"))
+      .withColumn("stddev_life_blocks", when(col("n_contracts") > 0, sqrt(
+        (col("n_contracts") * col("sum_xx") - col("sum_x") * col("sum_x")).cast("double") /
+          (col("n_contracts") * col("n_contracts")).cast("double"))))
+      .drop("sum_x", "sum_xx")
   }
+
+  /** K7: the `res.txt` analysis report (lifetimes.rs:65-294, 300) — the
+    * four RQ results formatted as prose lines, from two actions: the
+    * fused [[rq124]] over `lives` and [[rq3SameBlockTx]] over the
+    * deployments/destructions (RQ3 reads only contract, block and tx).
+    * The aggregates are tiny scalars, so collecting them to the driver
+    * is the right plan. `lives` may be the landed ContractLife table, so
+    * a caller that has written it does not build it again. */
+  def report(lives: DataFrame, deployments: DataFrame,
+      destructions: DataFrame): String = {
+    val r = rq124(lives).head()
+    val r3 = rq3SameBlockTx(deployments, destructions).head()
+    Seq(
+      s"RQ1: ${r.getAs[Long]("n_destroyed")} of ${r.getAs[Long]("n_total")} contracts were destroyed at least once",
+      s"RQ2: ${r.getAs[Long]("n_once")} destroyed exactly once, ${r.getAs[Long]("n_multi")} more than once",
+      s"RQ3: ${r3.getAs[Long]("n_same_block_pairs")} deploy/destroy pairs in the same block (different tx), " +
+        s"${r3.getAs[Long]("n_same_tx_pairs")} in the same tx",
+      s"RQ4: avg lifetime ${r.getAs[Double]("avg_life_blocks")} blocks " +
+        s"(stddev ${r.getAs[Double]("stddev_life_blocks")}), " +
+        s"${r.getAs[Double]("avg_life_seconds")} seconds, over ${r.getAs[Long]("n_contracts")} contracts"
+    ).mkString("\n")
+  }
+
+  /** [[report]] over ContractLife rows built from the two inputs. */
+  def report(deployments: DataFrame, destructions: DataFrame): String =
+    report(contractLives(deployments, destructions), deployments, destructions)
 }

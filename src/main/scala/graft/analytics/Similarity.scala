@@ -13,10 +13,11 @@ import graft.ops.Pairs
   *    names only — similarities.rs:94-103, 233-238)
   *  - opcode-n-gram cosine (similarities.rs:113-143, 216-230)
   *
-  * Scale design: the reference's rayon upper-triangle loop is O(n²); we
-  * keep that as the exact formulation (with `$"a.id" < $"b.id"`) and
-  * provide the 100-TB path as an exploded-ngram EQUI-join — pairs only
-  * materialize for skeletons sharing at least one n-gram. The
+  * Scale design: the reference's rayon upper-triangle loop is O(n²);
+  * here both measures are exploded-key EQUI-joins — pairs only
+  * materialize for skeletons sharing at least one name or n-gram (the
+  * upper-triangle formulation stays in the test tree as the reference
+  * the interface join is checked against). The
   * per-ngram fan-out is not capped: an n-gram in d skeletons yields
   * d(d-1)/2 join rows.
   */
@@ -52,27 +53,12 @@ object Similarity {
     abi.groupBy(col("skeleton_hash"))
       .agg(collect_set(col("name")).as("interface"))
 
-  /** A7/J7: all pairs with interface Jaccard ≥ threshold — exact
-    * upper-triangle formulation (0 when either side empty,
-    * similarities.rs:233-238). For bounded inputs only; at scale use
-    * the exploded-name equi-join variant [[jaccardPairsBlocked]]. */
-  def jaccardPairs(interfaces: DataFrame, threshold: Double): DataFrame = {
-    val a = interfaces.toDF("a_id", "a_if")
-    val b = interfaces.toDF("b_id", "b_if")
-    a.crossJoin(b).where(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        when(size(col("a_if")) === 0 || size(col("b_if")) === 0, lit(0.0))
-          .otherwise(
-            size(array_intersect(col("a_if"), col("b_if"))).cast("double") /
-              size(array_union(col("a_if"), col("b_if"))))
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
-
-  /** A7 at scale: candidate pairs meet on shared names (equi-join on
-    * exploded name), intersection counted per pair, union by
-    * inclusion-exclusion — no cross join. Pairs sharing no name (Jaccard
-    * 0) never materialize, which is exactly the ≥-threshold semantics. */
+  /** A7/J7: all pairs with interface Jaccard ≥ threshold (0 when either
+    * side is empty, similarities.rs:233-238). Candidate pairs meet on
+    * shared names (equi-join on exploded name), intersection counted per
+    * pair, union by inclusion-exclusion — no cross join. Pairs sharing no
+    * name (Jaccard 0) never materialize, which is exactly the
+    * ≥-threshold semantics for a threshold above 0. */
   def jaccardPairsBlocked(interfaces: DataFrame, threshold: Double): DataFrame = {
     val sizes = interfaces.select(col("skeleton_hash"), size(col("interface")).as("n"))
     val names = interfaces.select(col("skeleton_hash"),

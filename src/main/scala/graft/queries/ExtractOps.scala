@@ -49,7 +49,7 @@ object ExtractOps {
 
   /** One extract run per JVM; every query reads from its output. */
   private val memo = new java.util.concurrent.atomic.AtomicReference[String]()
-  private def extractRoot(s: SparkSession): String = memo.synchronized {
+  private[graft] def extractRoot(s: SparkSession): String = memo.synchronized {
     if (memo.get == null) {
       val out = graft.Temps.dirFor("extract-q")
       graft.etl.Extract.run(s, RpcStub.endpoint, From, To, out,

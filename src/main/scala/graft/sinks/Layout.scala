@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.datasources.parquet.{FooterSchema, ParquetFooterReader}
-import org.apache.spark.sql.functions.{col, format_string}
+import org.apache.spark.sql.functions.{array, col, format_string, inline, struct}
 import scala.jdk.CollectionConverters._
 
 /** Entity sinks (SURVEY.md §2.2 K1-K5). The reference's hand-rolled
@@ -192,7 +192,7 @@ object Layout {
     * and nullability stay exactly Spark's, and the read starts no job.
     * Static stores are flat part-file directories by construction: every
     * static writer here writes unpartitioned. */
-  private def readFlat(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def readFlat(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[DataFrame] =
     dataFiles(spark, path).headOption
       .map(f => spark.read.schema(FooterSchema(f, spark)).parquet(path))
@@ -603,13 +603,15 @@ object Layout {
 
   /** K6: similarity-edge sink — the reference writes each pair in BOTH
     * directions with the similarity as an edge attribute
-    * (similarities.rs:270-303). Input: (a_id, b_id, similarity). */
+    * (similarities.rs:270-303). Input: (a_id, b_id, similarity). Both
+    * edges come from one generator over each pair row, so the pair
+    * frame is read once (a union of two projections would plan it
+    * twice). */
   def similarityEdges(pairs: DataFrame): DataFrame = {
-    val fwd = pairs.select(col("a_id").as("src"), col("b_id").as("dst"),
-      col(pairs.columns(2)).as("similarity"))
-    val bwd = pairs.select(col("b_id").as("src"), col("a_id").as("dst"),
-      col(pairs.columns(2)).as("similarity"))
-    fwd.unionByName(bwd)
+    val sim = col(pairs.columns(2)).as("similarity")
+    pairs.select(inline(array(
+      struct(col("a_id").as("src"), col("b_id").as("dst"), sim),
+      struct(col("b_id").as("src"), col("a_id").as("dst"), sim))))
   }
 
   def writeSimilarityEdges(pairs: DataFrame, path: String): Unit =

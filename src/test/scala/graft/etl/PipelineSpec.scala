@@ -14,6 +14,24 @@ class PipelineSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
+  /** The reference formulation of A7/J7: every interface pair,
+    * upper-triangle cross join, Jaccard 0 when either side is empty
+    * (similarities.rs:233-238). Bounded inputs only; the engine's
+    * [[Similarity.jaccardPairsBlocked]] must agree with it. */
+  private def jaccardPairs(interfaces: org.apache.spark.sql.DataFrame,
+      threshold: Double): org.apache.spark.sql.DataFrame = {
+    val a = interfaces.toDF("a_id", "a_if")
+    val b = interfaces.toDF("b_id", "b_if")
+    a.crossJoin(b).where(col("a_id") < col("b_id"))
+      .select(col("a_id"), col("b_id"),
+        when(size(col("a_if")) === 0 || size(col("b_if")) === 0, lit(0.0))
+          .otherwise(
+            size(array_intersect(col("a_if"), col("b_if"))).cast("double") /
+              size(array_union(col("a_if"), col("b_if"))))
+          .as("jaccard"))
+      .where(col("jaccard") >= threshold)
+  }
+
   test("P2: creation traces → deployments with skeleton hash + metadata") {
     val d = Decode.deployments(traces(spark)).collect()
       .map(r => r.getAs[String]("contract") -> r).toMap
@@ -171,7 +189,7 @@ class PipelineSpec extends AnyFunSuite {
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1),
         math.rint(r.getDouble(2) * 1e9))).toSet
-    val exact = canon(Similarity.jaccardPairs(ifs, 0.05))
+    val exact = canon(jaccardPairs(ifs, 0.05))
     val blocked = canon(Similarity.jaccardPairsBlocked(ifs, 0.05))
     assert(exact === blocked)
     assert(exact.nonEmpty) // sk20/sk721 share balanceOf, transferFrom, approve
